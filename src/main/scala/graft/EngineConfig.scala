@@ -11,17 +11,12 @@ import java.time.Duration
   * The parser covers exactly the TOML subset the reference's config uses:
   * `[section]` / `[section.sub]` headers, `key = value` with string, int,
   * bool, and string-array values, and `#` comments. Unknown keys are
-  * ignored (forward compatibility); type mismatches fail loudly.
+  * ignored (forward compatibility); type mismatches fail loudly. Only
+  * the keys the engine reads are modelled: the reference's `[tracing]`
+  * section, `nats.server_port`, `nats.queue`,
+  * `nats.stream_config.{no_ack,need_create}` and every `[clickhouse]` key
+  * but `port` have no consumer here and load as unknown keys.
   */
-final case class TracingConfig(
-    level: String = "info",
-    format: String = "text",
-    withLevel: Boolean = true,
-    withTarget: Boolean = false,
-    withThreadIds: Boolean = false,
-    withLineNumber: Boolean = false,
-    withFile: Boolean = false)
-
 /** NATS stream envelope (src/config.rs:58-70). `maxAge` drives the
   * retention job ([[graft.sources.Retention]]) — the reference delegates
   * age expiry to JetStream (`max_age = "24h"`, default.toml:27); here the
@@ -31,21 +26,17 @@ final case class StreamEnvelopeConfig(
     retention: String = "workqueue",
     discard: String = "old",
     storage: String = "memory",
-    noAck: Boolean = false,
     maxConsumers: Int = 100,
-    maxAge: String = "24h",
-    needCreate: Boolean = true) {
+    maxAge: String = "24h") {
   def maxAgeDuration: Duration = EngineConfig.parseDuration(maxAge)
 }
 
 /** Broker connectivity (src/config.rs:39-56 NatsConfig). */
 final case class BrokerConfig(
     clientPort: Int = 4222,
-    serverPort: Int = 8222,
     username: String = "user",
     password: String = "password",
     host: String = "localhost",
-    queue: String = "clickhouse-queue",
     subjects: Seq[String] = Seq("events.login"),
     consumerName: String = "click-consumer",
     streamConfig: StreamEnvelopeConfig = StreamEnvelopeConfig()) {
@@ -53,18 +44,11 @@ final case class BrokerConfig(
   def addr: String = s"nats://$host:$clientPort"
 }
 
-/** Warehouse connectivity (src/config.rs:100-110 ClickHouseConfig) — kept
-  * for config-file compatibility; the Spark engine's "warehouse" is the
-  * parquet table root, but database names etc. still flow from here. */
+/** Warehouse surface (src/config.rs:100-110 ClickHouseConfig): the
+  * engine's "warehouse" is the parquet table root, so only the HTTP port
+  * the analysts connect to carries over. */
 final case class WarehouseConfig(
-    host: String = "localhost",
-    port: Int = 8123,
-    user: String = "",
-    password: String = "",
-    database: String = "database",
-    maxOpenConns: Int = 1,
-    maxIdleConns: Int = 1,
-    debug: Boolean = false)
+    port: Int = 8123)
 
 /** Micro-batcher flush envelope (src/config.rs:113-118 BatchConfig,
   * defaults default.toml:40-43) — feeds [[graft.streaming.Ingest]]'s
@@ -76,22 +60,22 @@ final case class BatcherConfig(
   def flushInterval: Duration = Duration.ofMillis(flushIntervalMs)
 }
 
-/** Background small-file compaction scheduling — the analog of
-  * MergeTree's continuous part merges (the reference's storage engine
-  * merges inserted parts in the background, `migrations .sql:18-20`;
-  * SURVEY §4.2 "ours to schedule"). Off by default: a batch-only
-  * deployment has no writer to pause. When enabled, [[ServeMain]] runs
-  * a maintenance pass every `intervalMs` that compacts any served
-  * table partition whose file count exceeds `maxFiles` into
-  * ~`targetBytes` files. */
+/** Small-file compaction — the analog of MergeTree's continuous part
+  * merges (the reference's storage engine merges inserted parts while
+  * inserts keep flowing, `migrations .sql:18-20`; SURVEY §4.2 "ours to
+  * schedule"). Off by default. When enabled, each streamed table's own
+  * ingest query, right after writing a batch, compacts any date
+  * partition of that table whose file count exceeds `maxFiles` (and 2×
+  * its floor) into ~`targetBytes` files
+  * ([[graft.streaming.Ingest.startFromBroker]]). Only a write can grow a
+  * partition's file count, so checking after each write catches every
+  * threshold crossing. */
 final case class CompactionConfig(
     enabled: Boolean = false,
-    intervalMs: Long = 60000L,
     maxFiles: Int = 16,
     targetBytes: Long = 128L * 1024 * 1024)
 
 final case class EngineConfig(
-    tracing: TracingConfig = TracingConfig(),
     broker: BrokerConfig = BrokerConfig(),
     warehouse: WarehouseConfig = WarehouseConfig(),
     batcher: BatcherConfig = BatcherConfig(),
@@ -230,21 +214,11 @@ object EngineConfig {
     }
     val d = default
     EngineConfig(
-      tracing = TracingConfig(
-        level = str("tracing", "level", d.tracing.level),
-        format = str("tracing", "format", d.tracing.format),
-        withLevel = bool("tracing", "with_level", d.tracing.withLevel),
-        withTarget = bool("tracing", "with_target", d.tracing.withTarget),
-        withThreadIds = bool("tracing", "with_thread_ids", d.tracing.withThreadIds),
-        withLineNumber = bool("tracing", "with_line_number", d.tracing.withLineNumber),
-        withFile = bool("tracing", "with_file", d.tracing.withFile)),
       broker = BrokerConfig(
         clientPort = int32("nats", "client_port", d.broker.clientPort),
-        serverPort = int32("nats", "server_port", d.broker.serverPort),
         username = str("nats", "username", d.broker.username),
         password = str("nats", "password", d.broker.password),
         host = str("nats", "host", d.broker.host),
-        queue = str("nats", "queue", d.broker.queue),
         subjects = arr("nats", "subjects", d.broker.subjects),
         consumerName = str("nats", "consumer_name", d.broker.consumerName),
         streamConfig = StreamEnvelopeConfig(
@@ -252,28 +226,17 @@ object EngineConfig {
           retention = str("nats.stream_config", "retention", d.broker.streamConfig.retention),
           discard = str("nats.stream_config", "discard", d.broker.streamConfig.discard),
           storage = str("nats.stream_config", "storage", d.broker.streamConfig.storage),
-          noAck = bool("nats.stream_config", "no_ack", d.broker.streamConfig.noAck),
           maxConsumers = int32("nats.stream_config", "max_consumers",
             d.broker.streamConfig.maxConsumers),
-          maxAge = str("nats.stream_config", "max_age", d.broker.streamConfig.maxAge),
-          needCreate = bool("nats.stream_config", "need_create",
-            d.broker.streamConfig.needCreate))),
+          maxAge = str("nats.stream_config", "max_age", d.broker.streamConfig.maxAge))),
       warehouse = WarehouseConfig(
-        host = str("clickhouse", "host", d.warehouse.host),
-        port = int32("clickhouse", "port", d.warehouse.port),
-        user = str("clickhouse", "user", d.warehouse.user),
-        password = str("clickhouse", "password", d.warehouse.password),
-        database = str("clickhouse", "database", d.warehouse.database),
-        maxOpenConns = int32("clickhouse", "max_open_conns", d.warehouse.maxOpenConns),
-        maxIdleConns = int32("clickhouse", "max_idle_conns", d.warehouse.maxIdleConns),
-        debug = bool("clickhouse", "debug", d.warehouse.debug)),
+        port = int32("clickhouse", "port", d.warehouse.port)),
       batcher = BatcherConfig(
         maxRows = int("batcher", "max_rows", d.batcher.maxRows),
         maxBytes = int("batcher", "max_bytes", d.batcher.maxBytes),
         flushIntervalMs = int("batcher", "flush_interval_ms", d.batcher.flushIntervalMs)),
       compaction = CompactionConfig(
         enabled = bool("compaction", "enabled", d.compaction.enabled),
-        intervalMs = int("compaction", "interval_ms", d.compaction.intervalMs),
         maxFiles = int32("compaction", "max_files", d.compaction.maxFiles),
         targetBytes = int("compaction", "target_bytes", d.compaction.targetBytes)))
   }

@@ -26,8 +26,7 @@ object EngineSession {
       // the same writer production uses above the default 200 threshold,
       // so this is not a local-mode tune; it removes the small-shuffle
       // special case.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.props.getOrElse("graft.shuffle.bypassThreshold", "1"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // ENGINE-WIDE default, set at build time rather than sneaked in by

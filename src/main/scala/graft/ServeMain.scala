@@ -25,6 +25,10 @@ import graft.streaming.{BrokerSource, FileBroker, Ingest, NatsBridge, NatsBroker
   *    ack-after-write via checkpoint commit, RedeliveryBudget as the
   *    max_deliver analog, DLQ for poison (handler.rs Term ↔ dead-letter,
   *    Nak ↔ checkpoint replay).
+  *  - MergeTree background part merges (`migrations .sql:18-20`) →
+  *    `[compaction] enabled`: each subject's query compacts the date
+  *    partitions of its own table right after writing a batch, while
+  *    ingest keeps flowing.
   *  - analyst surface (the reference delegates to ClickHouse HTTP
   *    :8123) → [[HttpSql]] on the warehouse port from the TOML.
   *  - `ctrl_c` → `shutdown.cancel()` → `flush_all` → drain: a JVM
@@ -35,68 +39,17 @@ import graft.streaming.{BrokerSource, FileBroker, Ingest, NatsBridge, NatsBroker
 object ServeMain {
 
   /** Running engine handle — everything [[boot]] started, stoppable in
-    * reference drain order. The query registry is MUTABLE because the
-    * compaction pass replaces a table's streaming query (stop → compact
-    * → restart from the checkpoint); `queries` always returns the live
-    * handles. */
+    * reference drain order. Each table's streaming query lives for the
+    * whole serve (compaction runs inside it), so `main` can wait on
+    * these handles. */
   final class Engine(val spark: SparkSession,
-                     @volatile private[graft] var queryMap: Map[String, StreamingQuery],
+                     val queries: Map[String, StreamingQuery],
                      val http: HttpSql, val httpPort: Int,
                      stopRelay: () => Unit) {
-    def queries: Map[String, StreamingQuery] = queryMap
-    @volatile private var stopMaintenance: () => Unit = () => ()
-    @volatile private var maintenanceAlive: () => Boolean = () => false
-    @volatile private var maintenanceGraceMs: Long = 15000L
-    private[graft] def setMaintenance(stop: () => Unit,
-                                      alive: () => Boolean,
-                                      graceMs: Long = 15000L): Unit = {
-      stopMaintenance = stop; maintenanceAlive = alive
-      maintenanceGraceMs = graceMs
-    }
-    /** `flush_all` + drain (main.rs:95-105): stop the maintenance loop
-      * first (it must not restart queries mid-drain), then ingest so no
-      * new batch starts, then the relay (which closes its broker
-      * connection), then the serving surface. */
+    /** `flush_all` + drain (main.rs:95-105): stop ingest so no new batch
+      * starts, then the relay (which closes its broker connection), then
+      * the serving surface. */
     def drain(): Unit = {
-      scala.util.Try(stopMaintenance())
-      // a compaction pass longer than the maintenance join timeout can
-      // still be inside its finally-restart when we get here; its stop
-      // check skips the restart in the common case, but a restart that
-      // raced the flag must be caught here. The sweep therefore keeps
-      // going while the maintenance THREAD is still alive — an
-      // all-inactive observation means nothing while a restart can
-      // still be registered a moment later — and only exits early once
-      // both the thread is dead and nothing is active (bounded). The
-      // deadline SCALES with the compaction workload (ADVICE r14: a
-      // fixed 15 s loses the race against a partition rewrite longer
-      // than the window): setMaintenance sizes it from the compactor's
-      // own join grace, so drain outlives any pass the stop handle
-      // itself would wait for.
-      // soft deadline: the normal bound on query-stop convergence. While
-      // the maintenance THREAD is still alive past it (a partition
-      // rewrite longer than any schedule-derived guess — the rewrite
-      // time is unrelated to the scheduling cadence), keep sweeping: the
-      // stop flag is already set, the pass ends within one table, so
-      // thread death is finite — the hard cap (10×) only bounds a
-      // genuinely hung filesystem.
-      val soft = System.currentTimeMillis() + maintenanceGraceMs
-      val hard = System.currentTimeMillis() + 10 * maintenanceGraceMs
-      var sweep = true
-      while (sweep) {
-        queries.values.foreach(q => scala.util.Try(q.stop()))
-        val alive = maintenanceAlive()
-        val settled = !alive && !queries.values.exists(_.isActive)
-        val now = System.currentTimeMillis()
-        sweep = !settled && (now < soft || (alive && now < hard))
-        if (sweep) Thread.sleep(100)
-      }
-      if (maintenanceAlive())
-        System.err.println("[serve] WARNING: maintenance thread still " +
-          s"alive after ${10 * maintenanceGraceMs} ms drain hard cap — " +
-          "a compaction rewrite outlived it (hung FS?); a restarted " +
-          "writer may survive this drain")
-      // final sweep: a restart registered in the race window right
-      // before the thread died is stopped here
       queries.values.foreach(q => scala.util.Try(q.stop()))
       stopRelay()
       scala.util.Try(http.stop())
@@ -151,26 +104,18 @@ object ServeMain {
     // (the reference's Batcher, src/handler.rs:96-160 — SURVEY §2.9
     // O-T2). Downstream, the streaming queries trigger on the same
     // flush_interval_ms so the ingest cadence matches the flush cadence.
+    // with [compaction] enabled each query compacts its own table right
+    // after a batch lands (the MergeTree background-merge analog)
     val queries = Ingest.startFromBroker(spark, broker, outDir, ckptRoot,
       trigger = Ingest.batcherParams(cfg)._1,
-      subjects = cfg.broker.subjects)
+      subjects = cfg.broker.subjects, compaction = cfg.compaction)
     // no leak on a failed boot: if the HTTP server cannot start (port
     // bound), the just-started streaming queries and the relay must not
     // keep running with no handle to stop them
     try {
       val http = new HttpSql(spark, httpPort, dataDir = Some(outDir))
       val port = http.start()
-      val engine = new Engine(spark, queries, http, port, stopRelay)
-      if (cfg.compaction.enabled) {
-        val (stop, alive) = startCompactor(engine, broker, outDir,
-          ckptRoot, Ingest.batcherParams(cfg)._1, cfg)
-        // drain grace sized to the maintenance workload: at least one
-        // full scheduler interval (a pass started just before drain) on
-        // top of a rewrite-time floor, never below the old fixed 15 s
-        engine.setMaintenance(stop, alive,
-          graceMs = math.max(15000L, cfg.compaction.intervalMs + 30000L))
-      }
-      engine
+      new Engine(spark, queries, http, port, stopRelay)
     } catch {
       case e: Throwable =>
         queries.values.foreach(q =>
@@ -178,130 +123,6 @@ object ServeMain {
         try stopRelay() catch { case scala.util.control.NonFatal(_) => () }
         throw e
     }
-  }
-
-  /** One maintenance pass over the served tables (the MergeTree
-    * background-merge analog — `migrations .sql:18-20`, SURVEY §4.2 "ours
-    * to schedule"): for each table whose file census exceeds
-    * `max_files` in any date partition, PAUSE the writer (stop its
-    * streaming query — the pause-the-writer discipline
-    * [[graft.sources.Compaction]] requires), pool the committed
-    * micro-batches of each exploded partition into ~target-byte files
-    * ([[graft.sources.Compaction.compactIngest]] — batch ids past the
-    * checkpoint's last commit stay untouched, so replay stays safe),
-    * then RESTART the query from its checkpoint and swap the new handle
-    * into the engine. Returns (table, per-partition stats) for
-    * observability; errors compact nothing and leave the restart in
-    * place. */
-  private[graft] def compactionPass(engine: Engine, broker: BrokerSource,
-      outDir: String, ckptRoot: String,
-      trigger: org.apache.spark.sql.streaming.Trigger,
-      cfg: EngineConfig,
-      stopped: () => Boolean = () => false): Seq[(String, sources.Compaction.Stats)] = {
-    import graft.streaming.EventSchemas
-    engine.queryMap.toSeq.flatMap { case (table, q) =>
-      val tdir = s"$outDir/$table"
-      // a drain that begins mid-pass must end the pass within one
-      // table, not stop/rewrite the remaining ones against the clock
-      val needy =
-        if (stopped()) Seq.empty
-        else sources.Parts.needingCompaction(engine.spark, tdir,
-          cfg.compaction.maxFiles, cfg.compaction.targetBytes)
-      if (needy.isEmpty) Seq.empty
-      else {
-        val subject = EventSchemas.routes.collectFirst {
-          case (s, t) if t == table => s
-        }.getOrElse(
-          throw new IllegalStateException(s"no subject routes to $table"))
-        // pause-the-writer at a BATCH BOUNDARY when possible: stopping
-        // mid-batch makes the restart replay that batch, and each replay
-        // spends RedeliveryBudget — enough maintenance interruptions of
-        // one batch would dead-letter healthy rows. Bounded wait for the
-        // trigger to go idle (a continuously-fed stream may never
-        // quiesce, so this cannot be processAllAvailable); the residual
-        // mid-batch stop is rare, bounded by max_deliver, and the
-        // fragmentation hysteresis above removes the repeated-
-        // interruption loop.
-        val boundary = System.currentTimeMillis() + 5000
-        while (q.isActive && q.status.isTriggerActive &&
-               System.currentTimeMillis() < boundary)
-          Thread.sleep(50)
-        // A failed stop that leaves the query RUNNING must abort the
-        // pass (two writers around a swap is the one unrecoverable
-        // shape); a query that is already dead proceeds — compaction +
-        // restart is the healing.
-        try q.stop() catch { case scala.util.control.NonFatal(_) => () }
-        if (q.isActive)
-          throw new IllegalStateException(
-            s"query for $table did not stop; skipping compaction")
-        try {
-          val maxCommitted = sources.Compaction.committedBatchMax(
-            engine.spark, s"$ckptRoot/$table")
-          needy.map { p =>
-            table -> sources.Compaction.compactIngest(engine.spark, p,
-              maxCommitted, targetBytes = cfg.compaction.targetBytes)
-          }
-        } finally {
-          // a failed swap must be healed BEFORE the writer returns —
-          // the writer would otherwise recreate the partition next to
-          // the backup and a later pass could mistake the backup for
-          // stale (Compaction.healInterrupted's ambiguous branch)
-          try sources.Compaction.healInterrupted(engine.spark, tdir)
-          catch { case scala.util.control.NonFatal(_) => () }
-          // resume from the checkpoint: a fresh query continues exactly
-          // where the stopped one committed — UNLESS drain asked the
-          // maintenance loop to stop while this pass was in flight: a
-          // restart after drain would leave a live writer nobody stops
-          // (drain's re-sweep catches the narrow race where this check
-          // passes just before the flag flips)
-          if (!stopped()) {
-            val nq = streaming.Ingest.startFromBroker(engine.spark, broker,
-              outDir, ckptRoot, trigger, Seq(subject))(table)
-            engine.queryMap = engine.queryMap.updated(table, nq)
-          }
-        }
-      }
-    }
-  }
-
-  /** Daemon scheduler for [[compactionPass]] — fires every
-    * `compaction.interval_ms`; a pass failure is logged and the loop
-    * continues (maintenance must never take the engine down). Returns
-    * (stop handle, thread-alive probe) — drain keeps sweeping queries
-    * while the probe says the loop may still register a restart. */
-  private def startCompactor(engine: Engine, broker: BrokerSource,
-      outDir: String, ckptRoot: String,
-      trigger: org.apache.spark.sql.streaming.Trigger,
-      cfg: EngineConfig): (() => Unit, () => Boolean) = {
-    @volatile var stop = false
-    val t = new Thread(() => {
-      while (!stop) {
-        try {
-          val done = compactionPass(engine, broker, outDir, ckptRoot,
-            trigger, cfg, stopped = () => stop)
-          done.foreach { case (table, st) =>
-            println(s"[serve] compacted $table: ${st.filesBefore} -> " +
-              s"${st.filesAfter} files (${st.rows} rows)")
-          }
-          // the SQ8 re-scale actuator rides the same maintenance cadence
-          // (opt-in via -Dgraft.vec.sq8CompactDir; no-op otherwise) —
-          // clip probe each pass, linear re-encode only when it bites
-          pipeline.VecBackbone.sq8MaintenancePass(engine.spark)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[serve] compaction pass failed: ${e.getMessage}")
-        }
-        val deadline = System.currentTimeMillis() + cfg.compaction.intervalMs
-        while (!stop && System.currentTimeMillis() < deadline)
-          Thread.sleep(50)
-      }
-    }, "graft-compactor")
-    t.setDaemon(true)
-    t.start()
-    // the stop handle's join matches drain's scaled grace (ADVICE r14:
-    // a 10 s join under a longer rewrite returned with the thread alive)
-    val joinMs = math.max(15000L, cfg.compaction.intervalMs + 30000L)
-    (() => { stop = true; t.join(joinMs) }, () => t.isAlive)
   }
 
   def main(args: Array[String]): Unit = {

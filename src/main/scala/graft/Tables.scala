@@ -40,8 +40,6 @@ object Tables {
     * handles. */
   private val memoMap = new java.util.WeakHashMap[
     SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private val verTtlCache =
-    scala.collection.mutable.Map[String, (String, Long)]()
   private def memo(s: SparkSession, dir: String, name: String,
                    variant: String = "")
                   (load: => DataFrame): DataFrame = {
@@ -70,25 +68,9 @@ object Tables {
           .sorted.mkString("\n").getBytes("UTF-8"))
         .map("%02x".format(_)).mkString
     }
-    // Opt-in TTL on the version walk (-Dgraft.tables.versionTtlMs,
-    // default 0 = walk every call): one listing per accessor call is
-    // noise on a local FS but the §6 anti-pattern on object storage —
-    // a deployment whose inputs change at most every few minutes sets
-    // the TTL and skips the per-call listing. Default stays 0 so an
-    // in-place overwrite is visible IMMEDIATELY (the staleness
-    // discipline TablesSpec pins).
-    val ttl = sys.props.get("graft.tables.versionTtlMs").map(_.toLong)
-      .getOrElse(0L)
-    val ver =
-      if (ttl <= 0) computeVer
-      else verTtlCache.synchronized {
-        val now = System.currentTimeMillis()
-        verTtlCache.get(s"$dir|$name") match {
-          case Some((v, t)) if now - t < ttl => v
-          case _ =>
-            val v = computeVer; verTtlCache(s"$dir|$name") = (v, now); v
-        }
-      }
+    // walked on every call, so an in-place overwrite is visible
+    // IMMEDIATELY (the staleness discipline TablesSpec pins)
+    val ver = computeVer
     memoMap.synchronized {
       val m = Option(memoMap.get(s)).getOrElse {
         val mm = scala.collection.mutable.Map[String, DataFrame]()
@@ -117,10 +99,8 @@ object Tables {
     * relational/event tables' scans are cheap projections whose first
     * real operator is already a keyed exchange, so a fan-out exchange
     * there is pure addition (measured both ways at sf0.1: event keys
-    * +0.25 s each with it, corpus keys −0.3..−1.4 s without it).
-    * Disable with -Dgraft.scan.fanout=false. */
+    * +0.25 s each with it, corpus keys −0.3..−1.4 s without it). */
   private def fanout(s: SparkSession, df: DataFrame): DataFrame = {
-    if (sys.props.get("graft.scan.fanout").contains("false")) return df
     val target = s.sparkContext.defaultParallelism
     val parts = df.rdd.getNumPartitions
     if (parts >= target) return df

@@ -428,7 +428,7 @@ private[graft] object VecBackbone {
   /** The maintenance DECISION: does the clamp actually bite? One
     * corpus max scan against the pinned advance scale — the same
     * predicate `d_ann_sq8_clip` reports per side, reduced to the
-    * boolean the compactor needs. */
+    * boolean that gates [[sq8Compact]]. */
   private[graft] def sq8NeedsRescale(s: SparkSession, d: String,
                                      split: Long): Boolean = {
     val sc = sq8ScaleAt(s, d, split)
@@ -439,30 +439,6 @@ private[graft] object VecBackbone {
       .collect()(0)
     !mx.isNullAt(0) && math.floor(mx.getDouble(0) * 127.0 / sc + 0.5) > 127
   }
-
-  /** Nightly hook, the [[Warehouse.autoGc]] convention:
-    * `-Dgraft.vec.sq8CompactDir=<embeddings dir>` makes the serve
-    * maintenance loop ([[graft.ServeMain]]'s compactor thread) probe
-    * the clip signal on each pass and run the re-scale compaction when
-    * it bites — the SQ8 lifecycle closes clip→compact→clean without a
-    * separate cron. Split is the committed advance convention
-    * ([[deltaSplit]]); a production deployment passes its real ingest
-    * watermark. Best-effort: a failure is a logged warning, never a
-    * maintenance-loop death. */
-  private[graft] def sq8MaintenancePass(s: SparkSession): Unit =
-    sys.props.get("graft.vec.sq8CompactDir").foreach { d =>
-      try {
-        val split = deltaSplit(s, d)
-        if (sq8NeedsRescale(s, d, split)) {
-          val n = sq8Compact(s, d, split).count()
-          println(s"[vec] sq8 re-scale compaction committed: $n codes " +
-            "re-encoded under the corpus-derived scale")
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[vec] sq8 compaction pass skipped: ${e.getMessage}")
-      }
-    }
 
   /** Stored BANDED sign-LSH inverted list over the full corpus — narrow
     * postings `(vec_id, band, bucket)`, one row per (vector, band); the

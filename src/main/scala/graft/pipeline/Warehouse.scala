@@ -330,8 +330,7 @@ object Warehouse {
     path
   }
 
-  private def keepVersions: Int =
-    sys.props.get("graft.backbone.keepVersions").map(_.toInt).getOrElse(2)
+  private val keepVersions = 2
   private def gcGraceMs: Long =
     sys.props.get("graft.backbone.gcGraceMs").map(_.toLong)
       .getOrElse(60 * 60 * 1000L)
@@ -366,9 +365,9 @@ object Warehouse {
     * so no concurrent build targets a victim path.
     *
     * No-op under the default per-JVM tmp root (that tree is reclaimed on
-    * exit). Returns the deleted version-dir paths. Knobs:
-    * `graft.backbone.keepVersions` (default 2),
-    * `graft.backbone.gcGraceMs` (default 1 h). */
+    * exit). Returns the deleted version-dir paths. Keeps
+    * [[keepVersions]] (2) versions; grace knob `graft.backbone.gcGraceMs`
+    * (default 1 h). */
   /** Version dirs an in-flight (unlocked) gc delete is working on — a
     * CONCURRENT gc call in the same JVM must not re-select them: its
     * dropMarkers walk would race the delete and throw mid-listing. */

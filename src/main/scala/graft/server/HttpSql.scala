@@ -424,10 +424,10 @@ final class HttpSql(spark: SparkSession, port: Int = 0,
     try {
       import spark.implicits._
       val rows = spark.read.schema(schema).json(spark.createDataset(jsons))
+      // no view registration here: refreshDataTables re-registers the
+      // table on every statement that names it, so the rows are
+      // SELECTable right away
       Ingest.writeTyped(rows, table, schema, root, batchId = -1L)
-      // make the rows SELECTable on this same surface right away (the
-      // nine event-table names never collide with registerTables' views)
-      spark.read.parquet(s"$root/$table").createOrReplaceTempView(table)
       respond(x, 200, "text/plain", "")
     } catch { case e: Exception =>
       respond(x, 500, "text/plain", s"Insert failed: ${msg(e)}\n")

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions.col
   * ORDER BY columns so parquet row-group min/max stats stay tight (the
   * data-skipping property the sorted write established). The rewrite
   * goes to a temp dir then swaps atomically-enough for a single writer
-  * (streaming query must be paused — same discipline as VACUUM jobs).
+  * (no other writer may touch the table during the call — same
+  * discipline as VACUUM jobs).
   */
 object Compaction {
 
@@ -137,9 +138,9 @@ object Compaction {
 
   /** Heal interrupted compaction swaps among `tableDir`'s PARTITION
     * dirs — run with NO writer active (ServeMain calls it at boot before
-    * any streaming query starts, and before the post-failure restart in
-    * a compaction pass), because the one ambiguity needs the writer
-    * quiet to resolve safely:
+    * any streaming query starts; the ingest writer calls it from its own
+    * batch after a failed compaction), because the one ambiguity needs
+    * the writer quiet to resolve safely:
     *
     *  - bak present, partition dir MISSING → crash between the two swap
     *    renames: restore bak → dir, drop tmp;
@@ -198,22 +199,6 @@ object Compaction {
     healed
   }
 
-  /** Highest micro-batch id the table's streaming checkpoint has
-    * COMMITTED (-1 if none): batch ids at or below this are permanently
-    * settled — Structured Streaming replays only batches after the last
-    * commit — so [[compactIngest]] may pool their rows across batch
-    * boundaries without risking a replay landing beside them. */
-  def committedBatchMax(spark: SparkSession, checkpointDir: String): Long = {
-    val commits = new Path(checkpointDir, "commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(commits)) return -1L
-    fs.listStatus(commits).toSeq
-      .map(_.getPath.getName)
-      .filter(_.forall(_.isDigit))
-      .map(_.toLong)
-      .foldLeft(-1L)(math.max)
-  }
-
   /** Ingest-partition compaction that merges ACROSS micro-batches.
     *
     * [[compact]] preserves every on-disk partition level, so an ingest
@@ -222,29 +207,30 @@ object Compaction {
     * drop below one file per batch. The batch level exists only for
     * replay idempotency: the sink's dynamic partition overwrite re-lands
     * a replayed batch id over its own subdir. Batches at or below
-    * `maxCommitted` ([[committedBatchMax]]) never replay, so this
-    * rewrite pools their rows into the reserved `ingest_batch=-1`
-    * partition — shared with the append-mode backfill pool, which is
-    * likewise never a dynamic-overwrite target — and leaves unsettled
-    * batch ids untouched. The pooled rows merge into ~`targetBytes`
+    * `maxCommitted` (committed in the table's streaming checkpoint) never
+    * replay, so this rewrite pools their rows into the reserved
+    * `ingest_batch=-1` partition — shared with the append-mode backfill
+    * pool, which is likewise never a dynamic-overwrite target — and
+    * leaves unsettled batch ids untouched. The pooled rows merge into ~`targetBytes`
     * files, sorted by the table's time order so row-group min/max
     * skipping stays tight.
     *
     * Same single-writer discipline and crash-safe tmp/bak swap as
-    * [[compact]]: the table's streaming query must be PAUSED around the
-    * call ([[graft.ServeMain]] stops it, runs the pass, restarts it from
-    * the checkpoint). Readers racing the swap can see one transient
-    * listing error — the same brief window MergeTree hides behind its
-    * part manifest; acceptable for a maintenance pass.
+    * [[compact]]: the table's own streaming query calls it between
+    * writing batch N and returning from that batch, with `maxCommitted`
+    * = N-1 ([[graft.streaming.Ingest.startFromBroker]]), so no stream
+    * writes the partition during the swap. Readers racing the swap can
+    * see one transient listing error — the same brief window MergeTree
+    * hides behind its part manifest.
     *
     * Write amplification: this rewrite is FULL-PARTITION (the pooled
     * rows are re-written along with the newly-pooled batches) because
     * that is what the crash-safe swap can promise without a part
     * manifest — an in-place append-then-delete merge would duplicate
-    * rows on a crash between the two steps. The scheduler amortizes it:
-    * ServeMain re-selects a partition only when its file count exceeds
-    * 2× the achievable floor, so rewrite frequency falls as a partition
-    * grows (an incremental MergeTree-style part merge needs a commit
+    * rows on a crash between the two steps. The selection amortizes it:
+    * [[Parts.needingCompaction]] re-selects a partition only when its
+    * file count exceeds 2× the achievable floor, so rewrite frequency
+    * falls as a partition grows (an incremental MergeTree-style part merge needs a commit
     * manifest and is future work, noted in SURVEY §4.2). */
   def compactIngest(spark: SparkSession, partitionDir: String,
                     maxCommitted: Long,

@@ -86,12 +86,12 @@ object Parts {
       .collect().map(_.getString(0)).toSeq
   }
 
-  /** The PRODUCTION compaction work queue ([[graft.ServeMain]]'s
-    * maintenance loop): fragmented, not merely large. A partition whose
-    * file count already sits near its achievable floor
-    * (ceil(bytes/targetBytes) files) can never get under a bare
-    * max-files census — re-selecting it would pause the writer and
-    * rewrite the whole partition every interval forever. A dir is
+  /** The PRODUCTION compaction work queue (checked by the ingest writer
+    * after every batch it lands, [[graft.streaming.Ingest.startFromBroker]]):
+    * fragmented, not merely large. A partition whose file count already
+    * sits near its achievable floor (ceil(bytes/targetBytes) files) can
+    * never get under a bare max-files census — re-selecting it would
+    * rewrite the whole partition after every batch forever. A dir is
     * selected only when its file count exceeds BOTH `maxFiles` and 2×
     * its floor; the 2× hysteresis also amortizes the full-partition
     * rewrite (re-compaction frequency falls as a partition grows). */

@@ -123,16 +123,14 @@ object DedupStream {
     * streaming analog of the batch plan's broadcast alphabet dim
     * (`bgHash`): real text is Zipf-distributed, so the hot alphabet is
     * far smaller than the token stream and hashes amortize to ~one
-    * compute per distinct hot bigram. Capped by
-    * `-Dgraft.stream.bgMemoCap` (default 2^16 entries ≈ 50 MB/executor;
-    * size to the corpus' hot alphabet). At the cap the memo CLEARS and
+    * compute per distinct hot bigram. Capped at 2^16 entries (≈ 50
+    * MB/executor). At the cap the memo CLEARS and
     * refills — under drift or an oversized alphabet the hot set
     * re-establishes in one pass, where the previous fill-once policy
     * degraded to a permanent miss for every late-arriving bigram
     * (measured as the x1→x4 throughput cliff in SCALE.md). Correctness
     * never depends on a hit. */
-  private val bgMemoCap =
-    sys.props.get("graft.stream.bgMemoCap").map(_.toInt).getOrElse(1 << 16)
+  private val bgMemoCap = 1 << 16
   private val bgMemo = new ConcurrentHashMap[String, Array[String]]()
   // memo key carries the hash count: a JVM serving both geometries must
   // not hand a 4x2 stream an 8-hash array when 16 were asked for

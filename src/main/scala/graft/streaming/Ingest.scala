@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.sources.{Compaction, Parts}
+
 /** Payload → typed-row decode, kept behind a trait so a binary protobuf
   * decoder (custom Catalyst Expression) can replace the JSON stand-in
   * without touching the pipeline (SURVEY §7-M3, hard part 1).
@@ -288,12 +290,15 @@ object Ingest {
     * subject's offsets commit to the checkpoint only after foreachBatch's
     * idempotent table write returns, so a crash replays the batch into
     * the same `ingest_batch` partition instead of acking unwritten data
-    * (src/nats.rs:63-83 consumer contract ↔ checkpoint commit). */
+    * (src/nats.rs:63-83 consumer contract ↔ checkpoint commit). With
+    * `compaction.enabled`, each query also compacts its own table after
+    * every landed batch ([[compactAfterWrite]]). */
   def startFromBroker(spark: SparkSession, broker: BrokerSource, outDir: String,
                       checkpointRoot: String,
                       trigger: Trigger = Trigger.ProcessingTime("1 second"),
                       subjects: Seq[String] = EventSchemas.routes.keys.toSeq,
-                      maxDeliver: Int = 3)
+                      maxDeliver: Int = 3,
+                      compaction: graft.CompactionConfig = graft.CompactionConfig())
       : Map[String, StreamingQuery] =
     subjects.map { subject =>
       val table = EventSchemas.routes(subject)
@@ -312,11 +317,46 @@ object Ingest {
           val n = budget.attempt(batchId)
           if (n > budget.maxDeliver)
             deadLetterExhausted(batch, subject, outDir, batchId, n - 1)
-          else writeTyped(batch, table, schema, outDir, batchId)
+          else {
+            writeTyped(batch, table, schema, outDir, batchId)
+            if (compaction.enabled)
+              compactAfterWrite(spark, s"$outDir/$table", batchId, compaction)
+          }
         }
         .start()
       table -> q
     }.toMap
+
+  /** Writer-side compaction — the analog of MergeTree merging parts while
+    * inserts keep flowing (`migrations .sql:18-20`). Runs inside the
+    * table's own query right after batch `batchId` landed, so no other
+    * streaming writer touches the table during the swap. Streaming starts
+    * batch N only after committing N-1, so every lower batch id is
+    * settled and [[graft.sources.Compaction.compactIngest]] may pool it;
+    * batch N itself stays replayable. A failure heals the swap and is
+    * logged: the batch's rows are already written, so it still commits. */
+  private def compactAfterWrite(spark: SparkSession, tableDir: String,
+                                batchId: Long,
+                                cfg: graft.CompactionConfig): Unit =
+    try {
+      Parts.needingCompaction(spark, tableDir, cfg.maxFiles, cfg.targetBytes)
+        .foreach { p =>
+          val st = Compaction.compactIngest(spark, p,
+            maxCommitted = batchId - 1, targetBytes = cfg.targetBytes)
+          println(s"[ingest] compacted $p: ${st.filesBefore} -> " +
+            s"${st.filesAfter} files (${st.rows} rows)")
+        }
+    } catch {
+      case e: Throwable =>
+        // heal before this writer's next batch: one bak/tmp recovery
+        // branch is only safe while the writer is quiet
+        scala.util.Try(Compaction.healInterrupted(spark, tableDir)).failed
+          .foreach(h => System.err.println(
+            s"[ingest] heal of $tableDir failed: ${h.getMessage}"))
+        if (!scala.util.control.NonFatal(e)) throw e
+        System.err.println(s"[ingest] compaction of $tableDir after batch " +
+          s"$batchId failed: ${e.getMessage}")
+    }
 
   /** Typed-config form: the batcher envelope (max_bytes, flush_interval_ms
     * — config/default.toml:40-43 via [[graft.EngineConfig]]) drives the

@@ -13,8 +13,7 @@ class EngineConfigSpec extends AnyFunSuite {
     assert(c.broker.subjects == Seq("events.login"))
     assert(c.broker.streamConfig.maxAge == "24h")
     assert(c.broker.streamConfig.maxAgeDuration == java.time.Duration.ofHours(24))
-    assert(c.warehouse.port == 8123 && c.warehouse.database == "database")
-    assert(c.tracing.level == "info" && c.tracing.format == "text")
+    assert(c.warehouse.port == 8123)
   }
 
   test("TOML overlay: present keys override, absent keys keep defaults") {
@@ -48,9 +47,43 @@ class EngineConfigSpec extends AnyFunSuite {
       """[batcher]
         |flush_interval_ms = 250
         |future_knob = "ignored"
+        |
+        |# reference keys the engine does not model still load
+        |[tracing]
+        |level = "debug"
+        |format = "json"
+        |with_level = false
+        |with_target = true
+        |with_thread_ids = true
+        |with_line_number = true
+        |with_file = true
+        |
+        |[nats]
+        |server_port = 8222
+        |queue = "clickhouse-queue"
+        |
+        |[nats.stream_config]
+        |no_ack = true
+        |need_create = false
+        |
+        |[clickhouse]
+        |host = "ch.prod"
+        |port = 18123
+        |user = "analyst"
+        |password = "secret"
+        |database = "events"
+        |max_open_conns = 4
+        |max_idle_conns = 2
+        |debug = true
+        |
+        |[compaction]
+        |interval_ms = 400
         |""".stripMargin)
     val c = EngineConfig.loadFromFile(f.toString)
     assert(c.batcher.flushInterval == java.time.Duration.ofMillis(250))
+    assert(c.warehouse.port == 18123)
+    assert(c.broker == EngineConfig.default.broker)
+    assert(c.compaction == EngineConfig.default.compaction)
     intercept[IllegalArgumentException] {
       EngineConfig.parse("[batcher]\nmax_rows = \"not a number\"")
     }

@@ -58,24 +58,14 @@ class ServeMainSpec extends AnyFunSuite {
     val cfg = EngineConfig.default.copy(
       broker = BrokerConfig(subjects = Seq(subject)),
       batcher = BatcherConfig(flushIntervalMs = 100L),
-      compaction = CompactionConfig(enabled = true, intervalMs = 400L,
-        maxFiles = maxFiles))
+      compaction = CompactionConfig(enabled = true, maxFiles = maxFiles))
     val engine = ServeMain.boot(cfg, spark, wire, out, ckpt,
       httpPort = 0, useNats = false)
     try {
+      // compaction runs inside this query's own batches: the handle boot
+      // returned serves the whole test
+      val q = engine.queries("login_events")
       new java.io.File(s"$wire/$subject").mkdirs()
-      // drive the table with retry: the compactor may stop/replace the
-      // query handle between micro-batches (exactly what a live producer
-      // rides through)
-      def settle(): Unit = {
-        val deadline = System.currentTimeMillis() + 15000
-        var ok = false
-        while (!ok && System.currentTimeMillis() < deadline) {
-          try { engine.queries.values.foreach(_.processAllAvailable()); ok = true }
-          catch { case scala.util.control.NonFatal(_) => Thread.sleep(100) }
-        }
-        assert(ok, "ingest query unavailable for 15s")
-      }
       // explode the file census: one wire file per micro-batch, one
       // ingest_batch subdir (>=1 parquet file) each
       var id = 0
@@ -84,60 +74,36 @@ class ServeMainSpec extends AnyFunSuite {
           Iterator.tabulate(3) { _ =>
             id += 1; loginMsg(f"c-$id%04d", s"u-${id % 5}", 1726300800L + id)
           }, schema)
-        settle()
+        q.processAllAvailable()
       }
-      def census(): Long = scala.util.Try(
-        sources.Parts.forTable(spark, s"$out/login_events")
-          .agg(smax(col("n_files"))).head.getLong(0)).getOrElse(Long.MaxValue)
-      // the maintenance loop must bring the exploded partition under the
-      // threshold on its own cadence (10 batches > maxFiles=6 files)
-      val deadline = System.currentTimeMillis() + 30000
-      while (census() > maxFiles && System.currentTimeMillis() < deadline)
-        Thread.sleep(300)
-      val after = census()
+      // 10 batches > maxFiles=6 files: the writer compacted after the
+      // batch that crossed the threshold
+      val after = sources.Parts.forTable(spark, s"$out/login_events")
+        .agg(smax(col("n_files"))).head.getLong(0)
       assert(after <= maxFiles,
-        s"compactor never brought the partition census under $maxFiles " +
+        s"writer never brought the partition census under $maxFiles " +
           s"(still $after files)")
-      // zero lost / zero duplicated across the stop-compact-restart swap.
-      // The restarted query catches up on backlog at its own trigger
-      // cadence (a settle() that raced a stop returns without
-      // processing), so poll to the expected count — a genuinely lost
-      // row times out, a duplicate overshoots and fails the equality.
-      def tableRead[T](f: => T): T = {
-        val dl = System.currentTimeMillis() + 10000
-        var last: Option[T] = None
-        while (last.isEmpty && System.currentTimeMillis() < dl) {
-          try last = Some(f)
-          catch { case scala.util.control.NonFatal(_) => Thread.sleep(100) }
-        }
-        last.getOrElse(fail("table unreadable for 10s"))
-      }
-      def pollCount(expect: Long): Long = {
-        val dl = System.currentTimeMillis() + 30000
-        var n = -1L
-        while (n != expect && System.currentTimeMillis() < dl) {
-          n = tableRead(spark.read.parquet(s"$out/login_events").count())
-          if (n != expect) Thread.sleep(300)
-        }
-        n
-      }
-      assert(pollCount(30L) == 30L, "rows lost or duplicated across compaction")
-      assert(tableRead(spark.read.parquet(s"$out/login_events")
-        .select("event_id").distinct().count()) == 30L)
+      // zero lost / zero duplicated across the compaction swaps
+      val table = spark.read.parquet(s"$out/login_events")
+      assert(table.count() == 30L, "rows lost or duplicated across compaction")
+      assert(table.select("event_id").distinct().count() == 30L)
       // committed micro-batches pooled into the reserved partition
       val dates = new java.io.File(s"$out/login_events").listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("event_date="))
       assert(dates.exists(_.listFiles().exists(_.getName == "ingest_batch=-1")),
         "committed batches must pool into ingest_batch=-1")
-      // HTTP surface alive through the maintenance churn
       assert(httpGet(engine.httpPort,
         "SELECT count(*) AS n FROM login_events").trim == "30")
-      // streaming RESUMES on the swapped-in query handle
+      // streaming continues on the same handle
+      assert(q.isActive)
       sources.ProtoFiles.writeLocal(s"$wire/$subject/flush-resume.pbstream",
         Iterator(loginMsg("c-resume", "u-0", 1726300900L)), schema)
-      settle()
-      assert(pollCount(31L) == 31L,
-        "post-compaction ingest must land on the restarted query")
+      q.processAllAvailable()
+      val resumed = spark.read.parquet(s"$out/login_events")
+      assert(resumed.count() == 31L,
+        "post-compaction ingest must land on the same query")
+      assert(resumed.select("event_id").distinct().count() == 31L)
+      assert(q.isActive && q.exception.isEmpty)
     } finally engine.drain()
   }
 

@@ -690,24 +690,6 @@ class VecBackboneSpec extends AnyFunSuite {
     VecBackbone.sq8Advance(spark, dir2, 10).count()
     assert(!VecBackbone.sq8NeedsRescale(spark, dir2, 10),
       "in-scale corpus must not trigger a re-scale")
-    // (6) the maintenance hook (ServeMain's compactor cadence): with the
-    // dir configured, one pass probes the clip signal and commits the
-    // compaction; without it, a no-op
-    val dir3 = java.nio.file.Files.createTempDirectory("sq8cmp3").toString
-    rows.toDF("vec_id", "embedding", "label")
-      .write.parquet(s"$dir3/embeddings.parquet")
-    val prevProp = sys.props.get("graft.vec.sq8CompactDir")
-    sys.props("graft.vec.sq8CompactDir") = dir3
-    try {
-      VecBackbone.sq8MaintenancePass(spark)
-      val sc3 = VecBackbone.sq8CompactScale(spark, dir3,
-        VecBackbone.deltaSplit(spark, dir3))
-      assert(math.abs(sc3 - mx) < 1e-6,
-        "maintenance pass must have committed the corpus-scale compaction")
-    } finally prevProp match {
-      case Some(v) => sys.props("graft.vec.sq8CompactDir") = v
-      case None => sys.props -= "graft.vec.sq8CompactDir"
-    }
   }
 
   test("sq8 on an all-zero corpus: the scale guard pins codes and scores to zero") {

@@ -409,6 +409,28 @@ class HttpSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("INSERT-only session: stop leaves no served-table view behind") {
+    // a table no other case serves, so only this session can name it
+    val table = "angulak_bookmark_events"
+    val schema = graft.streaming.EventSchemas.tables(table)
+    val msg = graft.streaming.ProtoWire.encode(schema.fieldNames.map {
+      case "event_id"  => "bm-1"
+      case "timestamp" => 1726300800L
+      case _           => ""
+    }.toSeq, schema)
+    // the name may also be a catalog table (DdlSpec creates the event
+    // tables); a leaked temp view would shadow it
+    def tempView = spark.catalog.listTables().collect()
+      .exists(t => t.isTemporary && t.name == table)
+    assert(!tempView)
+    withInsertServer { (c, p) =>
+      val ins = postBytes(c, p, s"INSERT INTO $table FORMAT Protobuf",
+        framed(msg))
+      assert(ins.statusCode() == 200, ins.body())
+    }
+    assert(!tempView, s"$table still resolves to a temp view after stop()")
+  }
+
   test("FORMAT stripping is restricted to known format names") {
     withServer { (c, p) =>
       // unknown trailing ident -> treated as SQL, fails analysis as 400

@@ -105,6 +105,55 @@ class BrokerSourceSpec extends AnyFunSuite {
       "dead-lettered rows must not reappear in the table")
   }
 
+  test("writer-side compaction failure: logged, batch commits, no DLQ, no replay") {
+    val wire = java.nio.file.Files.createTempDirectory("cfault_wire").toString
+    val local = java.nio.file.Files.createTempDirectory("cfault_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("cfault_ckpt").toString
+    // the table lives on a local filesystem whose rename refuses to move
+    // a partition aside, so every compaction swap fails mid-way
+    spark.sparkContext.hadoopConfiguration.set("fs.faultfs.impl",
+      classOf[CompactionFaultFs].getName)
+    val out = s"faultfs://$local"
+    val ledger = java.nio.file.Paths.get(s"$ckpt/login_events/_graft_deliveries")
+    val errBuf = new java.io.ByteArrayOutputStream()
+    val prevErr = System.err
+    System.setErr(new java.io.PrintStream(errBuf, true))
+    val qs = try Ingest.startFromBroker(spark, FileBroker(wire), out, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"),
+        subjects = Seq("events.login"),
+        compaction = graft.CompactionConfig(enabled = true, maxFiles = 2))
+      catch { case e: Throwable => System.setErr(prevErr); throw e }
+    val q = qs("login_events")
+    try {
+      new java.io.File(s"$wire/events.login").mkdirs()
+      (0 until 4).foreach { b =>
+        graft.sources.ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
+          Iterator.tabulate(2)(i => WireFixtures.loginMsg(s"f-$b-$i", "u-1",
+            1726300800L + 2 * b + i)), EventSchemas.tables("login_events"))
+        q.processAllAvailable()
+        // the delivery ledger holds the latest batch's attempt count
+        assert(new String(java.nio.file.Files.readAllBytes(ledger)).trim ==
+          s"$b\t1", s"batch $b must run exactly once")
+      }
+    } finally { q.stop(); System.setErr(prevErr) }
+    assert(q.exception.isEmpty, s"a compaction failure failed the query: ${q.exception}")
+    assert(errBuf.toString.contains("[ingest] compaction of") &&
+      errBuf.toString.contains("injected rename fault"),
+      s"the failure must be logged; stderr was: $errBuf")
+    val commits = new java.io.File(s"$ckpt/login_events/commits").list()
+      .filter(_.forall(_.isDigit)).map(_.toInt).toSet
+    assert(commits == Set(0, 1, 2, 3), s"every batch commits: $commits")
+    val table = spark.read.parquet(s"$local/login_events")
+    assert(table.count() == 8 && table.select("event_id").distinct().count() == 8)
+    // the failed swap was healed: nothing pooled, no staging left behind
+    val leftovers = new java.io.File(s"$local/login_events").list()
+      .filter(n => n.startsWith(".") && n.contains("_compact_"))
+    assert(leftovers.isEmpty, s"unhealed swap: ${leftovers.mkString(",")}")
+    assert(table.filter("ingest_batch = -1").isEmpty)
+    assert(!new java.io.File(s"$local/${Ingest.DlqTable}").exists(),
+      "a compaction failure must not dead-letter rows")
+  }
+
   test("KafkaBroker option mapping mirrors the reference consumer config") {
     val kb = KafkaBroker("broker:9092", groupPrefix = "click-consumer",
       maxOffsetsPerTrigger = 100000L)
@@ -133,4 +182,24 @@ class BrokerSourceSpec extends AnyFunSuite {
       if (t == null) "" else Option(t.getMessage).getOrElse("") + " " + msgs(t.getCause)
     assert(msgs(ex).toLowerCase.contains("kafka"), s"unexpected error: $ex")
   }
+}
+
+/** The local filesystem under the `faultfs` scheme, except that renaming
+  * a directory to a compaction backup (`.<partition>_compact_bak`)
+  * always fails. */
+class CompactionFaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getScheme: String = "faultfs"
+  override def getUri: java.net.URI = java.net.URI.create("faultfs:///")
+  // the local status loads its permissions through a file: URI, which
+  // this scheme is not; listings need only the plain fields
+  override def getFileStatus(p: Path): FileStatus = {
+    val st = super.getFileStatus(p)
+    new FileStatus(st.getLen, st.isDirectory, st.getReplication,
+      st.getBlockSize, st.getModificationTime, st.getPath)
+  }
+  override def rename(src: Path, dst: Path): Boolean =
+    if (dst.getName.endsWith("_compact_bak"))
+      throw new java.io.IOException(s"injected rename fault: $src -> $dst")
+    else super.rename(src, dst)
 }
