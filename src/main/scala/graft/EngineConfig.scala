@@ -65,11 +65,11 @@ final case class BatcherConfig(
   * inserts keep flowing, `migrations .sql:18-20`; SURVEY §4.2 "ours to
   * schedule"). Off by default. When enabled, each streamed table's own
   * ingest query, right after writing a batch, compacts any date
-  * partition of that table whose file count exceeds `maxFiles` (and 2×
-  * its floor) into ~`targetBytes` files
-  * ([[graft.streaming.Ingest.startFromBroker]]). Only a write can grow a
-  * partition's file count, so checking after each write catches every
-  * threshold crossing. */
+  * partition that batch wrote whose file count exceeds `maxFiles` (and
+  * 2× its floor) into ~`targetBytes` files
+  * ([[graft.streaming.Ingest.startFromWire]]). Only partitions a stream
+  * batch writes are checked: a partition grown only by HTTP INSERT
+  * appends (e.g. a backfill of an older date) is never compacted. */
 final case class CompactionConfig(
     enabled: Boolean = false,
     maxFiles: Int = 16,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.server.HttpSql
-import graft.streaming.{BrokerSource, FileBroker, Ingest, NatsBridge, NatsBroker}
+import graft.streaming.{Ingest, NatsBridge}
 
 /** The reference's main program re-expressed
   * (`/root/reference/src/main.rs:19-106`): load the deployment TOML →
@@ -21,7 +21,7 @@ import graft.streaming.{BrokerSource, FileBroker, Ingest, NatsBridge, NatsBroker
   *  - `ClickHouseClient::ping()` fail-fast → SparkSession construction +
   *    a one-row sanity query before any stream starts.
   *  - `Batcher::run` per-subject flush loop →
-  *    [[Ingest.startFromBroker]]: one streaming query per subject,
+  *    [[Ingest.startFromWire]]: one streaming query per subject,
   *    ack-after-write via checkpoint commit, RedeliveryBudget as the
   *    max_deliver analog, DLQ for poison (handler.rs Term ↔ dead-letter,
   *    Nak ↔ checkpoint replay).
@@ -82,7 +82,9 @@ object ServeMain {
           s"$table/$p"))
     }
 
-    val (broker, stopRelay) =
+    // both brokers feed the same per-subject spool dirs: with NATS a
+    // relay thread writes them, with `file` an external producer does
+    val stopRelay: () => Unit =
       if (useNats) {
         // fail fast on a bad config (ping() analog for the broker), then
         // hand the connection to the supervised relay, which owns
@@ -95,8 +97,8 @@ object ServeMain {
           "graft-nats-relay")
         relay.setDaemon(true)
         relay.start()
-        (NatsBroker(wireRoot): BrokerSource, () => { stop = true; relay.join(5000) })
-      } else (FileBroker(wireRoot): BrokerSource, () => ())
+        () => { stop = true; relay.join(5000) }
+      } else () => ()
 
     // the TOML batcher envelope applies at the relay: superviseRelay
     // runs each connection through NatsBridge.SpoolBatcher, which cuts
@@ -106,8 +108,8 @@ object ServeMain {
     // flush_interval_ms so the ingest cadence matches the flush cadence.
     // with [compaction] enabled each query compacts its own table right
     // after a batch lands (the MergeTree background-merge analog)
-    val queries = Ingest.startFromBroker(spark, broker, outDir, ckptRoot,
-      trigger = Ingest.batcherParams(cfg)._1,
+    val queries = Ingest.startFromWire(spark, wireRoot, outDir, ckptRoot,
+      trigger = Ingest.batcherParams(cfg),
       subjects = cfg.broker.subjects, compaction = cfg.compaction)
     // no leak on a failed boot: if the HTTP server cannot start (port
     // bound), the just-started streaming queries and the relay must not

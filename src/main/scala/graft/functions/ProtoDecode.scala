@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one parse, strings land as UTF8String without transcoding, and the
   * expression participates in whole-stage codegen. Parse failures yield
   * NULL — the permanent "Cannot parse" class the reference dead-letters
-  * with AckKind::Term (src/handler.rs:206-212); the ingest routes null
-  * structs to `_dlq`.
+  * with AckKind::Term (src/handler.rs:206-212), left for the caller to
+  * filter.
   *
   * The second argument must be a foldable string: the struct schema in
   * DDL form (`StructType.toDDL`), with proto field numbers = position+1

@@ -426,8 +426,11 @@ final class HttpSql(spark: SparkSession, port: Int = 0,
       val rows = spark.read.schema(schema).json(spark.createDataset(jsons))
       // no view registration here: refreshDataTables re-registers the
       // table on every statement that names it, so the rows are
-      // SELECTable right away
-      Ingest.writeTyped(rows, table, schema, root, batchId = -1L)
+      // SELECTable right away. The table lock keeps the append out of a
+      // compaction swap the table's own stream may be running.
+      Ingest.withTableLock(root, table) {
+        Ingest.writeTyped(rows, table, schema, root, batchId = -1L)
+      }
       respond(x, 200, "text/plain", "")
     } catch { case e: Exception =>
       respond(x, 500, "text/plain", s"Insert failed: ${msg(e)}\n")

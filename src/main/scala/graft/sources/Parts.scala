@@ -53,60 +53,52 @@ object Parts {
   def forTable(spark: SparkSession, tableDir: String): DataFrame = {
     import spark.implicits._
     val root = new Path(tableDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Seq.empty[PartInfo].toDF()
+    partInfos(root.getFileSystem(spark.sessionState.newHadoopConf()), root).toDF()
+  }
+
+  private def partInfos(fs: FileSystem, root: Path): Seq[PartInfo] = {
+    if (!fs.exists(root)) return Seq.empty
     val partDirs = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.contains("=") &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    def census(dir: Path): (Long, Long) = {
-      val files = visibleParquetFiles(fs, dir)
-      (files.size.toLong, files.map(_.getLen).sum)
-    }
+        isVisible(s.getPath))
+      .map(_.getPath)
     val rows =
-      if (partDirs.isEmpty) {
-        val (n, b) = census(root)
-        Seq(PartInfo("<unpartitioned>", root.toString, n, b))
-      } else partDirs.map { s =>
-        val (n, b) = census(s.getPath)
-        PartInfo(s.getPath.getName, s.getPath.toString, n, b)
-      }
-    rows.sortBy(_.partition).toDF()
+      if (partDirs.isEmpty)
+        Seq(census(fs, root).copy(partition = "<unpartitioned>"))
+      else partDirs.map(census(fs, _))
+    rows.sortBy(_.partition)
   }
 
-  /** Directories whose file count exceeds `maxFiles` — the bare-census
-    * form of the compaction work queue, as directly consumable PATHS
-    * (the table dir itself for an unpartitioned table). The SCHEDULED
-    * maintenance path uses the hysteresis overload below. */
-  def needingCompaction(spark: SparkSession, tableDir: String,
-                        maxFiles: Int): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    forTable(spark, tableDir)
-      .filter(col("n_files") > maxFiles)
-      .select("path")
-      .collect().map(_.getString(0)).toSeq
+  private def isVisible(p: Path): Boolean =
+    !p.getName.startsWith("_") && !p.getName.startsWith(".")
+
+  private def census(fs: FileSystem, dir: Path): PartInfo = {
+    val files = visibleParquetFiles(fs, dir)
+    PartInfo(dir.getName, dir.toString, files.size.toLong, files.map(_.getLen).sum)
   }
 
-  /** The PRODUCTION compaction work queue (checked by the ingest writer
-    * after every batch it lands, [[graft.streaming.Ingest.startFromBroker]]):
-    * fragmented, not merely large. A partition whose file count already
-    * sits near its achievable floor (ceil(bytes/targetBytes) files) can
-    * never get under a bare max-files census — re-selecting it would
-    * rewrite the whole partition after every batch forever. A dir is
-    * selected only when its file count exceeds BOTH `maxFiles` and 2×
-    * its floor; the 2× hysteresis also amortizes the full-partition
-    * rewrite (re-compaction frequency falls as a partition grows). */
-  def needingCompaction(spark: SparkSession, tableDir: String,
+  /** The compaction work queue after ingest batch `batchId` landed
+    * ([[graft.streaming.Ingest.startFromWire]]): only the partitions
+    * holding `ingest_batch=<batchId>` — the ones that batch wrote — are
+    * censused, so the check costs what the batch touched rather than a
+    * walk of the whole table. Of those, it selects the fragmented, not
+    * merely large. A partition whose file count already sits near its
+    * achievable floor (ceil(bytes/targetBytes) files) can never get under
+    * a bare max-files census — re-selecting it would rewrite the whole
+    * partition after every batch forever. A dir is selected only when its
+    * file count exceeds BOTH `maxFiles` and 2× its floor; the 2×
+    * hysteresis also amortizes the full-partition rewrite (re-compaction
+    * frequency falls as a partition grows). */
+  def needingCompaction(spark: SparkSession, tableDir: String, batchId: Long,
                         maxFiles: Int, targetBytes: Long): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    forTable(spark, tableDir)
-      .filter(col("n_files") > maxFiles)
-      .select("path", "n_files", "bytes")
-      .collect()
-      .filter { r =>
-        val floor = math.max(1L,
-          math.ceil(r.getLong(2).toDouble / targetBytes).toLong)
-        r.getLong(1) > 2 * floor
-      }
-      .map(_.getString(0)).toSeq
+    val root = new Path(tableDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    Option(fs.globStatus(new Path(root, s"*/ingest_batch=$batchId")))
+      .getOrElse(Array.empty).toSeq.map(_.getPath.getParent)
+      .filter(isVisible).map(census(fs, _))
+      .filter { p =>
+        val floor = math.max(1L, math.ceil(p.bytes.toDouble / targetBytes).toLong)
+        p.n_files > maxFiles && p.n_files > 2 * floor
+      }.map(_.path)
   }
 }

@@ -7,48 +7,14 @@ import org.apache.spark.sql.types._
 
 import graft.sources.{Compaction, Parts}
 
-/** Payload → typed-row decode, kept behind a trait so a binary protobuf
-  * decoder (custom Catalyst Expression) can replace the JSON stand-in
-  * without touching the pipeline (SURVEY §7-M3, hard part 1).
-  * Decode failure yields a NULL struct ⇒ permanent error ⇒ dead-letter,
-  * mirroring ClickHouse "Cannot parse" ⇒ AckKind::Term
-  * (src/handler.rs:206-212). */
-trait EventDecoder {
-  /** Adds a `decoded` struct column parsed from `payload`. */
-  def decode(df: DataFrame, schema: StructType): DataFrame
-}
-
-/** JSON-lines stand-in for the protobuf wire format (same schemas). */
-object JsonPayloadDecoder extends EventDecoder {
-  def decode(df: DataFrame, schema: StructType): DataFrame =
-    // PERMISSIVE from_json yields an all-null struct on malformed rows;
-    // the validity test in ingestBatch treats a null event_id as a parse
-    // failure (event_id is proto field 1, always set by producers).
-    df.withColumn("decoded", from_json(col("payload"), schema))
-}
-
-/** True protobuf wire decode: payload is base64-encoded proto3 bytes
-  * (binary transport through the JSON-lines file source; a Kafka source
-  * would hand us the raw bytes directly). Decode is the native
-  * [[graft.functions.ProtoDecode]] expression — one parse straight to a
-  * Catalyst struct, inside whole-stage codegen; no UDF, no JSON
-  * intermediate. Parse failures → null struct → DLQ (Term analog). */
-object ProtoPayloadDecoder extends EventDecoder {
-  def decode(df: DataFrame, schema: StructType): DataFrame = {
-    graft.functions.GraftExtensions.register(df.sparkSession)
-    df.withColumn("decoded",
-      expr(s"proto_decode(unbase64(payload), '${schema.toDDL}')"))
-  }
-}
-
 /** The reference's ingestion dataflow (src/main.rs + src/handler.rs) as
   * Structured Streaming:
   *
-  *   NATS pull-consume        → file/Kafka `readStream` micro-batches
-  *   subject routing (:15-55) → 9 filtered writes per batch
-  *   row/byte/time flush      → Trigger (time-based; byte thresholds are
-  *                              approximated by source rate options —
-  *                              SURVEY O-T2 documents the difference)
+  *   per-subject pull consumer → one graft-proto `readStream` per subject
+  *                              spool dir (the NATS relay or any producer
+  *                              writes framed proto3 flush files there)
+  *   row/byte/time flush      → the relay's SpoolBatcher cuts the files;
+  *                              the Trigger matches flush_interval_ms
   *   ack-after-insert         → checkpoint + IDEMPOTENT batch writes:
   *                              each micro-batch lands in its own
   *                              `ingest_batch=<id>` partition directory
@@ -59,9 +25,8 @@ object ProtoPayloadDecoder extends EventDecoder {
   *                              effectively-once, same recipe as the
   *                              reference's ack-after-insert (at-least-once
   *                              delivery + dedup-friendly storage; O-W1)
-  *   Term vs Nak (:206-212)   → decode failures & unroutable subjects to
-  *                              `_dlq` with a reason; transient failures
-  *                              retried via checkpoint replay
+  *   max_deliver (nats.rs:74) → [[RedeliveryBudget]]: a batch that keeps
+  *                              failing dead-letters to `_dlq`
   *
   * Scale design: each table write repartitions by event_date and sorts
   * within partitions by (timestamp, event_name) — the MergeTree
@@ -110,19 +75,21 @@ object Ingest {
     }
   }
 
-  /** Pool for concurrent per-table writes inside one micro-batch. The 9
-    * routed tables are independent outputs; submitting their jobs from
-    * one thread serializes ~9 small Spark jobs per 1-second trigger.
-    * Four submitter threads let the scheduler interleave them (each job
-    * still uses every executor core). Daemon threads — the pool must not
-    * block JVM exit. */
-  private lazy val writePool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-        val t = new Thread(r, "graft-ingest-write")
-        t.setDaemon(true)
-        t
-      }))
+  /** One lock per table directory, shared by every writer in this JVM.
+    * The table's streaming query holds it across the compaction after a
+    * batch; [[graft.server.HttpSql]]'s INSERT holds it across its append.
+    * A compaction swap moves a partition dir aside and renames the
+    * rewrite in, so an append landing in between would leave with the
+    * old dir. The stream's batch write itself needs no lock: its dynamic
+    * overwrite replaces only `ingest_batch=<id>` dirs, and an INSERT
+    * appends to `ingest_batch=-1`. */
+  private val tableLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private[graft] def withTableLock[T](outDir: String, table: String)(body: => T): T =
+    tableLocks.computeIfAbsent(
+      new org.apache.hadoop.fs.Path(s"$outDir/$table").toString,
+      _ => new Object).synchronized(body)
 
   /** Idempotent sink: every row carries an `ingest_batch` partition column
     * (nested UNDER the leading partition axes, so date pruning is
@@ -142,81 +109,17 @@ object Ingest {
     w.partitionBy((partitionCols :+ "ingest_batch"): _*).parquet(s"$outDir/$table")
   }
 
-  /** One micro-batch of (subject, payload) through route→decode→write.
-    * Exposed for foreachBatch and for batch (backfill) reuse.
-    *
-    * Job shape per micro-batch: ONE dead-letter write (unroutable subjects
-    * unioned with every table's decode failures) + one write per routed
-    * table — each subject's slice is decoded exactly once (persisted),
-    * shared by the DLQ union and the table write. No pre-count/isEmpty
-    * probes: an empty write is cheaper than the extra job. */
-  def ingestBatch(batch: DataFrame, outDir: String,
-                  decoder: EventDecoder = JsonPayloadDecoder,
-                  batchId: Long = -1L, deliveries: Int = 1): Unit = {
-    val routable = EventSchemas.routes.keys.toSeq
-    val cached = batch.persist()
-    // A null struct or null event_id (= malformed under PERMISSIVE) is a
-    // permanent decode failure (Term analog, src/handler.rs:206-212).
-    val invalid = col("decoded").isNull || col("decoded.event_id").isNull
-    val decodedSlices = EventSchemas.routes.toSeq.map { case (subject, table) =>
-      val schema = EventSchemas.tables(table)
-      (table, schema,
-        decoder.decode(cached.filter(col("subject") === subject), schema).persist())
-    }
-    try {
-      val asDlq = (reason: String) => Seq(col("subject"), col("payload"),
-        lit(reason).as("reason"), current_timestamp().as("dlq_ts"),
-        lit(deliveries).as("deliveries"))
-      // Unroutable ⇒ dead-letter (reference terminally drops with Term,
-      // src/main.rs:68-72; we keep the rows auditable in _dlq), unioned
-      // with per-table decode failures into a single write. This one job
-      // also materializes every per-subject decode cache.
-      val dlq = decodedSlices
-        .map { case (_, _, d) => d.filter(invalid).select(asDlq("decode_error"): _*) }
-        .foldLeft(
-          // null-safe: a NULL subject makes isin() NULL, and !NULL is
-          // NULL → the row would match NO filter (not routed, not
-          // dead-lettered) and vanish without audit. coalesce pins the
-          // unroutable verdict for NULL subjects.
-          cached.filter(!coalesce(col("subject").isin(routable: _*), lit(false)))
-            .select(asDlq("unroutable_subject"): _*))(_ union _)
-      // DLQ is partitioned by subject: the dynamic ingest_batch overwrite
-      // then only replaces (subject, batch) slices this batch produced —
-      // independent per-subject queries sharing outDir have independent
-      // batchId spaces, and an unpartitioned DLQ would let query A's
-      // batch-3 dead-letters clobber query B's (same partition dir).
-      sink(dlq, DlqTable, outDir, batchId, Seq("subject"))
-
-      // Per-table writes are independent outputs over the shared decode
-      // caches — submit them concurrently so the scheduler interleaves
-      // the ~9 small jobs instead of running them back-to-back. A failed
-      // write fails the batch; checkpoint replay + idempotent overwrite
-      // (sink above) make the retry safe even if sibling writes finished.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec = writePool
-      val writes = decodedSlices.map { case (table, schema, decoded) => Future {
-        writeTyped(decoded.filter(!invalid).select(col("decoded.*")),
-          table, schema, outDir, batchId)
-      }}
-      Await.result(Future.sequence(writes), Duration.Inf)
-    } finally {
-      decodedSlices.foreach { case (_, _, d) => d.unpersist() }
-      cached.unpersist()
-    }
-  }
-
   /** Shared tail of every table write: proto3 default fill (absent scalar
     * fields become ""/0/false — FIXTURES.md invariant 4), epoch-seconds →
     * TimestampType, MergeTree-style sorted/date-partitioned layout, and
     * the idempotent batch sink. `rows` carries the table's typed wire
-    * columns (from the envelope decode, the graft-proto source, or the
-    * HTTP INSERT surface — [[graft.server.HttpSql]] reuses this tail with
-    * batchId = -1 for a plain ad-hoc append). */
+    * columns (from the graft-proto source or the HTTP INSERT surface —
+    * [[graft.server.HttpSql]] reuses this tail with batchId = -1 for a
+    * plain ad-hoc append). */
   def writeTyped(rows: DataFrame, table: String, schema: StructType,
                  outDir: String, batchId: Long): Unit = {
     val defaults: Map[String, Any] = schema.fields.collect {
-      case StructField(n, StringType, _, _) if n != "payload" => n -> ""
+      case StructField(n, StringType, _, _) => n -> ""
       case StructField(n, IntegerType, _, _) => n -> 0
       case StructField(n, LongType, _, _)    => n -> 0L
       case StructField(n, BooleanType, _, _) => n -> false
@@ -238,67 +141,49 @@ object Ingest {
     sink(out, table, outDir, batchId, Seq("event_date"))
   }
 
-  /** Wire-native ingest: tail per-subject directories of framed protobuf
-    * flush files (what the reference's micro-batcher accumulates per
-    * subject, src/handler.rs:62-66) through the graft-proto streaming
-    * source — rows arrive ALREADY TYPED (the source decodes frames, with
-    * pruning if a view narrows them), so there is no payload envelope and
-    * no per-batch decode step. One query per event family (SURVEY §1.1's
-    * per-family option; each family keeps its own checkpoint/offsets,
-    * exactly like the reference's per-subject consumers). Corrupt frames
-    * are fail-stop at the source and retried via checkpoint replay —
-    * payload-level Term/DLQ semantics belong to the envelope path
-    * ([[start]]), whose producers are untrusted. */
-  def startFromWire(spark: SparkSession, wireRoot: String, outDir: String,
-                    checkpointRoot: String,
-                    trigger: Trigger = Trigger.ProcessingTime("1 second"),
-                    subjects: Seq[String] = EventSchemas.routes.keys.toSeq,
-                    maxDeliver: Int = 3)
-      : Map[String, StreamingQuery] =
-    startFromBroker(spark, FileBroker(wireRoot), outDir, checkpointRoot,
-      trigger, subjects, maxDeliver)
-
   /** Budget-exhausted dead-letter: the batch stops being retried and its
     * rows land auditable in `_dlq` (reference: past max_deliver NATS stops
     * delivering and emits a MAX_DELIVERIES advisory; we keep the payload).
     * `deliveries` = the failed delivery attempts that exhausted the
-    * budget. Rows are re-wrapped to the DLQ envelope — typed wire rows
-    * get their content preserved as a JSON payload. */
+    * budget. Each typed row is kept as a JSON payload. The DLQ is
+    * partitioned by subject: per-subject queries have overlapping batchId
+    * spaces, and an unpartitioned dynamic overwrite would let one
+    * subject's batch-3 dead-letters clobber another's. */
   private[streaming] def deadLetterExhausted(batch: DataFrame, subject: String,
                                   outDir: String, batchId: Long,
-                                  deliveries: Int): Unit = {
-    val hasEnvelope = batch.columns.contains("payload")
-    val payloadCol =
-      if (hasEnvelope) col("payload")
-      else to_json(struct(batch.columns.map(col).toSeq: _*))
-    val subjectCol =
-      if (batch.columns.contains("subject")) col("subject") else lit(subject)
-    // subject-partitioned for the same clobber-safety reason as the
-    // routine DLQ write in ingestBatch: per-subject queries have
-    // overlapping batchId spaces
-    sink(batch.select(subjectCol.as("subject"), payloadCol.as("payload"),
+                                  deliveries: Int): Unit =
+    sink(batch.select(lit(subject).as("subject"),
+      to_json(struct(batch.columns.map(col).toSeq: _*)).as("payload"),
       lit("max_deliver_exceeded").as("reason"),
       current_timestamp().as("dlq_ts"),
       lit(deliveries).as("deliveries")), DlqTable, outDir, batchId,
       Seq("subject"))
-  }
 
-  /** Broker-agnostic form of [[startFromWire]]: one streaming query per
-    * subject over any [[BrokerSource]] (directory tailing today, Kafka
-    * when the connector jar ships — the consumer-semantics mapping lives
-    * on [[KafkaBroker]]). Ack-after-write holds for every source: the
-    * subject's offsets commit to the checkpoint only after foreachBatch's
-    * idempotent table write returns, so a crash replays the batch into
-    * the same `ingest_batch` partition instead of acking unwritten data
-    * (src/nats.rs:63-83 consumer contract ↔ checkpoint commit). With
-    * `compaction.enabled`, each query also compacts its own table after
-    * every landed batch ([[compactAfterWrite]]). */
-  def startFromBroker(spark: SparkSession, broker: BrokerSource, outDir: String,
-                      checkpointRoot: String,
-                      trigger: Trigger = Trigger.ProcessingTime("1 second"),
-                      subjects: Seq[String] = EventSchemas.routes.keys.toSeq,
-                      maxDeliver: Int = 3,
-                      compaction: graft.CompactionConfig = graft.CompactionConfig())
+  /** The ingest entry: tail per-subject directories of framed protobuf
+    * flush files (what the reference's micro-batcher accumulates per
+    * subject, src/handler.rs:62-66) through the graft-proto streaming
+    * source — rows arrive ALREADY TYPED (the source decodes frames, with
+    * pruning if a view narrows them), so there is no per-batch decode
+    * step. One query per event family (SURVEY §1.1's per-family option;
+    * each family keeps its own checkpoint/offsets, exactly like the
+    * reference's per-subject consumers). The NATS relay
+    * ([[NatsBridge.superviseRelay]]) feeds the same directories.
+    *
+    * Ack-after-write: the subject's offsets commit to the checkpoint only
+    * after foreachBatch's idempotent table write returns, so a crash
+    * replays the batch into the same `ingest_batch` partition instead of
+    * acking unwritten data (src/nats.rs:63-83 consumer contract ↔
+    * checkpoint commit). Corrupt frames are fail-stop at the source and
+    * retried via checkpoint replay until the redelivery budget
+    * dead-letters the batch. With `compaction.enabled`, each query also
+    * compacts its own table after every landed batch
+    * ([[compactAfterWrite]]). */
+  def startFromWire(spark: SparkSession, wireRoot: String, outDir: String,
+                    checkpointRoot: String,
+                    trigger: Trigger = Trigger.ProcessingTime("1 second"),
+                    subjects: Seq[String] = EventSchemas.routes.keys.toSeq,
+                    maxDeliver: Int = 3,
+                    compaction: graft.CompactionConfig = graft.CompactionConfig())
       : Map[String, StreamingQuery] =
     subjects.map { subject =>
       val table = EventSchemas.routes(subject)
@@ -308,7 +193,9 @@ object Ingest {
       // on delivery maxDeliver+1 instead of wedging the subject forever
       val budget = new RedeliveryBudget(spark.sessionState.newHadoopConf(),
         s"$checkpointRoot/$table/_graft_deliveries", maxDeliver)
-      val q = broker.load(spark, subject, schema)
+      val q = spark.readStream.format("graft-proto")
+        .option("schema", schema.toDDL)
+        .load(s"$wireRoot/$subject")
         .writeStream
         .queryName(s"graft-wire-$table")
         .option("checkpointLocation", s"$checkpointRoot/$table")
@@ -320,7 +207,9 @@ object Ingest {
           else {
             writeTyped(batch, table, schema, outDir, batchId)
             if (compaction.enabled)
-              compactAfterWrite(spark, s"$outDir/$table", batchId, compaction)
+              withTableLock(outDir, table) {
+                compactAfterWrite(spark, s"$outDir/$table", batchId, compaction)
+              }
           }
         }
         .start()
@@ -329,17 +218,20 @@ object Ingest {
 
   /** Writer-side compaction — the analog of MergeTree merging parts while
     * inserts keep flowing (`migrations .sql:18-20`). Runs inside the
-    * table's own query right after batch `batchId` landed, so no other
-    * streaming writer touches the table during the swap. Streaming starts
-    * batch N only after committing N-1, so every lower batch id is
-    * settled and [[graft.sources.Compaction.compactIngest]] may pool it;
-    * batch N itself stays replayable. A failure heals the swap and is
-    * logged: the batch's rows are already written, so it still commits. */
+    * table's own query right after batch `batchId` landed, under the
+    * table lock, so no other writer touches the table during the swap.
+    * Only the date partitions this batch wrote can have crossed the
+    * threshold, so only they are censused. Streaming starts batch N only
+    * after committing N-1, so every lower batch id is settled and
+    * [[graft.sources.Compaction.compactIngest]] may pool it; batch N
+    * itself stays replayable. A failure heals the swap and is logged: the
+    * batch's rows are already written, so it still commits. */
   private def compactAfterWrite(spark: SparkSession, tableDir: String,
                                 batchId: Long,
                                 cfg: graft.CompactionConfig): Unit =
     try {
-      Parts.needingCompaction(spark, tableDir, cfg.maxFiles, cfg.targetBytes)
+      Parts.needingCompaction(spark, tableDir, batchId, cfg.maxFiles,
+          cfg.targetBytes)
         .foreach { p =>
           val st = Compaction.compactIngest(spark, p,
             maxCommitted = batchId - 1, targetBytes = cfg.targetBytes)
@@ -358,59 +250,11 @@ object Ingest {
           s"$batchId failed: ${e.getMessage}")
     }
 
-  /** Typed-config form: the batcher envelope (max_bytes, flush_interval_ms
-    * — config/default.toml:40-43 via [[graft.EngineConfig]]) drives the
-    * source rate cap and trigger, so a reference deployment's TOML drops
-    * in unchanged. */
-  /** The batcher envelope → streaming knobs, as a pure derivation so the
-    * config seam is testable in isolation (and ServeMain shares the same
-    * trigger construction instead of re-deriving it). */
-  private[graft] def batcherParams(
-      cfg: graft.EngineConfig): (Trigger, Long) =
-    (Trigger.ProcessingTime(s"${cfg.batcher.flushIntervalMs} milliseconds"),
-      cfg.batcher.maxBytes)
-
-  def start(spark: SparkSession, inputDir: String, outDir: String,
-            checkpointDir: String, cfg: graft.EngineConfig): StreamingQuery = {
-    val (trigger, maxBytes) = batcherParams(cfg)
-    start(spark, inputDir, outDir, checkpointDir,
-      trigger = trigger, maxBytesPerTrigger = maxBytes)
-  }
-
-  /** Start the streaming pipeline over a JSON-lines directory source
-    * (this env has no Kafka/NATS connector; the source swap is one line).
-    * Input schema: {"subject": "...", "payload": "<json event>"}.
-    *
-    * Backpressure mirrors the reference's flush envelope (O-T2/O-T6):
-    * `maxBytesPerTrigger` = the 60 MB per-flush byte cap
-    * (config/default.toml:42), the 1-second trigger = flush_interval_ms
-    * (default.toml:43). Row-count capping (max_rows=100k) has no direct
-    * file-source knob — the byte cap bounds the same resource. */
-  def start(spark: SparkSession, inputDir: String, outDir: String,
-            checkpointDir: String,
-            decoder: EventDecoder = JsonPayloadDecoder,
-            trigger: Trigger = Trigger.ProcessingTime("1 second"),
-            maxBytesPerTrigger: Long = 60L * 1000 * 1000,
-            maxDeliver: Int = 3): StreamingQuery = {
-    val in = spark.readStream
-      .schema(StructType(Seq(
-        StructField("subject", StringType), StructField("payload", StringType))))
-      .option("maxBytesPerTrigger", maxBytesPerTrigger)
-      .json(inputDir)
-    val budget = new RedeliveryBudget(spark.sessionState.newHadoopConf(),
-      s"$checkpointDir/_graft_deliveries", maxDeliver)
-    in.writeStream
-      .queryName("graft-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = budget.attempt(batchId)
-        if (n > budget.maxDeliver)
-          deadLetterExhausted(batch, subject = "", outDir, batchId, n - 1)
-        else ingestBatch(batch, outDir, decoder, batchId, deliveries = n)
-      }
-      .start()
-  }
+  /** The batcher envelope's flush_interval_ms (config/default.toml:43 via
+    * [[graft.EngineConfig]]) as the streams' processing-time trigger, so
+    * the ingest cadence matches the relay's flush cadence. */
+  private[graft] def batcherParams(cfg: graft.EngineConfig): Trigger =
+    Trigger.ProcessingTime(s"${cfg.batcher.flushIntervalMs} milliseconds")
 
   /** O-T12: incrementally-maintained exactly-once view over at-least-once
     * input — streaming dedup by event_id with watermark-bounded state.

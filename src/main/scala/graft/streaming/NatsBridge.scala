@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.US_ASCII
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 import NatsWire.{Conn, ConsumerConfig, JetStream, Msg}
 
@@ -13,8 +10,8 @@ import NatsWire.{Conn, ConsumerConfig, JetStream, Msg}
   *
   * Architecture: a sequential **fetch → spool → ack** relay per stream.
   * Pulled messages are appended as graft-proto wire files (one file per
-  * subject per pull, temp-file + atomic rename) into the same spool
-  * directory layout [[FileBroker]] tails, and acked ONLY after the
+  * subject per flush, temp-file + atomic rename) into the per-subject
+  * spool directories [[Ingest.startFromWire]] tails, and acked ONLY after the
   * rename lands — the reference's ack-after-insert contract
   * (src/handler.rs ack path) moved one durable hop earlier, with
   * Structured Streaming's checkpoint owning replay from the spool
@@ -34,9 +31,7 @@ import NatsWire.{Conn, ConsumerConfig, JetStream, Msg}
   *
   * Scale shape: one relay thread per stream shard. JetStream caps a pull
   * at `max_bytes` (5 MB, src/nats.rs:73), so relay memory is bounded;
-  * spool files rotate per pull, so the stream source's listing stays
-  * proportional to unprocessed backlog, and [[Ingest]]'s `cleanSource`
-  * archival bounds it further.
+  * spool files rotate per flush.
   */
 object NatsBridge {
 
@@ -61,22 +56,6 @@ object NatsBridge {
                                stream: String, durable: String)
       extends AutoCloseable {
     override def close(): Unit = nc.close()
-  }
-
-  /** One fetch→spool→ack cycle. Returns the number of messages spooled.
-    * Pure function of the pull result — callers loop it (the relay
-    * thread) or step it deterministically (specs). */
-  def pumpOnce(s: NatsSession, spoolRoot: String, batch: Int = 512,
-               expiresMs: Long = 1000): Int = {
-    val msgs = s.js.fetch(s.stream, s.durable, batch, expiresMs)
-    if (msgs.isEmpty) return 0
-    spool(msgs, spoolRoot)
-    // ack ONLY after every subject file is durably in place; the PING
-    // barrier confirms the server processed the acks before we report
-    // the batch done (acks are fire-and-forget PUBs otherwise)
-    msgs.foreach(s.js.ack)
-    s.nc.ping(5000)
-    msgs.size
   }
 
   /** Per-spool-directory monotonic file counters. [[ProtoFileSource]]'s
@@ -114,9 +93,9 @@ object NatsBridge {
 
   private def spoolName(n: Long): String = f"nats-$n%012d.pbstream"
 
-  /** Write pulled messages into the FileBroker spool layout:
+  /** Write pulled messages into the spool layout:
     * `<root>/<subject>/nats-<counter%012d>.pbstream`, one file per
-    * subject per pull, temp + fsync + atomic rename so the tailing stream
+    * subject per flush, temp + fsync + atomic rename so the tailing stream
     * source never sees a half-written file and an acked batch survives
     * power loss (the ack-after-durable contract in the delivery chain
     * above requires force-to-disk, not just close-to-page-cache).
@@ -344,15 +323,4 @@ object NatsBridge {
     }
     failures
   }
-}
-
-/** [[BrokerSource]] over a NATS-fed spool: `load` is the same tailing
-  * graft-proto stream [[FileBroker]] provides; the relay (started via
-  * [[NatsBridge.connect]] + `relayLoop`) keeps the spool fed. Kept as a
-  * distinct type so config-driven wiring can say "this subject comes
-  * from NATS" and get the connect/ensure/relay lifecycle. */
-final case class NatsBroker(spoolRoot: String) extends BrokerSource {
-  override def load(spark: SparkSession, subject: String,
-                    schema: StructType): DataFrame =
-    FileBroker(spoolRoot).load(spark, subject, schema)
 }

@@ -117,11 +117,10 @@ class EngineConfigSpec extends AnyFunSuite {
   }
 
   test("batcher envelope reaches the streaming knobs (Ingest.batcherParams)") {
-    // the actual config→trigger/rate seam, not just TOML parsing: the
-    // derivation ServeMain and the typed Ingest.start overload both use
+    // the actual config→trigger seam ServeMain uses, not just TOML
+    // parsing (max_rows/max_bytes apply at the relay's SpoolBatcher)
     val cfg = EngineConfig.parse("[batcher]\nmax_bytes = 1234\nflush_interval_ms = 42")
-    val (trigger, maxBytes) = graft.streaming.Ingest.batcherParams(cfg)
-    assert(maxBytes == 1234L, "max_bytes must become the source byte cap")
+    val trigger = graft.streaming.Ingest.batcherParams(cfg)
     assert(trigger ==
       org.apache.spark.sql.streaming.Trigger.ProcessingTime("42 milliseconds"),
       s"flush_interval_ms must become the processing-time trigger: $trigger")

@@ -51,25 +51,24 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("batching invariance: any split into micro-batches yields the same table") {
-    import spark.implicits._
+    import org.apache.spark.sql.Row
     val base = java.nio.file.Files.createTempDirectory("prop").toString
-    val rows = (1 to 40).map { i =>
-      ("events.login",
-        s"""{"event_id":"e-$i","event_name":"login","user_id":"u-${i % 7}","session_id":"s",
-           |"anonymous_id":"a","timestamp":${1726300800L + i},"service_origin":"w","platform":"p",
-           |"platform_version":"1","os_name":"o","os_version":"1","browser_name":"b",
-           |"browser_version":"1","device_type":"d","screen_resolution":"r","user_agent":"u"}"""
-          .stripMargin.replaceAll("\n", ""))
-    }
+    val rows = (1 to 40).map(i => Row.fromSeq(
+      streaming.WireFixtures.loginMsg(s"e-$i", s"u-${i % 7}", 1726300800L + i)))
+    def df(chunk: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(chunk), loginSchema)
     // split A: one batch; split B: 4 uneven batches
     val outA = s"$base/outA"; val outB = s"$base/outB"
-    Ingest.ingestBatch(rows.toDF("subject", "payload"), outA)
+    Ingest.writeTyped(df(rows), "login_events", loginSchema, outA, batchId = 0L)
     Seq(rows.take(3), rows.slice(3, 17), rows.slice(17, 18), rows.drop(18))
-      .foreach(chunk => Ingest.ingestBatch(chunk.toDF("subject", "payload"), outB))
+      .zipWithIndex.foreach { case (chunk, b) =>
+        Ingest.writeTyped(df(chunk), "login_events", loginSchema, outB, b.toLong)
+      }
     val a = spark.read.parquet(s"$outA/login_events")
       .select("event_id", "user_id", "timestamp").collect().map(_.toString).sorted
     val b = spark.read.parquet(s"$outB/login_events")
       .select("event_id", "user_id", "timestamp").collect().map(_.toString).sorted
+    assert(a.length == 40)
     assert(a.sameElements(b), "content must be independent of micro-batch boundaries")
   }
 

@@ -8,20 +8,28 @@ import org.scalatest.funsuite.AnyFunSuite
 class CompactionSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
-  test("compaction merges micro-batch files, preserves content and sort") {
+  /** `batches` micro-batches in the ingest layout (event_date=2024-09-14,
+    * one ingest_batch dir each), `rowsPer` rows and 2 files per batch. */
+  private def ingestTable(dir: String, batches: Int, rowsPer: Int): Unit = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("compact").toString + "/events_table"
-    // simulate 12 micro-batch appends → many small files
-    (0 until 12).foreach { b =>
-      (0 until 50).map { i =>
-        val ts = new java.sql.Timestamp(1726300800000L + (b * 50 + i) * 1000L)
-        (s"e-$b-$i", "login", ts, java.sql.Date.valueOf("2024-09-14"))
-      }.toDF("event_id", "event_name", "timestamp", "event_date")
-        .coalesce(2).write.mode("append").partitionBy("event_date").parquet(dir)
+    (0 until batches).foreach { b =>
+      (0 until rowsPer).map { i =>
+        val ts = new java.sql.Timestamp(1726300800000L + (b * rowsPer + i) * 1000L)
+        (s"e-$b-$i", "login", ts, java.sql.Date.valueOf("2024-09-14"), b.toLong)
+      }.toDF("event_id", "event_name", "timestamp", "event_date", "ingest_batch")
+        .coalesce(2).write.mode("append")
+        .partitionBy("event_date", "ingest_batch").parquet(dir)
     }
+  }
+
+  test("compaction merges micro-batch files, preserves content and sort") {
+    val dir = Files.createTempDirectory("compact").toString + "/events_table"
+    // 12 micro-batches → many small files
+    ingestTable(dir, batches = 12, rowsPer = 50)
     val beforeRows = spark.read.parquet(dir).collect().map(_.getString(0)).sorted
 
-    val stats = Compaction.compact(spark, dir, targetBytes = 512L * 1024 * 1024)
+    val stats = Compaction.compactIngest(spark, s"$dir/event_date=2024-09-14",
+      maxCommitted = 11L, targetBytes = 512L * 1024 * 1024)
     assert(stats.filesBefore > stats.filesAfter, s"no merge happened: $stats")
     assert(stats.filesAfter <= 2)
     assert(stats.rows == 600)
@@ -42,21 +50,14 @@ class CompactionSpec extends AnyFunSuite {
 
   test("compaction preserves EVERY on-disk partition level (ingest layout)") {
     import spark.implicits._
-    // the ingest sink writes event_date=X/ingest_batch=N — compacting
-    // with only the date level would flatten ingest_batch into a data
-    // column and leave a mixed-depth layout the next replayed batch
-    // cannot coexist with
+    // with no batch settled, compaction merges each batch's files but
+    // keeps its ingest_batch dir: a replayed batch's dynamic overwrite
+    // must still find its own partition
     val dir = Files.createTempDirectory("compact2").toString + "/login_events"
-    (0 until 3).foreach { b =>
-      (0 until 40).map { i =>
-        val ts = new java.sql.Timestamp(1726300800000L + (b * 40 + i) * 1000L)
-        (s"e-$b-$i", "login", ts, java.sql.Date.valueOf("2024-09-14"), b.toLong)
-      }.toDF("event_id", "event_name", "timestamp", "event_date", "ingest_batch")
-        .coalesce(2).write.mode("append")
-        .partitionBy("event_date", "ingest_batch").parquet(dir)
-    }
+    ingestTable(dir, batches = 3, rowsPer = 40)
     val before = spark.read.parquet(dir).collect().map(_.getString(0)).sorted
-    Compaction.compact(spark, dir, targetBytes = 512L * 1024 * 1024)
+    Compaction.compactIngest(spark, s"$dir/event_date=2024-09-14",
+      maxCommitted = -1L, targetBytes = 512L * 1024 * 1024)
     // both levels still exist as DIRECTORIES
     val dateDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("event_date="))
@@ -81,21 +82,19 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("compaction recovers from a crash between the swap renames") {
-    import spark.implicits._
-    val parent = Files.createTempDirectory("compact3")
-    val dir = parent.toString + "/t"
-    (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .coalesce(4).write.parquet(dir)
-    val rows = spark.read.parquet(dir).collect().map(_.getLong(0)).sorted
-    // simulate the crash window: table moved aside to .bak, tmp lost
-    val bak = new java.io.File(parent.toString, ".t_compact_bak")
-    assert(new java.io.File(dir).renameTo(bak))
-    assert(!new java.io.File(dir).exists())
+    val dir = Files.createTempDirectory("compact3").toString + "/t"
+    ingestTable(dir, batches = 4, rowsPer = 25)
+    val part = s"$dir/event_date=2024-09-14"
+    val rows = spark.read.parquet(dir).collect().map(_.getString(0)).sorted
+    // simulate the crash window: partition moved aside to .bak, tmp lost
+    val bak = new java.io.File(dir, ".event_date=2024-09-14_compact_bak")
+    assert(new java.io.File(part).renameTo(bak))
+    assert(!new java.io.File(part).exists())
     // a re-run must restore from .bak and complete normally
-    val stats = Compaction.compact(spark, dir, sortCols = Seq("id"),
+    val stats = Compaction.compactIngest(spark, part, maxCommitted = 3L,
       targetBytes = 512L * 1024 * 1024)
     assert(stats.rows == 100)
-    assert(spark.read.parquet(dir).collect().map(_.getLong(0)).sorted
+    assert(spark.read.parquet(dir).collect().map(_.getString(0)).sorted
       .sameElements(rows))
     assert(!bak.exists(), "backup not cleaned up after recovery")
   }

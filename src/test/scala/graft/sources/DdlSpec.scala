@@ -30,26 +30,32 @@ class DdlSpec extends AnyFunSuite {
   }
 
   test("streaming ingest output becomes queryable after MSCK repair") {
-    import spark.implicits._
-    import graft.streaming.Ingest
+    import graft.streaming.{EventSchemas, Ingest}
     val root = Files.createTempDirectory("ddl_ingest").toString
-    val in = Files.createTempDirectory("ddl_in").toString
+    val wire = Files.createTempDirectory("ddl_wire").toString
     val ckpt = Files.createTempDirectory("ddl_ck").toString
     // re-point the catalog at this test's root (IF NOT EXISTS would keep
     // the previous test's locations)
-    graft.streaming.EventSchemas.tables.keys
+    EventSchemas.tables.keys
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     // table registered FIRST, then the stream writes partitions under it
     Ddl.createEventTables(spark, root)
-    Seq(("events.angulak.comment",
-      """{"event_id":"c-1","event_name":"comment","user_id":"u-5","session_id":"s",
-        |"anonymous_id":"a","timestamp":1726300800,"service_origin":"w","platform":"p",
-        |"platform_version":"1","os_name":"o","os_version":"1","browser_name":"b",
-        |"browser_version":"1","device_type":"d","screen_resolution":"r","user_agent":"u",
-        |"play_info_id":"p-3"}""".stripMargin.replaceAll("\n", "")))
-      .toDF("subject", "payload").write.mode("append").json(in)
-    val q = Ingest.start(spark, in, root, ckpt)
-    q.processAllAvailable(); q.stop()
+    val schema = EventSchemas.tables("angulak_comment_events")
+    val comment = schema.fieldNames.toSeq.map {
+      case "event_id"     => "c-1"
+      case "event_name"   => "comment"
+      case "user_id"      => "u-5"
+      case "timestamp"    => 1726300800L
+      case "play_info_id" => "p-3"
+      case _              => ""
+    }
+    new java.io.File(s"$wire/events.angulak.comment").mkdirs()
+    ProtoFiles.writeLocal(s"$wire/events.angulak.comment/flush-000001.pbstream",
+      Iterator(comment), schema)
+    val qs = Ingest.startFromWire(spark, wire, root, ckpt,
+      subjects = Seq("events.angulak.comment"))
+    try qs.values.foreach(_.processAllAvailable())
+    finally qs.values.foreach(_.stop())
     // path-written partitions invisible to the catalog until repaired
     Ddl.repairEventTables(spark)
     val got = spark.sql(

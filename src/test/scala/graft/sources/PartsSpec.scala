@@ -11,12 +11,15 @@ class PartsSpec extends AnyFunSuite {
   test("per-partition file/byte census and the compaction work queue") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_parts").toString
-    // Jan 1 written fragmented (4 files), Jan 2 compact (1 file)
-    Seq.tabulate(8)(i => (i.toLong, "2024-01-01"))
-      .toDF("v", "event_date").repartition(4)
-      .write.partitionBy("event_date").mode("append").parquet(dir)
-    Seq((99L, "2024-01-02")).toDF("v", "event_date").coalesce(1)
-      .write.partitionBy("event_date").mode("append").parquet(dir)
+    // Jan 1 written fragmented (4 batches, 1 file each), Jan 2 compact
+    // (1 file) — the ingest layout, event_date=X/ingest_batch=N
+    (0 until 4).foreach { b =>
+      Seq.tabulate(2)(i => (b * 2L + i, "2024-01-01", b.toLong))
+        .toDF("v", "event_date", "ingest_batch").coalesce(1)
+        .write.partitionBy("event_date", "ingest_batch").mode("append").parquet(dir)
+    }
+    Seq((99L, "2024-01-02", 0L)).toDF("v", "event_date", "ingest_batch").coalesce(1)
+      .write.partitionBy("event_date", "ingest_batch").mode("append").parquet(dir)
 
     val parts = Parts.forTable(spark, dir).collect()
       .map(r => (r.getAs[String]("partition"), r.getAs[Long]("n_files"),
@@ -26,17 +29,26 @@ class PartsSpec extends AnyFunSuite {
     val Array(jan1, jan2) = parts
     assert(jan1._2 == 4 && jan2._2 == 1)
     assert(jan1._3 > 0 && jan2._3 > 0)
-    // the work queue is directly consumable paths
-    val queue = Parts.needingCompaction(spark, dir, maxFiles = 2)
+    // the work queue is directly consumable paths: batch 0 wrote both
+    // dates, only the fragmented one is queued
+    val target = 512L * 1024 * 1024
+    val queue = Parts.needingCompaction(spark, dir, batchId = 0L, maxFiles = 2,
+      targetBytes = target)
     assert(queue.size == 1 && queue.head.endsWith("/event_date=2024-01-01"))
     assert(new java.io.File(new java.net.URI(queue.head).getPath).isDirectory)
-    Compaction.compact(spark, dir, sortCols = Seq("v"))
-    assert(Parts.needingCompaction(spark, dir, maxFiles = 2).isEmpty)
+    Compaction.compactIngest(spark, queue.head, maxCommitted = 3L,
+      sortCols = Seq("v"), targetBytes = target)
     // rows intact after compaction, census reflects the merge
     assert(spark.read.parquet(dir).count() == 9)
     val after = Parts.forTable(spark, dir)
       .filter(col("partition") === "event_date=2024-01-01").head()
     assert(after.getAs[Long]("n_files") == 1)
+    // the next batch lands next to the pooled file: 2 files, not queued
+    Seq((100L, "2024-01-01", 4L)).toDF("v", "event_date", "ingest_batch")
+      .coalesce(1).write.partitionBy("event_date", "ingest_batch")
+      .mode("append").parquet(dir)
+    assert(Parts.needingCompaction(spark, dir, batchId = 4L, maxFiles = 2,
+      targetBytes = target).isEmpty)
   }
 
   test("census ignores hidden dirs the reader ignores (_temporary leftovers)") {
@@ -62,30 +74,26 @@ class PartsSpec extends AnyFunSuite {
     val row = Parts.forTable(spark, flat).head()
     assert(row.getAs[String]("partition") == "<unpartitioned>" &&
       row.getAs[Long]("n_files") == 1)
-    // unpartitioned work queue points at the table dir itself
-    assert(Parts.needingCompaction(spark, flat, maxFiles = 0)
-      .head.endsWith(new java.io.File(flat).getName))
   }
 
   test("hysteresis work queue: fragmented selected, floor-bound skipped") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_parts_hyst").toString
-    // 8 small files in one partition
+    // 8 small files in one partition, one per ingest batch
     (1 to 8).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v")
-        .withColumn("p", org.apache.spark.sql.functions.lit("a"))
-        .coalesce(1).write.mode("append").partitionBy("p").parquet(dir)
+      Seq((i.toLong, s"v$i", "2024-01-01", i.toLong))
+        .toDF("id", "v", "event_date", "ingest_batch")
+        .coalesce(1).write.mode("append")
+        .partitionBy("event_date", "ingest_batch").parquet(dir)
     }
     val bytes = Parts.forTable(spark, dir).head.getAs[Long]("bytes")
     // huge target: floor = 1 file, 8 > max(4, 2) -> FRAGMENTED, selected
-    assert(Parts.needingCompaction(spark, dir, maxFiles = 4,
+    assert(Parts.needingCompaction(spark, dir, batchId = 8L, maxFiles = 4,
       targetBytes = bytes * 10).nonEmpty)
     // tiny target: floor = ceil(bytes/(bytes/8)) = 8 files -> the census
     // exceeds maxFiles but compaction cannot get below ~8 files, so the
     // partition is LARGE, not fragmented: skipped (no perpetual rewrite)
-    assert(Parts.needingCompaction(spark, dir, maxFiles = 4,
+    assert(Parts.needingCompaction(spark, dir, batchId = 8L, maxFiles = 4,
       targetBytes = math.max(1L, bytes / 8)).isEmpty)
-    // the bare-census overload still flags it (the tests' old contract)
-    assert(Parts.needingCompaction(spark, dir, maxFiles = 4).nonEmpty)
   }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BrokerSourceSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
-  test("startFromBroker over FileBroker: typed rows land per table, ack-after-write") {
+  test("startFromWire: typed rows land per table, ack-after-write") {
     val wire = java.nio.file.Files.createTempDirectory("broker_wire").toString
     val out = java.nio.file.Files.createTempDirectory("broker_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("broker_ckpt").toString
@@ -16,7 +16,7 @@ class BrokerSourceSpec extends AnyFunSuite {
     new java.io.File(s"$wire/events.login").mkdirs()
     graft.sources.ProtoFiles.writeLocal(s"$wire/events.login/flush-000001.pbstream",
       Iterator(loginMsg("b-1", "u-1", t0)), EventSchemas.tables("login_events"))
-    val qs = Ingest.startFromBroker(spark, FileBroker(wire), out, ckpt,
+    val qs = Ingest.startFromWire(spark, wire, out, ckpt,
       subjects = Seq("events.login"))
     try {
       qs.values.foreach(_.processAllAvailable())
@@ -75,7 +75,7 @@ class BrokerSourceSpec extends AnyFunSuite {
       "blocker".getBytes)
 
     def deliverOnce(): Option[Throwable] = {
-      val qs = Ingest.startFromBroker(spark, FileBroker(wire), out, ckpt,
+      val qs = Ingest.startFromWire(spark, wire, out, ckpt,
         subjects = Seq("events.login"), maxDeliver = 2)
       try {
         qs.values.foreach(_.processAllAvailable()); None
@@ -118,7 +118,7 @@ class BrokerSourceSpec extends AnyFunSuite {
     val errBuf = new java.io.ByteArrayOutputStream()
     val prevErr = System.err
     System.setErr(new java.io.PrintStream(errBuf, true))
-    val qs = try Ingest.startFromBroker(spark, FileBroker(wire), out, ckpt,
+    val qs = try Ingest.startFromWire(spark, wire, out, ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"),
         subjects = Seq("events.login"),
         compaction = graft.CompactionConfig(enabled = true, maxFiles = 2))
@@ -154,50 +154,151 @@ class BrokerSourceSpec extends AnyFunSuite {
       "a compaction failure must not dead-letter rows")
   }
 
-  test("KafkaBroker option mapping mirrors the reference consumer config") {
-    val kb = KafkaBroker("broker:9092", groupPrefix = "click-consumer",
-      maxOffsetsPerTrigger = 100000L)
-    val o = kb.options("events.login")
-    assert(o("kafka.bootstrap.servers") == "broker:9092")
-    assert(o("subscribe") == "events.login")
-    assert(o("kafka.group.id") == "click-consumer-events.login",
-      "durable_name analog: stable per-subject group id")
-    assert(o("maxOffsetsPerTrigger") == "100000")
-    assert(o("failOnDataLoss") == "true", "retention gaps must be loud")
-    // config-driven construction from the [nats]/[batcher] sections
-    val cfg = graft.EngineConfig.parse(
-      "[nats]\nhost = \"kbroker\"\nclient_port = 9092\nconsumer_name = \"cc\"\n" +
-        "[batcher]\nmax_rows = 5000")
-    val fromCfg = KafkaBroker.fromConfig(cfg)
-    assert(fromCfg.bootstrapServers == "kbroker:9092")
-    assert(fromCfg.groupPrefix == "cc" && fromCfg.maxOffsetsPerTrigger == 5000L)
+  test("writer-side compaction censuses only the partitions the batch wrote") {
+    val wire = java.nio.file.Files.createTempDirectory("census_wire").toString
+    val out = java.nio.file.Files.createTempDirectory("census_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("census_ckpt").toString
+    val schema = EventSchemas.tables("login_events")
+    // an older date partition left fragmented by four backfill appends
+    val oldDay = 1725148800L // 2024-09-01
+    (0 until 4).foreach { i =>
+      val row = org.apache.spark.sql.Row.fromSeq(
+        WireFixtures.loginMsg(s"old-$i", "u-1", oldDay + i))
+      Ingest.writeTyped(spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(row)), schema),
+        "login_events", schema, out, batchId = -1L)
+    }
+    def files(partition: String): Long =
+      graft.sources.Parts.forTable(spark, s"$out/login_events").collect()
+        .find(_.getAs[String]("partition") == partition)
+        .map(_.getAs[Long]("n_files")).getOrElse(0L)
+    assert(files("event_date=2024-09-01") == 4)
+    val qs = Ingest.startFromWire(spark, wire, out, ckpt,
+      subjects = Seq("events.login"),
+      compaction = graft.CompactionConfig(enabled = true, maxFiles = 2))
+    val q = qs("login_events")
+    try {
+      new java.io.File(s"$wire/events.login").mkdirs()
+      (0 until 3).foreach { b =>
+        graft.sources.ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
+          Iterator(WireFixtures.loginMsg(s"new-$b", "u-1", 1726300800L + b)), schema)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(q.exception.isEmpty, s"${q.exception}")
+    // batch 2 wrote the third file into 2024-09-14: that partition was
+    // pooled; 2024-09-01, which no batch wrote, was left alone
+    assert(files("event_date=2024-09-14") == 2)
+    assert(files("event_date=2024-09-01") == 4,
+      "a partition the batch did not write must keep its file count")
+    assert(spark.read.parquet(s"$out/login_events").count() == 7)
   }
 
-  test("KafkaBroker without the connector jar fails with a clear pointer") {
-    val ex = intercept[Exception] {
-      KafkaBroker("broker:9092").load(spark, "events.login",
-        EventSchemas.tables("login_events"))
+  test("HTTP INSERT into a partition mid-compaction survives exactly once") {
+    val wire = java.nio.file.Files.createTempDirectory("lock_wire").toString
+    val local = java.nio.file.Files.createTempDirectory("lock_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("lock_ckpt").toString
+    spark.sparkContext.hadoopConfiguration.set("fs.latchfs.impl",
+      classOf[LatchedCompactionFs].getName)
+    LatchedCompactionFs.arm()
+    val out = s"latchfs://$local"
+    val schema = EventSchemas.tables("login_events")
+    def flush(b: Int): Unit =
+      graft.sources.ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
+        Iterator(WireFixtures.loginMsg(s"w-$b", "u-1", 1726300800L + b)), schema)
+    new java.io.File(s"$wire/events.login").mkdirs()
+    val qs = Ingest.startFromWire(spark, wire, out, ckpt,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"),
+      subjects = Seq("events.login"),
+      compaction = graft.CompactionConfig(enabled = true, maxFiles = 2))
+    val q = qs("login_events")
+    val srv = new graft.server.HttpSql(spark, dataDir = Some(out))
+    val port = srv.start()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    try {
+      flush(0); q.processAllAvailable()
+      flush(1); q.processAllAvailable()
+      // the third single-file batch pushes 2024-09-14 past max_files: the
+      // writer starts a swap and parks before moving the partition aside
+      flush(2)
+      assert(LatchedCompactionFs.reached.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the writer never started a compaction swap")
+      val body = new java.io.ByteArrayOutputStream()
+      ProtoWire.writeFrame(body,
+        ProtoWire.encode(WireFixtures.loginMsg("h-1", "u-2", 1726300810L), schema))
+      val insert = Future {
+        java.net.http.HttpClient.newHttpClient().send(
+          java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+            s"http://127.0.0.1:$port/?query=" + java.net.URLEncoder.encode(
+              "INSERT INTO login_events FORMAT Protobuf", "UTF-8")))
+            .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body.toByteArray))
+            .build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+      }
+      // an INSERT that does not wait for the swap lands in these seconds
+      scala.util.Try(Await.ready(insert, 3.seconds))
+      LatchedCompactionFs.release.countDown()
+      val resp = Await.result(insert, 60.seconds)
+      assert(resp.statusCode() == 200, resp.body())
+      q.processAllAvailable()
+    } finally {
+      LatchedCompactionFs.release.countDown()
+      srv.stop(); q.stop()
     }
-    def msgs(t: Throwable): String =
-      if (t == null) "" else Option(t.getMessage).getOrElse("") + " " + msgs(t.getCause)
-    assert(msgs(ex).toLowerCase.contains("kafka"), s"unexpected error: $ex")
+    assert(q.exception.isEmpty, s"${q.exception}")
+    val table = spark.read.parquet(s"$local/login_events")
+    assert(table.filter("ingest_batch = -1 AND event_id = 'w-0'").count() == 1,
+      "the swap must have pooled the settled batches")
+    assert(table.select("event_id").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("h-1", "w-0", "w-1", "w-2"), "every row exactly once")
   }
 }
 
-/** The local filesystem under the `faultfs` scheme, except that renaming
-  * a directory to a compaction backup (`.<partition>_compact_bak`)
-  * always fails. */
-class CompactionFaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+/** The local filesystem under another scheme. The local status loads its
+  * permissions through a file: URI, which these schemes are not;
+  * listings need only the plain fields. */
+abstract class LocalSchemeFs(scheme: String)
+    extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.{FileStatus, Path}
-  override def getScheme: String = "faultfs"
-  override def getUri: java.net.URI = java.net.URI.create("faultfs:///")
-  // the local status loads its permissions through a file: URI, which
-  // this scheme is not; listings need only the plain fields
+  override def getScheme: String = scheme
+  override def getUri: java.net.URI = java.net.URI.create(s"$scheme:///")
   override def getFileStatus(p: Path): FileStatus = {
     val st = super.getFileStatus(p)
     new FileStatus(st.getLen, st.isDirectory, st.getReplication,
       st.getBlockSize, st.getModificationTime, st.getPath)
   }
+}
+
+/** `latchfs`: renaming a directory to a compaction backup
+  * (`.<partition>_compact_bak`) first counts down
+  * [[LatchedCompactionFs.reached]], then waits for
+  * [[LatchedCompactionFs.release]]. */
+class LatchedCompactionFs extends LocalSchemeFs("latchfs") {
+  import org.apache.hadoop.fs.Path
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (dst.getName.endsWith("_compact_bak")) {
+      LatchedCompactionFs.reached.countDown()
+      LatchedCompactionFs.release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    super.rename(src, dst)
+  }
+}
+
+object LatchedCompactionFs {
+  @volatile var reached = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+  def arm(): Unit = {
+    reached = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+}
+
+/** `faultfs`: renaming a directory to a compaction backup
+  * (`.<partition>_compact_bak`) always fails. */
+class CompactionFaultFs extends LocalSchemeFs("faultfs") {
+  import org.apache.hadoop.fs.Path
   override def rename(src: Path, dst: Path): Boolean =
     if (dst.getName.endsWith("_compact_bak"))
       throw new java.io.IOException(s"injected rename fault: $src -> $dst")

@@ -10,18 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class IngestSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
-  private def payload(eventId: String, name: String, user: String,
-                      ts: Long, extra: String = ""): String = {
-    val extraJson = if (extra.isEmpty) "" else s",$extra"
-    s"""{"event_id":"$eventId","event_name":"$name","user_id":"$user",
-       |"session_id":"s-1","anonymous_id":"a-1","timestamp":$ts,
-       |"service_origin":"web","platform":"android","platform_version":"14",
-       |"os_name":"android","os_version":"14","browser_name":"chrome",
-       |"browser_version":"128","device_type":"mobile",
-       |"screen_resolution":"1080x2400","user_agent":"UA"$extraJson}"""
-      .stripMargin.replaceAll("\n", "")
-  }
-
   test("route↔schema consistency (reference bug not replicated)") {
     // Every route target must have a schema — the reference's routing
     // table misspells shahre_farang targets (src/handler.rs:42,46).
@@ -31,58 +19,6 @@ class IngestSpec extends AnyFunSuite {
     EventSchemas.tables.values.foreach { st =>
       assert(st.fields.take(16).toSeq == EventSchemas.envelope)
     }
-  }
-
-  test("ingest pipeline: routing, decode, DLQ, sorted partitioned writes") {
-    import spark.implicits._
-    val in = Files.createTempDirectory("graft_in").toString
-    val out = Files.createTempDirectory("graft_out").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
-
-    val t0 = 1726300800L
-    val rows = Seq(
-      ("events.login", payload("e-1", "login", "u-1", t0)),
-      ("events.login", payload("e-2", "login", "u-2", t0 + 5)),
-      ("events.login", payload("e-2", "login", "u-2", t0 + 5)), // at-least-once duplicate
-      ("events.angulak.watch", payload("e-3", "watch", "u-1", t0 + 10,
-        """"item_id":"i-1","play_info_id":"p-1","video_position":120,"video_duration":2400""")),
-      ("events.session", payload("e-4", "session", "u-1", t0 + 20, """"is_ended":false""")),
-      ("events.session", payload("e-5", "session", "u-1", t0 + 90, """"is_ended":true""")),
-      ("events.login", "this is not json"),          // poison ⇒ decode_error
-      ("events.unknown", payload("e-6", "x", "u-3", t0))) // unroutable
-    rows.toDF("subject", "payload").coalesce(1).write.mode("append").json(in)
-
-    val q = Ingest.start(spark, in, out, ckpt)
-    q.processAllAvailable()
-
-    val login = spark.read.parquet(s"$out/login_events")
-    assert(login.count() == 3) // duplicates preserved (at-least-once semantics)
-    assert(login.select("event_id").distinct().count() == 2)
-    assert(login.dropDuplicates(Seq("event_id")).count() == 2) // O-W1/O-S4 view
-    // epoch seconds → TimestampType, date partition present
-    assert(login.schema("timestamp").dataType.typeName == "timestamp")
-    assert(login.columns.contains("event_date"))
-
-    val watch = spark.read.parquet(s"$out/angulak_watch_events")
-    assert(watch.count() == 1)
-    assert(watch.head().getAs[Int]("video_duration") == 2400)
-    // proto3 default fill: absent string fields are "", not null
-    assert(watch.head().getAs[String]("ad_id") == "")
-
-    assert(spark.read.parquet(s"$out/session_events").count() == 2)
-
-    val dlq = spark.read.parquet(s"$out/${Ingest.DlqTable}")
-      .groupBy("reason").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(dlq == Map("unroutable_subject" -> 1L, "decode_error" -> 1L))
-
-    // Checkpointed resume: a new input file is processed exactly once,
-    // old files are not reprocessed (ack-after-insert analog, O-T4).
-    Seq(("events.login", payload("e-7", "login", "u-9", t0 + 100)))
-      .toDF("subject", "payload").write.mode("append").json(in)
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.read.parquet(s"$out/login_events").count() == 4)
   }
 
   test("readDlq unions the legacy flat layout with the subject-partitioned layout") {
@@ -99,9 +35,8 @@ class IngestSpec extends AnyFunSuite {
       .write.partitionBy("ingest_batch").parquet(s"$out/${Ingest.DlqTable}")
     // current vintage through the real write path: subject in the
     // partition key, _dlq/subject=X/ingest_batch=N/…
-    Ingest.ingestBatch(
-      Seq(("events.unknown", "new payload")).toDF("subject", "payload"),
-      out, batchId = 1L)
+    Ingest.deadLetterExhausted(Seq("e-9").toDF("event_id"), "events.login",
+      out, batchId = 1L, deliveries = 3)
     // mixed-depth partition dirs under one root: a naive read throws
     // "Conflicting directory structures"; readDlq must union both
     val dlq = Ingest.readDlq(spark, out)
@@ -109,11 +44,11 @@ class IngestSpec extends AnyFunSuite {
       .as[(String, String, String)].collect().sortBy(_._1)
     assert(rows.toSeq == Seq(
       ("events.legacy", "old payload", "unroutable_subject"),
-      ("events.unknown", "new payload", "unroutable_subject")))
+      ("events.login", """{"event_id":"e-9"}""", "max_deliver_exceeded")))
     // schema evolution: pre-budget rows read deliveries as null, not crash
     val deliveries = dlq.orderBy("subject").select("deliveries")
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-    assert(deliveries.toSeq == Seq(None, Some(1)))
+    assert(deliveries.toSeq == Seq(None, Some(3)))
   }
 
   test("wire-native ingest: graft-proto flush dirs -> typed sorted tables") {
@@ -124,6 +59,7 @@ class IngestSpec extends AnyFunSuite {
 
     def loginMsg(id: String, user: String, ts: Long): Seq[Any] =
       WireFixtures.loginMsg(id, user, ts)
+    val loginSchema = EventSchemas.tables("login_events")
     def sessionMsg(id: String, ts: Long, ended: Boolean): Seq[Any] =
       Seq(id, "session", "u-1", "s-1", "a-1", ts,
         "web", "android", "14", "android", "14", "chrome", "128",
@@ -132,8 +68,11 @@ class IngestSpec extends AnyFunSuite {
     new java.io.File(s"$wire/events.login").mkdirs()
     new java.io.File(s"$wire/events.session").mkdirs()
     graft.sources.ProtoFiles.writeLocal(s"$wire/events.login/flush-000001.pbstream",
-      Iterator(loginMsg("e-1", "u-1", t0), loginMsg("e-2", "u-2", t0 + 5)),
-      EventSchemas.tables("login_events"))
+      Iterator(loginMsg("e-1", "u-1", t0), loginMsg("e-2", "u-2", t0 + 5),
+        loginMsg("e-2", "u-2", t0 + 5), // at-least-once duplicate
+        // proto3 "" is absent on the wire
+        loginMsg("e-5", "u-4", t0 + 7).updated(loginSchema.fieldIndex("platform"), "")),
+      loginSchema)
     graft.sources.ProtoFiles.writeLocal(s"$wire/events.session/flush-000001.pbstream",
       Iterator(sessionMsg("e-3", t0 + 20, ended = false)),
       EventSchemas.tables("session_events"))
@@ -143,9 +82,12 @@ class IngestSpec extends AnyFunSuite {
     try {
       qs.values.foreach(_.processAllAvailable())
       val login = spark.read.parquet(s"$out/login_events")
-      assert(login.count() == 2)
+      assert(login.count() == 4) // duplicates preserved (at-least-once semantics)
+      assert(login.select("event_id").distinct().count() == 3)
       assert(login.schema("timestamp").dataType.typeName == "timestamp")
       assert(login.columns.contains("event_date") && login.columns.contains("ingest_batch"))
+      // proto3 default fill: an absent string field is "", not null
+      assert(login.filter("event_id = 'e-5'").head().getAs[String]("platform") == "")
       val session = spark.read.parquet(s"$out/session_events")
       assert(session.count() == 1)
       // proto3 false is absent on the wire; the default fill restores it
@@ -156,7 +98,7 @@ class IngestSpec extends AnyFunSuite {
         Iterator(loginMsg("e-4", "u-3", t0 + 50)),
         EventSchemas.tables("login_events"))
       qs("login_events").processAllAvailable()
-      assert(spark.read.parquet(s"$out/login_events").count() == 3)
+      assert(spark.read.parquet(s"$out/login_events").count() == 5)
     } finally qs.values.foreach(_.stop())
   }
 

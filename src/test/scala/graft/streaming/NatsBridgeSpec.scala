@@ -113,21 +113,31 @@ class NatsBridgeSpec extends AnyFunSuite {
       nc.ping(2000)
       val spool = java.nio.file.Files.createTempDirectory("nats_spool").toString
       val s = NatsBridge.NatsSession(nc, js, "EVENTS", "graft-consumer")
-      assert(NatsBridge.pumpOnce(s, spool, batch = 10, expiresMs = 2000) == 4)
+      // a zero interval flushes every cycle's fetch at once
+      val b = new NatsBridge.SpoolBatcher(s, spool, flushIntervalMs = 0L)
+      assert(b.pumpOnce(batch = 10, expiresMs = 2000) == 4)
+      assert(b.pendingRows == 0)
+      nc.ping(2000)
       // acked only after the spool file landed
       assert(srv.ackedCount("EVENTS", "graft-consumer") == 4)
       val files = new java.io.File(s"$spool/$subject").listFiles()
       assert(files.nonEmpty && files.forall(f =>
         f.getName.startsWith("nats-") && f.getName.endsWith(".pbstream")))
 
-      val df = spark.read.format("graft-proto")
-        .option("schema", schema.toDDL).load(s"$spool/$subject")
+      // the ingest stream reads the spool typed
+      val out = java.nio.file.Files.createTempDirectory("nats_out").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("nats_ckpt").toString
+      val qs = Ingest.startFromWire(spark, spool, out, ckpt, subjects = Seq(subject))
+      try qs.values.foreach(_.processAllAvailable())
+      finally qs.values.foreach(_.stop())
+      val df = spark.read.parquet(s"$out/login_events")
       assert(df.count() == 4)
       assert(df.select("user_id").collect().map(_.getString(0)).sorted
         === Array("u-1", "u-2", "u-3", "u-4"))
 
       // idle pull spools nothing and acks nothing further
-      assert(NatsBridge.pumpOnce(s, spool, batch = 10, expiresMs = 300) == 0)
+      assert(b.pumpOnce(batch = 10, expiresMs = 300) == 0)
+      assert(files.length == new java.io.File(s"$spool/$subject").listFiles().length)
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.util.Base64
 import graft.TestSession
 import org.apache.spark.sql.functions._
@@ -110,38 +109,5 @@ class ProtoWireSpec extends AnyFunSuite {
     intercept[ProtoWire.ProtoParseException] {
       ProtoWire.decodeToJson(aliasTag, watchSchema)
     }
-  }
-
-  test("end-to-end ingest in protobuf mode with DLQ") {
-    import spark.implicits._
-    val in = Files.createTempDirectory("proto_in").toString
-    val out = Files.createTempDirectory("proto_out").toString
-    val ckpt = Files.createTempDirectory("proto_ckpt").toString
-    val b64 = (v: Seq[Any], s: org.apache.spark.sql.types.StructType) =>
-      Base64.getEncoder.encodeToString(ProtoWire.encode(v, s))
-
-    val loginSchema = EventSchemas.tables("login_events")
-    val rows = Seq(
-      ("events.login", b64(envelopeValues("e-1", "login", 1726300800L), loginSchema)),
-      ("events.shahrefarang.item", b64(envelopeValues("e-2", "item", 1726300900L) ++
-        Seq("i-1", "p-1", 16, false, true, true,
-          Seq("drama"), Seq.empty[String], Seq("fa"), Seq.empty[String], "home"),
-        itemSchema)),
-      ("events.login", Base64.getEncoder.encodeToString(
-        Array[Byte](0x80.toByte, 0x80.toByte))) // poison: truncated varint
-    )
-    rows.toDF("subject", "payload").coalesce(1).write.mode("append").json(in)
-
-    val q = Ingest.start(spark, in, out, ckpt, decoder = ProtoPayloadDecoder)
-    q.processAllAvailable(); q.stop()
-
-    val login = spark.read.parquet(s"$out/login_events")
-    assert(login.count() == 1)
-    assert(login.head().getAs[String]("platform") == "android")
-    val item = spark.read.parquet(s"$out/shahre_farang_item_events")
-    assert(item.head().getAs[scala.collection.Seq[String]]("genres").toList == List("drama"))
-    assert(item.head().getAs[Int]("age_rating") == 16)
-    val dlq = spark.read.parquet(s"$out/${Ingest.DlqTable}")
-    assert(dlq.filter(col("reason") === "decode_error").count() == 1)
   }
 }
