@@ -322,24 +322,6 @@ object ScaleSmoke {
       println(f"[scale] delta candidates x$m (history=$splitId, batch=${nDoc - splitId}): " +
         f"$deltaCand%,d cross pairs  (${deltaCand.toDouble / (nDoc - splitId)}%.2f per batch doc)")
       mhD.caches.foreach(_.unpersist())
-      // ---- DedupStream ingest CPU: signature throughput ---------------
-      // The streaming hot path is per-doc minhash signing; the
-      // per-executor bigram-hash memo amortizes the 8 seeded md5s to
-      // ~one per DISTINCT bigram. Measured here as single-thread
-      // docs/sec over the corpus texts (state/shuffle excluded — this
-      // is the CPU term an executor core pays per arriving doc).
-      locally {
-        import spark.implicits._
-        val texts = Tables.documents(spark, dir).select("text")
-          .as[String].collect()
-        texts.take(1000).foreach(t => graft.streaming.DedupStream.signature(t))
-        val t0 = System.nanoTime()
-        texts.foreach(t => graft.streaming.DedupStream.signature(t))
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] stream signature x$m (n=${texts.length}%,d): " +
-          f"${texts.length / sec}%,.0f docs/s/core")
-      }
-
       // ---- incremental advance vs full rebuild ------------------------
       // The maintenance contract: with a FIXED daily batch and a history
       // that grows with m, `Backbone.advance` must stay ~flat (its work
@@ -529,7 +511,6 @@ object ScaleSmoke {
         // to the extra bands, not a reroll). Candidate cost multiplies
         // by ~b: the sweep prints it so the recall is priced, not free.
         var lastRecall = -1.0
-        var recallAtB2 = -1.0
         Seq(1, 2, 4).foreach { nb =>
           val post = pipeline.Similarity
             .bandedSignBuckets(spark, emb, nb, rule, Some(7L))
@@ -550,50 +531,8 @@ object ScaleSmoke {
           require(recall >= lastRecall,
             f"banded recall must be monotone in b: $recall%.3f after $lastRecall%.3f")
           lastRecall = recall
-          if (nb == 2) recallAtB2 = recall
           println(f"[scale] vec-geometry band b=$nb%-2d r=$rule%-2d x$m: " +
             f"recall=$recall%.3f model=$model%.3f candidates=$nCand%,d")
-        }
-        // STREAMED seeded-index recall point (VERDICT r14 #3 done-
-        // criterion): the b=2 geometry measured above, written through
-        // the STREAM path (3 micro-batch cuts through the foreachBatch
-        // body), its geometry read back from the store's sidecar, and
-        // its postings audited for the same window recall. The pinned-
-        // geometry equality (stream == batch == probe, spec-pinned)
-        // makes this recall EXACTLY the stateless b=2 number — required
-        // here so the certification is measured, not inferred.
-        locally {
-          val geom = pipeline.BandedGeom.seeded(2, rule, 7L, 64)
-          val q = pipeline.VecBackbone.quantizer(spark, dir)
-          val base = s"${sys.props("java.io.tmpdir")}/graft_streamidx_$m"
-          val fsp = new org.apache.hadoop.fs.Path(base)
-          fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(fsp, true)
-          (0 until 3).foreach { i =>
-            val loB = window * i / 3; val hiB = window * (i + 1) / 3
-            graft.streaming.VecIndexStream.writeIndexBatch(
-              emb.filter(col("vec_id") >= loB && col("vec_id") < hiB),
-              i.toLong, base, q, geom = geom)
-          }
-          val storedGeom =
-            graft.streaming.VecIndexStream.readBandedGeom(spark, base)
-          require(storedGeom == geom,
-            s"streamed index sidecar lost the geometry: $storedGeom")
-          val post =
-            graft.streaming.VecIndexStream.readBandedPostings(spark, base)
-          val caught = post.as("x").join(post.as("y"),
-              col("x.band") === col("y.band") &&
-                col("x.bucket") === col("y.bucket") &&
-                col("x.vec_id") < col("y.vec_id"))
-            .select(col("x.vec_id").as("va"), col("y.vec_id").as("vb"))
-            .distinct()
-          val hit = truth.join(caught, Seq("va", "vb"), "left_semi").count()
-          val recall = hit.toDouble / nTruth
-          println(f"[scale] vec-geometry STREAMED b=2 r=$rule x$m: " +
-            f"recall=$recall%.3f (stateless b=2: $recallAtB2%.3f)")
-          require(recall == recallAtB2,
-            f"streamed seeded index recall $recall%.3f != stateless " +
-              f"$recallAtB2%.3f — the stream wrote different buckets")
         }
         truth.unpersist()
       }

@@ -35,8 +35,8 @@ object Tables {
     * embeds the table's file-metadata version (count, bytes, max mtime —
     * one local stat walk, no Spark job), so a spec that overwrites a
     * temp-dir corpus in place gets a fresh handle, never the stale file
-    * index — the same staleness discipline as Warehouse.token. Sessions
-    * are weakly keyed so stopped test sessions don't pin their
+    * index — the same staleness discipline as Warehouse.token. Spark
+    * sessions are weakly keyed so stopped test sessions don't pin their
     * handles. */
   private val memoMap = new java.util.WeakHashMap[
     SparkSession, scala.collection.mutable.Map[String, DataFrame]]()

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * downstream query into a read of a docs-sized (fingerprints, labels)
   * or pairs-sized table. This is the "stored signature table" contract
   * the delta queries document: the tables live in the warehouse and are
-  * maintained incrementally (DedupStream is the streaming writer's
-  * shape); batch queries never recompute them.
+  * maintained incrementally ([[advanceAndStore]]); batch queries never
+  * recompute them.
   *
   * Storage: parquet under `graft.backbone.dir` (default: a per-JVM
   * scratch dir reclaimed on exit). An explicit warehouse path is used
@@ -38,7 +38,6 @@ private[graft] object Backbone {
   // tokens, instance ids) are shared with the embedding-side
   // [[VecBackbone]] — see [[Warehouse]] for the discipline.
   private def instanceRoot: String = Warehouse.instanceRoot
-  private def sanitize(t: String): String = Warehouse.sanitize(t)
   private def token(s: SparkSession, d: String): String =
     Warehouse.token(s, d, "documents.parquet")
   // version-subtree root: resolving it stamps the _graft_corpus sidecar
@@ -112,7 +111,7 @@ private[graft] object Backbone {
   }
 
   /** Stored banded signatures (doc_id, band, bkey) — the table a nightly
-    * delta probes and DedupStream bootstraps from. */
+    * delta probes. */
   def bands(s: SparkSession, d: String,
             nBands: Int = 4, rowsPerBand: Int = 2): DataFrame =
     Warehouse.readParquet(s, s"${ensureMinhash(s, d, nBands, rowsPerBand)}/bands")
@@ -175,10 +174,9 @@ private[graft] object Backbone {
     readHistory(s, base)
   }
 
-  /** The COMPACTION step shared by [[history]]'s fresh build and
-    * [[compact]]'s stream-written intake: band-bucket candidate
-    * self-join → exact-Jaccard verification against the set table →
-    * CC labels, written next to the inputs. */
+  /** [[history]]'s derive step: band-bucket candidate self-join →
+    * exact-Jaccard verification against the set table → CC labels,
+    * written next to the inputs. */
   private def derivePairsAndLabels(s: SparkSession, base: String,
                                    nDocs: Long): Unit = {
     val hb = Warehouse.readParquet(s, s"$base/bands")
@@ -211,9 +209,8 @@ private[graft] object Backbone {
     * sets and fingerprints for documents in [split, batchEnd) — signed
     * ONCE per batch and shared by every consumer that probes history
     * with them (the stored-delta query and the incremental advance both
-    * need exactly these). In production the ingest signer writes them as
-    * documents arrive (DedupStream.historyWriter is that shape); a
-    * nightly run then probes/commits WITHOUT rescanning batch text.
+    * need exactly these); a nightly run then probes/commits WITHOUT
+    * rescanning batch text.
     * The build is the only `documents` scan, batch-filtered and pushed
     * to parquet (BackboneAdvanceSpec pins both halves). */
   final case class BatchTables(bands: DataFrame, sets: DataFrame,
@@ -238,33 +235,6 @@ private[graft] object Backbone {
       Warehouse.readParquet(s, s"$base/bands"),
       Warehouse.readParquet(s, s"$base/sets"),
       Warehouse.readParquet(s, s"$base/fps"))
-  }
-
-  /** Compact EXTERNALLY-PRODUCED raw history tables (keepers, bands,
-    * shingle sets — e.g. `DedupStream.historyWriter`'s ingest-time
-    * output) into full [[HistoryTables]] by deriving the pair graph and
-    * cluster labels. This is the nightly step between the streaming
-    * writer and the batch advance: ingest persists raw signatures as
-    * documents arrive; compaction turns them into the probe-ready state
-    * `advance`/`d_dedup_delta_stored` read. HistoryWriterSpec runs the
-    * whole chain: stream → compact → advance == full rebuild. */
-  private[graft] def compact(s: SparkSession, keepers: DataFrame,
-                             bands: DataFrame, sets: DataFrame,
-                             tag: String): HistoryTables = {
-    // belt-and-braces beyond the caller-supplied tag: key the memo by
-    // the input INSTANCES too, so two different intakes reusing a tag
-    // rebuild (safe) instead of silently returning the first compaction
-    val inId = s"${instanceId(keepers)}_${instanceId(bands)}_${instanceId(sets)}"
-    val base = s"$instanceRoot/compact_${sanitize(tag)}_$inId"
-    ensure(s, base) {
-      Warehouse.writeSized(keepers, s"$base/keepers")
-      Warehouse.writeSized(bands, s"$base/bands")
-      Warehouse.writeSized(sets, s"$base/sets")
-      // the broadcast gate sizes off the history's own row count here
-      // (an external intake has no corpus dir to consult)
-      derivePairsAndLabels(s, base, Warehouse.readParquet(s, s"$base/sets").count())
-    }
-    readHistory(s, base)
   }
 
   /** Incrementally ADVANCE the stored backbone from history (docs below

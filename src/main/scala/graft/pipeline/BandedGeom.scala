@@ -9,8 +9,8 @@ package graft.pipeline
   *    `dims` is 0 by convention.
   *  - `seed = Some(_)`: the production seeded random-hyperplane
   *    geometry. `dims` is pinned HERE so every consumer — batch build,
-  *    stream writer, probe, advance, including over an EMPTY micro-batch
-  *    (no row to probe dims from) — derives the identical plane matrix
+  *    probe, advance, including over an EMPTY slice (no row to probe
+  *    dims from) — derives the identical plane matrix
   *    from (seed, bands, planes, dims) alone, with no data probe and no
   *    cross-JVM drift.
   *

@@ -766,7 +766,7 @@ object Similarity {
       case Some(sd) =>
         // the STATELESS seeded path sizes hyperplanes from the data —
         // one bounded head() probe, null-filtered (size(NULL) is null);
-        // stored/streamed indexes pin dims in [[BandedGeom]] instead and
+        // stored indexes pin dims in [[BandedGeom]] instead and
         // take the probe-free [[bandedSignBucketsGeom]] path
         val first = embeddings.filter(col("embedding").isNotNull)
           .select(size(col("embedding"))).head(1)
@@ -801,10 +801,10 @@ object Similarity {
   }
 
   /** Banded postings under a PINNED geometry — the probe-free form the
-    * stored/streamed index paths use (VERDICT r14 #3): axis geometries
+    * stored index paths use (VERDICT r14 #3): axis geometries
     * route to the per-row-validated axis expression; seeded geometries
     * derive their plane matrix from the pinned (seed, dims) with NO
-    * driver probe, so an empty micro-batch costs no Spark job and a
+    * driver probe, so an empty slice costs no Spark job and a
     * fresh JVM reproduces stored buckets exactly. Per-row guard: a
     * vector whose dims disagree with the pinned geometry raises instead
     * of silently hashing against truncated planes; null vectors emit

@@ -79,29 +79,22 @@ private[graft] object VecBackbone {
 
   /** Read a geometry sidecar back; None when the dir predates the
     * sidecar (pre-r15 layouts were always the axis catalog geometry).
-    * `memoize` (default true) caches the value per (session, path) —
-    * correct for the ensure-guarded warehouse stores whose sidecar never
-    * changes after the build marker; callers that read MUTABLE intake
-    * dirs (VecIndexStream writes the sidecar into its own baseDir after
-    * a None read, and must see divergent-geometry conflicts across
-    * restarts) pass memoize = false. */
-  private[graft] def readGeomSidecar(s: SparkSession, dir: String,
-                                     memoize: Boolean = true): Option[BandedGeom] = {
+    * Memoized per (session, path): every sidecar lives in an
+    * ensure-guarded warehouse store and never changes after the build
+    * marker. */
+  private[graft] def readGeomSidecar(s: SparkSession,
+                                     dir: String): Option[BandedGeom] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/banded_geom")
-    def read: Option[BandedGeom] = {
+    Warehouse.sidecarValue(s, s"geom:$p") {
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) None
       else {
-        // fresh handle, not the memoized one: a mutable intake dir may
-        // have rewritten the sidecar since an earlier read
-        val r = (if (memoize) Warehouse.readParquet(s, p.toString)
-                 else s.read.parquet(p.toString)).head
+        val r = Warehouse.readParquet(s, p.toString).head
         Some(BandedGeom(r.getAs[Int]("bands"), r.getAs[Int]("planes"),
           if (r.getAs[Boolean]("seeded")) Some(r.getAs[Long]("seed")) else None,
           r.getAs[Int]("dims")))
       }
     }
-    if (memoize) Warehouse.sidecarValue(s, s"geom:$p")(read) else read
   }
 
   /** IVF/PQ operating point — matches d_ann_ivf / d_ann_ivfpq. */
@@ -579,29 +572,6 @@ private[graft] object VecBackbone {
       Warehouse.readParquet(s, s"$base/codes"))
   }
 
-  /** Compact EXTERNALLY-PRODUCED raw index tables (bucket + code rows —
-    * e.g. `VecIndexStream.indexWriter`'s ingest-time output) into full
-    * [[VecHistory]] by deriving the pair graph and cluster labels. This
-    * is the nightly step between the streaming vector-index writer and
-    * the batch advance: ingest persists assignments as embeddings
-    * arrive; compaction turns them into the probe-ready state the
-    * stored-delta and the advance read. Instance-keyed memo (per-JVM
-    * subtree — see Warehouse.instanceRoot): two different intakes
-    * reusing a tag rebuild instead of silently sharing. */
-  private[graft] def compact(s: SparkSession, buckets: DataFrame,
-                             codes: DataFrame, tag: String): VecHistory = {
-    val inId =
-      s"${Warehouse.instanceId(buckets)}_${Warehouse.instanceId(codes)}"
-    val base = s"${Warehouse.instanceRoot}/vec_compact_" +
-      s"${Warehouse.sanitize(tag)}_$inId"
-    Warehouse.ensure(s, base) {
-      buckets.write.mode("overwrite").parquet(s"$base/buckets")
-      codes.write.mode("overwrite").parquet(s"$base/codes")
-      derivePairsAndLabels(s, base)
-    }
-    readHistory(s, base)
-  }
-
   /** Stored-delta verdicts (`d_semantic_delta_stored`): one row per
     * batch vector — nearest history near-dup (min vec_id), how many
     * history near-dups it has, and the admit/drop verdict — derived by
@@ -730,18 +700,15 @@ private[graft] object VecBackbone {
     * also spec-pinned. */
   def advanceBanded(s: SparkSession, d: String,
                     splitOverride: Long = -1L,
-                    geom: BandedGeom = CatalogGeom,
-                    histOverride: Option[VecBandedHistory] = None,
-                    hVecsOverride: Option[DataFrame] = None): DataFrame = {
+                    geom: BandedGeom = CatalogGeom): DataFrame = {
     Similarity.register(s)
     val split = if (splitOverride >= 0) splitOverride else deltaSplit(s, d)
-    val h = histOverride.getOrElse(historyBanded(s, d, split, geom))
-    // the batch probes under the geometry THE STORED STATE carries —
-    // a caller-passed geom that disagrees with a supplied history would
-    // silently join postings from two different plane sets (VERDICT
-    // r14 #3: every probe/advance reads the geometry from the store)
+    val h = historyBanded(s, d, split, geom)
+    // the batch probes under the geometry THE STORED STATE carries
+    // (VERDICT r14 #3: every probe/advance reads the geometry from the
+    // store, never from the caller)
     val g = h.geom
-    val hVecs = hVecsOverride.getOrElse(history(s, d, split).buckets)
+    val hVecs = history(s, d, split).buckets
     val btPost = bandedSlice(s, d, split, Long.MaxValue, g)
     val btVecs = batch(s, d, split).buckets
     val allVecs = hVecs.unionByName(btVecs)
@@ -764,40 +731,6 @@ private[graft] object VecBackbone {
     val advanced = untouched.unionByName(
       lbl.select(col("id").as("vec_id"), col("lbl").as("cluster_id")))
     Materialize.drop(advanced, Seq(newPairs, edges) ++ ccCaches: _*)
-  }
-
-  /** Compact EXTERNALLY-PRODUCED banded postings (e.g.
-    * `VecIndexStream.indexWriter`'s per-batch `banded` table) into full
-    * [[VecBandedHistory]] by deriving the banded pair graph and cluster
-    * labels — the banded twin of [[compact]]'s derive step, completing
-    * stream → compact → [[advanceBanded]] at the multi-probe geometry.
-    * `vecs` is the matching (vec_id, v, n) vector table (the stream's
-    * bucket table carries it). Instance-keyed memo (per-JVM subtree). */
-  private[graft] def compactBanded(s: SparkSession, postings: DataFrame,
-                                   vecs: DataFrame, tag: String,
-                                   geom: BandedGeom = CatalogGeom): VecBandedHistory = {
-    val inId =
-      s"${Warehouse.instanceId(postings)}_${Warehouse.instanceId(vecs)}"
-    val base = s"${Warehouse.instanceRoot}/vecB_compact_" +
-      s"${Warehouse.sanitize(tag)}_${geom.tag}_$inId"
-    Warehouse.ensure(s, base) {
-      Warehouse.writeSized(postings, s"$base/postings")
-      val post = Warehouse.readParquet(s, s"$base/postings")
-      Warehouse.writeSized(
-        verifyCand(Similarity.bandedCandidatesWithin(post), vecs),
-        s"$base/pairs")
-      val edges = Graph.symmetrize(
-        Warehouse.readParquet(s, s"$base/pairs"), "va", "vb").persist()
-      val (lbl, caches) = Graph.minLabelComponents(edges)
-      Warehouse.writeSized(
-        lbl.select(col("id").as("vec_id"), col("lbl").as("cluster_id")),
-        s"$base/labels")
-      (edges +: caches).foreach(_.unpersist())
-      writeGeomSidecar(s, base, geom)
-    }
-    VecBandedHistory(Warehouse.readParquet(s, s"$base/postings"),
-      Warehouse.readParquet(s, s"$base/pairs"), Warehouse.readParquet(s, s"$base/labels"),
-      readGeomSidecar(s, base).getOrElse(geom))
   }
 
   // ---------------------------------------------------------------------

@@ -91,9 +91,9 @@ object Warehouse {
     }
   }
 
-  /** Lossy sanitize for USER-SUPPLIED tags only — never for corpus
-    * dirs, whose token must be injective (see [[token]]). */
-  private[pipeline] def sanitize(t: String): String = t.replaceAll("[^A-Za-z0-9.]", "_")
+  /** Lossy, readable half of the corpus [[token]]; the md5 beside it
+    * keeps the token injective. */
+  private def sanitize(t: String): String = t.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** Corpus storage/memo token over `$d/$fileName`: readable sanitized
     * path + an md5 of the raw path (injectivity — `/a/my-corpus` and
@@ -463,8 +463,8 @@ object Warehouse {
     * that is address-derived, so a collected object's hash can be
     * REUSED by a new one, turning a should-miss into a silent stale hit
     * of the first build's data. The IdentityHashMap pins a strong ref
-    * per distinct instance — bounded by the handful of intakes a JVM
-    * ever passes, and exact forever. */
+    * per distinct instance — bounded by the handful of histories a JVM
+    * ever advances from, and exact forever. */
   private val instanceIds = new java.util.IdentityHashMap[AnyRef, java.lang.Long]()
   private val instanceSeq = new java.util.concurrent.atomic.AtomicLong()
   private[pipeline] def instanceId(o: AnyRef): Long = instanceIds.synchronized {

@@ -38,42 +38,14 @@ object Ingest {
 
   val DlqTable = "_dlq"
 
-  /** Canonical DLQ reader. The DLQ has evolved twice: `deliveries` was
-    * added for the redelivery budget (mergeSchema reads pre-budget rows
-    * as null), and `subject` moved from a data column into the partition
-    * key — so a pre-move directory holds `ingest_batch=N/...` while
-    * post-move writes land at `subject=X/ingest_batch=N/...`. Spark's
-    * partition discovery rejects mixed-depth layouts under one basePath
-    * ("Conflicting directory structures"), so the two vintages are read
-    * as separate loads and unioned by name; both yield a `subject` column
-    * (data column then, partition column now). */
-  def readDlq(spark: SparkSession, outDir: String): DataFrame = {
-    val root = s"$outDir/$DlqTable"
-    // Hadoop FS, not java.io.File: outDir may be hdfs://, s3a://, … —
-    // a local-only listing came back empty there and silently skipped
-    // the mixed-vintage handling this reader exists for
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val top =
-      if (fs.exists(rootPath))
-        fs.listStatus(rootPath).filter(_.isDirectory).map(_.getPath.getName)
-      else Array.empty[String]
-    val newDirs = top.filter(_.startsWith("subject=")).sorted.map(d => s"$root/$d")
-    val oldDirs = top.filter(_.startsWith("ingest_batch=")).sorted.map(d => s"$root/$d")
-    def load(paths: Seq[String]) =
-      spark.read.option("mergeSchema", "true").option("basePath", root)
-        .parquet(paths: _*)
-    (newDirs.nonEmpty, oldDirs.nonEmpty) match {
-      case (true, true) =>
-        load(newDirs.toSeq).unionByName(load(oldDirs.toSeq), allowMissingColumns = true)
-      case (false, true) => load(oldDirs.toSeq)
-      // no legacy dirs (or an empty/absent DLQ): the plain read also
-      // covers a root holding bare parquet files from ad-hoc appends
-      case _ =>
-        spark.read.option("mergeSchema", "true").option("basePath", root)
-          .parquet(root)
-    }
-  }
+  /** Canonical DLQ reader over `_dlq/subject=X/ingest_batch=N/…`, the
+    * one layout [[deadLetterExhausted]] writes. `mergeSchema` reads rows
+    * written before the redelivery budget added `deliveries` as null.
+    * Like any parquet read it fails on an absent root, so callers that
+    * may run before the first dead letter check for data files first. */
+  def readDlq(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.option("mergeSchema", "true")
+      .option("basePath", s"$outDir/$DlqTable").parquet(s"$outDir/$DlqTable")
 
   /** One lock per table directory, shared by every writer in this JVM.
     * The table's streaming query holds it across the compaction after a
@@ -255,22 +227,4 @@ object Ingest {
     * the ingest cadence matches the relay's flush cadence. */
   private[graft] def batcherParams(cfg: graft.EngineConfig): Trigger =
     Trigger.ProcessingTime(s"${cfg.batcher.flushIntervalMs} milliseconds")
-
-  /** O-T12: incrementally-maintained exactly-once view over at-least-once
-    * input — streaming dedup by event_id with watermark-bounded state.
-    *
-    * `dropDuplicatesWithinWatermark`, NOT `dropDuplicates`: under a plain
-    * dropDuplicates the state store only evicts when the event-time
-    * column is part of the dedup key, so keying by event_id alone retains
-    * every id ever seen — unbounded state, the 100 TB killer hiding in
-    * the obvious spelling. The WithinWatermark variant dedups ids that
-    * arrive within the watermark delay of each other and evicts beyond
-    * it — exactly the broker redelivery contract this view exists for
-    * (`ack_wait=120s`, `/root/reference/src/nats.rs:71`): a redelivery
-    * lands within the ack window or not at all, and an id older than the
-    * watermark is dropped as late data rather than re-emitted, so the
-    * exactly-once surface is preserved either way. */
-  def dedupStream(events: DataFrame, watermark: String = "2 minutes"): DataFrame =
-    events.withWatermark("timestamp", watermark)
-      .dropDuplicatesWithinWatermark(Seq("event_id"))
 }

@@ -128,32 +128,37 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("minhash signature laws: self-identity, symmetry, band-collision floor") {
-    import graft.streaming.DedupStream
+  test("minhash band-key laws: a function of the bigram set; identical texts collide") {
+    import spark.implicits._
+    import graft.pipeline.TextDedup
     val wordGen = Gen.choose(0, 25).map(i => s"w$i")
     val textGen = Gen.listOfN(12, wordGen).map(_.mkString(" "))
-    forSeeds(Gen.listOfN(12, textGen), 5) { texts =>
-      val sigs = texts.map(t => DedupStream.signature(t)).filter(_.nonEmpty)
-      sigs.foreach { s =>
-        assert(s.length == 8)
-        assert(DedupStream.estJaccard(s, s) == 1.0)
+    // a word cycle c1..ck (distinct words) has bigram set
+    // {c1 c2, …, ck c1} however many times it repeats — two texts that
+    // walk the cycle to different lengths share it exactly
+    val cycleGen = Gen.choose(2, 6).flatMap(k =>
+      Gen.pick(k, (0 until 26).map(i => s"w$i")).map(_.toSeq))
+    forSeeds(Gen.zip(Gen.listOfN(8, textGen), cycleGen,
+        Gen.choose(0, 5), Gen.choose(0, 5)), 5) { case (texts, cyc, ra, rb) =>
+      def walk(extra: Int) = Iterator.continually(cyc).flatten
+        .take(cyc.size + 1 + extra).mkString(" ")
+      // doc 2i and 2i+1 carry the same text; the last two walk the cycle
+      val docs = texts.flatMap(t => Seq(t, t)) ++ Seq(walk(ra), walk(rb))
+      val sp = TextDedup.signaturePlan(
+        docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"),
+        nBands = 4, rowsPerBand = 2)
+      val keys = sp.bands.as[(Long, Int, String)].collect()
+        .groupBy(_._1).map { case (id, rs) => id -> rs.map(r => r._2 -> r._3).toMap }
+      sp.caches.foreach(_.unpersist())
+      assert(keys.size == docs.size && keys.values.forall(_.size == 4))
+      texts.indices.foreach { i =>
+        assert(keys(2L * i) == keys(2L * i + 1),
+          s"identical texts must get identical band keys: ${texts(i)}")
       }
-      for (a <- sigs; b <- sigs) {
-        val e = DedupStream.estJaccard(a, b)
-        assert(e >= 0.0 && e <= 1.0)
-        assert(e == DedupStream.estJaccard(b, a))
-        // any shared band key forces both of that band's rows to agree
-        val shared = DedupStream.bandKeys(a).toSet
-          .intersect(DedupStream.bandKeys(b).toSet)
-        if (shared.nonEmpty) assert(e >= 2.0 / 8,
-          "band collision implies >= rowsPerBand agreeing hashes")
-      }
-      // a doc whose bigram SET is unchanged keeps its signature: repeating
-      // the full word cycle adds only already-seen bigrams plus the seam
-      val t = "a b c a b c a b"   // bigrams {a b, b c, c a} repeated
-      val u = "a b c a b"         // same bigram set
-      assert(DedupStream.signature(t) == DedupStream.signature(u),
-        "signature must be a function of the bigram set only")
+      val (a, b) = (docs.size - 2L, docs.size - 1L)
+      assert(keys(a) == keys(b),
+        s"band keys must be a function of the bigram set only: " +
+          s"'${docs(a.toInt)}' vs '${docs(b.toInt)}'")
     }
   }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 import graft.TestSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,34 +20,30 @@ class IngestSpec extends AnyFunSuite {
     }
   }
 
-  test("readDlq unions the legacy flat layout with the subject-partitioned layout") {
+  test("readDlq reads the subject-partitioned layout across DLQ schema versions") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_dlq_mix").toString
-    // legacy vintage (pre subject-partitioning): subject was a DATA
-    // column and the layout was _dlq/ingest_batch=N/… — exactly what a
-    // deployment that upgraded mid-stream still has on disk. Note: no
-    // `deliveries` column either (pre redelivery-budget).
-    Seq(("events.legacy", "old payload", "unroutable_subject",
-        new Timestamp(1726300800000L)))
-      .toDF("subject", "payload", "reason", "dlq_ts")
+    val out = Files.createTempDirectory("graft_dlq").toString
+    // a row written before the redelivery budget: same
+    // _dlq/subject=X/ingest_batch=N/… layout, no `deliveries` column
+    Seq(("old payload", "max_deliver_exceeded", new Timestamp(1726300800000L)))
+      .toDF("payload", "reason", "dlq_ts")
+      .withColumn("subject", lit("events.session"))
       .withColumn("ingest_batch", lit(0L))
-      .write.partitionBy("ingest_batch").parquet(s"$out/${Ingest.DlqTable}")
-    // current vintage through the real write path: subject in the
-    // partition key, _dlq/subject=X/ingest_batch=N/…
+      .write.partitionBy("subject", "ingest_batch")
+      .parquet(s"$out/${Ingest.DlqTable}")
+    // current rows through the real write path
     Ingest.deadLetterExhausted(Seq("e-9").toDF("event_id"), "events.login",
       out, batchId = 1L, deliveries = 3)
-    // mixed-depth partition dirs under one root: a naive read throws
-    // "Conflicting directory structures"; readDlq must union both
     val dlq = Ingest.readDlq(spark, out)
     val rows = dlq.select("subject", "payload", "reason")
       .as[(String, String, String)].collect().sortBy(_._1)
     assert(rows.toSeq == Seq(
-      ("events.legacy", "old payload", "unroutable_subject"),
-      ("events.login", """{"event_id":"e-9"}""", "max_deliver_exceeded")))
+      ("events.login", """{"event_id":"e-9"}""", "max_deliver_exceeded"),
+      ("events.session", "old payload", "max_deliver_exceeded")))
     // schema evolution: pre-budget rows read deliveries as null, not crash
     val deliveries = dlq.orderBy("subject").select("deliveries")
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-    assert(deliveries.toSeq == Seq(None, Some(3)))
+    assert(deliveries.toSeq == Seq(Some(3), None))
   }
 
   test("wire-native ingest: graft-proto flush dirs -> typed sorted tables") {
@@ -100,87 +95,5 @@ class IngestSpec extends AnyFunSuite {
       qs("login_events").processAllAvailable()
       assert(spark.read.parquet(s"$out/login_events").count() == 5)
     } finally qs.values.foreach(_.stop())
-  }
-
-  test("streaming dedup with watermark (O-T12)") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(String, Timestamp)]
-    val deduped = Ingest.dedupStream(
-      ms.toDF().toDF("event_id", "timestamp"))
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    val base = 1726300800000L
-    ms.addData(("e-1", new Timestamp(base)), ("e-2", new Timestamp(base + 1000)),
-      ("e-1", new Timestamp(base))) // duplicate within batch
-    q.processAllAvailable()
-    ms.addData(("e-1", new Timestamp(base))) // duplicate across batches
-    q.processAllAvailable()
-    assert(spark.table("dedup_out").count() == 2)
-    // state is EVICTED once the watermark passes: push it 10 min forward
-    // and run a couple of eviction batches — only the new id may remain.
-    // (a plain dropDuplicates(event_id) would retain every id forever)
-    ms.addData(("e-9", new Timestamp(base + 600000L)))
-    q.processAllAvailable()
-    ms.addData(("e-10", new Timestamp(base + 601000L)))
-    q.processAllAvailable()
-    val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-    assert(stateRows <= 2,
-      s"dedup state must be watermark-bounded, holds $stateRows rows")
-    // an id from before the watermark is late data: dropped, not re-emitted
-    ms.addData(("e-1", new Timestamp(base)))
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.table("dedup_out").count() == 4) // e-1, e-2, e-9, e-10
-  }
-
-  test("streaming sessionization: flag ends emit immediately, abandoned sessions time out by watermark") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val t = (s: Long) => new Timestamp(1726300800000L + s * 1000)
-    val ms = MemoryStream[SessionEvent]
-    // 5s abandonment timeout, 10s watermark delay — both event-time, so
-    // the test is deterministic (no wall clock anywhere).
-    val q = Sessions.flagSessions(
-        ms.toDS().withWatermark("timestamp", "10 seconds"), timeoutMs = 5000)
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    // s-10 ends via flag in-stream; s-11 never ends → timeout path
-    ms.addData(
-      SessionEvent("s-10", "u-1", t(0), is_ended = false),
-      SessionEvent("s-11", "u-2", t(1), is_ended = false))
-    q.processAllAvailable()
-    ms.addData(SessionEvent("s-10", "u-1", t(30), is_ended = true))
-    q.processAllAvailable()
-    val afterFlag = spark.table("sess_out").as[SessionSummary].collect()
-      .map(s => s.session_id -> s).toMap
-    assert(afterFlag.contains("s-10"))
-    assert(afterFlag("s-10").ended_by_flag && afterFlag("s-10").n_events == 2)
-    // t(30) pushes the watermark to t(20) > s-11's timeout (t(1)+5s):
-    // the abandoned session flushes on the watermark-advance batch
-    ms.addData(SessionEvent("s-12", "u-3", t(60), is_ended = true))
-    q.processAllAvailable()
-    q.stop()
-    val all = spark.table("sess_out").as[SessionSummary].collect()
-      .map(s => s.session_id -> s).toMap
-    assert(all.keySet == Set("s-10", "s-11", "s-12"))
-    assert(!all("s-11").ended_by_flag && all("s-11").n_events == 1) // abandoned
-  }
-
-  test("flag-driven sessionization (is_ended, migrations/007:18)") {
-    import spark.implicits._
-    val t = (s: Long) => new Timestamp(1726300800000L + s * 1000)
-    val ds = Seq(
-      SessionEvent("s-1", "u-1", t(0), is_ended = false),
-      SessionEvent("s-1", "u-1", t(30), is_ended = false),
-      SessionEvent("s-1", "u-1", t(60), is_ended = true),
-      SessionEvent("s-2", "u-2", t(10), is_ended = false) // never ended
-    ).toDS()
-    val out = Sessions.flagSessions(ds).collect().map(s => s.session_id -> s).toMap
-    // s-1 ends via flag with 3 events and a 60s span; s-2 has no end flag
-    // and no timeout in batch mode ⇒ not emitted.
-    assert(out.keySet == Set("s-1"))
-    assert(out("s-1").n_events == 3 && out("s-1").ended_by_flag)
-    assert(out("s-1").end_ts.getTime - out("s-1").start_ts.getTime == 60000L)
   }
 }
