@@ -6,15 +6,15 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** Hilbert-curve index of a d-dimensional grid cell — the stronger
-  * sibling of the Morton z-value in [[graft.sources.ZOrder]].
+/** Hilbert-curve index of a d-dimensional grid cell.
   *
-  * Both map multi-column bucket coordinates to one sortable long so that
+  * It maps multi-column bucket coordinates to one sortable long so that
   * range-partitioned parquet files cover compact hyper-rectangles (tight
-  * row-group min/max on every clustered column). The Hilbert curve adds
-  * the unit-step property: consecutive index values are always adjacent
-  * cells (Morton takes long diagonal jumps at power-of-two boundaries),
-  * so per-file bounding boxes are tighter at the same file count.
+  * row-group min/max on every clustered column). Over a Morton z-value
+  * the Hilbert curve adds the unit-step property: consecutive index
+  * values are always adjacent cells (Morton takes long diagonal jumps at
+  * power-of-two boundaries), so per-file bounding boxes are tighter at
+  * the same file count.
   *
   * `hilbert_index(array<long> coords, int bits)` → long, coords[i] in
   * [0, 2^bits); d·bits ≤ 63. Implementation is Skilling's transpose

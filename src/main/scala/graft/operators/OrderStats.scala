@@ -82,9 +82,8 @@ object OrderStats {
 
   /** TEST/SWEEP HOOK: run `body` with the adaptive gate pinned to
     * `bytes` (0 = always the distributed form), restoring the previous
-    * setting — the plan-shape specs and ScaleSmoke's naive-vs-
-    * distributed A/B must exercise the scale path regardless of how
-    * small their fixtures are. */
+    * setting — the plan-shape specs must exercise the scale path
+    * regardless of how small their fixtures are. */
   def withGateBytes[T](bytes: Long)(body: => T): T =
     // thread-scoped, not a sys.props mutation: a concurrent
     // weightedCdfPlan caller (parallel tests, a multi-threaded bench)

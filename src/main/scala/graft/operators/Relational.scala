@@ -279,7 +279,7 @@ object Relational {
     }),
 
     // O-A4: quantiles (ClickHouse quantile()) — exact interpolated here;
-    // percentile_approx is the 100 TB path (see Bench).
+    // percentile_approx is the 100 TB path.
     "o_a4_quantile" -> ((s, d) => {
       Tables.lineitem(s, d).groupBy("l_returnflag").agg(
           expr("round(percentile(l_quantity, 0.5), 6)").as("p50"),

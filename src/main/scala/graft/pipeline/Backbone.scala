@@ -272,7 +272,7 @@ private[graft] object Backbone {
   /** The un-materialized advance plan plus its persisted intermediates —
     * exposed so BackboneAdvanceSpec can assert the plan property that IS
     * the contract (the only `documents` scan is the batch-filtered one)
-    * before the lineage cut hides it, and so ScaleSmoke can sweep the
+    * before the lineage cut hides it, and so the specs can sweep the
     * history/batch split independently of the catalog's halfway default
     * (`splitOverride` < 0 → [[TextDedup.deltaSplit]]). */
   private[graft] def advancePlan(
@@ -398,19 +398,5 @@ private[graft] object Backbone {
     // callers that hit the memo must not pay a warehouse scan
     if (committed) Warehouse.autoGc(s)
     readHistory(s, base)
-  }
-
-  /** Build every table the catalog's cascade reads (both delta
-    * geometries and the stored-history tables included) — Bench calls
-    * this up front so the reported per-query timings uniformly measure
-    * the shared-backbone regime and the one-time build cost is its own
-    * line item. */
-  def prebuild(s: SparkSession, d: String): Unit = {
-    fingerprints(s, d)
-    labels(s, d) // builds the 4x2 bands/pairs en route
-    pairs(s, d, nBands = 4, rowsPerBand = 4)
-    history(s, d, TextDedup.deltaSplit(s, d))
-    batchSignature(s, d, TextDedup.deltaSplit(s, d))
-    TextDedup.prebuildTruth(s, d)
   }
 }

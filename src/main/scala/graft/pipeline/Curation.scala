@@ -166,11 +166,6 @@ object Curation {
     pair
   }
 
-  /** TEST HOOK: paired with Warehouse.resetBuiltForTest — a spec
-    * exercising the on-disk artifact path must also drop the in-JVM
-    * pair memo or it silently tests the memo instead of the store. */
-  private[pipeline] def resetBloomMemoForTest(): Unit = bloomMemo.clear()
-
   /** Persist the eval-set filter pair (one tiny parquet row) so streams
     * and later runs probe WITHOUT rebuilding — production builds the
     * filters once per eval-suite release and every ingest job loads

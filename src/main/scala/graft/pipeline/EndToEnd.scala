@@ -112,7 +112,7 @@ object EndToEnd {
     * (`d_pipeline_sharded`), a re-run diff — READS the artifact instead
     * of re-deriving the cascade+decontam+scrub chain per query. Same
     * contract as the dedup backbone tables: build cost is a one-time
-    * line item (Bench's `pipeline_build_sec`), reads are table scans. */
+    * line item, reads are table scans. */
   private[pipeline] def scrubbedStore(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val base =
@@ -129,10 +129,6 @@ object EndToEnd {
     }
     (Warehouse.readParquet(s, s"$base/dec"), Warehouse.readParquet(s, s"$base/scrub"))
   }
-
-  /** Build the pipeline artifact up front (Bench) so per-query timings
-    * measure the shared-artifact regime. */
-  def prebuild(s: SparkSession, d: String): Unit = { scrubbedStore(s, d); () }
 
   /** Shared middle of the scrubbed pipeline: (decision table,
     * survivor-only span-scrub output incl. the scrubbed TEXT, caches).

@@ -2,9 +2,10 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 
-/** Catalog queries run 90-at-a-time in one session (Bench/Verify), so a
-  * query body that persists an intermediate must release it before the next
-  * query runs, or cached blocks accumulate for the whole catalog pass.
+/** Catalog queries run 90-at-a-time in one session (Verify, the catalog
+  * specs), so a query body that persists an intermediate must release it
+  * before the next query runs, or cached blocks accumulate for the whole
+  * catalog pass.
   *
   * `drop` cuts the result's lineage with an eager `localCheckpoint`: the
   * plan runs once and its output is stored as RDD blocks ON THE EXECUTORS
@@ -14,16 +15,7 @@ import org.apache.spark.sql.DataFrame
   * pattern survives adversarial corpora at 100 TB where a collect()-based
   * cut would OOM the driver. */
 private[graft] object Materialize {
-  /** PLAN-DUMP ONLY (`-Dgraft.materialize.keep=true`): return the
-    * un-checkpointed plan, caches left in place, so PlanDump can print
-    * the full physical plan instead of a post-checkpoint RDD scan.
-    * Never set for bench/verify runs — the eager cut and cache release
-    * are part of query execution. */
-  private def keepPlan: Boolean =
-    sys.props.get("graft.materialize.keep").contains("true")
-
   def drop(result: DataFrame, caches: DataFrame*): DataFrame = {
-    if (keepPlan) return result
     val out = result.localCheckpoint(eager = true)
     caches.foreach(_.unpersist())
     out

@@ -641,20 +641,9 @@ object Similarity {
       .select(col("va"), col("vb"), col("cos"))
   }
 
-  /** Semantic dedup library form behind `d_dedup_semantic`: sign-LSH
-    * bucketing over the first `planes` dims → exact cosine edges within
-    * bucket → [[Graph.minLabelComponents]]. `planes` is THE scale knob:
-    * candidate pairs cost Σ|bucket|², so size 2^planes ≈ corpus/30 (the
-    * d_ann_lsh rule) to keep buckets bounded as the corpus grows — the
-    * catalog instance pins planes=4 because the axis-aligned buckets
-    * reproduce exactly in the DuckDB oracle; tools/scale_smoke.sh drives
-    * this entry point with corpus-scaled planes. Cross-bucket recall
-    * trades exactly like d_ann_lsh documents (near-dups at threshold
-    * 0.9+ almost always share sign bits; a second, rotated plane set
-    * OR-ed in would recover the remainder at 2x candidate cost). */
-  /** Sign-LSH bucketing shared by semanticDedup and ScaleSmoke's
-    * candidate-count instrumentation: bucket = the sign bits of the first
-    * `planes` dims. Output columns: vec_id, v, n (norm), bucket. */
+  /** Sign-LSH bucketing behind semanticDedup and the stored vector
+    * tables: bucket = the sign bits of the first `planes` dims. Output
+    * columns: vec_id, v, n (norm), bucket. */
   private[graft] def signBuckets(s: SparkSession, embeddings: DataFrame,
                                  planes: Int): DataFrame = {
     require(planes >= 1 && planes <= 16, s"planes $planes outside [1,16]")
@@ -680,7 +669,7 @@ object Similarity {
     * quantizer) and baked into the plan as literals; per-row work is
     * `planes` codegen'd float_dot calls, no shuffle, no UDF. Same output
     * columns as [[signBuckets]], so every consumer (pair join, recall
-    * audit, ScaleSmoke candidate counts) takes either geometry. */
+    * audit) takes either geometry. */
   private[graft] def signBucketsRandom(s: SparkSession, embeddings: DataFrame,
                                        planes: Int, seed: Long): DataFrame = {
     require(planes >= 1 && planes <= 16, s"planes $planes outside [1,16]")
@@ -709,13 +698,6 @@ object Similarity {
       .withColumn("bucket", expr(bucketExpr))
   }
 
-  /** The 2^b ≈ n/30 plane-sizing rule (buckets hold ~30 vectors so the
-    * bucket-keyed pair join stays ~linear), clamped to the catalog floor
-    * and signBuckets' 16-bit cap. */
-  private[graft] def planesFor(n: Long): Int =
-    math.min(16, math.max(4,
-      (math.log(math.max(1L, n) / 30.0) / math.log(2)).round.toInt))
-
   /** BANDED sign-LSH postings — the production recall shape (VERDICT r13
     * #1): b independent plane sets of r planes each, OR-ed at candidate
     * time, so pair recall composes to 1 − (1 − p^r)^b instead of the
@@ -733,9 +715,10 @@ object Similarity {
     * Gaussian hyperplanes drawn from ONE continuous stream, so band 0 of
     * any banded config is bit-identical to [[signBucketsRandom]] at the
     * same (r, seed) — banded and single-band sweeps compare like for
-    * like. Per-band sizing stays [[planesFor]]'s 2^r ≈ n/30 rule: each
-    * band is a full-resolution code; b multiplies candidates, r bounds
-    * bucket size. */
+    * like. Per-band sizing stays the 2^r ≈ n/30 rule (buckets hold ~30
+    * vectors, so the bucket-keyed pair join stays ~linear): each band is
+    * a full-resolution code; b multiplies candidates, r bounds bucket
+    * size. */
   private[graft] def bandedSignBuckets(s: SparkSession, embeddings: DataFrame,
       bands: Int, planes: Int, seed: Option[Long] = None): DataFrame = {
     require(bands >= 1 && bands <= 8, s"bands $bands outside [1,8]")
@@ -843,28 +826,6 @@ object Similarity {
     require(target > 0.0 && target < 1.0, s"target $target outside (0,1)")
     math.max(1, math.ceil(
       math.log1p(-target) / math.log1p(-singleBandRecall)).toInt)
-  }
-
-  /** Candidate count an IVF probe generates: fit the coarse quantizer
-    * exactly as the ivf paths do, then sum the probed cells' sizes over
-    * the first `nQueries` query vectors — the number the scale claim
-    * ("probe cost is nProbe/nCells of the corpus") is about. */
-  private[graft] def ivfProbedCandidates(s: SparkSession, embeddings: DataFrame,
-      nCells: Int, nProbe: Int, nQueries: Int): Long = {
-    register(s)
-    val e0 = embeddings.select(col("vec_id"), col("embedding"))
-    val centers = MiniKMeans.fit(sampleVectors(e0), nCells, iters = 10, seed = 42)
-    val hist = withCell(e0, "embedding", centers, "cell")
-      .groupBy("cell").count()
-    val probe = withCentroidScores(e0.filter(col("vec_id") < nQueries),
-        "embedding", centers, "qs")
-      .withColumn("cell", explode(expr(
-        s"""slice(transform(array_sort(zip_with(qs, sequence(0, ${nCells - 1}),
-                    (v, i) -> named_struct('v', v, 'i', i))), x -> x.i),
-                  1, $nProbe)""")))
-      .select("vec_id", "cell")
-    probe.join(hist, Seq("cell"))
-      .agg(coalesce(sum("count"), lit(0L))).head.getLong(0)
   }
 
   // ---------------------------------------------------------------------
@@ -992,14 +953,24 @@ object Similarity {
 
   /** Config-selected LSH geometry for stateless per-call clustering:
     * `-Dgraft.vec.lshSeed=<long>` switches [[semanticDedup]] to seeded
-    * random hyperplanes (the production geometry; recall certified by
-    * ScaleSmoke's vec-geometry sweep). Deliberately NOT consulted by the
+    * random hyperplanes (the production geometry; SCALE.md records its
+    * recall sweep). Deliberately NOT consulted by the
     * stored [[VecBackbone]] tables: an index pins its geometry at build
     * time — flipping a JVM flag must never make probes disagree with
     * stored buckets. Unset (default) = axis signs, the oracle geometry. */
   private def configuredLshSeed: Option[Long] =
     sys.props.get("graft.vec.lshSeed").map(_.toLong)
 
+  /** Semantic dedup library form behind `d_dedup_semantic`: sign-LSH
+    * bucketing over the first `planes` dims → exact cosine edges within
+    * bucket → [[Graph.minLabelComponents]]. `planes` is THE scale knob:
+    * candidate pairs cost Σ|bucket|², so size 2^planes ≈ corpus/30 (the
+    * d_ann_lsh rule) to keep buckets bounded as the corpus grows — the
+    * catalog instance pins planes=4 because the axis-aligned buckets
+    * reproduce exactly in the DuckDB oracle. Cross-bucket recall
+    * trades exactly like d_ann_lsh documents (near-dups at threshold
+    * 0.9+ almost always share sign bits; a second, rotated plane set
+    * OR-ed in would recover the remainder at 2x candidate cost). */
   def semanticDedup(s: SparkSession, embeddings: DataFrame,
                     planes: Int, threshold: Double,
                     lshSeed: Option[Long] = None): DataFrame = {

@@ -51,12 +51,6 @@ object TextDedup {
     * MATERIALIZED once per corpus version (shared by the n-gram verifier
     * and the recall audit — both read the stored table; the O(window²)
     * verification runs once, not per query). */
-  /** Prebuild hook: materialize the audit-truth table with the other
-    * stored artifacts (Backbone.prebuild) so d_dedup_ngram /
-    * d_dedup_recall pass-1 timings measure the shared-store regime, not
-    * a lazy first-call O(window²) build (ADVICE r12). */
-  def prebuildTruth(s: SparkSession, d: String): Unit = { truthStore(s, d); () }
-
   private def truthStore(s: SparkSession, d: String): DataFrame = {
     val path =
       s"${Warehouse.versionDir(s, d, "documents.parquet")}/audit_truth"
@@ -611,9 +605,8 @@ object TextDedup {
   }
 
   /** Un-materialized minhash plan: the verified pair list, the banded
-    * signature table it derives from (exposed so ScaleSmoke can count
-    * band-bucket candidate pairs without re-deriving the pipeline), and
-    * the persisted intermediates the plan rides on. */
+    * signature table it derives from (stored by [[Backbone]] next to the
+    * pairs), and the persisted intermediates the plan rides on. */
   private[graft] final case class MinhashPlan(
       pairs: DataFrame, bands: DataFrame, caches: Seq[DataFrame])
 
@@ -628,8 +621,8 @@ object TextDedup {
     * `rowsPerBand` (r) is THE spurious-collision knob at corpus scale:
     * the cross-corpus collision floor shrinks as J_background^r while
     * near-threshold recall trades off. The catalog default (4×2 = the 8
-    * hashes the DuckDB oracle pins) keeps r=2; tools/scale_smoke.sh
-    * measures r=2 vs r=4 floors side by side (recorded in SCALE.md). */
+    * hashes the DuckDB oracle pins) keeps r=2; SCALE.md records the
+    * r=2 vs r=4 floors side by side. */
   /** Banded signatures + per-doc shingle sets for an ARBITRARY document
     * slice — the corpus-independent half of the minhash pipeline, shared
     * by the full-corpus plan and the stored-delta path (which signs the

@@ -53,7 +53,7 @@ private[graft] object VecBackbone {
   /** Banded operating point for d_ann_lsh_banded / d_ann_recall_banded:
     * 2 axis bands of [[Planes]] dims each (dims 1–8 — oracle-
     * reproducible). Production raises both knobs with seeded random
-    * hyperplanes: r = planesFor(n) per band, b from the measured
+    * hyperplanes: r with 2^r ≈ n/30 per band, b from the measured
     * single-band recall via [[Similarity.bandsFor]]. */
   val Bands = 2
 
@@ -399,8 +399,7 @@ private[graft] object VecBackbone {
     * a from-scratch full build bit-for-bit; its pinned scale is the
     * corpus max; the clip predicate under the new scale reads ZERO on
     * every vector. Cost: one max scan + one linear re-encode with NO
-    * exchange (pure per-row arithmetic) — the ScaleSmoke `sq8-compact`
-    * point measures exactly that shape. */
+    * exchange (pure per-row arithmetic). */
   private[graft] def sq8Compact(s: SparkSession, d: String,
                                 split: Long): DataFrame = {
     val path = s"${root(s, d)}/sq8_cmp$split"
@@ -827,21 +826,5 @@ private[graft] object VecBackbone {
     // callers that hit the memo must not pay a warehouse scan
     if (committed) Warehouse.autoGc(s)
     readHistory(s, base)
-  }
-
-  /** Build every vector-side table the catalog reads — Bench calls this
-    * with [[Backbone.prebuild]] so per-query timings measure the
-    * shared-index regime. */
-  def prebuild(s: SparkSession, d: String): Unit = {
-    quantizer(s, d)
-    buckets(s, d)
-    bandedPostings(s, d)
-    codes(s, d)
-    history(s, d, deltaSplit(s, d))
-    historyBanded(s, d, deltaSplit(s, d))
-    batch(s, d, deltaSplit(s, d))
-    // the committed "fresh" advance — the nightly label commit the
-    // drift audit reads; one-time like the other index tables
-    advanceAndStore(s, d)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage, streaming}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -75,8 +75,7 @@ private[sources] class ProtoTable(tableSchema: StructType, path: String)
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
-      TableCapability.TRUNCATE)
+      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ProtoScanBuilder(tableSchema, path)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -328,13 +327,6 @@ private[sources] class ProtoWriteBuilder(schema: StructType, path: String, query
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new Write {
     override def toBatch: BatchWrite = new ProtoBatchWrite(schema, path, queryId, doTruncate)
-    override def toStreaming: streaming.StreamingWrite = {
-      // Complete/update output would need per-epoch truncation the flush
-      // contract can't express — fail fast instead of silently appending
-      // a full result set per epoch.
-      require(!doTruncate, "graft-proto streaming sink supports append output mode only")
-      new ProtoStreamingWrite(schema, path, queryId)
-    }
   }
 }
 
@@ -373,30 +365,13 @@ private[sources] class ProtoBatchWrite(schema: StructType, path: String,
     ProtoWriteCommit.discard(path, messages)
 }
 
-/** Streaming sink: epoch-prefixed flush names (`flush-<epoch>-<task>`)
-  * are monotonic per query, exactly the contract the streaming READER's
-  * highest-name offset relies on — write with this sink, tail with the
-  * graft-proto source. */
-private[sources] class ProtoStreamingWrite(schema: StructType, path: String, queryId: String)
-  extends streaming.StreamingWrite {
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : streaming.StreamingDataWriterFactory =
-    new ProtoStreamingWriterFactory(schema.toDDL, path,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    ProtoWriteCommit.publish(path, messages)
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    ProtoWriteCommit.discard(path, messages)
-}
-
 private[sources] object ProtoWriteCommit {
   /** Driver-side conf (planning/commit run on the driver). */
   private def hadoopConf() = SparkSession.active.sessionState.newHadoopConf()
 
-  /** Streamed byte compare. Epoch-replay dedup must not accept a merely
-    * equal-LENGTH file as identical: a replayed batch with rows shuffled
-    * across partitions, or two queries colliding on a flush name, produce
+  /** Streamed byte compare. Replay dedup must not accept a merely
+    * equal-LENGTH file as identical: a re-commit with rows shuffled
+    * across partitions, or two writes colliding on a file name, produce
     * different bytes at the same size and must fail loudly instead of
     * silently dropping one copy. Cost: one read of each file, only on the
     * rare name-collision path. */
@@ -433,18 +408,15 @@ private[sources] object ProtoWriteCommit {
         val s = new Path(staged)
         val target = new Path(dir, finalName)
         if (fs.exists(target)) {
-          // Same (epoch, partition) name already published. A genuine
-          // epoch replay (crash between commit and checkpoint) re-stages
-          // identical BYTES — accept and drop the retry's copy. Anything
-          // else (fresh checkpoint into a used sink dir, two queries
-          // sharing a dir, replay with rows shuffled across partitions)
-          // is a collision that must not silently win or lose — fail
-          // with the cause.
+          // Same (write, partition) name already published. A genuine
+          // replay re-stages identical BYTES — accept and drop the
+          // retry's copy. Anything else (two writes sharing a name, a
+          // replay with rows shuffled across partitions) is a collision
+          // that must not silently win or lose — fail with the cause.
           if (fs.exists(s) && !sameContent(fs, s, target))
             throw new java.io.IOException(
               s"graft-proto commit: $finalName already exists with different " +
-                "content — flush names must be unique per sink directory " +
-                "(fresh checkpoint into a used dir?)")
+                "content — file names must be unique per directory")
           fs.delete(s, false)
         } else if (!fs.exists(s)) {
           throw new java.io.IOException(
@@ -470,16 +442,6 @@ private[sources] class ProtoWriterFactory(
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new ProtoDataWriter(StructType.fromDDL(ddl), path,
       f"$prefix-$partitionId%05d.pbstream", taskId, conf.value)
-}
-
-private[sources] class ProtoStreamingWriterFactory(
-    ddl: String, path: String,
-    conf: org.apache.spark.util.SerializableConfiguration)
-  extends streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new ProtoDataWriter(StructType.fromDDL(ddl), path,
-      f"flush-$epochId%010d-$partitionId%05d.pbstream", taskId, conf.value)
 }
 
 private[sources] class ProtoDataWriter(
@@ -601,20 +563,4 @@ object ProtoSourceQueries {
                 MAX(NULLIF(event_id, 0)) AS max_event
          FROM events GROUP BY event_type ORDER BY event_type"""
   )
-}
-
-/** Local/driver-side helpers for producing wire files (tests, fixtures,
-  * and the per-partition writer used by the round-trip catalog query).
-  * The production write path is the ingest tier itself. */
-object ProtoFiles {
-  /** Append `values` rows as length-delimited frames to `out`. */
-  def writeFrames(out: java.io.OutputStream, rows: Iterator[Seq[Any]],
-                  schema: StructType): Unit =
-    rows.foreach(r => ProtoWire.writeFrame(out, ProtoWire.encode(r, schema)))
-
-  def writeLocal(file: String, rows: Iterator[Seq[Any]], schema: StructType): Unit = {
-    val out = new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(file), 64 * 1024)
-    try writeFrames(out, rows, schema) finally out.close()
-  }
 }

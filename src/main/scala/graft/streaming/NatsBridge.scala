@@ -182,27 +182,21 @@ object NatsBridge {
       n
     }
 
-    /** Failed ack barriers, cumulative (spec observability). */
-    def barrierFailures: Int = barrierFails
-
-    private var barrierFails = 0
-
     /** Best-effort ack barrier: the spool write already succeeded by the
       * time this runs, so a barrier failure must not tear down the
       * relay — a degraded link would otherwise stall each cap flush up
       * to the ping timeout AND propagate the IOException out of
       * offer/pumpOnce (ADVICE r12). Unconfirmed acks are safe: ack_wait
       * redelivery plus the spool's content dedup absorb the overlap;
-      * the count surfaces the degradation to the supervising loop. */
+      * the stderr line surfaces the degradation. */
     private def barrier(): Unit =
       // NonFatal, not just IOException: ping can also throw
       // IllegalStateException (a server -ERR or unexpected control frame
       // during the PONG wait), and any of them arriving AFTER the spool
-      // write succeeded must degrade to a counted failure, not a relay
+      // write succeeded must degrade to a logged failure, not a relay
       // tear-down
       try s.nc.ping(5000)
       catch { case scala.util.control.NonFatal(e) =>
-        barrierFails += 1
         System.err.println(
           s"[nats-relay] ack barrier failed (${e.getClass.getSimpleName}: " +
             s"${e.getMessage}); relying on ack_wait redelivery + spool dedup")

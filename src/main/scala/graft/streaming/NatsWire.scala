@@ -453,10 +453,6 @@ object NatsWire {
       * the DLQ tier instead of burning redeliveries). */
     def term(m: Msg): Unit = ackKind(m, "+TERM")
 
-    /** Working-on-it: reset the ack_wait clock without consuming a
-      * delivery (long spool writes under a short ack_wait). */
-    def inProgress(m: Msg): Unit = ackKind(m, "+WPI")
-
     private def ackKind(m: Msg, kind: String): Unit =
       m.replyTo.foreach(r => nc.publish(r, kind.getBytes(US_ASCII)))
   }

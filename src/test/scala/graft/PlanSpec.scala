@@ -460,4 +460,25 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("CartesianProduct"), s"$name has a cartesian product:\n$p")
     }
   }
+
+  test("CollapseDedup rule removes the redundant second dedup") {
+    val e = Tables.events(spark, sf)
+    val doubled = e.dropDuplicates(Seq("event_id"))
+      .dropDuplicates(Seq("event_id", "user_id"))
+    // TestSession runs the full extension path (r17), so CollapseDedup
+    // fires as a post-hoc resolution rule DURING analysis — the analyzed
+    // plan arrives already collapsed; the rule must also be idempotent
+    val analyzed = doubled.queryExecution.analyzed
+    assert("Deduplicate".r.findAllIn(analyzed.toString).size == 1,
+      s"extension should collapse at analysis:\n$analyzed")
+    val collapsed = graft.plans.CollapseDedup(analyzed)
+    assert("Deduplicate".r.findAllIn(collapsed.toString).size == 1,
+      s"rule must be idempotent, got:\n$collapsed")
+    // non-subset keys must NOT collapse (outer (user_id) ⊄ inner (event_id))
+    val mixed = e.dropDuplicates(Seq("event_id")).dropDuplicates(Seq("user_id"))
+      .queryExecution.analyzed
+    assert("Deduplicate".r.findAllIn(graft.plans.CollapseDedup(mixed).toString).size == 2)
+    // semantics preserved
+    assert(doubled.count() == e.dropDuplicates(Seq("event_id")).count())
+  }
 }

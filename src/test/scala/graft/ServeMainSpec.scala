@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{EventSchemas, MockNatsServer, NatsWire, ProtoWire}
+import graft.streaming.{EventSchemas, MockNatsServer, NatsWire, ProtoFiles, ProtoWire}
 
 /** Boots the full production wiring ([[ServeMain.boot]] — the main.rs
   * lifecycle analog) against temp dirs, in both broker modes. */
@@ -40,7 +40,7 @@ class ServeMainSpec extends AnyFunSuite {
       httpPort = 0, useNats = false)
     try {
       new java.io.File(s"$wire/$subject").mkdirs()
-      sources.ProtoFiles.writeLocal(s"$wire/$subject/flush-000001.pbstream",
+      ProtoFiles.writeLocal(s"$wire/$subject/flush-000001.pbstream",
         Iterator(loginMsg("b-1", "u-1", 1726300800L),
           loginMsg("b-2", "u-2", 1726300801L)), schema)
       engine.queries.values.foreach(_.processAllAvailable())
@@ -70,7 +70,7 @@ class ServeMainSpec extends AnyFunSuite {
       // ingest_batch subdir (>=1 parquet file) each
       var id = 0
       (1 to 10).foreach { b =>
-        sources.ProtoFiles.writeLocal(f"$wire/$subject/flush-$b%06d.pbstream",
+        ProtoFiles.writeLocal(f"$wire/$subject/flush-$b%06d.pbstream",
           Iterator.tabulate(3) { _ =>
             id += 1; loginMsg(f"c-$id%04d", s"u-${id % 5}", 1726300800L + id)
           }, schema)
@@ -96,7 +96,7 @@ class ServeMainSpec extends AnyFunSuite {
         "SELECT count(*) AS n FROM login_events").trim == "30")
       // streaming continues on the same handle
       assert(q.isActive)
-      sources.ProtoFiles.writeLocal(s"$wire/$subject/flush-resume.pbstream",
+      ProtoFiles.writeLocal(s"$wire/$subject/flush-resume.pbstream",
         Iterator(loginMsg("c-resume", "u-0", 1726300900L)), schema)
       q.processAllAvailable()
       val resumed = spark.read.parquet(s"$out/login_events")

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.{Tables, TestSession}
-import graft.functions.{ArgMaxLong, GraftExtensions, SimHash64}
+import graft.functions.{GraftExtensions, SimHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,6 +25,13 @@ class PipelineSpec extends AnyFunSuite {
     val viaSql = spark.sql(
       "SELECT simhash64('the quick brown fox jumps over dog') AS h").head().getLong(0)
     assert(viaSql == a)
+  }
+
+  test("simhash64 of a literal constant-folds") {
+    GraftExtensions.register(spark)
+    val df = spark.sql("SELECT simhash64('a b c') AS h FROM range(3)")
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("simhash64"), s"expected constant folding:\n$plan")
   }
 
   test("simhash pairs ⊇-overlap with minhash near-dup pairs") {
@@ -264,20 +271,6 @@ class PipelineSpec extends AnyFunSuite {
       assert(ws.last.win_off + ws.last.win_len == a.media.length)
       if (ws.length > 1) ws.init.foreach(w => assert(w.win_len == 128))
     }
-  }
-
-  test("typed ArgMaxLong aggregator matches max_by") {
-    import spark.implicits._
-    val e = Tables.events(spark, sf)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ord"))
-    val typed = e.as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
-      .agg(new ArgMaxLong().toColumn)
-      .collect().toMap
-    val builtin = e.groupBy("user_id").agg(expr("max_by(event_id, ord)"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(typed == builtin)
   }
 
   test("doc chunking: stride-drop reconstruction, window bounds, overlap stitch") {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.TestSession
+import graft.streaming.ProtoFiles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -123,30 +124,6 @@ class ProtoFileSourceSpec extends AnyFunSuite {
       .mode("overwrite").save(dir)
     val after = spark.read.format("graft-proto").option("schema", ddl).load(dir)
     assert(after.select("msg_id").collect().map(_.getLong(0)).toSeq == Seq(9L))
-  }
-
-  test("streaming sink: epoch flush names feed the streaming reader's offset contract") {
-    import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("proto_sink_src").toString
-    val out = java.nio.file.Files.createTempDirectory("proto_sink_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("proto_sink_ckpt").toString
-    ProtoFiles.writeLocal(s"$src/flush-000001.pbstream", Iterator(
-      Seq(10L, "s1", 1, true, Seq[String]())), schema)
-    // tail src with the graft-proto SOURCE, re-emit with the graft-proto SINK
-    val q = spark.readStream.format("graft-proto").option("schema", ddl).load(src)
-      .writeStream.format("graft-proto")
-      .option("schema", ddl).option("path", out)
-      .option("checkpointLocation", ckpt).start()
-    try {
-      q.processAllAvailable()
-      ProtoFiles.writeLocal(s"$src/flush-000002.pbstream", Iterator(
-        Seq(11L, "s2", 2, false, Seq[String]())), schema)
-      q.processAllAvailable()
-      val names = new java.io.File(out).listFiles.map(_.getName).filter(_.endsWith(".pbstream"))
-      assert(names.forall(_.startsWith("flush-")), names.toSeq)
-      val back = spark.read.format("graft-proto").option("schema", ddl).load(out)
-      assert(back.select("msg_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(10L, 11L))
-    } finally q.stop()
   }
 
   test("streaming read: each flush file lands in exactly one micro-batch") {

@@ -14,7 +14,7 @@ class BrokerSourceSpec extends AnyFunSuite {
     def loginMsg(id: String, user: String, ts: Long): Seq[Any] =
       WireFixtures.loginMsg(id, user, ts)
     new java.io.File(s"$wire/events.login").mkdirs()
-    graft.sources.ProtoFiles.writeLocal(s"$wire/events.login/flush-000001.pbstream",
+    ProtoFiles.writeLocal(s"$wire/events.login/flush-000001.pbstream",
       Iterator(loginMsg("b-1", "u-1", t0)), EventSchemas.tables("login_events"))
     val qs = Ingest.startFromWire(spark, wire, out, ckpt,
       subjects = Seq("events.login"))
@@ -67,7 +67,7 @@ class BrokerSourceSpec extends AnyFunSuite {
     def loginMsg(id: String, user: String, ts: Long): Seq[Any] =
       WireFixtures.loginMsg(id, user, ts)
     new java.io.File(s"$wire/events.login").mkdirs()
-    graft.sources.ProtoFiles.writeLocal(s"$wire/events.login/flush-000001.pbstream",
+    ProtoFiles.writeLocal(s"$wire/events.login/flush-000001.pbstream",
       Iterator(loginMsg("b-1", "u-1", t0)), EventSchemas.tables("login_events"))
     // poison the table path: a regular FILE where the write wants a
     // directory makes every delivery fail "transiently"
@@ -97,7 +97,7 @@ class BrokerSourceSpec extends AnyFunSuite {
     // the batch is acked: unblocking the path and restarting must NOT
     // resurrect it, and a new healthy batch flows normally
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$out/login_events"))
-    graft.sources.ProtoFiles.writeLocal(s"$wire/events.login/flush-000002.pbstream",
+    ProtoFiles.writeLocal(s"$wire/events.login/flush-000002.pbstream",
       Iterator(loginMsg("b-2", "u-2", t0 + 60)), EventSchemas.tables("login_events"))
     assert(deliverOnce().isEmpty)
     val landed = spark.read.parquet(s"$out/login_events")
@@ -127,7 +127,7 @@ class BrokerSourceSpec extends AnyFunSuite {
     try {
       new java.io.File(s"$wire/events.login").mkdirs()
       (0 until 4).foreach { b =>
-        graft.sources.ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
+        ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
           Iterator.tabulate(2)(i => WireFixtures.loginMsg(s"f-$b-$i", "u-1",
             1726300800L + 2 * b + i)), EventSchemas.tables("login_events"))
         q.processAllAvailable()
@@ -180,7 +180,7 @@ class BrokerSourceSpec extends AnyFunSuite {
     try {
       new java.io.File(s"$wire/events.login").mkdirs()
       (0 until 3).foreach { b =>
-        graft.sources.ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
+        ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
           Iterator(WireFixtures.loginMsg(s"new-$b", "u-1", 1726300800L + b)), schema)
         q.processAllAvailable()
       }
@@ -204,7 +204,7 @@ class BrokerSourceSpec extends AnyFunSuite {
     val out = s"latchfs://$local"
     val schema = EventSchemas.tables("login_events")
     def flush(b: Int): Unit =
-      graft.sources.ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
+      ProtoFiles.writeLocal(f"$wire/events.login/flush-$b%06d.pbstream",
         Iterator(WireFixtures.loginMsg(s"w-$b", "u-1", 1726300800L + b)), schema)
     new java.io.File(s"$wire/events.login").mkdirs()
     val qs = Ingest.startFromWire(spark, wire, out, ckpt,

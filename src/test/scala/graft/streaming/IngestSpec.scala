@@ -62,13 +62,13 @@ class IngestSpec extends AnyFunSuite {
 
     new java.io.File(s"$wire/events.login").mkdirs()
     new java.io.File(s"$wire/events.session").mkdirs()
-    graft.sources.ProtoFiles.writeLocal(s"$wire/events.login/flush-000001.pbstream",
+    ProtoFiles.writeLocal(s"$wire/events.login/flush-000001.pbstream",
       Iterator(loginMsg("e-1", "u-1", t0), loginMsg("e-2", "u-2", t0 + 5),
         loginMsg("e-2", "u-2", t0 + 5), // at-least-once duplicate
         // proto3 "" is absent on the wire
         loginMsg("e-5", "u-4", t0 + 7).updated(loginSchema.fieldIndex("platform"), "")),
       loginSchema)
-    graft.sources.ProtoFiles.writeLocal(s"$wire/events.session/flush-000001.pbstream",
+    ProtoFiles.writeLocal(s"$wire/events.session/flush-000001.pbstream",
       Iterator(sessionMsg("e-3", t0 + 20, ended = false)),
       EventSchemas.tables("session_events"))
 
@@ -89,7 +89,7 @@ class IngestSpec extends AnyFunSuite {
       assert(!session.head().getAs[Boolean]("is_ended"))
 
       // a second flush file is picked up incrementally, exactly once
-      graft.sources.ProtoFiles.writeLocal(s"$wire/events.login/flush-000002.pbstream",
+      ProtoFiles.writeLocal(s"$wire/events.login/flush-000002.pbstream",
         Iterator(loginMsg("e-4", "u-3", t0 + 50)),
         EventSchemas.tables("login_events"))
       qs("login_events").processAllAvailable()

@@ -23,3 +23,15 @@ object WireFixtures {
         s"WireFixtures.loginMsg has no value for new envelope field '$n'")))
   }
 }
+
+/** Wire-file writer for fixtures: length-delimited frames, the layout
+  * the graft-proto source reads and the spool relay writes. */
+object ProtoFiles {
+  def writeLocal(file: String, rows: Iterator[Seq[Any]],
+                 schema: org.apache.spark.sql.types.StructType): Unit = {
+    val out = new java.io.BufferedOutputStream(
+      new java.io.FileOutputStream(file), 64 * 1024)
+    try rows.foreach(r => ProtoWire.writeFrame(out, ProtoWire.encode(r, schema)))
+    finally out.close()
+  }
+}

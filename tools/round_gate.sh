@@ -3,11 +3,11 @@
 # snapshot is shippable. Run before the round closes; if any stage is
 # red, fix or revert to last green BEFORE the snapshot.
 #   tools/round_gate.sh            # compile + test + verify(sf0.01) + leakcheck
-#   tools/round_gate.sh --bench    # ... + a full sf0.1 bench
+#   tools/round_gate.sh --bench    # ... + the perfbench workloads
 # Gating relies on each command's EXIT CODE only (ADVICE r10: summary
 # greps are informational and must not red the gate if sbt reformats).
 set -eo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 
 echo "== [1/5] sbt compile =="
 sbt -batch compile > /tmp/gate_compile.log 2>&1 \
@@ -47,51 +47,16 @@ python3 tools/pipefuzz.py /tmp/gate_pipefuzz --seeds 3,5,8 \
 grep -E "^pipefuzz|== " /tmp/gate_pipefuzz.log | tail -6
 
 if [ "${1:-}" = "--bench" ]; then
-  echo "== [5/5] bench (sf0.1) =="
-  ADDOPENS=""
-  for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-           java.util java.util.concurrent java.util.concurrent.atomic \
-           sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-    ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-  done
-  sbt -batch package > /tmp/gate_pkg.log 2>&1 \
-    || { tail -20 /tmp/gate_pkg.log; echo "GATE: PACKAGE RED"; exit 1; }
-  # derive the jar from the build output, not a hardcoded name — and
-  # never the tests jar, which carries no graft.Bench and can be newer
-  JAR=$(ls -t target/scala-2.13/*.jar | grep -v -- '-tests.jar' | head -1)
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  java $ADDOPENS -Xmx48g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$JAR:/opt/spark/jars/*" \
-    graft.Bench 2>/tmp/gate_bench.err | tail -1
-  # stamp the gate record to its own file (VERDICT r13 #8): BENCH_LAST.json
-  # is rewritten by EVERY Bench invocation, so a later loaded re-run can
-  # silently overwrite the quiet closing number. Only round_gate writes
-  # the stamped copy; the round number is one past the newest driver bench.
-  # `|| true` inside the substitution: under set -eo pipefail a no-match
-  # ls would otherwise kill the gate silently right after a good bench
-  ROUND=$(( $({ ls BENCH_r*.json 2>/dev/null || true; } | sed 's/[^0-9]//g' | sort -n | tail -1 | grep . || echo 0) + 1 ))
-  cp BENCH_LAST.json "BENCH_GATE_r${ROUND}.json"
-  echo "stamped BENCH_GATE_r${ROUND}.json"
-
-  echo "== [5.5] shuffle audit (soft gate: super-linear growth sf0.01->sf0.1) =="
-  # stale JSONs from a previous round must not be silently adjudicated
-  # when this round's audit dies (the compare would mix rounds)
-  rm -f /tmp/gate_shuffle_0.01.json /tmp/gate_shuffle_0.1.json
-  for SF in 0.01 0.1; do
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf$SF \
-    java $ADDOPENS -Xmx48g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-      -cp "$JAR:/opt/spark/jars/*" \
-      graft.pipeline.ShuffleAudit --json /tmp/gate_shuffle_$SF.json \
-      > /tmp/gate_shuffle_$SF.log 2>&1 \
-      || { tail -5 /tmp/gate_shuffle_$SF.log; echo "GATE: SHUFFLE AUDIT FAILED (soft, continuing)"; }
-  done
-  # --expect pins the key universe to the prior round's merged record so a
-  # key erroring at BOTH SFs (no ratio either way) still trips the gate
-  PRIOR_SHUF=$({ ls SHUFFLE_r*.json 2>/dev/null || true; } | sort -V | tail -1)
-  python3 tools/shuffle_gate.py /tmp/gate_shuffle_0.01.json \
-    /tmp/gate_shuffle_0.1.json SHUFFLE_LAST.json \
-    ${PRIOR_SHUF:+--expect "$PRIOR_SHUF"} \
-    || echo "GATE: SHUFFLE WARNING (soft — see flags above)"
+  echo "== [5/5] perfbench (ingest_live + curation, seed 1) =="
+  # the repo benchmark (BENCHMARK.json): builds the engine from source,
+  # runs both workloads and prints one table; any failed operation reds
+  # the gate, like a non-zero exit does
+  python3 perfbench/run.py --all --seed 1 --seconds 12 \
+    > /tmp/gate_perfbench.log 2>/tmp/gate_perfbench.err \
+    || { tail -20 /tmp/gate_perfbench.err; echo "GATE: PERFBENCH RED"; exit 1; }
+  cat /tmp/gate_perfbench.log
+  awk '$2 == "fail_frac" && $3 + 0 > 0 { bad = 1 } END { exit bad }' \
+    /tmp/gate_perfbench.log || { echo "GATE: PERFBENCH FAILED OPERATIONS"; exit 1; }
 else
   echo "== [5/5] bench skipped (pass --bench to run) =="
 fi
