@@ -84,12 +84,6 @@ object ParametricAgg {
     }
   }
 
-  /** Current peak (0 when no parametric aggregate ran). */
-  def peakBuffered: Long = {
-    val a = driverAcc
-    if (a == null) 0L else a.value
-  }
-
   /** Read and re-zero — the per-action attribution device QueryLog uses.
     * Under CONCURRENT actions the peak attributes to whichever action
     * completes first (one shared figure; the ops surface is a single

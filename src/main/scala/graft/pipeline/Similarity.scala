@@ -335,8 +335,8 @@ object Similarity {
     // split, how many vectors the clamp would actually bite (a dim
     // rounds past level 127) and how far the live max has outgrown the
     // pinned scale. history rows are the zero-baseline by construction
-    // (the scale IS their max); a batch clip_frac > 0 says re-scale +
-    // re-encode at the next compaction. Fully oracled (scale, split and
+    // (the scale IS their max); a batch clip_frac > 0 says the batch
+    // has outgrown the pinned scale. Fully oracled (scale, split and
     // the clip predicate all recompose in SQL).
     "d_ann_sq8_clip" -> ((s, d) => {
       val split = VecBackbone.deltaSplit(s, d)
@@ -814,18 +814,6 @@ object Similarity {
       e.withColumn("bb", explode(expr(s"array(${entries.mkString(", ")})")))
         .select(col("vec_id"), col("bb.band").as("band"),
           col("bb.bucket").as("bucket"))
-  }
-
-  /** How many OR-ed bands reach `target` pair recall given a MEASURED
-    * single-band recall: the smallest b with 1 − (1 − ρ)^b ≥ target.
-    * This is the knob the geometry sweep's numbers feed — e.g. measured
-    * ρ = 0.24 at production r needs b = 4 for ~0.67 (SCALE.md). */
-  private[graft] def bandsFor(singleBandRecall: Double, target: Double): Int = {
-    require(singleBandRecall > 0.0 && singleBandRecall < 1.0,
-      s"single-band recall $singleBandRecall outside (0,1)")
-    require(target > 0.0 && target < 1.0, s"target $target outside (0,1)")
-    math.max(1, math.ceil(
-      math.log1p(-target) / math.log1p(-singleBandRecall)).toInt)
   }
 
   // ---------------------------------------------------------------------

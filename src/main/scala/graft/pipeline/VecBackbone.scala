@@ -53,8 +53,9 @@ private[graft] object VecBackbone {
   /** Banded operating point for d_ann_lsh_banded / d_ann_recall_banded:
     * 2 axis bands of [[Planes]] dims each (dims 1–8 — oracle-
     * reproducible). Production raises both knobs with seeded random
-    * hyperplanes: r with 2^r ≈ n/30 per band, b from the measured
-    * single-band recall via [[Similarity.bandsFor]]. */
+    * hyperplanes: r with 2^r ≈ n/30 per band, b the smallest count with
+    * 1 − (1 − ρ)^b ≥ the target recall for a measured single-band
+    * recall ρ. */
   val Bands = 2
 
   /** The catalog's pinned banded geometry (axis b=2, r=4). Every stored
@@ -382,54 +383,6 @@ private[graft] object VecBackbone {
         .write.mode("overwrite").parquet(s"$path/scale")
     }
     Warehouse.readParquet(s, s"$path/codes")
-  }
-
-  /** RE-SCALE COMPACTION — the actuator the `d_ann_sq8_clip` audit
-    * points at ("re-scale + re-encode at the next compaction"): when
-    * appended batches encoded under the pinned history scale have
-    * outgrown it (the ±127 clamp biting), derive a FRESH scale from the
-    * full corpus and re-encode every code from the RAW vectors — never
-    * from the stored clamped codes, whose out-of-range mass is already
-    * lost — then commit codes + scale sidecar together under the
-    * Warehouse version discipline (the `_graft_built` marker lands only
-    * after both writes, so a reader sees either the old committed state
-    * or the complete new one, never a scale/codes mix).
-    *
-    * Laws (spec-pinned in VecBackboneSpec): the compacted table equals
-    * a from-scratch full build bit-for-bit; its pinned scale is the
-    * corpus max; the clip predicate under the new scale reads ZERO on
-    * every vector. Cost: one max scan + one linear re-encode with NO
-    * exchange (pure per-row arithmetic). */
-  private[graft] def sq8Compact(s: SparkSession, d: String,
-                                split: Long): DataFrame = {
-    val path = s"${root(s, d)}/sq8_cmp$split"
-    Warehouse.ensure(s, path) {
-      sq8Advance(s, d, split) // the committed state being superseded
-      sq8BuildAt(s, d, path, Long.MaxValue)
-    }
-    Warehouse.readParquet(s, s"$path/codes")
-  }
-
-  private[graft] def sq8CompactScale(s: SparkSession, d: String,
-                                     split: Long): Double = {
-    sq8Compact(s, d, split) // ensure built
-    Warehouse.readParquet(s, s"${root(s, d)}/sq8_cmp$split/scale")
-      .collect()(0).getDouble(0)
-  }
-
-  /** The maintenance DECISION: does the clamp actually bite? One
-    * corpus max scan against the pinned advance scale — the same
-    * predicate `d_ann_sq8_clip` reports per side, reduced to the
-    * boolean that gates [[sq8Compact]]. */
-  private[graft] def sq8NeedsRescale(s: SparkSession, d: String,
-                                     split: Long): Boolean = {
-    val sc = sq8ScaleAt(s, d, split)
-    val mx = Tables.embeddings(s, d)
-      .select(expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v"))
-      .agg(max(expr(
-        "aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> greatest(acc, abs(x)))")))
-      .collect()(0)
-    !mx.isNullAt(0) && math.floor(mx.getDouble(0) * 127.0 / sc + 0.5) > 127
   }
 
   /** Stored BANDED sign-LSH inverted list over the full corpus — narrow

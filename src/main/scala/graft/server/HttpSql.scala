@@ -10,6 +10,7 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledFuture, Time
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -173,31 +174,57 @@ final class HttpSql(spark: SparkSession, port: Int = 0,
   }
 
   /** Serve tables the INGEST tier writes under `dataDir` (ServeMain
-    * wiring): a temp view snapshots its file LISTING at registration, so
-    * a streamed table must re-register per statement to expose files
-    * appended since. Only tables actually referenced in the statement
-    * are refreshed (substring match — a false positive just re-lists one
-    * table's footers), `_`-prefixed dirs (DLQ, staging) stay private,
-    * and a dir whose parquet is mid-write simply stays unregistered
-    * until the next statement. dataDir owns its names: a same-named
-    * pre-registered view is replaced by the served table. */
-  private val registeredViews =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    * wiring). A temp view snapshots its file LISTING at registration, so
+    * a table is re-registered only when that snapshot may be stale:
+    *  (a) its commit generation ([[Ingest.generation]]) differs from the
+    *      one this server registered it at — an in-process writer
+    *      committed since; or
+    *  (b) the session's temp view under its name is no longer the one
+    *      this server registered (compared with `eq`): another HttpSql on
+    *      the session, a user `CREATE TEMP VIEW` or a `stop()` replaced or
+    *      dropped it.
+    * An unchanged table is not listed at all. The generation is read
+    * BEFORE the listing, so a commit that races the listing leaves the
+    * older generation on record and the next statement re-lists. Only
+    * in-process writers bump generations: a file another process places
+    * in a table dir is served after the next in-process commit to that
+    * table. Only tables referenced in the statement are checked
+    * (substring match — a false positive only keeps one extra table
+    * registered), `_`-prefixed dirs (DLQ, staging) stay private, and a
+    * dir whose parquet is mid-write stays unregistered, with nothing
+    * recorded, so the next statement retries. dataDir owns its names: a
+    * same-named pre-registered view is replaced by the served table. */
+  private val served =
+    new ConcurrentHashMap[String, (Long, TemporaryViewRelation)]()
 
   private def refreshDataTables(sqlText: String): Unit =
     dataDir.foreach { root =>
+      import org.apache.hadoop.fs.Path
       val lower = sqlText.toLowerCase
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(d => d.isDirectory && !d.getName.startsWith("_") &&
-          lower.contains(d.getName.toLowerCase))
-        .foreach { d =>
-          try {
-            spark.read.parquet(d.getPath).createOrReplaceTempView(d.getName)
-            // first registration by THIS instance claims the name
-            // (cross-instance sharing — see HttpSql.viewHolders)
-            if (registeredViews.add(d.getName))
-              HttpSql.retainView(spark, d.getName, this)
-          } catch { case _: Exception => () }
+      val catalog = spark.sessionState.catalog
+      val rootPath = new Path(root)
+      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val dirs = try fs.listStatus(rootPath)
+                 catch { case _: java.io.IOException => Array.empty }
+      dirs.iterator.filter(_.isDirectory).map(_.getPath.getName)
+        .filter(n => !n.startsWith("_") && lower.contains(n.toLowerCase))
+        .foreach { name =>
+          val gen = Ingest.generation(root, name)
+          val held = Option(served.get(name))
+          if (!held.exists { case (g, v) =>
+                g == gen && catalog.getRawTempView(name).exists(_ eq v) })
+            try {
+              val df = spark.read.parquet(s"$root/$name")
+              // register and capture as one step, so another server's
+              // registration cannot slip between them
+              HttpSql.synchronized {
+                df.createOrReplaceTempView(name)
+                catalog.getRawTempView(name).foreach(v => served.put(name, (gen, v)))
+              }
+              // first registration by THIS instance claims the name
+              // (cross-instance sharing — see HttpSql.viewHolders)
+              if (held.isEmpty) HttpSql.retainView(spark, name, this)
+            } catch { case _: Exception => () }
         }
     }
 
@@ -236,11 +263,11 @@ final class HttpSql(spark: SparkSession, port: Int = 0,
     // on this session still holds the name (ADVICE r14: two servers
     // sharing a session register the same served-table names; the first
     // stop must not break the survivor's in-flight reads).
-    registeredViews.forEach { v =>
+    served.keySet.forEach { v =>
       if (HttpSql.releaseView(spark, v, this))
         spark.catalog.dropTempView(v): Unit
     }
-    registeredViews.clear()
+    served.clear()
   }
 
   private object PingHandler extends HttpHandler {
@@ -424,10 +451,11 @@ final class HttpSql(spark: SparkSession, port: Int = 0,
     try {
       import spark.implicits._
       val rows = spark.read.schema(schema).json(spark.createDataset(jsons))
-      // no view registration here: refreshDataTables re-registers the
-      // table on every statement that names it, so the rows are
-      // SELECTable right away. The table lock keeps the append out of a
-      // compaction swap the table's own stream may be running.
+      // no view registration here: writeTyped bumps the table's commit
+      // generation, so refreshDataTables re-lists it on the next
+      // statement that names it and the rows are SELECTable right away.
+      // The table lock keeps the append out of a compaction swap the
+      // table's own stream may be running.
       Ingest.withTableLock(root, table) {
         Ingest.writeTyped(rows, table, schema, root, batchId = -1L)
       }
@@ -596,9 +624,9 @@ object HttpSql {
     * still drops the view instead of stranding a count forever — and no
     * dead server pins the SparkSession. Best-effort by nature (an
     * uncollected abandoned server holds its claim until GC); the
-    * fallback is benign because refreshDataTables re-registers served
-    * names on every statement that references them, so an early drop
-    * only costs one re-listing. */
+    * fallback is benign because refreshDataTables re-registers a served
+    * name whose session view is no longer the one it registered, so an
+    * early drop only costs one re-listing. */
   private val viewHolders = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), java.util.Map[AnyRef, java.lang.Boolean]]()
   private def retainView(s: SparkSession, name: String,

@@ -369,32 +369,6 @@ private[sources] object ProtoWriteCommit {
   /** Driver-side conf (planning/commit run on the driver). */
   private def hadoopConf() = SparkSession.active.sessionState.newHadoopConf()
 
-  /** Streamed byte compare. Replay dedup must not accept a merely
-    * equal-LENGTH file as identical: a re-commit with rows shuffled
-    * across partitions, or two writes colliding on a file name, produce
-    * different bytes at the same size and must fail loudly instead of
-    * silently dropping one copy. Cost: one read of each file, only on the
-    * rare name-collision path. */
-  private def sameContent(fs: org.apache.hadoop.fs.FileSystem,
-                          a: Path, b: Path): Boolean = {
-    if (fs.getFileStatus(a).getLen != fs.getFileStatus(b).getLen) return false
-    val ia = new BufferedInputStream(fs.open(a), 64 * 1024)
-    val ib = new BufferedInputStream(fs.open(b), 64 * 1024)
-    try {
-      val ba = new Array[Byte](64 * 1024)
-      val bb = new Array[Byte](64 * 1024)
-      var same = true
-      var done = false
-      while (same && !done) {
-        val na = ia.readNBytes(ba, 0, ba.length)
-        val nb = ib.readNBytes(bb, 0, bb.length)
-        same = na == nb && java.util.Arrays.equals(ba, 0, na, bb, 0, nb)
-        done = na <= 0
-      }
-      same
-    } finally { ia.close(); ib.close() }
-  }
-
   def publish(path: String, messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(hadoopConf())
@@ -407,17 +381,12 @@ private[sources] object ProtoWriteCommit {
       .foreach { case ProtoCommit(staged, finalName) =>
         val s = new Path(staged)
         val target = new Path(dir, finalName)
+        // every write names its files with its own query id, so a name
+        // that is already published is a collision: fail, never replace
         if (fs.exists(target)) {
-          // Same (write, partition) name already published. A genuine
-          // replay re-stages identical BYTES — accept and drop the
-          // retry's copy. Anything else (two writes sharing a name, a
-          // replay with rows shuffled across partitions) is a collision
-          // that must not silently win or lose — fail with the cause.
-          if (fs.exists(s) && !sameContent(fs, s, target))
-            throw new java.io.IOException(
-              s"graft-proto commit: $finalName already exists with different " +
-                "content — file names must be unique per directory")
-          fs.delete(s, false)
+          throw new java.io.IOException(
+            s"graft-proto commit: $finalName already exists — file names " +
+              "must be unique per directory")
         } else if (!fs.exists(s)) {
           throw new java.io.IOException(
             s"graft-proto commit: staged file missing: $staged")

@@ -47,21 +47,42 @@ object Ingest {
     spark.read.option("mergeSchema", "true")
       .option("basePath", s"$outDir/$DlqTable").parquet(s"$outDir/$DlqTable")
 
-  /** One lock per table directory, shared by every writer in this JVM.
-    * The table's streaming query holds it across the compaction after a
-    * batch; [[graft.server.HttpSql]]'s INSERT holds it across its append.
-    * A compaction swap moves a partition dir aside and renames the
-    * rewrite in, so an append landing in between would leave with the
-    * old dir. The stream's batch write itself needs no lock: its dynamic
-    * overwrite replaces only `ingest_batch=<id>` dirs, and an INSERT
-    * appends to `ingest_batch=-1`. */
+  /** One lock and one commit generation per table directory, shared by
+    * every writer in this JVM. The table's streaming query holds the lock
+    * across the compaction after a batch; [[graft.server.HttpSql]]'s
+    * INSERT holds it across its append. A compaction swap moves a
+    * partition dir aside and renames the rewrite in, so an append landing
+    * in between would leave with the old dir. The stream's batch write
+    * itself needs no lock: its dynamic overwrite replaces only
+    * `ingest_batch=<id>` dirs, and an INSERT appends to `ingest_batch=-1`.
+    *
+    * The generation counts the writes that touched the table dir. It is
+    * bumped at two points, each in a `finally` because a failed write or
+    * a healed swap can still have changed files: [[writeTyped]] (the
+    * stream batch and the HTTP INSERT) and the compaction step in
+    * [[startFromWire]]. [[graft.server.HttpSql]] re-lists a served table
+    * only when its generation moved. Only these in-process writers bump
+    * it: a file that another process places in a table dir is served
+    * after the next in-process commit to that table. */
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val generations =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  private def tableKey(outDir: String, table: String): String =
+    new org.apache.hadoop.fs.Path(s"$outDir/$table").toString
 
   private[graft] def withTableLock[T](outDir: String, table: String)(body: => T): T =
-    tableLocks.computeIfAbsent(
-      new org.apache.hadoop.fs.Path(s"$outDir/$table").toString,
-      _ => new Object).synchronized(body)
+    tableLocks.computeIfAbsent(tableKey(outDir, table), _ => new Object)
+      .synchronized(body)
+
+  /** The table's commit generation: 0 until an in-process writer first
+    * touches it. */
+  private[graft] def generation(outDir: String, table: String): Long =
+    generations.getOrDefault(tableKey(outDir, table), 0L)
+
+  private def committed(outDir: String, table: String): Unit =
+    generations.merge(tableKey(outDir, table), 1L, (a, b) => a + b): Unit
 
   /** Idempotent sink: every row carries an `ingest_batch` partition column
     * (nested UNDER the leading partition axes, so date pruning is
@@ -110,7 +131,8 @@ object Ingest {
       // compaction-friendly.
       .repartitionByRange(col("event_date"), col("timestamp"))
       .sortWithinPartitions("event_date", "timestamp", "event_name")
-    sink(out, table, outDir, batchId, Seq("event_date"))
+    try sink(out, table, outDir, batchId, Seq("event_date"))
+    finally committed(outDir, table)
   }
 
   /** Budget-exhausted dead-letter: the batch stops being retried and its
@@ -180,7 +202,8 @@ object Ingest {
             writeTyped(batch, table, schema, outDir, batchId)
             if (compaction.enabled)
               withTableLock(outDir, table) {
-                compactAfterWrite(spark, s"$outDir/$table", batchId, compaction)
+                try compactAfterWrite(spark, s"$outDir/$table", batchId, compaction)
+                finally committed(outDir, table)
               }
           }
         }
@@ -197,7 +220,10 @@ object Ingest {
     * after committing N-1, so every lower batch id is settled and
     * [[graft.sources.Compaction.compactIngest]] may pool it; batch N
     * itself stays replayable. A failure heals the swap and is logged: the
-    * batch's rows are already written, so it still commits. */
+    * batch's rows are already written, so it still commits. The caller
+    * bumps the table's generation when the step ends; until then a server
+    * that registered the table before a swap still reads the swapped-out
+    * files, so a statement in that window can fail on a missing file. */
   private def compactAfterWrite(spark: SparkSession, tableDir: String,
                                 batchId: Long,
                                 cfg: graft.CompactionConfig): Unit =

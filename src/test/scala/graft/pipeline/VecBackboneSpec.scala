@@ -633,65 +633,6 @@ class VecBackboneSpec extends AnyFunSuite {
     assert(clip("batch")._3 > 1.0, "batch max must exceed the pinned scale")
   }
 
-  test("sq8 re-scale compaction: clip -> compact -> clean, == fresh build bit-for-bit") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val rnd = new scala.util.Random(1601)
-    val dir = java.nio.file.Files.createTempDirectory("sq8cmp").toString
-    // the planted-clip shape: history in [-1, 1], batch ×2 — the pinned
-    // history scale clamps the batch, so the re-scale signal fires
-    val rows = (0L until 30L).map { i =>
-      val scale = if (i < 20) 1.0f else 2.0f
-      (i, Array.fill(8)((rnd.nextFloat() * 2 - 1) * scale), 0)
-    }
-    rows.toDF("vec_id", "embedding", "label")
-      .write.parquet(s"$dir/embeddings.parquet")
-    // CLIP: the committed advance clamps and the decision fn says so
-    VecBackbone.sq8Advance(spark, dir, 20).count()
-    assert(VecBackbone.sq8NeedsRescale(spark, dir, 20),
-      "planted overflow must trip the re-scale decision")
-    // COMPACT: re-derive + re-encode; laws
-    def codeRows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList,
-        r.getLong(2))).toSet
-    val cmp = codeRows(VecBackbone.sq8Compact(spark, dir, 20))
-    val scNew = VecBackbone.sq8CompactScale(spark, dir, 20)
-    // (1) the compacted scale is the CORPUS max (independently computed)
-    val mx = rows.flatMap(_._2.map(x => math.abs(x.toDouble))).max
-    assert(math.abs(scNew - mx) < 1e-6, s"scale $scNew != corpus max $mx")
-    // (2) compacted == fresh full build bit-for-bit (same corpus token,
-    // different lineage: the main table never saw the advance chain)
-    assert(cmp == codeRows(VecBackbone.sq8Codes(spark, dir)),
-      "compacted codes must equal a from-scratch build")
-    // (3) independently re-encoded reference: every code is the rounded
-    // level under the NEW scale, unclamped because nothing exceeds it
-    val want = rows.map { case (id, v, _) =>
-      val codes = v.map(x =>
-        math.floor(x.toDouble * 127.0 / scNew + 0.5).toLong).toList
-      (id, codes, codes.map(c => c * c).sum)
-    }.toSet
-    assert(cmp == want, "compacted codes diverge from the brute re-encode")
-    // (4) CLEAN: the clip predicate under the new scale reads zero
-    val clipped = graft.Tables.embeddings(spark, dir)
-      .select(expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v"))
-      .withColumn("mx", expr(
-        "aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> greatest(acc, abs(x)))"))
-      .filter(floor(col("mx") * 127.0 / lit(scNew) + 0.5) > 127)
-      .count()
-    assert(clipped == 0, s"$clipped vectors still clip after compaction")
-    // (5) a clean corpus does NOT trip the decision (no useless
-    // rewrites): every vector carries an exact 1.0 dim, so the batch
-    // max equals the pinned history scale precisely
-    val dir2 = java.nio.file.Files.createTempDirectory("sq8cmp2").toString
-    (0L until 20L).map(i =>
-        (i, 1.0f +: Array.fill(7)(rnd.nextFloat() * 1.8f - 0.9f), 0))
-      .toDF("vec_id", "embedding", "label")
-      .write.parquet(s"$dir2/embeddings.parquet")
-    VecBackbone.sq8Advance(spark, dir2, 10).count()
-    assert(!VecBackbone.sq8NeedsRescale(spark, dir2, 10),
-      "in-scale corpus must not trigger a re-scale")
-  }
-
   test("sq8 on an all-zero corpus: the scale guard pins codes and scores to zero") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -713,22 +654,5 @@ class VecBackboneSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(1), r.getDouble(2)))
     assert(rec.nonEmpty && rec.forall { case (h, r5) => h == 5 && r5 == 1.0 },
       "zero-norm corpus must rank identically under both scores")
-  }
-
-  test("bandsFor: smallest b reaching the composite-recall target") {
-    // the SCALE.md sweep's own numbers: measured 0.24 single-band recall
-    // needs 4 bands for ~0.67 composite
-    assert(Similarity.bandsFor(0.24, 0.66) == 4)
-    assert(Similarity.bandsFor(0.9, 0.9) == 1)
-    val rnd = new scala.util.Random(17)
-    (0 until 50).foreach { _ =>
-      val rho = 0.01 + rnd.nextDouble() * 0.98
-      val t = 0.01 + rnd.nextDouble() * 0.98
-      val b = Similarity.bandsFor(rho, t)
-      assert(1.0 - math.pow(1.0 - rho, b.toDouble) >= t - 1e-12,
-        s"b=$b misses target $t at rho=$rho")
-      assert(b == 1 || 1.0 - math.pow(1.0 - rho, (b - 1).toDouble) < t,
-        s"b=$b not minimal at rho=$rho target $t")
-    }
   }
 }

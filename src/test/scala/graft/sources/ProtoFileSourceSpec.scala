@@ -174,26 +174,31 @@ class ProtoFileSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("epoch-replay dedup accepts identical bytes, rejects equal-length different bytes") {
+  test("publish refuses a final name that already exists") {
     val spark0 = spark // force session init so SparkSession.active resolves
     assert(spark0 != null)
-    val dir = java.nio.file.Files.createTempDirectory("proto_replay").toString
+    val dir = java.nio.file.Files.createTempDirectory("proto_collide").toString
     def writeBytes(name: String, rows: Seq[Seq[Any]]): Unit =
       ProtoFiles.writeLocal(s"$dir/$name", rows.iterator, schema)
-    // published file + a replayed stage with IDENTICAL bytes -> accepted
-    writeBytes("flush-000001.pbstream", Seq(Seq(1L, "aa", 1, true, Seq[String]())))
-    writeBytes(".staged-r1", Seq(Seq(1L, "aa", 1, true, Seq[String]())))
-    ProtoWriteCommit.publish(dir,
-      Array(ProtoCommit(s"$dir/.staged-r1", "flush-000001.pbstream")))
-    assert(!new java.io.File(s"$dir/.staged-r1").exists, "retry copy dropped")
-    // same LENGTH, different bytes (rows shuffled across partitions /
-    // name collision) -> must fail loudly, not silently drop one copy
-    writeBytes(".staged-r2", Seq(Seq(1L, "ab", 1, true, Seq[String]())))
+    val row = Seq(Seq(1L, "aa", 1, true, Seq[String]()))
+    writeBytes("flush-000001.pbstream", row)
+    val published = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/flush-000001.pbstream"))
+    // even a stage with IDENTICAL bytes is a collision, not a replay
+    writeBytes(".staged-r1", row)
     val ex = intercept[java.io.IOException] {
       ProtoWriteCommit.publish(dir,
-        Array(ProtoCommit(s"$dir/.staged-r2", "flush-000001.pbstream")))
+        Array(ProtoCommit(s"$dir/.staged-r1", "flush-000001.pbstream")))
     }
-    assert(ex.getMessage.contains("different"), ex.getMessage)
+    assert(ex.getMessage.contains("already exists"), ex.getMessage)
+    assert(java.util.Arrays.equals(published, java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/flush-000001.pbstream"))),
+      "the published file must stay untouched")
+    // a fresh name publishes: the stage is renamed into place
+    ProtoWriteCommit.publish(dir,
+      Array(ProtoCommit(s"$dir/.staged-r1", "flush-000002.pbstream")))
+    assert(!new java.io.File(s"$dir/.staged-r1").exists)
+    assert(new java.io.File(s"$dir/flush-000002.pbstream").exists)
   }
 
   test("s_scan2_proto distributed round trip matches a direct events query") {

@@ -77,7 +77,7 @@ class QueryLogSpec extends AnyFunSuite {
       assert(gauge().contains(expected),
         s"gauge ${gauge()} != hottest group $expected")
       // read-and-reset: the action consumed the figure
-      assert(graft.functions.ParametricAgg.peakBuffered == 0L)
+      assert(graft.functions.ParametricAgg.peakAndReset() == 0L)
     } finally spark.listenerManager.unregister(log)
   }
 

@@ -275,8 +275,9 @@ abstract class LocalSchemeFs(scheme: String)
   * (`.<partition>_compact_bak`) first counts down
   * [[LatchedCompactionFs.reached]], then waits for
   * [[LatchedCompactionFs.release]]. */
-class LatchedCompactionFs extends LocalSchemeFs("latchfs") {
+class LatchedCompactionFs(scheme: String) extends LocalSchemeFs(scheme) {
   import org.apache.hadoop.fs.Path
+  def this() = this("latchfs")
   override def rename(src: Path, dst: Path): Boolean = {
     if (dst.getName.endsWith("_compact_bak")) {
       LatchedCompactionFs.reached.countDown()
@@ -292,6 +293,24 @@ object LatchedCompactionFs {
   def arm(): Unit = {
     reached = new java.util.concurrent.CountDownLatch(1)
     release = new java.util.concurrent.CountDownLatch(1)
+  }
+}
+
+/** `countfs`: `latchfs` that also records every directory it lists. */
+class ListCountingFs extends LatchedCompactionFs("countfs") {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def listStatus(p: Path): Array[FileStatus] = {
+    ListCountingFs.listed.add(p.toUri.getPath)
+    super.listStatus(p)
+  }
+}
+
+object ListCountingFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Listings of `dir` or of a path under it since `listed` was cleared. */
+  def listingsUnder(dir: String): Int = {
+    import scala.jdk.CollectionConverters._
+    listed.asScala.count(p => p == dir || p.startsWith(s"$dir/"))
   }
 }
 
