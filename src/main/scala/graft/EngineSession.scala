@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Canonical engine session (SURVEY §7-M0): UTC, AQE, right-sized
-  * shuffle parallelism, graft extensions (native functions + the
-  * CollapseDedup rule) installed at build time. */
+  * shuffle parallelism, graft extensions installed at build time (native
+  * functions, the CH-dialect parser, the CollapseDedup rule, and the
+  * SingleStage rule that runs a query over inputs of at most 32 MB as one
+  * stage with no exchange). */
 object EngineSession {
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),

@@ -6,9 +6,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension registering graft's native expressions for SQL use
-  * (`SELECT simhash64(text) ...`). Install either via
-  * `spark.sql.extensions=graft.functions.GraftExtensions` or at runtime
-  * with [[GraftExtensions.register]].
+  * (`SELECT simhash64(text) ...`), the CH-dialect parser, and three plan
+  * rules: [[graft.plans.CollapseDedup]] (post-hoc resolution),
+  * [[graft.plans.SingleStage]] (pre-CBO: small inputs plan no exchange)
+  * and the [[graft.plans.GraftStrategies]] planner strategy. Install via
+  * `spark.sql.extensions=graft.functions.GraftExtensions`;
+  * [[GraftExtensions.register]] gives a live session the functions and
+  * the as-of strategy, but not the rules, which a live session cannot
+  * gain.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -19,6 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectTableFunction((FunctionIdentifier(name), info, builder))
     }
     ext.injectPostHocResolutionRule(_ => graft.plans.CollapseDedup)
+    ext.injectPreCBORule(_ => graft.plans.SingleStage)
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategies)
     // CH SQL-dialect clauses (LIMIT n BY k, SAMPLE a/b) on the analyst
     // entry point — parse-time rewrite into standard window/filter plans

@@ -56,42 +56,25 @@ object OrderStats {
     * (key, ord..., wt) projection of `df`. `wt` must be LongType
     * (exact integer weights — no summation-order hazard); `ord` must be
     * a total order within `key` (include tiebreak columns).
-    */
-  /** Returns (cdf, persisted-intermediates): the slice table is CACHED
+    *
+    * Returns (cdf, persisted-intermediates): the slice table is CACHED
     * (correctness depends on one physical instantiation — see below),
     * so callers must release it after their action
     * (`Materialize.drop(result, caches: _*)` or `_.unpersist()`).
     * There is deliberately no cache-discarding convenience overload —
-    * it leaked a corpus-sized cached block per call. */
-  /** Adaptive-gate threshold (plan-stats bytes). The distributed form
-    * pays ~3 extra stages of fixed scheduling latency plus the range
+    * it leaked a corpus-sized cached block per call.
+    *
+    * Adaptive gate (plan-stats bytes against the shared small-input
+    * threshold, [[graft.plans.SingleStage.gateBytes]]): the distributed
+    * form pays ~3 extra stages of fixed scheduling latency plus the range
     * boundary sampling (~0.45 s measured at sf0.1, BENCH_NOTES) — pure
-    * win at corpus scale, pure tax when the input fits a handful of
-    * tasks anyway. Below this estimated input size the SAME cum/tot
-    * columns come from the naive one-window plan (bit-equal by
-    * construction — OrderStatsSpec pins equality across the gate).
-    * Plan-statistics-driven, so the decision costs no extra job; 32 MB
-    * ≈ a few million narrow rows, comfortably inside one-task-per-key
-    * territory on any executor. Tunable per deployment. */
-  private val gateOverride = new scala.util.DynamicVariable[Option[Long]](None)
-
-  private def gateBytes: Long =
-    gateOverride.value
-      .orElse(sys.props.get("graft.orderstats.gateBytes").map(_.toLong))
-      .getOrElse(32L << 20)
-
-  /** TEST/SWEEP HOOK: run `body` with the adaptive gate pinned to
-    * `bytes` (0 = always the distributed form), restoring the previous
-    * setting — the plan-shape specs must exercise the scale path
-    * regardless of how small their fixtures are. */
-  def withGateBytes[T](bytes: Long)(body: => T): T =
-    // thread-scoped, not a sys.props mutation: a concurrent
-    // weightedCdfPlan caller (parallel tests, a multi-threaded bench)
-    // must never observe another thread's pinned gate — results stay
-    // bit-equal either way, but plan-shape assertions would flake
-    // (ADVICE r12). The sys.prop stays as the JVM-wide deployment knob.
-    gateOverride.withValue(Some(bytes))(body)
-
+    * win at corpus scale, pure tax when the input fits a handful of tasks
+    * anyway. At or below the gate the SAME cum/tot columns come from the
+    * naive one-window plan (bit-equal by construction — OrderStatsSpec
+    * pins equality across the gate). Plan-statistics-driven, so the
+    * decision costs no extra job. Specs pin the distributed form with
+    * `SingleStage.withGateBytes(0)`.
+    */
   def weightedCdfPlan(df: DataFrame, key: String, ord: Seq[String],
                       wt: String): (DataFrame, Seq[DataFrame]) =
     weightedCdfPlanImpl(df, key, ord, wt, valueGranular = false)
@@ -128,7 +111,7 @@ object OrderStats {
     require(src.schema(wt).dataType == LongType,
       s"weight column '$wt' must be LongType, got ${src.schema(wt).dataType}")
     val est = src.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(gateBytes)) {
+    if (est <= BigInt(graft.plans.SingleStage.gateBytes)) {
       // small-input fast path: the textbook window — bounded parallelism
       // is irrelevant at this size, and it skips the range sampling and
       // the extra exchanges. The cum window runs FIRST: its required

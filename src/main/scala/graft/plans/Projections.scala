@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project,
+  Repartition, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -416,17 +417,24 @@ object ProjectionRewrite extends Rule[LogicalPlan] {
       case agg: Aggregate =>
         unwrap(agg.child).flatMap { case (lr, filters) =>
           findFor(lr).flatMap(reg => tryRewrite(agg, filters, reg))
+        }.map { rewritten =>
+          // a gated base stays gated: the projection scan is smaller
+          if (agg.child.exists(_.isInstanceOf[Repartition])) SingleStage(rewritten)
+          else rewritten
         }.getOrElse(agg)
     }
   }
 
   /** Base-scan pattern: the aggregate's child may wrap the relation in
     * aliases, key-only filters, and pruning projects (attribute-only —
-    * anything computed in between defeats the match, correctly). */
+    * anything computed in between defeats the match, correctly). The
+    * small-input coalesce [[SingleStage]] put over the chain is seen
+    * through: it only sets the partitioning. */
   private def unwrap(plan: LogicalPlan): Option[(LogicalRelation, Seq[Expression])] =
     plan match {
       case lr: LogicalRelation   => Some((lr, Nil))
       case SubqueryAlias(_, c)   => unwrap(c)
+      case Repartition(1, false, c) => unwrap(c)
       case Filter(cond, c)       => unwrap(c).map { case (lr, fs) => (lr, cond +: fs) }
       case Project(list, c) if list.forall(_.isInstanceOf[AttributeReference]) =>
         unwrap(c)

@@ -152,15 +152,8 @@ final class HttpSql(spark: SparkSession, port: Int = 0,
 
   private def refreshSystemTables(): Unit = {
     dataDir.foreach { root =>
-      val dirs = new java.io.File(root).listFiles()
-      // same privacy rule as refreshDataTables: underscore/dot dirs
-      // (_dlq, _http_stage, metadata) are not tables and must not leak
-      // their file/byte census to HTTP clients
-      val tables = if (dirs == null) Array.empty[java.io.File]
-                   else dirs.filter(d => d.isDirectory &&
-                     !d.getName.startsWith("_") && !d.getName.startsWith("."))
-      val parts = tables.map { t =>
-        graft.sources.Parts.forTable(spark, t.getPath)
+      val parts = tableDirs(root).map { t =>
+        graft.sources.Parts.forTable(spark, t.toString)
           .withColumn("table", org.apache.spark.sql.functions.lit(t.getName))
       }
       // an empty dataDir still answers `SELECT … FROM system_parts`
@@ -197,17 +190,26 @@ final class HttpSql(spark: SparkSession, port: Int = 0,
   private val served =
     new ConcurrentHashMap[String, (Long, TemporaryViewRelation)]()
 
+  /** The table dirs directly under `root`, listed through the Hadoop
+    * FileSystem of `root`'s scheme (so a non-`file` dataDir serves and
+    * censuses its tables); none when `root` is missing. Underscore/dot
+    * dirs (_dlq, _http_stage, metadata) are not tables: they are neither
+    * served nor censused to HTTP clients. */
+  private def tableDirs(root: String): Seq[org.apache.hadoop.fs.Path] = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = try fs.listStatus(rootPath)
+               catch { case _: java.io.IOException => Array.empty }
+    dirs.toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+  }
+
   private def refreshDataTables(sqlText: String): Unit =
     dataDir.foreach { root =>
-      import org.apache.hadoop.fs.Path
       val lower = sqlText.toLowerCase
       val catalog = spark.sessionState.catalog
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dirs = try fs.listStatus(rootPath)
-                 catch { case _: java.io.IOException => Array.empty }
-      dirs.iterator.filter(_.isDirectory).map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && lower.contains(n.toLowerCase))
+      tableDirs(root).map(_.getName)
+        .filter(n => lower.contains(n.toLowerCase))
         .foreach { name =>
           val gen = Ingest.generation(root, name)
           val held = Option(served.get(name))

@@ -28,7 +28,7 @@ class OrderStatsSpec extends AnyFunSuite {
       use: org.apache.spark.sql.DataFrame => Array[String]): Array[String] =
     // gate pinned to 0: these tests exercise the DISTRIBUTED machinery
     // (tiny fixtures would otherwise take the gate's one-window branch)
-    OrderStats.withGateBytes(0) {
+    graft.plans.SingleStage.withGateBytes(0) {
       val (out, caches) = OrderStats.weightedCdfPlan(df, key, ord, wt)
       try use(out) finally caches.foreach(_.unpersist())
     }
@@ -79,7 +79,7 @@ class OrderStatsSpec extends AnyFunSuite {
     // val 1 is 5 >= 3.5 -> median 1. B -> 10(w1), 20(w1): tot 2 -> val 10.
     val df = Seq(("A", 1L, 1L, 5L), ("A", 2L, 2L, 1L), ("A", 3L, 3L, 1L),
       ("B", 10L, 4L, 1L), ("B", 20L, 5L, 1L)).toDF("k", "v", "id", "wt")
-    val (out, caches) = OrderStats.withGateBytes(0)(
+    val (out, caches) = graft.plans.SingleStage.withGateBytes(0)(
       OrderStats.weightedCdfPlan(df, "k", Seq("v", "id"), "wt"))
     val med =
       try out.filter(col("cum") * 2 >= col("tot"))
@@ -92,7 +92,7 @@ class OrderStatsSpec extends AnyFunSuite {
   test("both consumers read ONE persisted instantiation of the range shuffle") {
     import spark.implicits._
     val df = randomRows(2000, seed = 11).toDF("k", "v", "id", "wt")
-    val (out, caches) = OrderStats.withGateBytes(0)(
+    val (out, caches) = graft.plans.SingleStage.withGateBytes(0)(
       OrderStats.weightedCdfPlan(df, "k", Seq("v", "id"), "wt"))
     out.collect() // materialize so AQE finalizes the plan
     // correctness contract: the slice table (range shuffle + pid) is
@@ -135,7 +135,7 @@ class OrderStatsSpec extends AnyFunSuite {
     assert(smallCaches.isEmpty, "small input should take the gate's naive branch")
     val a = small.select("k", "v", "id", "wt", "cum", "tot")
       .collect().map(_.toString).sorted
-    val b = OrderStats.withGateBytes(0) {
+    val b = graft.plans.SingleStage.withGateBytes(0) {
       val (out, caches) = OrderStats.weightedCdfPlan(df, "k", Seq("v", "id"), "wt")
       assert(caches.nonEmpty, "gate 0 must take the distributed branch")
       try out.select("k", "v", "id", "wt", "cum", "tot")
@@ -161,7 +161,7 @@ class OrderStatsSpec extends AnyFunSuite {
         .collect().map(_.toString).sorted
     val ref = picks(naiveCdf(df))
     for (gate <- Seq(0L, Long.MaxValue)) {
-      val got = OrderStats.withGateBytes(gate) {
+      val got = graft.plans.SingleStage.withGateBytes(gate) {
         val (out, caches) = OrderStats.weightedCdfByValuePlan(
           df.select("k", "v", "wt"), "k", Seq("v"), "wt")
         try picks(out) finally caches.foreach(_.unpersist())

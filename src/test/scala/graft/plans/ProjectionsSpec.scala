@@ -386,4 +386,24 @@ class ProjectionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ProjectionRewrite.register(spark, pd)
     assert(q.collect().toSeq == want.toSeq)
   }
+
+  test("the rewrite fires on an input under the small-input gate and keeps it gated") {
+    def gated(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.exists {
+      case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false, _) => true
+      case _ => false
+    }
+    def agg = base.groupBy("g").agg(sum("v").as("sv"), count(lit(1)).as("n")).orderBy("g")
+    // the base input is under the gate: without the rewrite it runs gated
+    val direct = ProjectionRewrite.bypass {
+      val d = agg
+      assert(gated(d), s"the base is not gated:\n${d.queryExecution.optimizedPlan}")
+      d.collect()
+    }
+    val q = agg
+    assert(usesProjection(q), s"rewrite did not fire, scans=${scans(q)}")
+    assert(gated(q), s"the rewritten scan lost the gate:\n${q.queryExecution.optimizedPlan}")
+    assert(!q.queryExecution.executedPlan.toString.contains("Exchange"),
+      s"a gated rewrite plans no exchange:\n${q.queryExecution.executedPlan}")
+    assert(q.collect().toSeq == direct.toSeq)
+  }
 }

@@ -107,6 +107,29 @@ class ServedTablesSpec extends AnyFunSuite {
       "the swap must have pooled the settled batches")
   }
 
+  test("system_parts censuses the tables of a non-file dataDir") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[ListCountingFs].getName)
+    val local = tmp("served_parts")
+    append(s"countfs://$local", "p-1", "p-2")
+    val srv = new HttpSql(spark, dataDir = Some(s"countfs://$local"))
+    val port = srv.start()
+    try {
+      val q = java.net.URLEncoder.encode(
+        "SELECT table, sum(n_files) FROM system_parts GROUP BY table", UTF_8)
+      val r = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$port/?query=$q")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      val files = new java.io.File(s"$local/login_events").listFiles().toSeq
+        .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+        .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+        .count(_.getName.endsWith(".parquet"))
+      assert(files > 0)
+      assert(r.body() == s"login_events\t$files\n")
+    } finally srv.stop()
+  }
+
   test("two servers on one session each serve their own dataDir's table") {
     val a = tmp("served_a"); val b = tmp("served_b")
     append(a, "a-1"); append(b, "b-1", "b-2")
