@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** ClickHouse `retention(cond1, …, condN)` as a SQL aggregate — the
-  * fourth member of the parametric event-analytics surface next to
-  * [[WindowFunnelAgg]] / [[SequenceCountAgg]] / [[SequenceMatchAgg]]
+  * parametric event-analytics member that does not buffer events, next
+  * to the [[BufferedEventAgg]] family (`window_funnel`,
+  * `sequence_match`, `sequence_count`, `sequence_next_node`)
   * (CH 22.3 signature; the cohort-retention SELECT a reference analyst
   * writes over the events tables,
   * `/root/reference/build/docker-compose.yml:8-9` basis).
@@ -22,8 +23,8 @@ import org.apache.spark.sql.types._
   * windowed retention. Returns ARRAY<INT> of 0/1 flags (CH's UInt8
   * array), summable directly in SQL.
   *
-  * Unlike its three buffering siblings this aggregate needs NO
-  * [[ParametricAgg]] cap: state is one Int bitmask of conditions seen —
+  * Unlike the buffered aggregates this one needs no [[EventBuffer]] and
+  * no [[ParametricAgg]] cap: state is one Int bitmask of conditions seen —
   * O(1) per group regardless of whale size, partially aggregated
   * map-side like any sum. The library twin is the o_a16 join
   * formulation ([[graft.operators.EventAnalytics]]); the o_a16b catalog

@@ -1,11 +1,7 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
 /** ClickHouse `sequenceCount('(?1).*(?2)')` / `('(?1)(?t<=w)(?2)')` as a
@@ -34,59 +30,23 @@ import org.apache.spark.sql.types._
   */
 object SequenceCount {
 
-  /** Buffered (micros, tie, first?) triples. */
-  final class State {
-    var us = new Array[Long](8)
-    var tie = new Array[Long](8)
-    var isA = new Array[Boolean](8)
-    var n = 0
-    def add(t: Long, k: Long, a: Boolean): Unit = {
-      if (n == us.length) {
-        us = java.util.Arrays.copyOf(us, n * 2)
-        tie = java.util.Arrays.copyOf(tie, n * 2)
-        isA = java.util.Arrays.copyOf(isA, n * 2)
-      }
-      us(n) = t; tie(n) = k; isA(n) = a; n += 1
-    }
-  }
-
-  /** The lag-collapse pass over the (ts, tie) total order. */
-  def count(s: State, windowMicros: Long): Long = {
+  /** The lag-collapse pass over the (ts, tie) total order; mask bit 0
+    * is `first` (an event matching both reads as `first`). */
+  def count(s: EventBuffer, windowMicros: Long): Long = {
     if (s.n == 0) return 0L
-    val idx = ParametricAgg.sortedIdx(s.us, s.tie, s.n)
     var fired = 0L
     var prevA = false
     var prevUs = 0L
     var i = 0
     while (i < s.n) {
-      val j = idx(i)
-      if (!s.isA(j) && prevA &&
-          (windowMicros == 0 || s.us(j) - prevUs <= windowMicros))
+      val isA = (s.mask(i) & 1) != 0
+      if (!isA && prevA &&
+          (windowMicros == 0 || s.us(i) - prevUs <= windowMicros))
         fired += 1
-      prevA = s.isA(j); prevUs = s.us(j)
+      prevA = isA; prevUs = s.us(i)
       i += 1
     }
     fired
-  }
-
-  def serialize(s: State): Array[Byte] = {
-    val buf = ByteBuffer.allocate(4 + s.n * 17)
-    buf.putInt(s.n)
-    var i = 0
-    while (i < s.n) {
-      buf.putLong(s.us(i)); buf.putLong(s.tie(i))
-      buf.put(if (s.isA(i)) 1.toByte else 0.toByte)
-      i += 1
-    }
-    buf.array()
-  }
-
-  def deserialize(bytes: Array[Byte]): State = {
-    val buf = ByteBuffer.wrap(bytes)
-    val s = new State
-    var n = buf.getInt
-    while (n > 0) { s.add(buf.getLong, buf.getLong, buf.get() == 1); n -= 1 }
-    s
   }
 }
 
@@ -94,9 +54,10 @@ object SequenceCount {
 case class SequenceCountAgg(
     windowMicros: Long,
     children: Seq[Expression],
+    maxEvents: Int = ParametricAgg.maxEvents,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SequenceCount.State] {
+  extends BufferedEventAgg {
 
   def this(es: Seq[Expression]) =
     this(DDSketch.foldableDouble(es.head, "sequence_count window_us").toLong,
@@ -107,13 +68,13 @@ case class SequenceCountAgg(
   require(children.size == 5,
     "sequence_count(window_us, ts, tie, first, second) takes 5 arguments")
 
-  private def tsExpr = children(1)
-  private def tieExpr = children(2)
+  override protected def tsExpr = children(1)
+  override protected def tieExpr = children(2)
   private def firstExpr = children(3)
   private def secondExpr = children(4)
-
-  // shared peak-buffer gauge, acquired on the driver, shipped to tasks
-  private val peakAcc = ParametricAgg.acquire()
+  override protected def maskConds = Seq(firstExpr, secondExpr)
+  override protected def scalePath =
+    "graft.operators.EventAnalytics.sequenceCount / sequenceCountChunked"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType
@@ -130,45 +91,8 @@ case class SequenceCountAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "sequence_count"
 
-  override def createAggregationBuffer(): SequenceCount.State =
-    new SequenceCount.State
-
-  override def update(b: SequenceCount.State,
-                      row: InternalRow): SequenceCount.State = {
-    ParametricAgg.guard(b.n, prettyName,
-      "graft.operators.EventAnalytics.sequenceCount / sequenceCountChunked")
-    val t = tsExpr.eval(row)
-    val k = tieExpr.eval(row)
-    if (t != null && k != null) {
-      val f = firstExpr.eval(row)
-      val sec = secondExpr.eval(row)
-      val isF = f != null && f.asInstanceOf[Boolean]
-      val isS = sec != null && sec.asInstanceOf[Boolean]
-      // both ⇒ first (arms, never fires) — the library form's rule
-      if (isF || isS)
-        b.add(t.asInstanceOf[Long], k.asInstanceOf[Long], isF)
-    }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def merge(b: SequenceCount.State,
-                     o: SequenceCount.State): SequenceCount.State = {
-    ParametricAgg.guard(b.n + o.n - 1, prettyName,
-      "graft.operators.EventAnalytics.sequenceCount / sequenceCountChunked")
-    var i = 0
-    while (i < o.n) { b.add(o.us(i), o.tie(i), o.isA(i)); i += 1 }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def eval(b: SequenceCount.State): Any =
-    SequenceCount.count(b, windowMicros)
-
-  override def serialize(b: SequenceCount.State): Array[Byte] =
-    SequenceCount.serialize(b)
-  override def deserialize(bytes: Array[Byte]): SequenceCount.State =
-    SequenceCount.deserialize(bytes)
+  override protected def result(s: EventBuffer): Any =
+    SequenceCount.count(s, windowMicros)
 
   override def withNewMutableAggBufferOffset(o: Int): SequenceCountAgg =
     copy(mutableAggBufferOffset = o)

@@ -1,11 +1,7 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
 /** ClickHouse `sequenceMatch('pattern')(ts, cond1, …, condN)` with the
@@ -54,7 +50,7 @@ import org.apache.spark.sql.types._
   * strict-increase ts semantics).
   *
   * `sequence_match('pattern', ts, tie, cond1, …, condN)` → BOOLEAN.
-  * State buffers condition-matching events per group
+  * An [[EventBuffer]] holds the condition-matching events per group
   * ([[ParametricAgg]]-capped); evaluation sorts once and runs a
   * feasible-set DP over the pattern steps — O(events × steps) per
   * group (the `==` gap keeps a hash of seen chain times; every other
@@ -195,23 +191,7 @@ object SequenceMatchPattern {
     out
   }
 
-  /** Buffered (micros, tie, condition-bitmask) triples. */
-  final class State {
-    var us = new Array[Long](8)
-    var tie = new Array[Long](8)
-    var mask = new Array[Int](8)
-    var n = 0
-    def add(t: Long, k: Long, m: Int): Unit = {
-      if (n == us.length) {
-        us = java.util.Arrays.copyOf(us, n * 2)
-        tie = java.util.Arrays.copyOf(tie, n * 2)
-        mask = java.util.Arrays.copyOf(mask, n * 2)
-      }
-      us(n) = t; tie(n) = k; mask(n) = m; n += 1
-    }
-  }
-
-  /** The feasible-set DP: feas_k(j) = "event j can be the k-th matched
+  /** The feasible-set DP over the (ts, tie)-sorted events: feas_k(j) = "event j can be the k-th matched
     * step". Fixed-offset separators are a shifted AND; `.*` folds the
     * prefix with the running aggregate its gap op needs. A negation
     * `(?!f)` stays in the same single pass: fixed offsets check a
@@ -222,12 +202,11 @@ object SequenceMatchPattern {
     * would sit inside the gap), while a candidate AT the forbidden
     * position survives (strictly-between excludes the endpoints), hence
     * the clear-then-add order. Still O(events × steps). */
-  def matches(s: State, steps: Vector[Step], unitMicros: Long): Boolean = {
+  def matches(s: EventBuffer, steps: Vector[Step], unitMicros: Long): Boolean = {
     val n = s.n
     if (n == 0) return false
-    val idx = ParametricAgg.sortedIdx(s.us, s.tie, n)
-    val us = idx.map(s.us)
-    val mk = idx.map(s.mask)
+    val us = s.us
+    val mk = s.mask
     def condOk(j: Int, c: Int): Boolean = (mk(j) & (1 << c)) != 0
     def gapOk(g: Gap, from: Long, to: Long): Boolean = {
       val d = to - from
@@ -324,25 +303,6 @@ object SequenceMatchPattern {
     prev.exists(identity)
   }
 
-  def serialize(s: State): Array[Byte] = {
-    val buf = ByteBuffer.allocate(4 + s.n * 20)
-    buf.putInt(s.n)
-    var i = 0
-    while (i < s.n) {
-      buf.putLong(s.us(i)); buf.putLong(s.tie(i)); buf.putInt(s.mask(i))
-      i += 1
-    }
-    buf.array()
-  }
-
-  def deserialize(bytes: Array[Byte]): State = {
-    val buf = ByteBuffer.wrap(bytes)
-    val s = new State
-    var n = buf.getInt
-    while (n > 0) { s.add(buf.getLong, buf.getLong, buf.getInt); n -= 1 }
-    s
-  }
-
   private[functions] def foldableString(e: Expression, what: String): String =
     e match {
       case lit: Literal if lit.foldable && lit.value != null &&
@@ -356,9 +316,10 @@ object SequenceMatchPattern {
 case class SequenceMatchPatternAgg(
     pattern: String,
     children: Seq[Expression],
+    maxEvents: Int = ParametricAgg.maxEvents,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SequenceMatchPattern.State] {
+  extends BufferedEventAgg {
 
   def this(es: Seq[Expression]) =
     this(SequenceMatchPattern.foldableString(es.head,
@@ -369,15 +330,18 @@ case class SequenceMatchPatternAgg(
   require(children.size <= 3 + 30,
     "sequence_match supports at most 30 conditions (bitmask bound)")
 
-  private def tsExpr = children(1)
-  private def tieExpr = children(2)
-  private def conds = children.drop(3)
+  override protected def tsExpr = children(1)
+  override protected def tieExpr = children(2)
+  override protected def maskConds = children.drop(3)
+  override protected def scalePath =
+    "graft.operators.EventAnalytics.sequenceMatch / the lead()-window " +
+      "formulations (o_a17-style)"
 
   // parse eagerly so a bad pattern fails at analysis, not per-task;
   // the bound check keeps value * unitMicros (micros scaling for
   // TIMESTAMP ts) from overflowing silently into a wrong comparison
   @transient private lazy val steps =
-    SequenceMatchPattern.parse(pattern, conds.size)
+    SequenceMatchPattern.parse(pattern, maskConds.size)
   require(steps.forall(_.gap.forall(_.value <= Long.MaxValue / 1000000L)),
     s"sequence_match pattern '$pattern': a time bound exceeds the " +
       "representable range (would overflow at microsecond scaling)")
@@ -388,13 +352,10 @@ case class SequenceMatchPatternAgg(
   private def unitMicros: Long =
     if (tsExpr.dataType == TimestampType) 1000000L else 1L
 
-  // shared peak-buffer gauge, acquired on the driver, shipped to tasks
-  private val peakAcc = ParametricAgg.acquire()
-
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType
     val ok = tsOk && tieExpr.dataType == LongType &&
-      conds.forall(_.dataType == BooleanType)
+      maskConds.forall(_.dataType == BooleanType)
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires (literal STRING pattern, TIMESTAMP|BIGINT ts, " +
@@ -406,48 +367,8 @@ case class SequenceMatchPatternAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "sequence_match"
 
-  override def createAggregationBuffer(): SequenceMatchPattern.State =
-    new SequenceMatchPattern.State
-
-  override def update(b: SequenceMatchPattern.State,
-                      row: InternalRow): SequenceMatchPattern.State = {
-    ParametricAgg.guard(b.n, prettyName,
-      "graft.operators.EventAnalytics.sequenceMatch / the lead()-window " +
-        "formulations (o_a17-style)")
-    val t = tsExpr.eval(row)
-    val k = tieExpr.eval(row)
-    if (t != null && k != null) {
-      var m = 0
-      var c = 0
-      while (c < conds.size) {
-        val v = conds(c).eval(row)
-        if (v != null && v.asInstanceOf[Boolean]) m |= 1 << c
-        c += 1
-      }
-      if (m != 0) b.add(t.asInstanceOf[Long], k.asInstanceOf[Long], m)
-    }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def merge(b: SequenceMatchPattern.State,
-                     o: SequenceMatchPattern.State): SequenceMatchPattern.State = {
-    ParametricAgg.guard(b.n + o.n - 1, prettyName,
-      "graft.operators.EventAnalytics.sequenceMatch / the lead()-window " +
-        "formulations (o_a17-style)")
-    var i = 0
-    while (i < o.n) { b.add(o.us(i), o.tie(i), o.mask(i)); i += 1 }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def eval(b: SequenceMatchPattern.State): Any =
-    SequenceMatchPattern.matches(b, steps, unitMicros)
-
-  override def serialize(b: SequenceMatchPattern.State): Array[Byte] =
-    SequenceMatchPattern.serialize(b)
-  override def deserialize(bytes: Array[Byte]): SequenceMatchPattern.State =
-    SequenceMatchPattern.deserialize(bytes)
+  override protected def result(s: EventBuffer): Any =
+    SequenceMatchPattern.matches(s, steps, unitMicros)
 
   override def withNewMutableAggBufferOffset(o: Int): SequenceMatchPatternAgg =
     copy(mutableAggBufferOffset = o)

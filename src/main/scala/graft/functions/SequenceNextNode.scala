@@ -1,12 +1,7 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
-
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -45,75 +40,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (r16 ADVICE: conflating it with 'NONE' misread "null value" as
   *    "stream end"). NULL with no marker = no chain matched.
   *
-  * State buffers (us, tie, value?, cond-mask) per row under the
-  * [[ParametricAgg]] cap; the one-shuffle lead()/lag()-window library
-  * forms (o_a21/o_a21c/o_a21d oracles) remain the scale path.
+  * The [[EventBuffer]] holds (us, tie, cond-mask, value) for every row
+  * under the [[ParametricAgg]] cap; the one-shuffle lead()/lag()-window
+  * library forms (o_a21/o_a21c/o_a21d oracles) remain the scale path.
   */
 object SequenceNextNode {
 
   val directions = Set("forward", "backward")
   val bases = Set("head", "tail", "first_match", "last_match")
-
-  /** Mask bit carrying the base-condition flag (conditions are capped at
-    * 30, bits 0..29, so bit 30 is always free). */
-  val BASE_BIT: Int = 1 << 30
-
-  /** Buffered (micros, tie, value-or-null, cond-mask) rows. */
-  final class State {
-    var us = new Array[Long](8)
-    var tie = new Array[Long](8)
-    var value = new Array[String](8)
-    var mask = new Array[Int](8) // bit k = cond(k+1) matched
-    var n = 0
-    def add(t: Long, k: Long, v: String, m: Int): Unit = {
-      if (n == us.length) {
-        us = java.util.Arrays.copyOf(us, n * 2)
-        tie = java.util.Arrays.copyOf(tie, n * 2)
-        value = java.util.Arrays.copyOf(value, n * 2)
-        mask = java.util.Arrays.copyOf(mask, n * 2)
-      }
-      us(n) = t; tie(n) = k; value(n) = v; mask(n) = m; n += 1
-    }
-  }
-
-  def serialize(s: State): Array[Byte] = {
-    val vb = new Array[Array[Byte]](s.n)
-    var bytes = 4
-    var i = 0
-    while (i < s.n) {
-      vb(i) = if (s.value(i) == null) null
-              else s.value(i).getBytes(StandardCharsets.UTF_8)
-      bytes += 24 + (if (vb(i) == null) 0 else vb(i).length)
-      i += 1
-    }
-    val buf = ByteBuffer.allocate(bytes)
-    buf.putInt(s.n)
-    i = 0
-    while (i < s.n) {
-      buf.putLong(s.us(i)); buf.putLong(s.tie(i)); buf.putInt(s.mask(i))
-      if (vb(i) == null) buf.putInt(-1)
-      else { buf.putInt(vb(i).length); buf.put(vb(i)) }
-      i += 1
-    }
-    buf.array()
-  }
-
-  def deserialize(bytes: Array[Byte]): State = {
-    val buf = ByteBuffer.wrap(bytes)
-    val s = new State
-    var n = buf.getInt
-    while (n > 0) {
-      val t = buf.getLong; val k = buf.getLong; val m = buf.getInt
-      val len = buf.getInt
-      val v = if (len < 0) null else {
-        val a = new Array[Byte](len); buf.get(a)
-        new String(a, StandardCharsets.UTF_8)
-      }
-      s.add(t, k, v, m)
-      n -= 1
-    }
-    s
-  }
 }
 
 /** `sequence_next_node('dir', 'base', ts, tie, value, cond1, …)` → STRING,
@@ -136,9 +70,10 @@ case class SequenceNextNodeAgg(
     base: String,
     hasBaseCond: Boolean,
     children: Seq[Expression],
+    maxEvents: Int = ParametricAgg.maxEvents,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SequenceNextNode.State] {
+  extends BufferedEventAgg {
 
   // extract the literals ONCE at build time: the planner later rewrites
   // children to agg-buffer attributes (merge phase), so re-parsing them
@@ -178,21 +113,27 @@ case class SequenceNextNodeAgg(
       "traversal, so no chain can ever be followed — use forward+head, " +
       "backward+tail, or a *_match base")
 
-  private def tsExpr = children(2)
-  private def tieExpr = children(3)
-  private def valExpr = children(4)
+  override protected def tsExpr = children(2)
+  override protected def tieExpr = children(3)
+  override protected def valueExpr = children(4)
   private def baseCondExpr: Option[Expression] =
     if (hasBaseCond) Some(children(5)) else None
   private def conds = children.drop(if (hasBaseCond) 6 else 5)
   private def nConds = conds.size
-
-  // shared peak-buffer gauge, acquired on the driver, shipped to tasks
-  private val peakAcc = ParametricAgg.acquire()
+  // the base-condition flag rides the bit after the chain conditions
+  // (conds capped at 30, so bit 30 at most); NULL reads false
+  override protected def maskConds = conds ++ baseCondExpr
+  // mask-0 rows ARE buffered: adjacency is in the full stream, so
+  // non-matching events are the interventions that break chains
+  override protected def keepUnmatched = true
+  override protected def scalePath =
+    "graft.operators.EventAnalytics (the o_a21/o_a21c/o_a21d " +
+      "lead()/lag()-window formulations)"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType
     val ok = tsOk && tieExpr.dataType == LongType &&
-      valExpr.dataType == StringType &&
+      valueExpr.dataType == StringType &&
       baseCondExpr.forall(_.dataType == BooleanType) &&
       conds.forall(_.dataType == BooleanType)
     if (ok) TypeCheckResult.TypeCheckSuccess
@@ -208,67 +149,21 @@ case class SequenceNextNodeAgg(
   override def nullable: Boolean = true
   override def prettyName: String = fnName
 
-  override def createAggregationBuffer(): SequenceNextNode.State =
-    new SequenceNextNode.State
-
-  override def update(b: SequenceNextNode.State,
-                      row: InternalRow): SequenceNextNode.State = {
-    ParametricAgg.guard(b.n, prettyName,
-      "the o_a21/o_a21c/o_a21d lead()/lag()-window formulations " +
-        "(operators.EventAnalytics)")
-    val t = tsExpr.eval(row)
-    val k = tieExpr.eval(row)
-    if (t != null && k != null) {
-      val v = valExpr.eval(row)
-      var m = 0
-      var c = 0
-      while (c < conds.size) {
-        val cv = conds(c).eval(row)
-        if (cv != null && cv.asInstanceOf[Boolean]) m |= 1 << c
-        c += 1
-      }
-      // the base-condition flag rides bit 30 (conds capped at 30, so the
-      // bit is always free); NULL base_cond reads false like the conds
-      baseCondExpr.foreach { bc =>
-        val bv = bc.eval(row)
-        if (bv != null && bv.asInstanceOf[Boolean])
-          m |= SequenceNextNode.BASE_BIT
-      }
-      // mask-0 rows ARE buffered: adjacency is in the full stream, so
-      // non-matching events are the interventions that break chains
-      b.add(t.asInstanceOf[Long], k.asInstanceOf[Long],
-        if (v == null) null else v.toString, m)
-    }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def merge(b: SequenceNextNode.State,
-                     o: SequenceNextNode.State): SequenceNextNode.State = {
-    ParametricAgg.guard(b.n + o.n - 1, prettyName,
-      "the o_a21/o_a21c/o_a21d lead()/lag()-window formulations " +
-        "(operators.EventAnalytics)")
-    var i = 0
-    while (i < o.n) { b.add(o.us(i), o.tie(i), o.value(i), o.mask(i)); i += 1 }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def eval(b: SequenceNextNode.State): Any = {
+  override protected def result(b: EventBuffer): Any = {
     val n = b.n
     if (n == 0) return null
-    val idx = ParametricAgg.sortedIdx(b.us, b.tie, n)
     val fwd = direction == "forward"
     val N = nConds
+    val baseBit = 1 << N
     // traversal position p -> buffered row (ascending time for forward,
     // descending for backward)
-    @inline def at(p: Int): Int = idx(if (fwd) p else n - 1 - p)
+    @inline def at(p: Int): Int = if (fwd) p else n - 1 - p
     // the full chain matches at traversal anchor p, whose event also
     // satisfies the base condition when one was given (the anchor gate)
     def chainAt(p: Int): Boolean = {
       if (p < 0 || p + N > n) return false
       if (hasBaseCond &&
-          (b.mask(at(p)) & SequenceNextNode.BASE_BIT) == 0) return false
+          (b.mask(at(p)) & baseBit) == 0) return false
       var i = 0
       while (i < N) {
         if ((b.mask(at(p + i)) & (1 << i)) == 0) return false
@@ -296,11 +191,6 @@ case class SequenceNextNodeAgg(
     // 'NONE' — 'NONE' is reserved for the stream end (r16 ADVICE)
     if (v == null) null else UTF8String.fromString(v)
   }
-
-  override def serialize(b: SequenceNextNode.State): Array[Byte] =
-    SequenceNextNode.serialize(b)
-  override def deserialize(bytes: Array[Byte]): SequenceNextNode.State =
-    SequenceNextNode.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): SequenceNextNodeAgg =
     copy(mutableAggBufferOffset = o)

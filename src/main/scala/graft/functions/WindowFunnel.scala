@@ -1,135 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
-
-/** Shared policy for the parametric event aggregates (`window_funnel`,
-  * `sequence_count`, `sequence_match`, `retention`): their state buffers
-  * O(condition-matching events) per group on the executor heap — the CH
-  * trade, fine for ordinary users but an OOM for a 100 TB whale group.
-  * The cap makes the documented trade ENFORCEABLE: a group exceeding it
-  * fails loudly, naming the one-shuffle library operator that handles
-  * whales by construction, instead of dying opaquely in the allocator.
-  * Default 1,000,000 events (≈12-17 MB of state); override with
-  * `-Dgraft.parametric.maxEventsPerGroup=N`. */
-object ParametricAgg {
-  def maxEvents: Int =
-    Integer.getInteger("graft.parametric.maxEventsPerGroup", 1000000)
-  def guard(n: Int, fn: String, scalePath: String): Unit = {
-    if (n >= maxEvents) throw new IllegalStateException(
-      s"$fn buffered $n events in one group, at the " +
-        s"graft.parametric.maxEventsPerGroup cap (${maxEvents}): a group " +
-        "this hot is a whale the buffered SQL aggregate cannot hold in " +
-        s"executor heap — use the one-shuffle library form ($scalePath) " +
-        "which handles whale groups by construction, or raise the cap")
-  }
-
-  /** Record the buffer size AFTER an update/merge actually ran (r17
-    * ADVICE: recording pre-add counted rows the aggregate then skipped —
-    * null ts, mask-0 drops — inflating the gauge by 1 on some
-    * partitionings). Call at the end of update()/merge() with the
-    * post-add `b.n`, keeping guard() itself pre-add. */
-  def notePeak(peak: MaxAccumulator, n: Int): Unit =
-    if (peak != null && n > 0) peak.add(n.toLong)
-
-  /** Pre-failure observability for the cap above (r16 VERDICT: a group
-    * approaching `maxEventsPerGroup` was invisible until the loud
-    * throw): a max-accumulator tracking the PEAK buffered events in any
-    * single group. Each buffering aggregate acquires the shared
-    * accumulator at build time (driver) and ships it in its task
-    * closure; executors fold task-local maxima and the driver merges
-    * them on task end, so the figure is cluster-correct, not
-    * local-mode-only. Surfaced per action in `system_query_log`
-    * ([[graft.sources.QueryLog]] `max_group_events`) and per run in the
-    * bench JSON — an operator reads headroom as peak/cap. */
-  final class MaxAccumulator
-    extends org.apache.spark.util.AccumulatorV2[Long, Long] {
-    private var v = 0L
-    override def isZero: Boolean = v == 0L
-    override def copy(): MaxAccumulator = {
-      val c = new MaxAccumulator; c.v = v; c
-    }
-    override def reset(): Unit = v = 0L
-    override def add(x: Long): Unit = if (x > v) v = x
-    override def merge(
-        o: org.apache.spark.util.AccumulatorV2[Long, Long]): Unit =
-      add(o.value)
-    override def value: Long = v
-  }
-
-  @volatile private var driverAcc: MaxAccumulator = null
-  @volatile private var driverAccApp: String = null
-
-  /** Driver-side lazy registration of the shared peak accumulator (one
-    * per SparkContext — re-registered if the context was replaced, the
-    * test-suite lifecycle). Returns null when no context is active
-    * (executor-side construction paths), which guard() tolerates. */
-  def acquire(): MaxAccumulator = synchronized {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
-      case Some(sp) if !sp.sparkContext.isStopped =>
-        val sc = sp.sparkContext
-        if (driverAcc == null || driverAccApp != sc.applicationId) {
-          driverAcc = new MaxAccumulator
-          sc.register(driverAcc, "graft.parametric.maxBufferedPerGroup")
-          driverAccApp = sc.applicationId
-        }
-        driverAcc
-      case _ => null
-    }
-  }
-
-  /** Read and re-zero — the per-action attribution device QueryLog uses.
-    * Under CONCURRENT actions the peak attributes to whichever action
-    * completes first (one shared figure; the ops surface is a single
-    * analyst's, stated). */
-  def peakAndReset(): Long = {
-    val a = driverAcc
-    if (a == null) 0L
-    else { val v = a.value; a.reset(); v }
-  }
-
-  /** Index sort by the (key, tie) total order WITHOUT boxing — every
-    * buffered aggregate's eval starts with this sort, and on a whale
-    * group (hundreds of thousands of events in one task) the generic
-    * `sortBy(i => (a(i), b(i)))` tuple boxing dominated the task: the
-    * r16 skew sweep read 6.5× whale task time on 4× bytes for the
-    * heaviest key, almost all of it allocation. Bottom-up merge sort on
-    * an Int index array with primitive long comparisons — stable,
-    * O(n log n), zero per-element allocation. */
-  def sortedIdx(key: Array[Long], tie: Array[Long], n: Int): Array[Int] = {
-    var a = Array.range(0, n)
-    if (n < 2) return a
-    var b = new Array[Int](n)
-    @inline def lt(x: Int, y: Int): Boolean =
-      key(x) < key(y) || (key(x) == key(y) && tie(x) < tie(y))
-    var width = 1
-    while (width < n) {
-      var lo = 0
-      while (lo < n) {
-        val mid = math.min(lo + width, n)
-        val hi = math.min(lo + 2 * width, n)
-        var i = lo; var j = mid; var k = lo
-        while (i < mid && j < hi) {
-          if (lt(a(j), a(i))) { b(k) = a(j); j += 1 }
-          else { b(k) = a(i); i += 1 }
-          k += 1
-        }
-        while (i < mid) { b(k) = a(i); i += 1; k += 1 }
-        while (j < hi) { b(k) = a(j); j += 1; k += 1 }
-        lo = hi
-      }
-      val t = a; a = b; b = t
-      width *= 2
-    }
-    a
-  }
-}
 
 /** ClickHouse `windowFunnel(window)(ts, cond1, …, condN)` as a SQL
   * aggregate — the SQL-surface twin of
@@ -148,9 +21,9 @@ object ParametricAgg {
   * as a sort + single pass at eval time: if a chain with start t1
   * reaches an event, any later valid start also does, so each level
   * needs only its MAXIMUM reachable chain start. Events are buffered
-  * per group (CH's windowFunnel buffers identically), sorted by
-  * timestamp, and equal-timestamp groups apply their updates ATOMICALLY
-  * against the pre-group state — the strict `<` the chain definition
+  * per group in an [[EventBuffer]] (CH's windowFunnel buffers
+  * identically), sorted by timestamp, and equal-timestamp groups apply
+  * their updates ATOMICALLY against the pre-group state — the strict `<` the chain definition
   * demands, matching the DataFrame form's RANGE-frame formulation under
   * ties. State is O(condition-matching events per group): the right
   * trade for the SQL surface; the one-shuffle stacked-window
@@ -164,28 +37,13 @@ object ParametricAgg {
   */
 object WindowFunnel {
 
-  /** Buffered (micros, stage-bitmask) pairs. */
-  final class State {
-    var us = new Array[Long](8)
-    var mask = new Array[Int](8)
-    var n = 0
-    def add(t: Long, m: Int): Unit = {
-      if (n == us.length) {
-        us = java.util.Arrays.copyOf(us, n * 2)
-        mask = java.util.Arrays.copyOf(mask, n * 2)
-      }
-      us(n) = t; mask(n) = m; n += 1
-    }
-  }
-
-  /** The dominance pass: sorted events, equal-ts groups applied
+  /** The dominance pass over ts-sorted events, equal-ts groups applied
     * atomically, best(k) = max chain start among level-k chains.
     * `windowMicros < 0` means UNBOUNDED (the `.*` pattern —
     * [[SequenceMatchAgg]]'s no-constraint mode; the admit check is a
     * subtraction so an unbounded sentinel can never overflow). */
-  def level(s: State, nStages: Int, windowMicros: Long): Int = {
+  def level(s: EventBuffer, nStages: Int, windowMicros: Long): Int = {
     if (s.n == 0) return 0
-    val idx = ParametricAgg.sortedIdx(s.us, s.us, s.n)
     val MIN = Long.MinValue
     val best = Array.fill(nStages + 1)(MIN)
     val cand = Array.fill(nStages + 1)(MIN)
@@ -193,10 +51,10 @@ object WindowFunnel {
     var i = 0
     while (i < s.n) {
       var j = i
-      val t = s.us(idx(i))
+      val t = s.us(i)
       java.util.Arrays.fill(cand, MIN)
-      while (j < s.n && s.us(idx(j)) == t) {
-        val m = s.mask(idx(j))
+      while (j < s.n && s.us(j) == t) {
+        val m = s.mask(j)
         if ((m & 1) != 0 && t > cand(1)) cand(1) = t
         var k = 2
         while (k <= nStages) {
@@ -218,50 +76,16 @@ object WindowFunnel {
     }
     maxLevel
   }
-
-  /** Shared row-update for the funnel-state aggregates: bitmask the
-    * condition hits; NULL timestamps and rows matching no condition
-    * carry no chain information and are not buffered. */
-  def updateState(b: State, row: InternalRow, tsExpr: Expression,
-                  conds: Seq[Expression]): State = {
-    val t = tsExpr.eval(row)
-    if (t != null) {
-      var m = 0
-      var k = 0
-      while (k < conds.size) {
-        val v = conds(k).eval(row)
-        if (v != null && v.asInstanceOf[Boolean]) m |= 1 << k
-        k += 1
-      }
-      if (m != 0) b.add(t.asInstanceOf[Long], m)
-    }
-    b
-  }
-
-  def serialize(s: State): Array[Byte] = {
-    val buf = ByteBuffer.allocate(4 + s.n * 12)
-    buf.putInt(s.n)
-    var i = 0
-    while (i < s.n) { buf.putLong(s.us(i)); buf.putInt(s.mask(i)); i += 1 }
-    buf.array()
-  }
-
-  def deserialize(bytes: Array[Byte]): State = {
-    val buf = ByteBuffer.wrap(bytes)
-    val s = new State
-    var n = buf.getInt
-    while (n > 0) { s.add(buf.getLong, buf.getInt); n -= 1 }
-    s
-  }
 }
 
 /** `window_funnel(window_us, ts, cond1, …, condN)` → INT max level. */
 case class WindowFunnelAgg(
     windowMicros: Long,
     children: Seq[Expression],
+    maxEvents: Int = ParametricAgg.maxEvents,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[WindowFunnel.State] {
+  extends BufferedEventAgg {
 
   def this(es: Seq[Expression]) =
     this(DDSketch.foldableDouble(es.head, "window_funnel window_us").toLong,
@@ -281,16 +105,14 @@ case class WindowFunnelAgg(
   require(children.size <= 2 + 30,
     "window_funnel supports at most 30 stages (bitmask bound)")
 
-  private def tsExpr = children(1)
-  private def conds = children.drop(2)
-  private def nStages = conds.size
-
-  // shared peak-buffer gauge, acquired on the driver, shipped to tasks
-  private val peakAcc = ParametricAgg.acquire()
+  override protected def tsExpr = children(1)
+  override protected def maskConds = children.drop(2)
+  override protected def scalePath =
+    "graft.operators.EventAnalytics.funnelLevels / funnelLevelsChunked"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType
-    val condsOk = conds.forall(_.dataType == BooleanType)
+    val condsOk = maskConds.forall(_.dataType == BooleanType)
     if (tsOk && condsOk) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires (foldable window_us, TIMESTAMP|BIGINT ts, " +
@@ -301,35 +123,8 @@ case class WindowFunnelAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "window_funnel"
 
-  override def createAggregationBuffer(): WindowFunnel.State =
-    new WindowFunnel.State
-
-  override def update(b: WindowFunnel.State,
-                      row: InternalRow): WindowFunnel.State = {
-    ParametricAgg.guard(b.n, prettyName,
-      "graft.operators.EventAnalytics.funnelLevels / funnelLevelsChunked")
-    val r = WindowFunnel.updateState(b, row, tsExpr, conds)
-    ParametricAgg.notePeak(peakAcc, r.n)
-    r
-  }
-
-  override def merge(b: WindowFunnel.State,
-                     o: WindowFunnel.State): WindowFunnel.State = {
-    ParametricAgg.guard(b.n + o.n - 1, prettyName,
-      "graft.operators.EventAnalytics.funnelLevels / funnelLevelsChunked")
-    var i = 0
-    while (i < o.n) { b.add(o.us(i), o.mask(i)); i += 1 }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def eval(b: WindowFunnel.State): Any =
-    WindowFunnel.level(b, nStages, windowMicros)
-
-  override def serialize(b: WindowFunnel.State): Array[Byte] =
-    WindowFunnel.serialize(b)
-  override def deserialize(bytes: Array[Byte]): WindowFunnel.State =
-    WindowFunnel.deserialize(bytes)
+  override protected def result(s: EventBuffer): Any =
+    WindowFunnel.level(s, maskConds.size, windowMicros)
 
   override def withNewMutableAggBufferOffset(o: Int): WindowFunnelAgg =
     copy(mutableAggBufferOffset = o)
@@ -383,17 +178,17 @@ case class WindowFunnelAgg(
   *    meaningful dedup composition). Oracle: o_a15i's lead() plan
   *    with the repeat-exclusion predicates.
   *
-  * State reuses [[SequenceMatchPattern.State]] (us, tie, mask) and the
-  * [[ParametricAgg]] cap; the one-shuffle stacked-window forms remain
-  * the scale path.
+  * The [[EventBuffer]] holds (us, tie, mask) under the [[ParametricAgg]]
+  * cap; the one-shuffle stacked-window forms remain the scale path.
   */
 case class WindowFunnelModeAgg(
     windowMicros: Long,
     mode: String,
     children: Seq[Expression],
+    maxEvents: Int = ParametricAgg.maxEvents,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SequenceMatchPattern.State] {
+  extends BufferedEventAgg {
 
   def this(es: Seq[Expression]) =
     this(DDSketch.foldableDouble(es.head, "window_funnel window_us").toLong,
@@ -408,30 +203,31 @@ case class WindowFunnelModeAgg(
       "'strict_dedup' | 'strict_order,strict_dedup' (the default " +
       "strict-increase form is window_funnel(window_us, ts, cond...) " +
       "without a mode)")
-  private def strictOrder = modes("strict_order")
   // standalone strict_dedup keeps this engine's documented last-of-type
   // reading, which DIVERGES from CH's repeat-interrupt rule on repeated
   // stage types (class doc above) — silent at call time until r17
   // ADVICE: warn ONCE per JVM so a migrating CH analyst learns the
   // delta without every query paying a log line
   if (modes == Set("strict_dedup")) WindowFunnelModeAgg.warnStandaloneDedup()
-  // shared peak-buffer gauge, acquired on the driver, shipped to tasks
-  private val peakAcc = ParametricAgg.acquire()
   require(children.size >= 5,
     "window_funnel(window_us, mode, ts, tie, cond1, ...) needs at least " +
       "one condition")
   require(children.size <= 4 + 30,
     "window_funnel supports at most 30 stages (bitmask bound)")
 
-  private def tsExpr = children(2)
-  private def tieExpr = children(3)
-  private def conds = children.drop(4)
-  private def nStages = conds.size
+  override protected def tsExpr = children(2)
+  override protected def tieExpr = children(3)
+  override protected def maskConds = children.drop(4)
+  // strict_order buffers breakers (mask 0) — interventions matter
+  override protected def keepUnmatched = modes("strict_order")
+  override protected def capName = s"$prettyName('$mode')"
+  override protected def scalePath =
+    "graft.operators.EventAnalytics (o_a15b/o_a15d stacked-window forms)"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType
     val ok = tsOk && tieExpr.dataType == LongType &&
-      conds.forall(_.dataType == BooleanType)
+      maskConds.forall(_.dataType == BooleanType)
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires (foldable window_us, foldable mode, " +
@@ -443,49 +239,14 @@ case class WindowFunnelModeAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "window_funnel"
 
-  override def createAggregationBuffer(): SequenceMatchPattern.State =
-    new SequenceMatchPattern.State
-
-  override def update(b: SequenceMatchPattern.State,
-                      row: InternalRow): SequenceMatchPattern.State = {
-    ParametricAgg.guard(b.n, s"$prettyName('$mode')",
-      "graft.operators.EventAnalytics (o_a15b/o_a15d stacked-window forms)")
-    val t = tsExpr.eval(row)
-    val k = tieExpr.eval(row)
-    if (t != null && k != null) {
-      var m = 0
-      var c = 0
-      while (c < conds.size) {
-        val v = conds(c).eval(row)
-        if (v != null && v.asInstanceOf[Boolean]) m |= 1 << c
-        c += 1
-      }
-      // strict_order buffers breakers (mask 0) — interventions matter
-      if (m != 0 || strictOrder)
-        b.add(t.asInstanceOf[Long], k.asInstanceOf[Long], m)
-    }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def merge(b: SequenceMatchPattern.State,
-                     o: SequenceMatchPattern.State): SequenceMatchPattern.State = {
-    ParametricAgg.guard(b.n + o.n - 1, s"$prettyName('$mode')",
-      "graft.operators.EventAnalytics (o_a15b/o_a15d stacked-window forms)")
-    var i = 0
-    while (i < o.n) { b.add(o.us(i), o.tie(i), o.mask(i)); i += 1 }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def eval(b: SequenceMatchPattern.State): Any = {
-    val n = b.n
+  override protected def result(s: EventBuffer): Any = {
+    val n = s.n
     if (n == 0) return 0
-    val idx = ParametricAgg.sortedIdx(b.us, b.tie, n)
-    val us = idx.map(b.us)
-    val mk = idx.map(b.mask)
+    val nStages = maskConds.size
+    val us = s.us
+    val mk = s.mask
     val MIN = Long.MinValue
-    if (strictOrder) {
+    if (modes("strict_order")) {
       // prefix match at each stage-1 position; window from chain start.
       // With strict_dedup composed: a step candidate ALSO matching a
       // condition already matched by an earlier step interrupts the
@@ -548,11 +309,6 @@ case class WindowFunnelModeAgg(
     }
   }
 
-  override def serialize(b: SequenceMatchPattern.State): Array[Byte] =
-    SequenceMatchPattern.serialize(b)
-  override def deserialize(bytes: Array[Byte]): SequenceMatchPattern.State =
-    SequenceMatchPattern.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(o: Int): WindowFunnelModeAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): WindowFunnelModeAgg =
@@ -598,9 +354,10 @@ object WindowFunnelModeAgg {
 case class SequenceMatchAgg(
     windowMicros: Long,
     children: Seq[Expression],
+    maxEvents: Int = ParametricAgg.maxEvents,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[WindowFunnel.State] {
+  extends BufferedEventAgg {
 
   def this(es: Seq[Expression]) =
     this(DDSketch.foldableDouble(es.head, "sequence_match window_us").toLong,
@@ -615,15 +372,14 @@ case class SequenceMatchAgg(
 
   // the level() sentinel: negative = no time constraint
   private def effWindow: Long = if (windowMicros == 0) -1L else windowMicros
-  // shared peak-buffer gauge, acquired on the driver, shipped to tasks
-  private val peakAcc = ParametricAgg.acquire()
-  private def tsExpr = children(1)
-  private def conds = children.drop(2)
-  private def nStages = conds.size
+  override protected def tsExpr = children(1)
+  override protected def maskConds = children.drop(2)
+  override protected def scalePath =
+    "graft.operators.EventAnalytics.sequenceMatch"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType
-    val condsOk = conds.forall(_.dataType == BooleanType)
+    val condsOk = maskConds.forall(_.dataType == BooleanType)
     if (tsOk && condsOk) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires (foldable window_us, TIMESTAMP|BIGINT ts, " +
@@ -634,35 +390,10 @@ case class SequenceMatchAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "sequence_match"
 
-  override def createAggregationBuffer(): WindowFunnel.State =
-    new WindowFunnel.State
-
-  override def update(b: WindowFunnel.State,
-                      row: InternalRow): WindowFunnel.State = {
-    ParametricAgg.guard(b.n, prettyName,
-      "graft.operators.EventAnalytics.sequenceMatch")
-    val r = WindowFunnel.updateState(b, row, tsExpr, conds)
-    ParametricAgg.notePeak(peakAcc, r.n)
-    r
+  override protected def result(s: EventBuffer): Any = {
+    val nStages = maskConds.size
+    WindowFunnel.level(s, nStages, effWindow) == nStages
   }
-
-  override def merge(b: WindowFunnel.State,
-                     o: WindowFunnel.State): WindowFunnel.State = {
-    ParametricAgg.guard(b.n + o.n - 1, prettyName,
-      "graft.operators.EventAnalytics.sequenceMatch")
-    var i = 0
-    while (i < o.n) { b.add(o.us(i), o.mask(i)); i += 1 }
-    ParametricAgg.notePeak(peakAcc, b.n)
-    b
-  }
-
-  override def eval(b: WindowFunnel.State): Any =
-    WindowFunnel.level(b, nStages, effWindow) == nStages
-
-  override def serialize(b: WindowFunnel.State): Array[Byte] =
-    WindowFunnel.serialize(b)
-  override def deserialize(bytes: Array[Byte]): WindowFunnel.State =
-    WindowFunnel.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): SequenceMatchAgg =
     copy(mutableAggBufferOffset = o)

@@ -49,6 +49,14 @@ import org.apache.spark.storage.StorageLevel
   */
 private[graft] object Graph {
 
+  private val forceLoop = new scala.util.DynamicVariable[Boolean](false)
+
+  /** Runs `body` with [[minLabelComponents]] taking the propagation loop
+    * at every graph size on this thread, so specs can compare the loop
+    * with the single-task union-find path. */
+  private[graft] def withForceLoop[T](body: => T): T =
+    forceLoop.withValue(true)(body)
+
   /** Returns (labels, persisted-intermediates): `labels` has one row per
     * vertex that appears in `edges` — (id, lbl) where lbl = min vertex id
     * of the component. The returned intermediates are always empty (all
@@ -75,10 +83,9 @@ private[graft] object Graph {
     // O(log diameter) rounds of multi-stage jobs. This is the common
     // case for verified near-dup graphs (pairs collapse the corpus by
     // orders of magnitude); the loop below is the >2M-edge path.
-    // `-Dgraft.graph.forceLoop=true` pins the loop for differential
-    // testing (GraphSpec asserts path equality on random graphs).
-    if (nEdges > 0 && nEdges <= 2000000L &&
-        !sys.props.get("graft.graph.forceLoop").contains("true")) {
+    // `withForceLoop` pins the loop for differential testing (GraphSpec
+    // asserts path equality on random graphs).
+    if (nEdges > 0 && nEdges <= 2000000L && !forceLoop.value) {
       val lbl = raw.coalesce(1).mapPartitions { it =>
         val parent = new java.util.HashMap[Long, Long]()
         def find(x: Long): Long = {

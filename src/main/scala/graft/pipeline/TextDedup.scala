@@ -420,11 +420,17 @@ object TextDedup {
     * (one hash probe per candidate, no shuffle); above it the hint is
     * DROPPED and both joins hash-shuffle by doc_id — a corpus-sized build
     * side must never be replicated to every executor. The default assumes
-    * ~1 KB of shingle set per doc (≲1 GB broadcast); size it for your
-    * corpus via -Dgraft.dedup.maxBroadcastDocs=N (0 forces the shuffle
-    * path — PlanSpec pins that plan). */
-  private[graft] def maxBroadcastDocs: Long =
-    sys.props.get("graft.dedup.maxBroadcastDocs").map(_.toLong).getOrElse(1000000L)
+    * ~1 KB of shingle set per doc (≲1 GB broadcast). */
+  private val broadcastDocsOverride =
+    new scala.util.DynamicVariable[Long](1000000L)
+
+  private def maxBroadcastDocs: Long = broadcastDocsOverride.value
+
+  /** Plans the verification joins in `body` with the gate at `n`
+    * documents on this thread (0 forces the shuffle path — PlanSpec pins
+    * that plan on a tiny fixture). */
+  private[graft] def withMaxBroadcastDocs[T](n: Long)(body: => T): T =
+    broadcastDocsOverride.withValue(n)(body)
 
   /** Verified near-dup pairs from the stored backbone table (built once
     * per corpus; see [[Backbone]]). */

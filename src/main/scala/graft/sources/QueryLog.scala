@@ -82,8 +82,8 @@ object QueryLog {
     * `max_group_events` is the whale-headroom gauge: the peak buffered
     * events any parametric event aggregate (window_funnel /
     * sequence_count / sequence_match / sequence_next_node) held for ONE
-    * group during the action, vs the `graft.parametric.maxEventsPerGroup`
-    * cap — 0 when no buffering aggregate ran. Read-and-reset per action;
+    * group during the action, vs the per-group cap
+    * (`ParametricAgg.maxEvents`, 1M) — 0 when no buffering aggregate ran. Read-and-reset per action;
     * under concurrent actions the figure attributes to whichever
     * completes first (one shared gauge, stated in ParametricAgg). */
   final case class Entry(seq: Long, event_ms: Long, func: String,

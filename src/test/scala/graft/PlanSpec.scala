@@ -235,11 +235,11 @@ class PlanSpec extends AnyFunSuite {
     // exists: at sf0.001 the un-hinted table is tiny enough for Catalyst
     // to re-broadcast it from size stats, which a 1M-doc corpus's size
     // estimate would not allow.
-    System.setProperty("graft.dedup.maxBroadcastDocs", "0")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val bigPlan = pipeline.TextDedup.minhashPairsPlan(spark, sf)
+      val bigPlan = pipeline.TextDedup.withMaxBroadcastDocs(0)(
+        pipeline.TextDedup.minhashPairsPlan(spark, sf))
       val p = bigPlan.pairs.queryExecution.executedPlan.toString
       val nBig = broadcasts.findAllIn(p).size
       assert(nBig < nSmall, s"gate must drop set-table broadcasts: $nBig vs $nSmall\n$p")
@@ -247,7 +247,6 @@ class PlanSpec extends AnyFunSuite {
         s"verification joins must shuffle by doc_id above the gate:\n$p")
       bigPlan.caches.foreach(_.unpersist())
     } finally {
-      System.clearProperty("graft.dedup.maxBroadcastDocs")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
   }

@@ -124,10 +124,10 @@ class SequenceMatchPatternSpec extends AnyFunSuite {
       patterns.foreach { p =>
         val steps = SequenceMatchPattern.parse(p, 3)
         groups.foreach { case (g, evs) =>
-          val s = new SequenceMatchPattern.State
+          val s = new EventBuffer(hasTie = true, hasValue = false)
           // insertion order scrambled: eval must not depend on arrival
-          rnd.shuffle(evs).foreach { case (us, tie, m) => s.add(us, tie, m) }
-          val got = SequenceMatchPattern.matches(s, steps, 1000000L)
+          rnd.shuffle(evs).foreach { case (us, tie, m) => s.add(us, tie, m, null) }
+          val got = SequenceMatchPattern.matches(s.sorted, steps, 1000000L)
           val want = brute(evs, steps, 1000000L)
           assert(got == want,
             s"draw $draw group $g pattern '$p': dp=$got brute=$want " +

@@ -675,40 +675,95 @@ class EventAnalyticsSpec extends AnyFunSuite {
 
   test("parametric aggregates: max_events cap fires loudly, naming the library scale path") {
     import spark.implicits._
+    import graft.functions.ParametricAgg
     graft.functions.GraftExtensions.register(spark)
     def t(m: Int) = new java.sql.Timestamp(1726300800000L + m * 60000L)
     // one group, 40 condition-matching events — over a cap of 32
     val rows = (0 until 40).map(i =>
       (i.toLong, 1L, if (i % 2 == 0) "signup" else "purchase", t(i)))
       .toDF("event_id", "user_id", "event_type", "ts")
-    val prev = sys.props.get("graft.parametric.maxEventsPerGroup")
-    sys.props("graft.parametric.maxEventsPerGroup") = "32"
-    try {
-      Seq(
-        "window_funnel(3600000000, ts, event_type = 'signup', event_type = 'purchase')",
-        "sequence_count(0, ts, event_id, event_type = 'signup', event_type = 'purchase')",
-        "sequence_match(0, ts, event_type = 'signup', event_type = 'purchase')")
-        .foreach { agg =>
-          val e = intercept[org.apache.spark.SparkException] {
-            rows.groupBy("user_id").agg(expr(agg)).collect()
-          }
-          val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
-          assert(msg != null && msg.contains("maxEventsPerGroup") &&
-            msg.contains("graft.operators.EventAnalytics"),
-            s"cap error must name the knob and the library scale path: $msg")
-        }
-      // under the cap the same streams still evaluate (39 buffered < cap
-      // would exceed — use a smaller group)
-      sys.props("graft.parametric.maxEventsPerGroup") = "64"
-      val lv = rows.groupBy("user_id").agg(expr(
-          "window_funnel(3600000000, ts, event_type = 'signup', " +
-            "event_type = 'purchase')").as("lv"))
-        .collect().map(_.getInt(1))
-      assert(lv.sameElements(Array(2)))
-    } finally prev match {
-      case Some(v) => sys.props("graft.parametric.maxEventsPerGroup") = v
-      case None => sys.props -= "graft.parametric.maxEventsPerGroup"
+    val conds = "event_type = 'signup', event_type = 'purchase'"
+    Seq(
+      s"window_funnel(3600000000, ts, $conds)",
+      s"window_funnel(3600000000, 'strict_order', ts, event_id, $conds)",
+      s"sequence_count(0, ts, event_id, $conds)",
+      s"sequence_match(0, ts, $conds)",
+      s"sequence_match('(?1).*(?2)', ts, event_id, $conds)",
+      s"sequence_next_node('forward', 'first_match', ts, event_id, " +
+        s"event_type, $conds)")
+      .foreach { agg =>
+        // the cap is read when the aggregate is built and ships with
+        // it: the query runs outside the override
+        val q = ParametricAgg.withMaxEvents(32)(
+          rows.groupBy("user_id").agg(expr(agg)))
+        val e = intercept[org.apache.spark.SparkException](q.collect())
+        val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
+        assert(msg != null && msg.contains("maxEventsPerGroup") &&
+          msg.contains("graft.operators.EventAnalytics"),
+          s"$agg: cap error must name the cap and the library scale path: $msg")
+      }
+    // under the cap the same stream still evaluates
+    val lv = ParametricAgg.withMaxEvents(64)(rows.groupBy("user_id").agg(
+        expr(s"window_funnel(3600000000, ts, $conds)").as("lv")))
+      .collect().map(_.getInt(1))
+    assert(lv.sameElements(Array(2)))
+  }
+
+  test("buffered sequence aggregates: same answers when each group spans several partial buffers") {
+    import spark.implicits._
+    graft.functions.GraftExtensions.register(spark)
+    val rnd = new scala.util.Random(1609)
+    val types = Seq("signup", "click", "purchase", "view")
+    // 6 users x ~60 events on a 30-minute grid: equal timestamps occur
+    // by construction, so the (ts, tie) order matters
+    val events = (0 until 360).map { i =>
+      (i.toLong, rnd.nextInt(6).toLong, types(rnd.nextInt(types.size)),
+        new java.sql.Timestamp(rnd.nextInt(48) * 1800000L))
+    }.toDF("event_id", "user_id", "event_type", "ts")
+    val c3 = "event_type = 'signup', event_type = 'click', " +
+      "event_type = 'purchase'"
+    val c2 = "event_type = 'signup', event_type = 'click'"
+    val w = 6L * 3600 * 1000000
+    val aggs = Seq(
+      s"window_funnel($w, ts, $c3)",
+      s"window_funnel($w, 'strict_order', ts, event_id, $c3)",
+      s"sequence_match($w, ts, $c3)",
+      s"sequence_match('(?1)(?t<=7200).*(?2).*(?3)', ts, event_id, $c3)",
+      s"sequence_count($w, ts, event_id, $c2)",
+      s"sequence_next_node('forward', 'first_match', ts, event_id, " +
+        s"event_type, $c2)")
+    def run(df: org.apache.spark.sql.DataFrame) = {
+      val q = df.groupBy("user_id")
+        .agg(expr(aggs.head), aggs.tail.map(a => expr(a)): _*)
+      val got = q.collect().map(r =>
+        r.getLong(0) -> r.toSeq.tail.map(String.valueOf)).toMap
+      (got, q.queryExecution.executedPlan.toString)
     }
+    // gated: one partition, so each group reaches merge() as ONE partial
+    // buffer merged into an empty one — no exchange in the plan
+    val (one, onePlan) = run(events)
+    assert(!onePlan.contains("Exchange"), onePlan)
+    // gate off, round-robin over 4 partitions: each group's events sit
+    // in several partial buffers, serialized through the hash exchange
+    // and merged pairwise in the final aggregate
+    val (split, splitPlan) = graft.plans.SingleStage.withGateBytes(0) {
+      val spread = events.repartition(4)
+        .select(col("user_id"), spark_partition_id().as("p"))
+        .groupBy("user_id").agg(countDistinct("p"))
+        .collect().map(_.getLong(1))
+      assert(spread.length == 6 && spread.forall(_ >= 2), spread.toSeq)
+      run(events.repartition(4))
+    }
+    assert(splitPlan.contains("RoundRobinPartitioning(4)") &&
+      splitPlan.contains("hashpartitioning(user_id"), splitPlan)
+    assert(split == one, s"partitioning changed the answers:\n" +
+      s"one partition: $one\nfour partitions: $split")
+    // the answers discriminate: a merge that lost events would read a
+    // level-1 funnel, no match, no count and no next node
+    val cols = aggs.indices.map(i => one.values.map(_(i)).toSet)
+    assert(cols(0).exists(_.toInt >= 2) && cols(1).exists(_.toInt >= 2) &&
+      cols(2)("true") && cols(3)("true") && cols(4).exists(_.toLong > 0) &&
+      cols(5).exists(v => v != "null"), cols)
   }
 
   test("window_funnel rejects window 0 and bad arity with readable errors") {

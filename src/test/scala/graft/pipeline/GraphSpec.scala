@@ -43,7 +43,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("union-find fast path == propagation loop on random graphs") {
     // the single-partition regime takes the union-find path by default;
-    // -Dgraft.graph.forceLoop pins the multi-partition loop — both must
+    // Graph.withForceLoop pins the multi-partition loop — both must
     // produce the identical min-label fixpoint
     val rnd = new scala.util.Random(42)
     (0 until 3).foreach { trial =>
@@ -52,11 +52,7 @@ class GraphSpec extends AnyFunSuite {
         (rnd.nextInt(n / 2).toLong, rnd.nextInt(n / 2).toLong)
       }.filter { case (a, b) => a != b }
       val fast = components(pairs)
-      assert(!sys.props.contains("graft.graph.forceLoop"))
-      sys.props("graft.graph.forceLoop") = "true"
-      val loop =
-        try components(pairs)
-        finally sys.props.remove("graft.graph.forceLoop")
+      val loop = Graph.withForceLoop(components(pairs))
       assert(fast == loop,
         s"trial $trial: paths diverge on ${pairs.size} edges: " +
           s"${(fast.toSet diff loop.toSet).take(5)} / " +
