@@ -9,9 +9,28 @@ import org.apache.spark.sql.SparkSession
   * stage with no exchange). */
 object EngineSession {
 
+  /** The runtime SQL settings every engine session starts with. */
+  private[graft] val sqlSettings: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    // ENGINE-WIDE default, set at build time rather than sneaked in by
+    // the first Tables.events call: TIMESTAMP(NANOS) parquet columns
+    // surface as raw int64 (the events loader normalizes them with a
+    // unit guard). Restoring the conf per-read is NOT safe — the scan
+    // re-reads it at execution, after the schema was already inferred.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // A join whose children are each one partition keeps them at any
+    // size. Spark re-shuffles both sides when a child's ESTIMATED size
+    // passes this (128 MB by default), and estimates multiply across
+    // joins: under the small-input gate (SingleStage, inputs of at most
+    // 32 MB) a join over a join of two 12 KB sides estimates 144 MB and
+    // got two hash exchanges back. Above the gate only an explicit
+    // coalesce(1) or a global aggregate makes both sides one partition.
+    "spark.sql.maxSinglePartitionBytes" -> Long.MaxValue.toString)
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
@@ -29,16 +48,8 @@ object EngineSession {
       // so this is not a local-mode tune; it removes the small-shuffle
       // special case.
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ENGINE-WIDE default, set at build time rather than sneaked in by
-      // the first Tables.events call: TIMESTAMP(NANOS) parquet columns
-      // surface as raw int64 (the events loader normalizes them with a
-      // unit guard). Restoring the conf per-read is NOT safe — the scan
-      // re-reads it at execution, after the schema was already inferred.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = sqlSettings.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -99,7 +99,10 @@ object Tables {
     * relational/event tables' scans are cheap projections whose first
     * real operator is already a keyed exchange, so a fan-out exchange
     * there is pure addition (measured both ways at sf0.1: event keys
-    * +0.25 s each with it, corpus keys −0.3..−1.4 s without it). */
+    * +0.25 s each with it, corpus keys −0.3..−1.4 s without it). A plan
+    * whose inputs add up to at most [[graft.plans.SingleStage.gateBytes]]
+    * (32 MB) drops this keyless repartition: the small-input gate runs
+    * the whole plan as one task, so the fan-out only matters above it. */
   private def fanout(s: SparkSession, df: DataFrame): DataFrame = {
     val target = s.sparkContext.defaultParallelism
     val parts = df.rdd.getNumPartitions

@@ -5,6 +5,7 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Shared storage mechanics for the materialized backbones — the TEXT
   * side ([[Backbone]]: fingerprint/band/pair/label tables) and the
@@ -132,6 +133,7 @@ object Warehouse {
     built.clear()
     dfMemo.synchronized(dfMemo.clear())
     sidecarMemo.synchronized(sidecarMemo.clear())
+    written.synchronized(written.clear())
   }
 
   /** Memoized read handle for a STORED table (r18 opt, guide §1.2/§6):
@@ -145,20 +147,30 @@ object Warehouse {
     * This is a catalog/metastore, not a result cache: every action still
     * scans the parquet. Keyed per session (weakly — a stopped test
     * session must not pin its handles); invalidated with the built memo
-    * on [[resetBuiltForTest]] and by [[gc]] for pruned version dirs. */
+    * on [[resetBuiltForTest]] and by [[gc]] for pruned version dirs.
+    * A table [[writeSized]] wrote in this JVM is read with the schema it
+    * wrote, so opening it runs no schema-inference job; one a marker
+    * from an earlier JVM vouches for still infers it. */
   private val dfMemo =
     new java.util.WeakHashMap[SparkSession, mutable.Map[String, DataFrame]]()
+  /** The schema [[writeSized]] wrote under each path in this JVM, as a
+    * file read returns it (every field nullable). */
+  private val written = mutable.Map[String, StructType]()
   private[pipeline] def readParquet(s: SparkSession, path: String): DataFrame =
     dfMemo.synchronized {
       val m = Option(dfMemo.get(s)).getOrElse {
         val mm = mutable.Map[String, DataFrame](); dfMemo.put(s, mm); mm
       }
-      m.getOrElseUpdate(path, s.read.parquet(path))
+      m.getOrElseUpdate(path, written.synchronized(written.get(path)) match {
+        case Some(schema) => s.read.schema(schema).parquet(path)
+        case None => s.read.parquet(path)
+      })
     }
   private def dropMemoizedReads(prefix: String): Unit = {
     dfMemo.synchronized {
       dfMemo.values.forEach(_.filterInPlace((k, _) => !k.startsWith(prefix)))
     }
+    written.synchronized(written.filterInPlace((k, _) => !k.startsWith(prefix)))
     // sidecar keys are NAMESPACED ("geom:<path>", "rules:<path>", ...) —
     // match the path portion after the first ':', or gc invalidation
     // never applies to them (ADVICE r18)
@@ -224,8 +236,10 @@ object Warehouse {
     * partitioning so their readers keep scan parallelism at every
     * scale. File size rides spark.sql.adaptive.advisoryPartitionSize-
     * InBytes — the standard deployment knob. */
-  private[pipeline] def writeSized(df: DataFrame, path: String): Unit =
+  private[pipeline] def writeSized(df: DataFrame, path: String): Unit = {
     df.hint("rebalance").write.mode("overwrite").parquet(path)
+    written.synchronized(written(path) = df.schema.toNullable)
+  }
 
   /** Returns true iff THIS call ran `build` (a memo/marker hit returns
     * false) — commit-triggered hooks like [[autoGc]] key off it. */
@@ -251,12 +265,11 @@ object Warehouse {
     * never on a memo hit, so serving-path calls that merely read the
     * committed state pay no warehouse scan) run [[gc]] with keep=K
     * right after the commit — retention rides the nightly chain itself
-    * instead of a separate cron. Grace stays at
-    * `graft.backbone.gcGraceMs` (default 1 h), so concurrently-reading
-    * JVMs keep their reader protection. Unset (default) = no automatic
-    * pruning. Best-effort: a malformed K or a GC failure is a logged
-    * warning, never a failure of the advance whose commit already
-    * succeeded. */
+    * instead of a separate cron. Grace stays at [[gcGraceMs]] (1 h), so
+    * concurrently-reading JVMs keep their reader protection. Unset
+    * (default) = no automatic pruning. Best-effort: a malformed K or a
+    * GC failure is a logged warning, never a failure of the advance
+    * whose commit already succeeded. */
   private[pipeline] def autoGc(s: SparkSession): Unit =
     sys.props.get("graft.backbone.autoGcKeep").foreach { raw =>
       try {
@@ -331,9 +344,18 @@ object Warehouse {
   }
 
   private val keepVersions = 2
-  private def gcGraceMs: Long =
-    sys.props.get("graft.backbone.gcGraceMs").map(_.toLong)
-      .getOrElse(60 * 60 * 1000L)
+
+  private val gcGraceOverride = new scala.util.DynamicVariable[Long](60 * 60 * 1000L)
+
+  /** The grace window [[gc]] and [[autoGc]] keep recently stamped
+    * versions for: 1 h. */
+  private def gcGraceMs: Long = gcGraceOverride.value
+
+  /** Runs `body` with the gc grace window at `ms` on this thread, so a
+    * spec can drive an auto-gc commit without waiting out the hour.
+    * Thread-scoped: a gc on another thread keeps the default. */
+  private[graft] def withGcGraceMs[T](ms: Long)(body: => T): T =
+    gcGraceOverride.withValue(ms)(body)
 
   /** Keep-last-K retention for superseded corpus-version subtrees under
     * an EXPLICIT `graft.backbone.dir` — without it a nightly production
@@ -366,8 +388,8 @@ object Warehouse {
     *
     * No-op under the default per-JVM tmp root (that tree is reclaimed on
     * exit). Returns the deleted version-dir paths. Keeps
-    * [[keepVersions]] (2) versions; grace knob `graft.backbone.gcGraceMs`
-    * (default 1 h). */
+    * [[keepVersions]] (2) versions and a grace window of [[gcGraceMs]]
+    * (1 h) by default. */
   /** Version dirs an in-flight (unlocked) gc delete is working on — a
     * CONCURRENT gc call in the same JVM must not re-select them: its
     * dropMarkers walk would race the delete and throw mid-listing. */

@@ -37,7 +37,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("o_j2: dimension join is a broadcast hash join") {
-    val p = plan("o_j2_broadcast")
+    val p = scalePlan("o_j2_broadcast")
     assert(p.contains("BroadcastHashJoin"), s"expected BroadcastHashJoin in:\n$p")
     assert(!p.contains("SortMergeJoin"))
   }
@@ -222,43 +222,51 @@ class PlanSpec extends AnyFunSuite {
   test("d_dedup_minhash: verification joins shuffle by doc_id above the broadcast gate") {
     // Default gate (corpus << 1M docs): the two per-doc set-table joins
     // broadcast — plus the shingle-alphabet dim — so >=3 broadcast joins.
-    val smallPlan = pipeline.TextDedup.minhashPairsPlan(spark, sf)
-    val broadcasts = "BroadcastHashJoin".r
-    val nSmall = broadcasts.findAllIn(
-      smallPlan.pairs.queryExecution.executedPlan.toString).size
-    assert(nSmall >= 3, s"expected alphabet + 2 set-table broadcasts, got $nSmall")
-    smallPlan.caches.foreach(_.unpersist())
-    // Gate forced to 0 (simulating a >1M-doc corpus): the set-table hint
-    // is dropped, both verification joins become doc_id-keyed shuffles,
-    // and ONLY the explicitly-hinted alphabet dim still broadcasts. The
-    // auto-broadcast threshold is disabled for the same reason the gate
-    // exists: at sf0.001 the un-hinted table is tiny enough for Catalyst
-    // to re-broadcast it from size stats, which a 1M-doc corpus's size
-    // estimate would not allow.
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val bigPlan = pipeline.TextDedup.withMaxBroadcastDocs(0)(
-        pipeline.TextDedup.minhashPairsPlan(spark, sf))
-      val p = bigPlan.pairs.queryExecution.executedPlan.toString
-      val nBig = broadcasts.findAllIn(p).size
-      assert(nBig < nSmall, s"gate must drop set-table broadcasts: $nBig vs $nSmall\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"verification joins must shuffle by doc_id above the gate:\n$p")
-      bigPlan.caches.foreach(_.unpersist())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    // Planned above the small-input gate, which would run every join of
+    // this fixture as a shuffled hash join in one stage.
+    graft.plans.SingleStage.withGateBytes(0) {
+      val smallPlan = pipeline.TextDedup.minhashPairsPlan(spark, sf)
+      val broadcasts = "BroadcastHashJoin".r
+      val nSmall = broadcasts.findAllIn(
+        smallPlan.pairs.queryExecution.executedPlan.toString).size
+      assert(nSmall >= 3, s"expected alphabet + 2 set-table broadcasts, got $nSmall")
+      smallPlan.caches.foreach(_.unpersist())
+      // Gate forced to 0 (simulating a >1M-doc corpus): the set-table hint
+      // is dropped, both verification joins become doc_id-keyed shuffles,
+      // and ONLY the explicitly-hinted alphabet dim still broadcasts. The
+      // auto-broadcast threshold is disabled for the same reason the gate
+      // exists: at sf0.001 the un-hinted table is tiny enough for Catalyst
+      // to re-broadcast it from size stats, which a 1M-doc corpus's size
+      // estimate would not allow.
+      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val bigPlan = pipeline.TextDedup.withMaxBroadcastDocs(0)(
+          pipeline.TextDedup.minhashPairsPlan(spark, sf))
+        val p = bigPlan.pairs.queryExecution.executedPlan.toString
+        val nBig = broadcasts.findAllIn(p).size
+        assert(nBig < nSmall, s"gate must drop set-table broadcasts: $nBig vs $nSmall\n$p")
+        assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+          s"verification joins must shuffle by doc_id above the gate:\n$p")
+        bigPlan.caches.foreach(_.unpersist())
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      }
     }
   }
 
   test("d_decontam: benchmark grams broadcast; distinct is partial before shuffle") {
     // audit the exposed un-materialized plan: the catalog entry routes
     // through Materialize.drop (releasing the persisted gram stream),
-    // which cuts lineage before the executed plan could be read
-    val (r, caches) = pipeline.Curation.decontamPlan(spark, sf)
+    // which cuts lineage before the executed plan could be read; planned
+    // above the small-input gate (its cached gram stream is gated input)
+    val (r, caches) = graft.plans.SingleStage.withGateBytes(0)(
+      pipeline.Curation.decontamPlan(spark, sf))
     try {
-      r.count()
-      val p = r.queryExecution.executedPlan.toString
+      val p = graft.plans.SingleStage.withGateBytes(0) {
+        r.count()
+        r.queryExecution.executedPlan.toString
+      }
       assert(p.contains("BroadcastHashJoin"), s"bench gram set must broadcast:\n$p")
       assert(!p.contains("SortMergeJoin"), s"corpus side must not shuffle for the join:\n$p")
       assert(p.contains("partial_count(distinct"), s"count-distinct must have a partial level:\n$p")
@@ -269,10 +277,12 @@ class PlanSpec extends AnyFunSuite {
     // audit the exposed un-materialized plan (same pattern as
     // d_decontam): since r19 the catalog entry persists the exploded
     // branch and cuts lineage via Materialize.drop, so the entry's
-    // executed plan is a checkpoint scan
-    val (r, caches) = pipeline.Curation.embOutlierPlan(spark, sf)
+    // executed plan is a checkpoint scan; planned above the small-input
+    // gate (its cached exploded branch is gated input)
+    val (r, caches) = graft.plans.SingleStage.withGateBytes(0)(
+      pipeline.Curation.embOutlierPlan(spark, sf))
     try {
-      val p = r.queryExecution.executedPlan.toString
+      val p = graft.plans.SingleStage.withGateBytes(0)(r.queryExecution.executedPlan.toString)
       assert(p.contains("BroadcastHashJoin"), s"640-row centroid table must broadcast:\n$p")
       assert(p.contains("partial_sum"), s"distance sum must combine map-side:\n$p")
       // rnk<=3 must push below the window as a per-group limit
@@ -286,7 +296,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("pii scrub / repetition are single-pass projections (no join, no agg)") {
     Seq("d_pii_scrub", "d_repetition").foreach { name =>
-      val p = plan(name)
+      val p = scalePlan(name)
       assert(!p.contains("Join") && !p.contains("HashAggregate"),
         s"$name should be a pure projection:\n$p")
       // only the deterministic output sort may shuffle the data SIDEWAYS;
@@ -360,8 +370,11 @@ class PlanSpec extends AnyFunSuite {
     val agg = cdf.filter(c("cum") * 2 >= c("tot"))
       .groupBy("l_returnflag").agg(
         org.apache.spark.sql.functions.min("val").as("wmedian"))
-    agg.collect()
-    val p = agg.queryExecution.executedPlan.toString
+    // above the gate, like the CDF: its cached slices are gated input
+    val p = graft.plans.SingleStage.withGateBytes(0) {
+      agg.collect()
+      agg.queryExecution.executedPlan.toString
+    }
     // the corpus-sized cumulative window shuffles by (pid, flag) — the
     // slice space — never by the 3-value flag alone
     assert(p.contains("hashpartitioning(pid"),
@@ -460,8 +473,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("catalog queries avoid cartesian products except the declared cross joins") {
     val allowed = Set("o_j9_cross", "d_knn_cosine", "d_dedup_cosine", "d_ann_lsh")
+    // at scale: under the small-input gate a join of one-partition
+    // sides drops its broadcast hint, and an inner non-equi join of them
+    // may plan as a one-task CartesianProduct
     SparkEntry.queries.keys.filterNot(allowed).foreach { name =>
-      val p = plan(name)
+      val p = scalePlan(name)
       assert(!p.contains("CartesianProduct"), s"$name has a cartesian product:\n$p")
     }
   }

@@ -25,7 +25,10 @@ class DedupSkewSpec extends AnyFunSuite {
   private val nDocs = 20000
   private val hot = nDocs / 2 // 50% boilerplate copies of one fingerprint
 
-  /** (doc_id, fp): even ids share fingerprint "boilerplate", odd ids unique. */
+  /** (doc_id, fp): even ids share fingerprint "boilerplate", odd ids unique.
+    * Both claims are about the plan at scale, so the actions run above the
+    * small-input gate, which would drop the `repartition(8)` and run the
+    * whole fixture in one task. */
   private def skewedFps = {
     import spark.implicits._
     (1 to nDocs).map { i =>
@@ -60,9 +63,9 @@ class DedupSkewSpec extends AnyFunSuite {
   test("fp-partitioned window form concentrates the hot key in one task") {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("fp")
     val windowed = skewedFps.withColumn("exact_keep", min("doc_id").over(w))
-    val maxRead = maxTaskShuffleRead {
+    val maxRead = graft.plans.SingleStage.withGateBytes(0)(maxTaskShuffleRead {
       windowed.filter(col("doc_id") =!= col("exact_keep")).count()
-    }
+    })
     assert(maxRead >= hot,
       s"a window over fp must co-locate all $hot boilerplate rows in one " +
         s"task; measured max task shuffle-read = $maxRead")
@@ -94,7 +97,8 @@ class DedupSkewSpec extends AnyFunSuite {
       val drops = TextDedup.exactKeeperDecisions(skewedFps)
         .filter(col("doc_id") =!= col("exact_keep"))
       var nDrops = 0L
-      val maxRead = maxTaskShuffleRead { nDrops = drops.collect().length.toLong }
+      val maxRead = graft.plans.SingleStage.withGateBytes(0)(
+        maxTaskShuffleRead { nDrops = drops.collect().length.toLong })
       // correctness under the skew configs: one keeper, hot-1 drops
       assert(nDrops == hot - 1, s"expected ${hot - 1} exact drops, got $nDrops")
       // AQE actually split the skewed join partition (same QueryExecution

@@ -168,11 +168,9 @@ class WarehouseSpec extends AnyFunSuite {
       writeCorpus(d, Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"),
         (3L, "eta theta iota")))
       assert(versionDirs(wh).size == 1)
-      val props = Seq("graft.backbone.autoGcKeep" -> "1",
-        "graft.backbone.gcGraceMs" -> "0")
-      val prev = props.map { case (k, _) => k -> sys.props.get(k) }
-      props.foreach { case (k, v) => sys.props(k) = v }
-      try {
+      val prev = sys.props.get("graft.backbone.autoGcKeep")
+      sys.props("graft.backbone.autoGcKeep") = "1"
+      try Warehouse.withGcGraceMs(0L) {
         // the nightly commit on V2: advance runs, then auto-gc prunes V1
         Backbone.advanceAndStore(spark, d).labels.count()
         assert(versionDirs(wh).size == 1,
@@ -197,11 +195,45 @@ class WarehouseSpec extends AnyFunSuite {
         // ...while an explicit gc at the same settings does prune it
         assert(Warehouse.gc(spark, keep = 1, graceMs = 0L).size == 1)
         assert(!fake.exists())
-      } finally prev.foreach {
-        case (k, Some(v)) => sys.props(k) = v
-        case (k, None) => sys.props -= k
+      } finally prev match {
+        case Some(v) => sys.props("graft.backbone.autoGcKeep") = v
+        case None => sys.props -= "graft.backbone.autoGcKeep"
       }
     }
+  }
+
+  /** `body`'s value and the Spark jobs it started. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val v = body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      (v, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a stored table reads back with the schema it was written with: " +
+      "no inference job, the same rows") {
+    val path = java.nio.file.Files.createTempDirectory("whspec_stored").toString + "/t"
+    val rows = Seq((1L, "a", Seq(1.0f, 2.0f)), (2L, "b", Seq.empty[Float]), (3L, null, null))
+      .toDF("id", "s", "v")
+    Warehouse.writeSized(rows, path)
+    val (read, jobs) = withJobCount(Warehouse.readParquet(spark, path))
+    assert(jobs == 0, s"opening the stored table ran $jobs job(s)")
+    val inferred = spark.read.parquet(path)
+    assert(read.schema == inferred.schema)
+    assert(read.orderBy("id").collect().toSeq == rows.orderBy("id").collect().toSeq)
+    // a reset forgets the written schema, as a marker hit from an earlier
+    // JVM would: the read infers it again
+    Warehouse.resetBuiltForTest()
+    val (again, inferJobs) = withJobCount(Warehouse.readParquet(spark, path))
+    assert(inferJobs >= 1 && again.schema == inferred.schema)
   }
 
   test("gc is a no-op under the default per-JVM tmp root") {

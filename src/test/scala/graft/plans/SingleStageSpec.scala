@@ -8,29 +8,35 @@ import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, QueryExecution,
   SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
-import org.apache.spark.sql.functions.{col, rand}
+import org.apache.spark.sql.functions.{broadcast, col, count, rand, sum}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSession
+import graft.pipeline.Materialize
 import graft.server.HttpSql
 import graft.streaming.{EventSchemas, Ingest}
 
 /** [[SingleStage]]: a query over small inputs plans no exchange and runs
   * as one Spark job, with the same answer and the same files read as with
-  * the gate off. Inputs above the gate, nondeterministic plans, streaming
-  * plans, RDD leaves and writes keep the plan they get with the gate off. */
+  * the gate off — over files, local rows, caches and `Materialize.drop`
+  * checkpoints, through broadcast-hinted joins and keyless repartitions,
+  * and under a plain file write. Inputs above the gate, nondeterministic
+  * plans, streaming plans, RDD leaves no checkpoint noted and writes that
+  * range their rows keep the plan they get with the gate off. */
 class SingleStageSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSession.spark
 
@@ -113,10 +119,15 @@ class SingleStageSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"AS kbps FROM $Watch WHERE event_date = DATE '2024-09-02' GROUP BY 1 ORDER BY 1"))
 
   private val jobGroups = new ConcurrentLinkedQueue[String]()
+  private val stageGroups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  private val groupTasks = new ConcurrentLinkedQueue[(String, Int)]()
   private val jobListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .foreach(jobGroups.add)
+        .foreach { g => jobGroups.add(g); e.stageIds.foreach(stageGroups.put(_, g)) }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stageGroups.get(e.stageInfo.stageId))
+        .foreach(g => groupTasks.add(g -> e.stageInfo.numTasks))
   }
   private val executions = new ConcurrentLinkedQueue[(String, QueryExecution)]()
   private val planListener = new QueryExecutionListener {
@@ -150,6 +161,35 @@ class SingleStageSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Runs `df` on this thread with the gate at `bytes`. */
   private def runAt(bytes: Long)(df: => DataFrame): (DataFrame, Array[Row]) =
     SingleStage.withGateBytes(bytes) { val d = df; (d, d.collect()) }
+
+  /** `body`'s value, and the jobs and tasks it ran under job group `group`. */
+  private def counted[T](group: String)(body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    sc.setJobGroup(group, group)
+    val v = try body finally sc.clearJobGroup()
+    ListenerBus.drain(sc)
+    (v, jobGroups.asScala.count(_ == group),
+      groupTasks.asScala.collect { case (`group`, n) => n }.sum)
+  }
+
+  private def sorted(rows: Array[Row]): Seq[String] = rows.map(_.toString).toSeq.sorted
+
+  /** `df` runs as one job with no exchange at the default gate and
+    * answers as with the gate off, where it plans an exchange. `df` is
+    * planned once per gate, so it must not open a table itself: that
+    * runs a schema-inference job. */
+  private def assertOneStage(what: String)(df: => DataFrame): Unit = {
+    val (off, offRows) = runAt(0)(df)
+    assert(exchanges(off.queryExecution.executedPlan).nonEmpty,
+      s"$what: no exchange to remove:\n${off.queryExecution.executedPlan}")
+    val ((on, onRows), jobs, _) = counted(s"one-stage-$what")(runAt(SingleStage.gateBytes)(df))
+    val plan = on.queryExecution.executedPlan
+    assert(gated(plan), s"$what was not gated:\n$plan")
+    assert(exchanges(plan).isEmpty, s"$what planned an exchange:\n$plan")
+    assert(jobs == 1, s"$what ran $jobs jobs")
+    assert(sorted(onRows) == sorted(offRows), s"$what answered differently with the gate on")
+  }
 
   private def get(port: Int, sql: String, queryId: String): String = {
     val q = java.net.URLEncoder.encode(sql, UTF_8)
@@ -274,13 +314,87 @@ class SingleStageSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plans.exists(_.isInstanceOf[CoalesceExec]), "the write was gated")
     assert(spark.read.parquet(s"$out/login_events").count() == 30)
 
-    // a write without a repartition of its own keeps its aggregate exchange
-    ListenerBus.drain(spark.sparkContext)
-    executions.clear()
-    rows.groupBy("user_id").count().write.parquet(s"$out/counts")
-    ListenerBus.drain(spark.sparkContext)
-    val written = executions.asScala.toSeq.flatMap { case (_, qe) => nodes(qe.executedPlan) }
-    assert(written.exists(_.isInstanceOf[Exchange]) &&
-      !written.exists(_.isInstanceOf[CoalesceExec]), "the aggregate write was gated")
+    // a small write without a keyed repartition of its own is gated:
+    // one task writes one file, with the rows of the gate-off aggregate
+    val ((), jobs, tasks) = counted("plain-write")(
+      rows.groupBy("user_id").count().write.parquet(s"$out/counts"))
+    val files = new java.io.File(s"$out/counts").listFiles().count(_.getName.endsWith(".parquet"))
+    assert(jobs >= 1 && tasks == 1 && files == 1,
+      s"the aggregate write ran $tasks tasks in $jobs jobs and wrote $files files")
+    assert(sorted(spark.read.parquet(s"$out/counts").collect()) ==
+      sorted(runAt(0)(rows.groupBy("user_id").count())._2))
+  }
+
+  test("a query over a small persist()ed frame runs as one job with no exchange") {
+    val cached = table(Watch).select("user_id", "item_type", "video_position").persist()
+    try {
+      cached.count() // materialized: the job counted below is the query's
+      assertOneStage("a persisted input")(cached.groupBy("item_type")
+        .agg(count("*").as("n"), sum("video_position").as("pos")))
+    } finally cached.unpersist()
+  }
+
+  test("a query over a Materialize.drop checkpoint runs as one job with no exchange") {
+    val ckpt = Materialize.drop(table(Watch).groupBy("user_id", "item_type").count())
+    assertOneStage("a checkpointed input")(
+      ckpt.groupBy("item_type").agg(sum("count").as("n")))
+  }
+
+  test("a broadcast-hinted join under the gate plans no broadcast and no exchange") {
+    val (watch, logins) = (table(Watch), table("login_events"))
+    val q = () => watch.join(broadcast(logins
+        .select(col("user_id"), col("event_id").as("login_id"))), "user_id")
+      .groupBy("item_type").agg(count("*").as("n"))
+    val off = runAt(0)(q())._1.queryExecution.executedPlan
+    assert(nodes(off).exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"the hint did not broadcast with the gate off:\n$off")
+    assertOneStage("a broadcast-hinted join")(q())
+  }
+
+  test("keyless repartitions are dropped under the gate; a keyed one is kept") {
+    val watch = table(Watch)
+    assertOneStage("repartition(4)")(watch.repartition(4).groupBy("item_type").count())
+    assertOneStage("a REBALANCE hint")(watch.hint("rebalance").groupBy("item_type").count())
+    val keyed = () => watch.repartitionByRange(4, col("timestamp"))
+      .groupBy("item_type").count()
+    val (on, onRows) = runAt(SingleStage.gateBytes)(keyed())
+    val plan = on.queryExecution.executedPlan
+    assert(gated(plan), s"the keyed plan was not gated:\n$plan")
+    assert(exchanges(plan).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+      s"the range repartition was dropped:\n$plan")
+    assert(sorted(onRows) == sorted(runAt(0)(keyed())._2))
+  }
+
+  test("a cache over inputs above the gate and an RDD no checkpoint noted keep their plans") {
+    val cached = table(Watch).select("user_id", "item_type").persist()
+    try {
+      val bytes = SingleStage.inputBytes(table(Watch).queryExecution.optimizedPlan).get
+      assertKept("a cache one byte above the gate", (bytes - 1).toLong)(
+        cached.groupBy("item_type").count())
+    } finally cached.unpersist()
+    val ckpt = table(Watch).localCheckpoint()
+    assertKept("a localCheckpoint Materialize.drop did not make")(
+      ckpt.groupBy("item_type").count())
+  }
+
+  test("under the engine's SQL settings a join over a join runs as one job with no exchange") {
+    val (watch, logins, sessions) =
+      (table(Watch), table("login_events"), table("session_events"))
+    val q = () => watch.join(logins.select(col("user_id"), col("event_id").as("l")), "user_id")
+      .join(sessions.select(col("user_id"), col("event_id").as("s")), "user_id")
+      .join(watch.select(col("event_id"), col("item_id").as("again")), "event_id")
+      .groupBy("item_type").agg(count("*").as("n"))
+    // the join estimates multiply past Spark's single-partition bound,
+    // so the session default re-shuffles both sides of the outer join
+    val dflt = runAt(SingleStage.gateBytes)(q())._1.queryExecution.executedPlan
+    assert(gated(dflt) && exchanges(dflt).nonEmpty, s"no exchange to keep out:\n$dflt")
+    val conf = spark.conf
+    val prev = graft.EngineSession.sqlSettings.map { case (k, _) => k -> conf.getOption(k) }
+    graft.EngineSession.sqlSettings.foreach { case (k, v) => conf.set(k, v) }
+    try assertOneStage("a join over a join")(q())
+    finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 }

@@ -102,8 +102,9 @@ class CompactionSpec extends AnyFunSuite {
   test("compactIngest pools committed batches; uncommitted stay replayable") {
     import spark.implicits._
     val table = Files.createTempDirectory("cingest").toString + "/t"
-    // ingest layout: one event_date, batches 0..4, 2 files each
-    (0 until 5).foreach { b =>
+    // ingest layout: one event_date, batches 0..4, 2 files each (written
+    // above the small-input gate, which would write each batch as one)
+    (0 until 5).foreach { b => graft.plans.SingleStage.withGateBytes(0) {
       (0 until 20).map { i =>
         val ts = new java.sql.Timestamp(1726300800000L + (b * 20 + i) * 1000L)
         (s"e-$b-$i", "login", ts)
@@ -112,7 +113,7 @@ class CompactionSpec extends AnyFunSuite {
         .withColumn("ingest_batch", lit(b.toLong))
         .coalesce(2).write.mode("append")
         .partitionBy("event_date", "ingest_batch").parquet(table)
-    }
+    }}
     val part = s"$table/event_date=2024-09-14"
     val before = spark.read.parquet(table).collect()
       .map(_.getString(0)).sorted
