@@ -39,10 +39,7 @@ final case class BrokerConfig(
     host: String = "localhost",
     subjects: Seq[String] = Seq("events.login"),
     consumerName: String = "click-consumer",
-    streamConfig: StreamEnvelopeConfig = StreamEnvelopeConfig()) {
-  /** nats://host:port (src/config.rs:52-54 get_addr). */
-  def addr: String = s"nats://$host:$clientPort"
-}
+    streamConfig: StreamEnvelopeConfig = StreamEnvelopeConfig())
 
 /** Warehouse surface (src/config.rs:100-110 ClickHouseConfig): the
   * engine's "warehouse" is the parquet table root, so only the HTTP port
@@ -56,9 +53,7 @@ final case class WarehouseConfig(
 final case class BatcherConfig(
     maxRows: Long = 100000L,
     maxBytes: Long = 60000000L,
-    flushIntervalMs: Long = 1000L) {
-  def flushInterval: Duration = Duration.ofMillis(flushIntervalMs)
-}
+    flushIntervalMs: Long = 1000L)
 
 /** Small-file compaction — the analog of MergeTree's continuous part
   * merges (the reference's storage engine merges inserted parts while

@@ -1,28 +1,29 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Differential fuzz main for the parametric event aggregates
   * (`window_funnel` / `sequence_count` / `sequence_match` /
   * `retention`) — the dimension the catalog keys can't cover: RANDOM
-  * windows, chunk sizes, gap bounds and patterns, drawn per seed and
-  * driven through BOTH mechanisms of each contract:
+  * windows, gap bounds and patterns, drawn per seed. Each aggregate,
+  * run under real partial aggregation and shuffle serialization, is
+  * compared with an independent formulation of its contract:
   *
-  *  - the buffered TypedImperativeAggregate (per-group sort + dominance
-  *    pass / DP at eval, exercised under real partial aggregation and
-  *    shuffle serialization), vs
-  *  - the one-shuffle stacked-window library plans
-  *    ([[operators.EventAnalytics]]) or a mechanically-generated
-  *    lead()/running-max window formulation (for the pattern grammar).
+  *  - the in-memory brute-force references in
+  *    [[operators.EventAnalytics.Reference]] over the collected corpus
+  *    (funnel chain level, the greedy pair-count automaton, funnel
+  *    completion), or
+  *  - a mechanically-generated lead()/running-max window plan (the
+  *    pattern grammar and the funnel modes) or join plan (retention).
   *
-  * The two implementations share no evaluation code, so any divergence
-  * is a real contract violation. `pipefuzz.py` runs this per seed on
-  * its planted event corpus (which carries duplicate timestamps by
-  * construction — the tie-order hazard) right after the DuckDB
-  * differential; the catalog keys' fixed 12 h instances stay covered by
-  * the oracle compare, this main covers the window/pattern SPACE.
+  * The two sides share no evaluation code, so any divergence is a real
+  * contract violation. `pipefuzz.py` runs this per seed on its planted
+  * event corpus (which carries duplicate timestamps by construction —
+  * the tie-order hazard) right after the DuckDB differential; the
+  * catalog keys' fixed 12 h instances stay covered by the oracle
+  * compare, this main covers the window/pattern SPACE.
   *
   * Usage: `graft.FuzzParametric <corpusDir> <seed>`; exit 1 on any
   * divergence, with the failing window/pattern printed for standalone
@@ -52,71 +53,67 @@ object FuzzParametric {
     val sign = col("event_type") === "signup"
     val click = col("event_type") === "click"
     val buy = col("event_type") === "purchase"
-    val stages3 = Seq(sign, click, buy)
 
-    // ---- window_funnel: 3 random windows x {plain, chunked} ------------
-    (1 to 3).foreach { _ =>
-      val wU = (1 + rnd.nextInt(48)).toLong * hourUs
-      val lib = toMap(operators.EventAnalytics.funnelLevels(
-        e, stages3, Some(expr(s"INTERVAL ${wU / 1000000} SECONDS"))))(_.getInt(1))
+    import operators.EventAnalytics.Reference.{Event, byUser, chainLevel,
+      chainMatched, pairCount}
+    val corpus = byUser(e)
+    val chain = Seq("signup", "click", "purchase")
+    // the reference over the users holding an event of a `kinds` type
+    def reference[V](kinds: String => Boolean)(v: Seq[Event] => V): Map[Long, V] =
+      corpus.collect { case (u, evs) if evs.exists(x => kinds(x.kind)) => u -> v(evs) }
+
+    // ---- window_funnel: 3 random windows + 1 tight -------------------
+    // the tight window is the span of one user's shortest full chain:
+    // one microsecond below it that user's level drops, so an
+    // off-by-one admit check diverges even when no random window lands
+    // on a boundary
+    val tightest = corpus.values.flatMap { evs =>
+      def after(kind: String, t: Long) = evs.find(x => x.kind == kind && x.us > t)
+      evs.filter(_.kind == "signup").flatMap(s => after("click", s.us)
+        .flatMap(c => after("purchase", c.us)).map(_.us - s.us)).minOption
+    }.toIndexedSeq.sorted
+    val windows = Seq.fill(3)((1 + rnd.nextInt(48)).toLong * hourUs) ++
+      tightest.lift(rnd.nextInt(tightest.size max 1))
+    windows.foreach { wU =>
+      // every user: the aggregate reads level 0 without a signup
+      val ref = reference(_ => true)(chainLevel(_, chain, Some(wU)))
       val sql = toMap(e.groupBy("user_id").agg(expr(
         s"window_funnel($wU, ts, event_type = 'signup', " +
           "event_type = 'click', event_type = 'purchase')").as("lv")))(_.getInt(1))
-      lib.foreach { case (u, l) =>
-        if (sql.getOrElse(u, -1) != l)
-          fail(s"window_funnel w=$wU user $u: lib=$l sql=${sql.get(u)}")
-      }
-      if (sql.filterNot(kv => lib.contains(kv._1)).values.exists(_ != 0))
-        fail(s"window_funnel w=$wU: non-stage-1 user read level > 0")
-      val chunk = wU * (1 + rnd.nextInt(3))
-      val ch = toMap(operators.EventAnalytics.funnelLevelsChunked(
-        e, stages3, wU, chunk))(_.getInt(1))
-      if (ch != lib) fail(s"funnelLevelsChunked w=$wU chunk=$chunk != plain")
-      println(s"[fuzz-parametric] window_funnel w=${wU / hourUs}h " +
-        s"chunk=${chunk / hourUs}h ok (${lib.size} users)")
+      if (sql != ref) fail(s"window_funnel w=$wU: agg != reference " +
+        s"(${(sql.toSet -- ref.toSet).take(3)} / ${(ref.toSet -- sql.toSet).take(3)})")
+      println(s"[fuzz-parametric] window_funnel w=${wU}us ok " +
+        s"(${ref.count(_._2 > 0)} users)")
     }
 
-    // ---- sequence_count: unbounded + 3 random windows x chunked --------
-    locally {
-      val libU = toMap(operators.EventAnalytics.sequenceCount(
-        e, sign, buy))(_.getLong(1))
-      val sqlU = toMap(e.filter(sign || buy).groupBy("user_id").agg(expr(
-        "sequence_count(0, ts, event_id, event_type = 'signup', " +
+    // ---- sequence_count: unbounded + 3 random windows ------------------
+    (0 to 3).foreach { i =>
+      val wU = if (i == 0) 0L else (1 + rnd.nextInt(48)).toLong * hourUs
+      val ref = reference(Set("signup", "purchase"))(
+        pairCount(_, "signup", "purchase", Option(wU).filter(_ > 0)))
+      val sql = toMap(e.filter(sign || buy).groupBy("user_id").agg(expr(
+        s"sequence_count($wU, ts, event_id, event_type = 'signup', " +
           "event_type = 'purchase')").as("c")))(_.getLong(1))
-      if (libU != sqlU) fail("sequence_count unbounded: lib != sql")
-      (1 to 3).foreach { _ =>
-        val wU = (1 + rnd.nextInt(48)).toLong * hourUs
-        val lib = toMap(operators.EventAnalytics.sequenceCountWindowed(
-          e, sign, buy, wU))(_.getLong(1))
-        val sql = toMap(e.filter(sign || buy).groupBy("user_id").agg(expr(
-          s"sequence_count($wU, ts, event_id, event_type = 'signup', " +
-            "event_type = 'purchase')").as("c")))(_.getLong(1))
-        if (lib != sql) fail(s"sequence_count w=$wU: lib != sql")
-        val chunk = wU * (1 + rnd.nextInt(3))
-        val ch = toMap(operators.EventAnalytics.sequenceCountChunked(
-          e, sign, buy, wU, chunk))(_.getLong(1))
-        if (ch != lib) fail(s"sequenceCountChunked w=$wU chunk=$chunk != plain")
-        println(s"[fuzz-parametric] sequence_count w=${wU / hourUs}h " +
-          s"chunk=${chunk / hourUs}h ok (${lib.size} users)")
-      }
+      if (sql != ref) fail(s"sequence_count w=$wU: agg != reference " +
+        s"(${(sql.toSet -- ref.toSet).take(3)} / ${(ref.toSet -- sql.toSet).take(3)})")
+      println(s"[fuzz-parametric] sequence_count w=${wU / hourUs}h ok " +
+        s"(${ref.size} users)")
     }
 
     // ---- sequence_match (window form): unbounded + 2 random windows ----
     (0 to 2).foreach { i =>
       val wU = if (i == 0) 0L else (1 + rnd.nextInt(72)).toLong * hourUs
-      val libW = if (wU == 0) None
-                 else Some(expr(s"INTERVAL ${wU / 1000000} SECONDS"))
-      val lib = toMap(operators.EventAnalytics.sequenceMatch(
-        e, stages3, libW))(_.getInt(1))
+      val ref = reference(_ == "signup")(evs =>
+        if (chainMatched(evs, chain, Option(wU).filter(_ > 0))) 1 else 0)
       val sql = toMap(
-        e.filter(col("event_type").isin("signup", "click", "purchase"))
+        e.filter(col("event_type").isin(chain: _*))
           .groupBy("user_id")
           .agg(expr(s"sequence_match($wU, ts, event_type = 'signup', " +
               "event_type = 'click', event_type = 'purchase')")
             .cast("int").as("m"),
             max(when(sign, 1).otherwise(0)).as("h"))
           .filter(col("h") === 1))(_.getInt(1))
-      if (lib != sql) fail(s"sequence_match w=$wU: lib != sql")
+      if (sql != ref) fail(s"sequence_match w=$wU: agg != reference")
       println(s"[fuzz-parametric] sequence_match w=${wU / hourUs}h ok")
     }
 

@@ -13,9 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
   * `sequence_next_node`): their state buffers O(events) per group on the
   * executor heap — the CH trade, fine for ordinary users but an OOM for
   * a 100 TB whale group. The cap makes the documented trade
-  * ENFORCEABLE: a group exceeding it fails loudly, naming the
-  * one-shuffle library operator that handles whales by construction,
-  * instead of dying opaquely in the allocator. The cap is 1,000,000
+  * ENFORCEABLE: a group exceeding it fails loudly, naming the function,
+  * the group's event count and the cap, instead of dying opaquely in
+  * the allocator. The cap is 1,000,000
   * events per group: 12-20 MB of [[EventBuffer]] columns (12 bytes an
   * event, 20 with a tie column), before array-growth slack, the sorted
   * copy eval makes and the value strings `sequence_next_node` keeps. An
@@ -266,8 +266,6 @@ abstract class BufferedEventAgg extends TypedImperativeAggregate[EventBuffer] {
   protected def keepUnmatched: Boolean = false
   /** The function as the cap error names it. */
   protected def capName: String = prettyName
-  /** The one-shuffle library form the cap error points a whale group to. */
-  protected def scalePath: String
   /** The form's answer from the group's events in (ts, tie) order. */
   protected def result(sorted: EventBuffer): Any
 
@@ -284,9 +282,7 @@ abstract class BufferedEventAgg extends TypedImperativeAggregate[EventBuffer] {
     throw new IllegalStateException(
       s"$capName buffered $n events in one group, at the " +
         s"maxEventsPerGroup cap ($maxEvents): a group this hot is a whale " +
-        "the buffered SQL aggregate cannot hold in executor heap — use " +
-        s"the one-shuffle library form ($scalePath), which handles whale " +
-        "groups by construction")
+        "the buffered SQL aggregate cannot hold in executor heap")
 
   /** Records the buffer size AFTER an update/merge ran (r17 ADVICE:
     * recording pre-add counted rows the aggregate then skipped), while

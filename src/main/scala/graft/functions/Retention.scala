@@ -26,9 +26,9 @@ import org.apache.spark.sql.types._
   * Unlike the buffered aggregates this one needs no [[EventBuffer]] and
   * no [[ParametricAgg]] cap: state is one Int bitmask of conditions seen —
   * O(1) per group regardless of whale size, partially aggregated
-  * map-side like any sum. The library twin is the o_a16 join
-  * formulation ([[graft.operators.EventAnalytics]]); the o_a16b catalog
-  * key pins the two observationally identical under one oracle.
+  * map-side like any sum. The o_a16/o_a16b catalog keys run it; their
+  * DuckDB oracle ([[graft.operators.EventAnalytics]]) is the join
+  * formulation of the same report.
   */
 object Retention {
   /** Bitmask of conditions seen so far in the group. */

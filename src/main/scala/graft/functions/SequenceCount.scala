@@ -4,16 +4,14 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
-/** ClickHouse `sequenceCount('(?1).*(?2)')` / `('(?1)(?t<=w)(?2)')` as a
-  * SQL aggregate — the SQL-surface twin of
-  * [[graft.operators.EventAnalytics.sequenceCount]] /
-  * [[graft.operators.EventAnalytics.sequenceCountWindowed]] (CH 22.3
-  * parametric-aggregate family, next to
-  * [[WindowFunnelAgg]]). Same greedy non-overlapping semantics, proved
-  * by the shared oracles: the automaton collapses to "count events
-  * matching `second` whose immediately preceding condition-matching
-  * event matches `first`" (proof at the library form), optionally gap-
-  * bounded.
+/** ClickHouse `sequenceCount` with pattern `'(?1).*(?2)'` / `'(?1)(?t<=w)(?2)'` as a
+  * SQL aggregate (CH 22.3 parametric-aggregate family, next to
+  * [[WindowFunnelAgg]]) — the engine's one implementation of the
+  * greedy non-overlapping count, behind the o_a18* catalog keys. The
+  * automaton collapses to "count events matching `second` whose
+  * immediately preceding condition-matching event matches `first`"
+  * (proof at the o_a18 oracle in [[graft.operators.EventAnalytics]]),
+  * optionally gap-bounded.
   *
   * `sequence_count(window_us, ts, tie, first, second)` → BIGINT.
   * `window_us = 0` means UNBOUNDED (the `.*` pattern — no time
@@ -21,12 +19,11 @@ import org.apache.spark.sql.types._
   * BIGINT tie-break for equal timestamps: CH leaves tie order
   * engine-private, but this engine's determinism rules (and the DuckDB
   * differential) demand a total order, so the caller names it — the
-  * catalog uses event_id, exactly like the library form's default.
+  * catalog uses event_id.
   * An event matching BOTH conditions counts as `first` (arms, never
-  * fires), matching the library form. Events matching neither carry no
-  * information and are not buffered; state is O(matching events per
-  * group), the CH trade — the one-shuffle lag() library form is the
-  * scale path.
+  * fires). Events matching neither carry no information and are not
+  * buffered; state is O(matching events per group), capped by
+  * [[ParametricAgg]].
   */
 object SequenceCount {
 
@@ -73,8 +70,6 @@ case class SequenceCountAgg(
   private def firstExpr = children(3)
   private def secondExpr = children(4)
   override protected def maskConds = Seq(firstExpr, secondExpr)
-  override protected def scalePath =
-    "graft.operators.EventAnalytics.sequenceCount / sequenceCountChunked"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types._
 
-/** ClickHouse `sequenceMatch('pattern')(ts, cond1, …, condN)` with the
+/** ClickHouse `sequenceMatch` — `('pattern')(ts, cond1, …, condN)` — with the
   * REAL pattern grammar (CH 22.3) — the general form behind the
   * funnel-completion subset [[SequenceMatchAgg]] covers:
   *
@@ -333,9 +333,6 @@ case class SequenceMatchPatternAgg(
   override protected def tsExpr = children(1)
   override protected def tieExpr = children(2)
   override protected def maskConds = children.drop(3)
-  override protected def scalePath =
-    "graft.operators.EventAnalytics.sequenceMatch / the lead()-window " +
-      "formulations (o_a17-style)"
 
   // parse eagerly so a bad pattern fails at analysis, not per-task;
   // the bound check keeps value * unitMicros (micros scaling for

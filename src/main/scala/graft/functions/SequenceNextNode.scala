@@ -41,8 +41,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    "stream end"). NULL with no marker = no chain matched.
   *
   * The [[EventBuffer]] holds (us, tie, cond-mask, value) for every row
-  * under the [[ParametricAgg]] cap; the one-shuffle lead()/lag()-window
-  * library forms (o_a21/o_a21c/o_a21d oracles) remain the scale path.
+  * under the [[ParametricAgg]] cap; the o_a21* catalog keys' DuckDB
+  * oracles re-derive the answer with lead()/lag() windows.
   */
 object SequenceNextNode {
 
@@ -126,9 +126,6 @@ case class SequenceNextNodeAgg(
   // mask-0 rows ARE buffered: adjacency is in the full stream, so
   // non-matching events are the interventions that break chains
   override protected def keepUnmatched = true
-  override protected def scalePath =
-    "graft.operators.EventAnalytics (the o_a21/o_a21c/o_a21d " +
-      "lead()/lag()-window formulations)"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType

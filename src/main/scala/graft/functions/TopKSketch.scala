@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult

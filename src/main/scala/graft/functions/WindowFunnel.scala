@@ -5,30 +5,26 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** ClickHouse `windowFunnel(window)(ts, cond1, …, condN)` as a SQL
-  * aggregate — the SQL-surface twin of
-  * [[graft.operators.EventAnalytics.funnelLevels]] (CH 22.3
-  * parametric-aggregate signature; a reference user writes this in SQL,
-  * not through a DataFrame API). Same EXISTS-chain semantics, proved by
-  * the shared oracle: level ≥ k iff a strictly-increasing-timestamp
-  * chain e1 < … < ek exists with the k stage predicates and
+  * aggregate (CH 22.3 parametric-aggregate signature; a reference user
+  * writes this in SQL, not through a DataFrame API) — the engine's one
+  * implementation of the funnel contract, behind the o_a15* catalog
+  * keys. EXISTS-chain semantics, checked against the keys' DuckDB
+  * oracles: level ≥ k iff a strictly-increasing-timestamp chain
+  * e1 < … < ek exists with the k stage predicates and
   * ek.ts ≤ e1.ts + window. NOTE: this is CH's `strict_increase` mode
-  * (ties never chain), chosen for determinism and matching
-  * funnelLevels' RANGE-frame form — CH's DEFAULT mode lets
+  * (ties never chain), chosen for determinism — CH's DEFAULT mode lets
   * equal-timestamp events chain in engine-private order, which no
   * differential oracle can pin.
   *
-  * Evaluation is the funnelLevels max-chain-start dominance argument run
-  * as a sort + single pass at eval time: if a chain with start t1
-  * reaches an event, any later valid start also does, so each level
-  * needs only its MAXIMUM reachable chain start. Events are buffered
-  * per group in an [[EventBuffer]] (CH's windowFunnel buffers
-  * identically), sorted by timestamp, and equal-timestamp groups apply
-  * their updates ATOMICALLY against the pre-group state — the strict `<` the chain definition
-  * demands, matching the DataFrame form's RANGE-frame formulation under
-  * ties. State is O(condition-matching events per group): the right
-  * trade for the SQL surface; the one-shuffle stacked-window
-  * [[graft.operators.EventAnalytics.funnelLevels]] remains the scale
-  * path for corpus-wide funnels.
+  * Evaluation is a max-chain-start dominance argument run as a sort +
+  * single pass at eval time: if a chain with start t1 reaches an event,
+  * any later valid start also does, so each level needs only its
+  * MAXIMUM reachable chain start. Events are buffered per group in an
+  * [[EventBuffer]] (CH's windowFunnel buffers identically), sorted by
+  * timestamp, and equal-timestamp groups apply their updates
+  * ATOMICALLY against the pre-group state — the strict `<` the chain
+  * definition demands. State is O(condition-matching events per
+  * group), capped by [[ParametricAgg]].
   *
   * `window_funnel(window_us, ts, c1, …, cN)` → INT: the maximum level
   * reached, 0 when the group has no stage-1 event. Rows where every
@@ -107,8 +103,6 @@ case class WindowFunnelAgg(
 
   override protected def tsExpr = children(1)
   override protected def maskConds = children.drop(2)
-  override protected def scalePath =
-    "graft.operators.EventAnalytics.funnelLevels / funnelLevelsChunked"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType
@@ -150,8 +144,8 @@ case class WindowFunnelAgg(
   *    between two steps breaks it, including events matching no
   *    condition, so this mode buffers EVERY row of the group (mask 0
   *    rows are the breakers). Eval: prefix-match at each stage-1
-  *    position, window measured from the chain start — the buffered
-  *    twin of o_a15d's lead() formulation, whose oracle it shares.
+  *    position, window measured from the chain start; the o_a15d
+  *    oracle is its lead() formulation.
   *  - `strict_dedup` standalone: THIS ENGINE'S OWN "last-of-type"
   *    dedup reading, stated as such — each step's event must be the
   *    LAST of its type before the next step's event; a repeat of
@@ -167,7 +161,7 @@ case class WindowFunnelAgg(
   *    sequential pass carrying, per stage, the chain start the LAST
   *    stage-k event offers (possibly invalid — a later repeat
   *    overwrites); updates read pre-event state (strictly-before).
-  *    The buffered twin of o_a15b, whose oracle it shares.
+  *    The o_a15b oracle is its running-window formulation.
   *  - `strict_order,strict_dedup` combined: the consecutive-chain
   *    scan with CH's documented deduplication INTERRUPT rule — a step
   *    candidate that ALSO satisfies a condition already matched by an
@@ -179,7 +173,7 @@ case class WindowFunnelAgg(
   *    with the repeat-exclusion predicates.
   *
   * The [[EventBuffer]] holds (us, tie, mask) under the [[ParametricAgg]]
-  * cap; the one-shuffle stacked-window forms remain the scale path.
+  * cap.
   */
 case class WindowFunnelModeAgg(
     windowMicros: Long,
@@ -221,8 +215,6 @@ case class WindowFunnelModeAgg(
   // strict_order buffers breakers (mask 0) — interventions matter
   override protected def keepUnmatched = modes("strict_order")
   override protected def capName = s"$prettyName('$mode')"
-  override protected def scalePath =
-    "graft.operators.EventAnalytics (o_a15b/o_a15d stacked-window forms)"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType
@@ -338,17 +330,15 @@ object WindowFunnelModeAgg {
     }
 }
 
-/** ClickHouse `sequenceMatch('(?1).*(?2)…')` (optionally with a
+/** ClickHouse `sequenceMatch` with pattern `'(?1).*(?2)…'` (optionally with a
   * chain-start time bound) as a SQL aggregate —
   * `sequence_match(window_us, ts, cond1, …, condN)` → BOOLEAN: true iff
   * a strictly-increasing-timestamp chain hits every stage, i.e.
-  * [[WindowFunnelAgg]]'s level == N (the library
-  * [[graft.operators.EventAnalytics.sequenceMatch]] identity, here at
-  * the SQL surface). `window_us = 0` means UNBOUNDED — CH's
-  * sequenceMatch has no time constraint, and 0-as-unbounded matches
-  * [[SequenceCountAgg]]'s convention (contrast `window_funnel`, where
-  * the window is mandatory per CH's own signature). Like the library
-  * form, "no stage-1 event" and "chain incomplete" both read false —
+  * [[WindowFunnelAgg]]'s level == N. `window_us = 0` means UNBOUNDED —
+  * CH's sequenceMatch has no time constraint, and 0-as-unbounded
+  * matches [[SequenceCountAgg]]'s convention (contrast `window_funnel`,
+  * where the window is mandatory per CH's own signature). "No stage-1
+  * event" and "chain incomplete" both read false —
   * restrict to stage-1 users where the CH result universe matters (the
   * catalog key does). */
 case class SequenceMatchAgg(
@@ -374,8 +364,6 @@ case class SequenceMatchAgg(
   private def effWindow: Long = if (windowMicros == 0) -1L else windowMicros
   override protected def tsExpr = children(1)
   override protected def maskConds = children.drop(2)
-  override protected def scalePath =
-    "graft.operators.EventAnalytics.sequenceMatch"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val tsOk = tsExpr.dataType == TimestampType || tsExpr.dataType == LongType

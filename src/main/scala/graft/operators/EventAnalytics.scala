@@ -1,17 +1,29 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** ClickHouse's event-analytics signatures — `windowFunnel` and
-  * `retention` — the queries the reference's 9 event tables exist to
+/** ClickHouse's event-analytics catalog — `windowFunnel`,
+  * `sequenceMatch`, `sequenceCount`, `sequenceNextNode` and
+  * `retention`, the queries the reference's 9 event tables exist to
   * serve (CH 22.3 [implied]; a video-streaming product's
   * signup→engage→convert reporting over the migration DDLs' ORDER BY
   * (timestamp, event_name) layouts).
   *
-  * Semantics chosen to be EXACTLY SQL-expressible (so both operators are
+  * Each contract has one implementation, the SQL aggregate in
+  * [[graft.functions]] (`window_funnel`, `sequence_match`,
+  * `sequence_count`, `sequence_next_node`, `retention`), as in
+  * ClickHouse. Every key below groups the events by user, evaluates one
+  * such aggregate and counts users per value; keys that name the same
+  * contract share one query. Each key's DuckDB oracle in [[oracles]]
+  * re-derives the answer with joins or window functions, so the
+  * differential compare checks the aggregate against an independent
+  * formulation. [[Reference]] holds in-memory brute-force references
+  * for the random-window fuzz and the specs.
+  *
+  * Semantics are chosen to be EXACTLY SQL-expressible (so every key is
   * fully DuckDB-oracled, unlike CH's greedy cursor variant whose
   * tie-handling is engine-private):
   *  - funnel level (window w): level >= k iff an increasing-timestamp
@@ -20,699 +32,139 @@ import org.apache.spark.sql.functions._
   *  - retention: per cohort (first-signup date), the share of users with
   *    a follow-up event inside a fixed horizon after their first signup.
   *
-  * Scale shape: every operator here runs on ONE user_id-keyed shuffle —
-  * the funnels and sequence ops as stacked running-window passes over
-  * the per-user event stream (see [[funnelLevels]]'s max-chain-start
-  * reduction), retention as a user-keyed aggregate. No joins, no
-  * row-multiplying output. The stage-predicate slices are narrow
-  * (ts, user_id, event_type) projections that push down to the scan.
+  * Scale shape: one user_id-keyed exchange per key; the aggregate
+  * buffers a user's events, capped per group by
+  * [[graft.functions.ParametricAgg]] (retention keeps O(1) state).
   */
 object EventAnalytics {
   type Q = (SparkSession, String) => DataFrame
 
-  private def stage(s: SparkSession, d: String, t: String) =
-    Tables.events(s, d).filter(col("event_type") === t).select("user_id", "ts")
-
-  /** CH `sequenceMatch('(?1).*(?2)…')` library form: per-user 0/1 whether
-    * a strictly-increasing chain hitting every stage exists (optionally
-    * inside `window` of the chain start). A funnel reaching the last
-    * stage IS a match, so this is [[funnelLevels]] == N.
-    * Returns (user_id, matched) over users with a stage-1 event. */
-  def sequenceMatch(events: DataFrame, stages: Seq[Column],
-                    window: Option[Column] = None,
-                    userCol: String = "user_id",
-                    tsCol: String = "ts"): DataFrame =
-    funnelLevels(events, stages, window, userCol, tsCol)
-      .select(col("user_id"),
-        when(col("funnel_level") === stages.size, 1).otherwise(0).as("matched"))
-
-  /** CH `sequenceCount('(?1).*(?2)')` library form: GREEDY non-overlapping
-    * first→second occurrence count per user. The greedy automaton (arm on
-    * `first`, fire+disarm on `second`) collapses to one lag() over the
-    * two-condition event stream in (ts, tiebreak) order — see o_a18's
-    * proof comment. One user-keyed shuffle, one window pass.
-    * Returns (user_id, seq_count) over users with either event. */
-  def sequenceCount(events: DataFrame, first: Column, second: Column,
-                    userCol: String = "user_id", tsCol: String = "ts",
-                    tieBreak: Seq[String] = Seq("event_id")): DataFrame = {
-    val w = Window.partitionBy(userCol).orderBy(col(tsCol) +: tieBreak.map(col): _*)
-    events.filter(first || second)
-      // an event satisfying BOTH conditions counts as `first` (arms, never
-      // fires) — pick disjoint predicates if that matters
-      .withColumn("_tag", when(first, lit("a")).otherwise(lit("b")))
-      .withColumn("_prev", lag(col("_tag"), 1).over(w))
-      .groupBy(col(userCol).as("user_id"))
-      .agg(sum(when(col("_tag") === "b" && col("_prev") === "a", 1).otherwise(0))
-        .cast("long").as("seq_count"))
+  /** The shape every key shares: group the events (only `types`, when
+    * given) by user, evaluate the SQL aggregate `agg` as `out`, keep the
+    * users `keep` admits and count users per value of `out`.
+    * `signupUsers` narrows the result to users with a signup, the
+    * stage-1 universe of the sequence_match keys. */
+  private def usersPerValue(out: String, agg: String,
+                            types: Seq[String] = Nil,
+                            keep: Column = lit(true),
+                            signupUsers: Boolean = false): Q = (s, d) => {
+    GraftExtensions.register(s)
+    val e = Tables.events(s, d)
+    val in = if (types.isEmpty) e else e.filter(col("event_type").isin(types: _*))
+    val signup = max(when(col("event_type") === "signup", 1).otherwise(0))
+    val perUser =
+      if (signupUsers)
+        in.groupBy("user_id").agg(expr(agg).as(out), signup.as("_h"))
+          .filter(keep && col("_h") === 1)
+      else in.groupBy("user_id").agg(expr(agg).as(out)).filter(keep)
+    perUser.groupBy(out).agg(count(lit(1)).as("n_users")).orderBy(out)
   }
 
-  /** CH `sequenceCount('(?1)(?t<=w)(?2)')` — the TIME-CONSTRAINED
-    * pattern: count adjacent first→second pairs in the condition-
-    * filtered per-user stream whose gap is at most `windowMicros`
-    * ("adjacent" = no other condition-matching event between, the same
-    * reading [[sequenceCount]] proves equal to the greedy automaton;
-    * the gap bound only FILTERS fired pairs, it never re-arms, so the
-    * lag() collapse carries over verbatim with one extra lag(ts)).
-    * One user-keyed shuffle, one window pass.
-    * Returns (user_id, seq_count) over users with either event. */
-  def sequenceCountWindowed(events: DataFrame, first: Column, second: Column,
-                            windowMicros: Long,
-                            userCol: String = "user_id", tsCol: String = "ts",
-                            tieBreak: Seq[String] = Seq("event_id")): DataFrame = {
-    val w = Window.partitionBy(userCol).orderBy(col(tsCol) +: tieBreak.map(col): _*)
-    events.filter(first || second)
-      .withColumn("_tag", when(first, lit("a")).otherwise(lit("b")))
-      .withColumn("_us", unix_micros(col(tsCol)))
-      .withColumn("_prev", lag(col("_tag"), 1).over(w))
-      .withColumn("_pus", lag(col("_us"), 1).over(w))
-      .groupBy(col(userCol).as("user_id"))
-      .agg(sum(when(col("_tag") === "b" && col("_prev") === "a" &&
-          col("_us") <= col("_pus") + windowMicros, 1).otherwise(0))
-        .cast("long").as("seq_count"))
+  private val chainTypes = Seq("signup", "click", "purchase")
+  private val pairTypes = Seq("signup", "purchase")
+  private val reached = col("funnel_level") >= 1
+  private val found = col("next_node").isNotNull
+
+  /** windowFunnel(12 hours)(signup, click, purchase). 12h picked because
+    * it yields all three levels at every test SF (7 days saturates:
+    * every signup converts). The aggregate returns level 0 for users
+    * with no signup; they are outside the funnel's universe. */
+  private val funnel3 = usersPerValue("funnel_level",
+    "window_funnel(43200000000, ts, event_type = 'signup', " +
+      "event_type = 'click', event_type = 'purchase')", keep = reached)
+
+  /** windowFunnel(12h, 'strict_dedup'): consecutive-step dedup — each
+    * step's event must be the LAST of its type before the next step's
+    * event, over the condition types only. */
+  private val funnelDedup = usersPerValue("funnel_level",
+    "window_funnel(43200000000, 'strict_dedup', ts, event_id, " +
+      "event_type = 'signup', event_type = 'click', " +
+      "event_type = 'purchase')", types = chainTypes, keep = reached)
+
+  /** windowFunnel(12h, 'strict_order'): no interventions — any other
+    * event between two steps breaks the chain, so it runs over ALL
+    * events (CH doc example: A->B->D->C stops at D with level 2). */
+  private val funnelStrict = usersPerValue("funnel_level",
+    "window_funnel(43200000000, 'strict_order', ts, event_id, " +
+      "event_type = 'signup', event_type = 'click', " +
+      "event_type = 'purchase')", keep = reached)
+
+  /** CH sequenceCount, pattern '(?1).*(?2)': GREEDY non-overlapping
+    * signup→purchase occurrences per user, over users with either event. */
+  private val seqCount = usersPerValue("seq_count",
+    "sequence_count(0, ts, event_id, " +
+      "event_type = 'signup', event_type = 'purchase')", types = pairTypes)
+
+  /** CH sequenceCount, pattern '(?1)(?t<=12h)(?2)': adjacent
+    * signup→purchase pairs at most 12h apart. 12h picked like the
+    * funnel's window: it splits the fixture's pairs into fired and
+    * expired at every test SF. */
+  private val seqCount12h = usersPerValue("seq_count",
+    "sequence_count(43200000000, ts, event_id, " +
+      "event_type = 'signup', event_type = 'purchase')", types = pairTypes)
+
+  /** sequenceNextNode(forward, first_match): per user, the event type
+    * immediately after the FIRST consecutive signup→click pair in the
+    * full stream ('NONE' at stream end; NULL = no pair, out of the
+    * universe). */
+  private val seqNextNode = usersPerValue("next_node",
+    "sequence_next_node(ts, event_id, event_type, " +
+      "event_type = 'signup', event_type = 'click')", keep = found)
+
+  /** retention(cond1, …, condN): per first-signup cohort date, users
+    * returning with a click within 3 days / purchasing within 7 days.
+    * Time enters through the conditions (the CH idiom — `ts <= t0 +
+    * INTERVAL 3 DAYS` predicates against the user's first-signup time),
+    * and r[0] is always 1 on this universe because every user's t0 row
+    * satisfies cond1. One user-keyed min-agg and one user-keyed join +
+    * group riding the same partitioning, O(1) bitmask state per user. */
+  private val retention: Q = (s, d) => {
+    GraftExtensions.register(s)
+    val e = Tables.events(s, d)
+    val t0 = e.filter(col("event_type") === "signup")
+      .groupBy("user_id").agg(min("ts").as("t0"))
+    e.join(t0, "user_id")
+      .groupBy(col("user_id"), col("t0"))
+      .agg(expr(
+        "retention(event_type = 'signup' AND ts = t0, " +
+          "event_type = 'click' AND ts > t0 AND ts <= t0 + INTERVAL 3 DAYS, " +
+          "event_type = 'purchase' AND ts > t0 AND ts <= t0 + INTERVAL 7 DAYS)")
+        .as("r"))
+      .groupBy(to_date(col("t0")).as("cohort_date"))
+      .agg(count(lit(1)).as("n_users"),
+        sum(expr("r[1]")).cast("long").as("n_clicked"),
+        sum(expr("r[2]")).cast("long").as("n_purchased"))
+      .orderBy("cohort_date")
   }
 
-  /** TIME-CHUNKED windowed sequenceCount — the WHALE-SKEW MITIGATION
-    * for the gap-bounded pair count ([[funnelLevelsChunked]]'s recipe
-    * applied to the second decomposable member of the per-user family;
-    * the UNBOUNDED [[sequenceCount]] cannot chunk — lag()-adjacency
-    * reaches arbitrarily far back in time, so its automaton state is
-    * inherently whole-history).
-    *
-    * Correctness argument (spec-pinned equal to
-    * [[sequenceCountWindowed]], incl. randomized corpora): a counted
-    * pair (a, b) has b.ts − a.ts ≤ w, so with chunk length C ≥ w and
-    * each event copied into the PREVIOUS chunk when it falls in the
-    * first w of its own (the funnel's ≤2-copy explode), chunk k's slice
-    * is the time-contiguous window [kC, (k+1)C + w): a pair whose `a`
-    * has primary chunk k lies in the slice together with every stream
-    * event between them, so slice-adjacency == global adjacency for
-    * exactly those pairs (an intermediate event x has a.ts < x.ts <
-    * b.ts < (k+1)C + w, hence primary chunk k or the copied head of
-    * k+1 — always visible). Charging each pair to floor(a.us / C)
-    * counts it exactly once; per-user totals are the SUM of chunk
-    * counts (disjoint charge), not a max.
-    *
-    * Scale shape: one exchange on (user_id, chunk), one window pass per
-    * slice, then a user-keyed sum over per-chunk partials — a bot user
-    * contributes one task per chunk instead of one task holding its
-    * whole history. */
-  def sequenceCountChunked(events: DataFrame, first: Column, second: Column,
-                           windowMicros: Long, chunkMicros: Long,
-                           userCol: String = "user_id", tsCol: String = "ts",
-                           tieBreak: Seq[String] = Seq("event_id")): DataFrame = {
-    require(chunkMicros >= windowMicros,
-      s"chunk ($chunkMicros us) must cover the pair window " +
-        s"($windowMicros us) or a pair could straddle two chunks")
-    val exploded = events.filter(first || second)
-      .withColumn("_tag", when(first, lit("a")).otherwise(lit("b")))
-      .withColumn("_us", unix_micros(col(tsCol)))
-      .withColumn("_k0", floor(col("_us") / chunkMicros).cast("long"))
-      .withColumn("_chunk", explode(
-        when(col("_us") < col("_k0") * chunkMicros + windowMicros,
-          array(col("_k0"), col("_k0") - 1))
-          .otherwise(array(col("_k0")))))
-    val w = Window.partitionBy(userCol, "_chunk")
-      .orderBy(col(tsCol) +: tieBreak.map(col): _*)
-    exploded
-      .withColumn("_prev", lag(col("_tag"), 1).over(w))
-      .withColumn("_pus", lag(col("_us"), 1).over(w))
-      .groupBy(col(userCol).as("user_id"), col("_chunk"))
-      // charge a pair to the chunk OWNING its `a` (primary chunk == this
-      // slice), so the copy in the neighbouring slice never double-counts
-      .agg(sum(when(col("_tag") === "b" && col("_prev") === "a" &&
-          col("_us") <= col("_pus") + windowMicros &&
-          floor(col("_pus") / chunkMicros) === col("_chunk"), 1).otherwise(0))
-        .cast("long").as("_c"))
-      .groupBy("user_id")
-      .agg(sum("_c").cast("long").as("seq_count"))
-  }
-
-  /** General `windowFunnel(window)(stage1, …, stageN)`: per-user maximum
-    * chain level over arbitrary stage predicates — the N-stage library
-    * form behind o_a15. Level ≥ k iff a strictly-increasing-timestamp
-    * chain e1 < … < ek exists with the k stage predicates and
-    * ek.ts <= e1.ts + window (EXISTS-chain semantics; `window = None` ⇒
-    * unbounded, i.e. CH `sequenceMatch('(?1).*(?2)…')` reach).
-    *
-    * Reduction (ONE shuffle, zero joins): for an event e at stage k, the
-    * set of chain starts whose chains reach e is characterized by its
-    * MAXIMUM — if a chain with start t1 reaches e, any larger valid
-    * start t1' also reaches it (the same chain events work; the window
-    * check `ts <= t1' + w` only loosens as t1' grows). So each event
-    * carries one value,
-    *   best_k(e) = max over stage-(k-1) events e' with e'.ts < e.ts
-    *               of best_{k-1}(e'), admitted iff e.ts <= best + w,
-    * a running `max(...)` over a RANGE frame (unboundedPreceding, -1)
-    * on unix_micros(ts) — range (not rows) framing yields the strict
-    * `<` the chain definition demands even under timestamp ties. The
-    * N-1 chained window columns share one partitioning + one sort
-    * (Spark stacks the Window execs with no re-exchange/re-sort), and
-    * the per-user flag aggregate reuses the same user_id partitioning —
-    * one exchange end to end, vs the prior per-level-join formulation's
-    * N shuffled joins (BENCH_NOTES "funnel one-shuffle rewrite"; the
-    * EventAnalyticsSpec brute-force greedy oracle pins equivalence).
-    * (A per-GAP time constraint would break the max-start dominance —
-    * o_a17 uses the explicit window formulation instead.)
-    *
-    * Returns (user_id, funnel_level) for every user with a stage-1 event.
-    */
-  def funnelLevels(events: DataFrame, stages: Seq[Column],
-                   window: Option[Column],
-                   userCol: String = "user_id",
-                   tsCol: String = "ts"): DataFrame = {
-    require(stages.nonEmpty, "funnel needs at least one stage")
-    val n = stages.size
-    val tagged = events
-      .select(col(userCol).as("user_id") +: col(tsCol).as("_ts") +:
-        stages.zipWithIndex.map { case (p, i) => p.as(s"_s$i") }: _*)
-      .filter((0 until n).map(i => col(s"_s$i")).reduce(_ || _))
-      .withColumn("_us", unix_micros(col("_ts")))
-    val pre = Window.partitionBy("user_id").orderBy(col("_us"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    // _c1 = the chain start a stage-1 event offers (its own ts); _ck =
-    // max chain start among level-k chains ending at this stage-k event
-    var cur = tagged.withColumn("_c1", when(col("_s0"), col("_ts")))
-    for (k <- 2 to n) {
-      val best = max(col(s"_c${k - 1}")).over(pre)
-      val admit = window.map(w => col("_ts") <= best + w).getOrElse(lit(true))
-      cur = cur.withColumn(s"_c$k",
-        when(col(s"_s${k - 1}") && best.isNotNull && admit, best))
-    }
-    // levels are monotone (a level-k chain contains a level-(k-1) one):
-    // level = 1 + Σ has-a-level-k-event flags
-    val flags = (2 to n).map(k =>
-      max(when(col(s"_c$k").isNotNull, 1).otherwise(0)).as(s"_h$k"))
-    cur.groupBy("user_id")
-      .agg(max(when(col("_s0"), 1).otherwise(0)).as("_h1"), flags: _*)
-      .filter(col("_h1") === 1)
-      .select(col("user_id"),
-        (2 to n).foldLeft(lit(1): Column)((acc, k) => acc + col(s"_h$k"))
-          .cast("int").as("funnel_level"))
-  }
-
-  /** TIME-CHUNKED windowed funnel — the WHALE-SKEW MITIGATION for the
-    * bounded-window family (SCALE.md round-15 skew certification: a
-    * user holding fraction f of events serializes one task under plain
-    * user_id partitioning; the semantics of a WINDOWED funnel allow
-    * decomposition, so here the partition key is (user_id, time chunk)
-    * and the whale's history splits across chunks — max task tracks the
-    * CHUNK size, not the user size).
-    *
-    * Correctness argument (spec-pinned equal to [[funnelLevels]], incl.
-    * randomized corpora): every admitted chain spans at most `window`
-    * from its stage-1 START (the admit check is `ts <= start + w`), so
-    * with chunk length C ≥ w and chunk k extended to [kC, (k+1)C + w),
-    * a chain starting at t1 ∈ [kC, (k+1)C) lies ENTIRELY inside chunk
-    * k's extension — every true chain is fully visible in the chunk of
-    * its start. Each event lands in its primary chunk ⌊us/C⌋ plus, when
-    * it falls in the first `w` of that chunk, the previous chunk's
-    * overlap tail — ≤ 2 copies per event. A chunk can also see a chain
-    * PREFIX whose start sits in its overlap tail, but everything it
-    * reports corresponds to real events under the real window
-    * constraint, so per-user max over chunks equals the global level
-    * exactly — no overcount possible, no undercount by containment.
-    *
-    * Scale shape: one exchange on (user_id, chunk) (parallelism =
-    * users × chunks), the same stacked-window chain columns inside each
-    * partition, then a user-keyed flag max whose input is already
-    * per-(user, chunk) aggregated — the whale's per-task work drops
-    * from its whole history to one chunk of it. */
-  def funnelLevelsChunked(events: DataFrame, stages: Seq[Column],
-                          windowMicros: Long, chunkMicros: Long,
-                          userCol: String = "user_id",
-                          tsCol: String = "ts"): DataFrame = {
-    require(stages.nonEmpty, "funnel needs at least one stage")
-    require(chunkMicros >= windowMicros,
-      s"chunk ($chunkMicros us) must cover the funnel window " +
-        s"($windowMicros us) or a chain could straddle two chunks")
-    val n = stages.size
-    val tagged = events
-      .select(col(userCol).as("user_id") +: col(tsCol).as("_ts") +:
-        stages.zipWithIndex.map { case (p, i) => p.as(s"_s$i") }: _*)
-      .filter((0 until n).map(i => col(s"_s$i")).reduce(_ || _))
-      .withColumn("_us", unix_micros(col("_ts")))
-      .withColumn("_k0", floor(col("_us") / chunkMicros).cast("long"))
-      // the ≤2-copy explode: primary chunk, plus the previous chunk's
-      // overlap tail when the event falls within `window` of its start
-      .withColumn("_chunk", explode(
-        when(col("_us") < col("_k0") * chunkMicros + windowMicros,
-          array(col("_k0"), col("_k0") - 1))
-          .otherwise(array(col("_k0")))))
-    val pre = Window.partitionBy("user_id", "_chunk").orderBy(col("_us"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    var cur = tagged.withColumn("_c1", when(col("_s0"), col("_us")))
-    for (k <- 2 to n) {
-      val best = max(col(s"_c${k - 1}")).over(pre)
-      cur = cur.withColumn(s"_c$k",
-        when(col(s"_s${k - 1}") && best.isNotNull &&
-          col("_us") <= best + windowMicros, best))
-    }
-    val chunkFlags = (2 to n).map(k =>
-      max(when(col(s"_c$k").isNotNull, 1).otherwise(0)).as(s"_h$k"))
-    val perChunk = cur.groupBy("user_id", "_chunk")
-      .agg(max(when(col("_s0"), 1).otherwise(0)).as("_h1"), chunkFlags: _*)
-    perChunk.groupBy("user_id")
-      .agg(max("_h1").as("_h1"),
-        (2 to n).map(k => max(s"_h$k").as(s"_h$k")): _*)
-      .filter(col("_h1") === 1)
-      .select(col("user_id"),
-        (2 to n).foldLeft(lit(1): Column)((acc, k) => acc + col(s"_h$k"))
-          .cast("int").as("funnel_level"))
-  }
+  /** A sequence_match key over the signup/click/purchase stream, with
+    * 0/1 per signup user. */
+  private def seqMatch(agg: String): Q = usersPerValue("matched",
+    s"CAST($agg AS INT)", types = chainTypes, signupUsers = true)
 
   val queries: Map[String, Q] = Map(
-    // O-A15: windowFunnel(12 hours)(signup -> click -> purchase).
-    // 12h picked because it yields all three levels at every test SF
-    // (7 days saturates: every signup converts).
-    // (Instance of the general [[funnelLevels]] library form; the
-    // unchanged oracle proves the generalization preserved o_a15's
-    // EXISTS-chain semantics.)
-    "o_a15_funnel" -> ((s, d) => {
-      funnelLevels(Tables.events(s, d),
-        Seq(col("event_type") === "signup", col("event_type") === "click",
-          col("event_type") === "purchase"),
-        Some(expr("INTERVAL 12 HOURS")))
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
+    // O-A15: windowFunnel(12h)(signup -> click -> purchase). O-A15e named
+    // the time-chunked whale plan and O-A15f the SQL surface; the
+    // aggregate is the one implementation, so all three run it and
+    // share one oracle.
+    "o_a15_funnel" -> funnel3,
+    "o_a15e_funnel_chunked" -> funnel3,
+    "o_a15f_funnel_sql" -> funnel3,
 
-    // O-A15e: the same 3-stage 12h funnel through the TIME-CHUNKED
-    // decomposition ([[funnelLevelsChunked]], chunk = 24h) — the
-    // whale-skew mitigation as a first-class catalog instance, pinned
-    // to the plain funnel's oracle verbatim: same answer, but the
-    // heavy exchange keys on (user_id, chunk) so one bot user's
-    // history spreads across time chunks instead of one task.
-    "o_a15e_funnel_chunked" -> ((s, d) => {
-      funnelLevelsChunked(Tables.events(s, d),
-        Seq(col("event_type") === "signup", col("event_type") === "click",
-          col("event_type") === "purchase"),
-        windowMicros = 12L * 3600 * 1000000,
-        chunkMicros = 24L * 3600 * 1000000)
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
+    // O-A15c: four stages — signup→view→click→purchase inside 24h.
+    "o_a15c_funnel_4stage" -> usersPerValue("funnel_level",
+      "window_funnel(86400000000, ts, event_type = 'signup', " +
+        "event_type = 'view', event_type = 'click', " +
+        "event_type = 'purchase')", keep = reached),
 
-    // O-A15c: the N-stage general form exercised beyond the hardcoded
-    // 3-stage shape — signup→view→click→purchase inside 24h.
-    "o_a15c_funnel_4stage" -> ((s, d) => {
-      funnelLevels(Tables.events(s, d),
-        Seq(col("event_type") === "signup", col("event_type") === "view",
-          col("event_type") === "click", col("event_type") === "purchase"),
-        Some(expr("INTERVAL 24 HOURS")))
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
-
-    // O-A15b: windowFunnel strict-dedup variant (CH's strict_dedup mode,
-    // [implied] same basis as O-A15). Consecutive-step dedup semantics:
-    // each step's event must be the LAST of its type before the next
-    // step's event — a repeat of stage k's type strictly between step k
-    // and step k+1 breaks the chain. That reading is exactly window-
-    // expressible: the only level-2 chain ending at a click is (last
-    // signup before it, click), and the only level-3 chain ending at a
-    // purchase extends (last click before it); both "last before" values
-    // are running window aggregates over the per-user stream. Ordering is
-    // the (ts, event_id) total order — deterministic under timestamp
-    // ties, pinned identically in the oracle (CH's greedy cursor leaves
+    // O-A15b/h: strict_dedup mode; O-A15d/g: strict_order mode. Ordering
+    // is the (ts, event_id) total order — deterministic under timestamp
+    // ties, pinned identically in the oracles (CH's greedy cursor leaves
     // tie order engine-private; ours is part of the contract).
-    //
-    // Scale shape: ONE shuffle on user_id; both window passes and the
-    // final per-user flags ride the same partitioning (Spark reuses the
-    // exchange); no joins at all — strictly cheaper than the pair-join
-    // funnel at heavy users.
-    "o_a15b_funnel_dedup" -> ((s, d) => {
-      val e = Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "click", "purchase"))
-        .select("user_id", "event_type", "ts", "event_id")
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").asc_nulls_last, col("event_id")) // DuckDB NULLS LAST parity
-      val pre = w.rowsBetween(Window.unboundedPreceding, -1)
-      val winH = expr("INTERVAL 12 HOURS")
-      // invalid-chain sentinel: far enough in the past that `ts <= lc + w`
-      // can never hold for ANY representable data, so "last click had no
-      // valid chain" and "no click at all" both fail level 3 naturally.
-      // Year 1, not 1970: the pipefuzz planted corpora start at epoch 0,
-      // and a purchase within `w` of the epoch spuriously passed the
-      // sentinel check (r16 fuzz catch, seed 23 — the buffered
-      // strict_dedup aggregate correctly rejected it and diverged)
-      val sentinel = lit("0001-01-01 00:00:00").cast("timestamp")
-      val staged = e
-        // ls = last signup before this row (running max == last in row
-        // order, because rows are ordered by ts)
-        .withColumn("ls", max(when(col("event_type") === "signup", col("ts"))).over(pre))
-        // c2 = this click's chain START (the deduped signup) if the
-        // 12h funnel window admits it
-        .withColumn("c2", when(col("event_type") === "click" &&
-          col("ls").isNotNull && col("ts") <= col("ls") + winH, col("ls")))
-        .withColumn("c2m", when(col("event_type") === "click",
-          coalesce(col("c2"), sentinel)))
-      staged
-        // lc = the LAST click before this row, carrying its chain start
-        .withColumn("lc", last(col("c2m"), ignoreNulls = true).over(pre))
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "signup", 1).otherwise(0)).as("has1"),
-          max(when(col("c2").isNotNull, 1).otherwise(0)).as("has2"),
-          max(when(col("event_type") === "purchase" && col("lc").isNotNull &&
-            col("ts") <= col("lc") + winH, 1).otherwise(0)).as("has3"))
-        .filter(col("has1") === 1)
-        .select((lit(1) + col("has2") + col("has3")).as("funnel_level"))
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
-
-    // O-A15d: windowFunnel strict_order mode (CH's strict_order, [implied]
-    // same basis as O-A15). Strict order = no interventions: the chain
-    // must be CONSECUTIVE in the per-user event stream — any other event
-    // type (view, ...) between signup and click, or between click and
-    // purchase, breaks it (CH doc example: A->B->D->C stops at D with
-    // level 2). Consecutiveness turns the chain search into a pure
-    // prefix-match at each signup position: level = 1
-    //   + (next event is a click inside the window)
-    //   + (… and the one after is a purchase inside the window),
-    // all read off lead() over the (ts, event_id) total order. One
-    // user-keyed shuffle, one window pass, zero joins — the cheapest
-    // funnel mode of the three (plain / strict_dedup / strict_order).
-    "o_a15d_funnel_strict" -> ((s, d) => {
-      val e = Tables.events(s, d).select("user_id", "event_type", "ts", "event_id")
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").asc_nulls_last, col("event_id")) // DuckDB NULLS LAST parity
-      val winH = expr("INTERVAL 12 HOURS")
-      val l2 = lead(col("event_type"), 1).over(w) === "click" &&
-        lead(col("ts"), 1).over(w) <= col("ts") + winH
-      val l3 = l2 && lead(col("event_type"), 2).over(w) === "purchase" &&
-        lead(col("ts"), 2).over(w) <= col("ts") + winH
-      e.withColumn("lvl", when(col("event_type") === "signup",
-          lit(1) + when(l2, 1).otherwise(0) + when(l3, 1).otherwise(0)))
-        .groupBy("user_id").agg(max("lvl").as("funnel_level"))
-        .filter(col("funnel_level").isNotNull) // users with no signup
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
-
-    // O-A21: sequenceNextNode(forward, head) analog (CH's "what happens
-    // NEXT after a pattern" — the exploratory sibling of sequenceMatch):
-    // per user, find the FIRST consecutive signup→click pair in stream
-    // order and report the event type immediately after it ('NONE' at
-    // stream end). Distribution of those next-nodes across users. Same
-    // lead()-prefix technique as strict_order: one shuffle, no joins.
-    "o_a21_seq_next_node" -> ((s, d) => {
-      val e = Tables.events(s, d).select("user_id", "event_type", "ts", "event_id")
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").asc_nulls_last, col("event_id")) // DuckDB NULLS LAST parity
-      e.withColumn("n1", lead(col("event_type"), 1).over(w))
-        .withColumn("n2", lead(col("event_type"), 2).over(w))
-        .filter(col("event_type") === "signup" && col("n1") === "click")
-        .groupBy("user_id")
-        .agg(min_by(coalesce(col("n2"), lit("NONE")),
-          struct(col("ts"), col("event_id"))).as("next_node"))
-        .groupBy("next_node").agg(count(lit(1)).as("n_users"))
-        .orderBy("next_node")
-    }),
-
-    // O-A21b: the SQL surface — CH sequenceNextNode(forward, head)
-    // called IN SQL via the `sequence_next_node` aggregate
-    // (functions.SequenceNextNodeAgg): per user, the value of the event
-    // immediately after the FIRST consecutive signup→click pair in the
-    // full stream ('NONE' at stream end; NULL = no pair, filtered out —
-    // the o_a21 matched-users universe). Oracle = o_a21's VERBATIM:
-    // buffered first-adjacent-pair scan vs the one-shuffle lead()
-    // window — two mechanisms, one contract. Buffers every row
-    // (adjacency in the full stream, like strict_order), state capped.
-    "o_a21b_seq_next_node_sql" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d).groupBy("user_id")
-        .agg(expr("sequence_next_node(ts, event_id, event_type, " +
-            "event_type = 'signup', event_type = 'click')")
-          .as("next_node"))
-        .filter(col("next_node").isNotNull)
-        .groupBy("next_node").agg(count(lit(1)).as("n_users"))
-        .orderBy("next_node")
-    }),
-
-    // O-A21c: sequenceNextNode(backward, first_match) — "what happened
-    // BEFORE the pattern": per user, traversal is time-DESCENDING, the
-    // chain is purchase-then-click in traversal order (= a click
-    // immediately before a purchase in time, adjacency in the FULL
-    // stream), first_match = the time-LATEST such pair, and the result
-    // is the value of the event just before the click in time ('NONE'
-    // when the click opens the stream). Oracle: the lag()-window twin —
-    // two mechanisms (buffered reverse scan vs one-shuffle lag), one
-    // contract.
-    "o_a21c_seq_next_node_backward" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d).groupBy("user_id")
-        .agg(expr("sequence_next_node('backward', 'first_match', ts, " +
-            "event_id, event_type, event_type = 'purchase', " +
-            "event_type = 'click')")
-          .as("prev_node"))
-        .filter(col("prev_node").isNotNull)
-        .groupBy("prev_node").agg(count(lit(1)).as("n_users"))
-        .orderBy("prev_node")
-    }),
-
-    // O-A21d: sequenceNextNode(forward, head) — the chain must match at
-    // the stream HEAD: for users whose time-FIRST event is a signup,
-    // what do they do next ('NONE' for the one-event stream)? The
-    // canonical CH head query. head/tail anchor at a fixed position
-    // instead of scanning, completing the base surface (tail/last_match
-    // are spec-pinned vs a brute-force reference on randomized tied
-    // streams).
-    "o_a21d_seq_next_node_head" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d).groupBy("user_id")
-        .agg(expr("sequence_next_node('forward', 'head', ts, event_id, " +
-            "event_type, event_type = 'signup')")
-          .as("next_node"))
-        .filter(col("next_node").isNotNull)
-        .groupBy("next_node").agg(count(lit(1)).as("n_users"))
-        .orderBy("next_node")
-    }),
-
-    // O-A21e: CH's FULL sequenceNextNode signature — the base_condition
-    // positional argument (functions.SequenceNextNodeAgg, registered as
-    // sequence_next_node_base) gates the ANCHOR event: per user, the
-    // first adjacent signup→click pair whose SIGNUP also carries
-    // value > 50 ("chains starting from a qualified event", the CH
-    // base_condition idiom), reporting the value of the event just
-    // after it. NULL value reads false like the chain conditions.
-    // Oracle: o_a21's lead() window with the anchor predicate widened
-    // by the base condition — two mechanisms, one contract.
-    "o_a21e_seq_next_node_base" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d).groupBy("user_id")
-        .agg(expr("sequence_next_node_base('forward', 'first_match', ts, " +
-            "event_id, event_type, value > 50, " +
-            "event_type = 'signup', event_type = 'click')")
-          .as("next_node"))
-        .filter(col("next_node").isNotNull)
-        .groupBy("next_node").agg(count(lit(1)).as("n_users"))
-        .orderBy("next_node")
-    }),
-
-    // O-A17: sequenceMatch('(?1)(?t<=3600)(?2).*(?3)') analog (CH event
-    // pattern matching, the sibling of windowFunnel over the same event
-    // tables): per signup user, 1 iff a click occurs within 1 hour AFTER
-    // a signup and a purchase occurs any time after that click. The
-    // EXISTS chain reads straight off two running window aggregates:
-    // last-signup-before (within the hour) and any-purchase-after, both
-    // strict in ts. One user_id shuffle, no joins.
-    "o_a17_seqmatch" -> ((s, d) => {
-      val e = Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "click", "purchase"))
-        .select("user_id", "event_type", "ts", "event_id")
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").asc_nulls_last, col("event_id")) // DuckDB NULLS LAST parity
-      // "last signup STRICTLY before" is a value-based RANGE frame, not
-      // a ROWS frame: with ROWS, a signup TIED to the click's ts (and
-      // sorted earlier) becomes the frame max and fails `< ts`, masking
-      // an older in-window signup that satisfies the EXISTS chain.
-      // RANGE(…, -1) over unix_micros admits exactly the strictly-earlier
-      // rows, so the frame max IS the latest strict predecessor.
-      val wRange = Window.partitionBy("user_id")
-        .orderBy(unix_micros(col("ts")).asc_nulls_last)
-      val lastSignup = max(when(col("event_type") === "signup", col("ts")))
-        .over(wRange.rangeBetween(Window.unboundedPreceding, -1))
-      // "any purchase strictly after this row" as a GROWING frame over
-      // the REVERSED order — not rowsBetween(1, unboundedFollowing):
-      // Spark's UnboundedFollowing frame recomputes the aggregate from
-      // scratch at every row (O(rows²) per partition), which the whale
-      // skew sweep measured as a 55× straggler (10.8 s task vs 195 ms
-      // median at a 10 % whale). The reversed growing frame is the same
-      // row set, evaluated incrementally — O(rows log rows) for the
-      // extra in-partition sort, same single user_id exchange.
-      val wDesc = Window.partitionBy("user_id")
-        .orderBy(col("ts").desc_nulls_first, col("event_id").desc)
-      val purchaseAfter = max(when(col("event_type") === "purchase", col("ts")))
-        .over(wDesc.rowsBetween(Window.unboundedPreceding, -1))
-      e.withColumn("mid", when(col("event_type") === "click" &&
-          lastSignup >= col("ts") - expr("INTERVAL 1 HOUR") &&
-          purchaseAfter > col("ts"), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "signup", 1).otherwise(0)).as("has_signup"),
-          max(col("mid")).as("matched"))
-        .filter(col("has_signup") === 1)
-        .groupBy("matched").agg(count(lit(1)).as("n_users"))
-        .orderBy("matched")
-    }),
-
-    // O-A18: sequenceCount('(?1).*(?2)') analog — GREEDY non-overlapping
-    // signup→purchase occurrences per user. The greedy automaton (arm on
-    // signup, fire+disarm on purchase) collapses to a lag(): over the
-    // per-user signup/purchase stream in (ts, event_id) order, a purchase
-    // fires iff its immediate predecessor is a signup. Proof: if the
-    // predecessor is a signup the machine is armed (that signup armed
-    // it); if the predecessor is a purchase, that purchase either fired
-    // (disarming) or was itself unarmed — either way no signup has
-    // occurred since the last fire, so the machine is unarmed. One
-    // user_id shuffle, one window pass.
-    // (Instance of the general [[sequenceCount]] library form; the
-    // unchanged oracle proves the extraction preserved semantics.)
-    "o_a18_seqcount" -> ((s, d) => {
-      sequenceCount(Tables.events(s, d),
-        col("event_type") === "signup", col("event_type") === "purchase")
-        .groupBy("seq_count").agg(count(lit(1)).as("n_users"))
-        .orderBy("seq_count")
-    }),
-
-    // O-A18b: sequenceCount('(?1)(?t<=12h)(?2)') — the time-constrained
-    // pattern (adjacent signup→purchase pairs at most 12h apart). 12h
-    // picked like o_a15's window: it splits the fixture's pairs into
-    // fired and expired at every test SF.
-    "o_a18b_seqcount_windowed" -> ((s, d) => {
-      sequenceCountWindowed(Tables.events(s, d),
-        col("event_type") === "signup", col("event_type") === "purchase",
-        windowMicros = 12L * 3600 * 1000000)
-        .groupBy("seq_count").agg(count(lit(1)).as("n_users"))
-        .orderBy("seq_count")
-    }),
-
-    // O-A18c: the same query through the whale-safe time-chunked plan
-    // (24h chunks ≥ the 12h pair window). Oracle = o_a18b's VERBATIM:
-    // observational equality with the plain windowed count IS the
-    // chunked form's contract (the o_a15e discipline).
-    "o_a18c_seqcount_chunked" -> ((s, d) => {
-      sequenceCountChunked(Tables.events(s, d),
-        col("event_type") === "signup", col("event_type") === "purchase",
-        windowMicros = 12L * 3600 * 1000000,
-        chunkMicros = 24L * 3600 * 1000000)
-        .groupBy("seq_count").agg(count(lit(1)).as("n_users"))
-        .orderBy("seq_count")
-    }),
-
-    // O-A15f: the SQL surface — CH windowFunnel(12h)(signup, click,
-    // purchase) called IN SQL via the `window_funnel` aggregate
-    // (functions.WindowFunnelAgg, session extension). Oracle = the
-    // plain funnel's VERBATIM: the parametric aggregate must be
-    // observationally identical to the stacked-window funnelLevels —
-    // two entirely different mechanisms (per-group buffered dominance
-    // pass vs one-shuffle RANGE-frame chain columns), one contract.
-    "o_a15f_funnel_sql" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d).groupBy("user_id")
-        .agg(expr(
-          "window_funnel(43200000000, ts, event_type = 'signup', " +
-            "event_type = 'click', event_type = 'purchase')")
-          .as("funnel_level"))
-        .filter(col("funnel_level") >= 1)
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
-
-    // O-A18d/e: the SQL surface — CH sequenceCount('(?1).*(?2)') and the
-    // time-constrained '(?1)(?t<=12h)(?2)' called IN SQL via the
-    // `sequence_count` aggregate (functions.SequenceCountAgg). Oracles =
-    // the library forms' VERBATIM (the funnel3OracleSql discipline):
-    // buffered lag-collapse at eval time vs the one-shuffle lag() window
-    // — two mechanisms, one contract per window. The pre-filter mirrors
-    // the oracles' WITH clause (users with neither event are out of the
-    // result universe on both sides).
-    "o_a18d_seqcount_sql" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "purchase"))
-        .groupBy("user_id")
-        .agg(expr("sequence_count(0, ts, event_id, " +
-            "event_type = 'signup', event_type = 'purchase')")
-          .as("seq_count"))
-        .groupBy("seq_count").agg(count(lit(1)).as("n_users"))
-        .orderBy("seq_count")
-    }),
-
-    "o_a18e_seqcount_sql_windowed" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "purchase"))
-        .groupBy("user_id")
-        .agg(expr("sequence_count(43200000000, ts, event_id, " +
-            "event_type = 'signup', event_type = 'purchase')")
-          .as("seq_count"))
-        .groupBy("seq_count").agg(count(lit(1)).as("n_users"))
-        .orderBy("seq_count")
-    }),
-
-    // O-A17b: the SQL surface — the library sequenceMatch (funnel
-    // completion, optional chain-start window) called IN SQL via the
-    // `sequence_match` aggregate, at the 12h bound (the unbounded
-    // `.*` mode exists — window_us = 0 — but SATURATES this fixture's
-    // long per-user streams to all-matched, so the catalog pins the
-    // bounded instance where the differential discriminates; the
-    // unbounded mode is spec-pinned against the library form). The
-    // result universe is stage-1 users (the o_a17 convention), so a
-    // has-signup flag rides the same aggregate pass. The per-GAP
-    // o_a17 pattern stays on its dedicated formulation — gap
-    // constraints break the max-start dominance this aggregate shares
-    // with window_funnel.
-    "o_a17b_seqmatch_sql" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "click", "purchase"))
-        .groupBy("user_id")
-        .agg(
-          expr("sequence_match(43200000000, ts, event_type = 'signup', " +
-              "event_type = 'click', event_type = 'purchase')")
-            .cast("int").as("matched"),
-          max(when(col("event_type") === "signup", 1).otherwise(0)).as("_h"))
-        .filter(col("_h") === 1)
-        .groupBy("matched").agg(count(lit(1)).as("n_users"))
-        .orderBy("matched")
-    }),
-
-    // O-A15g/h: the CH MODE surface in SQL — windowFunnel(w,
-    // 'strict_order') / (w, 'strict_dedup') via the mode-dispatched
-    // `window_funnel(w_us, 'mode', ts, tie, cond…)` aggregate
-    // (functions.WindowFunnelModeAgg). Oracles = o_a15d's / o_a15b's
-    // VERBATIM: the buffered row-order eval vs the stacked lead()/
-    // running-window plans — two mechanisms per mode, one contract.
-    // strict_order runs over ALL events (interventions of any type
-    // break the chain, so the aggregate buffers breakers too);
-    // strict_dedup over the condition types only, like o_a15b.
-    "o_a15g_funnel_sql_strict" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d).groupBy("user_id")
-        .agg(expr(
-          "window_funnel(43200000000, 'strict_order', ts, event_id, " +
-            "event_type = 'signup', event_type = 'click', " +
-            "event_type = 'purchase')")
-          .as("funnel_level"))
-        .filter(col("funnel_level") >= 1)
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
-
-    "o_a15h_funnel_sql_dedup" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "click", "purchase"))
-        .groupBy("user_id")
-        .agg(expr(
-          "window_funnel(43200000000, 'strict_dedup', ts, event_id, " +
-            "event_type = 'signup', event_type = 'click', " +
-            "event_type = 'purchase')")
-          .as("funnel_level"))
-        .filter(col("funnel_level") >= 1)
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
+    "o_a15b_funnel_dedup" -> funnelDedup,
+    "o_a15h_funnel_sql_dedup" -> funnelDedup,
+    "o_a15d_funnel_strict" -> funnelStrict,
+    "o_a15g_funnel_sql_strict" -> funnelStrict,
 
     // O-A15i: COMBINED modes — windowFunnel(w, 'strict_order,
     // strict_dedup') (CH accepts comma-joined modes): the consecutive
@@ -721,167 +173,193 @@ object EventAnalytics {
     // Discriminating needs OVERLAPPING conditions (stage 3 here accepts
     // click OR purchase): signup→click→click reads level 3 under
     // strict_order alone but the second click repeats the matched
-    // cond2 and interrupts at 2 under the combination. Oracle: the
-    // o_a15d lead() plan with the repeat-exclusion predicate folded in
-    // (n2 matching cond2 is excluded, so step 3 nets to purchase).
-    "o_a15i_funnel_sql_combined" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d).groupBy("user_id")
-        .agg(expr(
-          "window_funnel(43200000000, 'strict_order,strict_dedup', ts, " +
-            "event_id, event_type = 'signup', event_type = 'click', " +
-            "event_type IN ('click', 'purchase'))")
-          .as("funnel_level"))
-        .filter(col("funnel_level") >= 1)
-        .groupBy("funnel_level").agg(count(lit(1)).as("n_users"))
-        .orderBy("funnel_level")
-    }),
+    // cond2 and interrupts at 2 under the combination.
+    "o_a15i_funnel_sql_combined" -> usersPerValue("funnel_level",
+      "window_funnel(43200000000, 'strict_order,strict_dedup', ts, " +
+        "event_id, event_type = 'signup', event_type = 'click', " +
+        "event_type IN ('click', 'purchase'))", keep = reached),
 
-    // O-A17c: the FULL CH pattern grammar — per-gap time bounds between
-    // arbitrary steps, '(?1)(?t<=43200)(?2)(?t>600)(?3)': a click
-    // DIRECTLY following the signup in the condition-filtered stream
-    // (CH adjacency — an intervening signup/click/purchase breaks it)
-    // within 12h, then a purchase directly after the click and MORE
-    // than 10 minutes later. Neither bound is a chain-start window, so
-    // the funnel-completion subset (o_a17b) cannot express this; the
-    // buffered DP (functions.SequenceMatchPatternAgg) runs the
-    // automaton per group. Result universe: stage-1 users (the o_a17
-    // convention). One user-keyed exchange; state capped by
-    // ParametricAgg.
-    "o_a17c_seqmatch_gaps" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "click", "purchase"))
-        .groupBy("user_id")
-        .agg(
-          expr("sequence_match('(?1)(?t<=43200)(?2)(?t>600)(?3)', ts, " +
-              "event_id, event_type = 'signup', event_type = 'click', " +
-              "event_type = 'purchase')")
-            .cast("int").as("matched"),
-          max(when(col("event_type") === "signup", 1).otherwise(0)).as("_h"))
-        .filter(col("_h") === 1)
-        .groupBy("matched").agg(count(lit(1)).as("n_users"))
-        .orderBy("matched")
-    }),
+    // O-A21/b: sequenceNextNode(forward, first_match) — CH's "what
+    // happens NEXT after a pattern", the exploratory sibling of
+    // sequenceMatch. Buffers every row (adjacency in the full stream,
+    // like strict_order).
+    "o_a21_seq_next_node" -> seqNextNode,
+    "o_a21b_seq_next_node_sql" -> seqNextNode,
+
+    // O-A21c: sequenceNextNode(backward, first_match) — "what happened
+    // BEFORE the pattern": per user, traversal is time-DESCENDING, the
+    // chain is purchase-then-click in traversal order (= a click
+    // immediately before a purchase in time, adjacency in the FULL
+    // stream), first_match = the time-LATEST such pair, and the result
+    // is the value of the event just before the click in time ('NONE'
+    // when the click opens the stream).
+    "o_a21c_seq_next_node_backward" -> usersPerValue("prev_node",
+      "sequence_next_node('backward', 'first_match', ts, event_id, " +
+        "event_type, event_type = 'purchase', event_type = 'click')",
+      keep = col("prev_node").isNotNull),
+
+    // O-A21d: sequenceNextNode(forward, head) — the chain must match at
+    // the stream HEAD: for users whose time-FIRST event is a signup,
+    // what do they do next ('NONE' for the one-event stream)? The
+    // canonical CH head query (tail/last_match are spec-pinned vs a
+    // brute-force reference on randomized tied streams).
+    "o_a21d_seq_next_node_head" -> usersPerValue("next_node",
+      "sequence_next_node('forward', 'head', ts, event_id, " +
+        "event_type, event_type = 'signup')", keep = found),
+
+    // O-A21e: CH's FULL sequenceNextNode signature — the base_condition
+    // positional argument (registered as sequence_next_node_base) gates
+    // the ANCHOR event: the first adjacent signup→click pair whose
+    // SIGNUP also carries value > 50 ("chains starting from a qualified
+    // event"). NULL value reads false like the chain conditions.
+    "o_a21e_seq_next_node_base" -> usersPerValue("next_node",
+      "sequence_next_node_base('forward', 'first_match', ts, " +
+        "event_id, event_type, value > 50, " +
+        "event_type = 'signup', event_type = 'click')", keep = found),
+
+    // O-A17: per signup user, 1 iff a click occurs within 1 hour AFTER
+    // a signup and a purchase occurs any time after that click — an
+    // EXISTS chain strict in ts at both steps. The pattern grammar
+    // chains in (ts, tie) order and lets tied events chain with gap 0,
+    // so the tie column sorts clicks BEFORE signups and purchases at an
+    // equal ts: a signup tied to a click then follows it and cannot
+    // open its chain, which makes '(?t<=3600)' the strict 0 < gap <= 1h
+    // bound, while '(?t>0)' makes the purchase strictly later. Ties
+    // within one type, or between signup and purchase, are never steps
+    // of one gap, so their order does not matter.
+    "o_a17_seqmatch" -> seqMatch(
+      "sequence_match('(?1)(?t<=3600).*(?2)(?t>0).*(?3)', ts, " +
+        "CASE WHEN event_type = 'click' THEN 0L ELSE 1L END, " +
+        "event_type = 'signup', event_type = 'click', " +
+        "event_type = 'purchase')"),
+
+    // O-A17b: funnel completion at the 12h chain-start bound. The
+    // unbounded `.*` mode exists (window_us = 0) but SATURATES this
+    // fixture's long per-user streams to all-matched, so the catalog
+    // pins the bounded instance where the differential discriminates.
+    "o_a17b_seqmatch_sql" -> seqMatch(
+      "sequence_match(43200000000, ts, event_type = 'signup', " +
+        "event_type = 'click', event_type = 'purchase')"),
+
+    // O-A17c: the FULL CH pattern grammar — per-gap time bounds,
+    // '(?1)(?t<=43200)(?2)(?t>600)(?3)': a click DIRECTLY following the
+    // signup in the condition-filtered stream (CH adjacency — an
+    // intervening signup/click/purchase breaks it) within 12h, then a
+    // purchase directly after the click and MORE than 10 minutes later.
+    // Neither bound is a chain-start window, so the funnel-completion
+    // form (o_a17b) cannot express this.
+    "o_a17c_seqmatch_gaps" -> seqMatch(
+      "sequence_match('(?1)(?t<=43200)(?2)(?t>600)(?3)', ts, " +
+        "event_id, event_type = 'signup', event_type = 'click', " +
+        "event_type = 'purchase')"),
 
     // O-A17d: strict-next '.' — '(?1).*(?2)(?t<=14400).(?3)': a signup
     // anywhere before a click, then a purchase with EXACTLY ONE
     // buffered event between it and the click ('.' matches one
     // condition-matching event; rows matching no condition are
-    // invisible, the CH ignore rule) and at most 4h later (the gap
-    // bound composes with the positional one — the unbounded '.'
-    // saturates these long per-user streams to all-matched, so the
-    // catalog pins the composed instance where the differential
-    // discriminates). Positional constraints are outside the funnel
-    // subset's reach; same stage-1 universe and shuffle shape as
-    // o_a17c.
-    "o_a17d_seqmatch_strictnext" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "click", "purchase"))
-        .groupBy("user_id")
-        .agg(
-          expr("sequence_match('(?1).*(?2)(?t<=14400).(?3)', ts, event_id, " +
-              "event_type = 'signup', event_type = 'click', " +
-              "event_type = 'purchase')")
-            .cast("int").as("matched"),
-          max(when(col("event_type") === "signup", 1).otherwise(0)).as("_h"))
-        .filter(col("_h") === 1)
-        .groupBy("matched").agg(count(lit(1)).as("n_users"))
-        .orderBy("matched")
-    }),
+    // invisible, the CH ignore rule) and at most 4h later (the
+    // unbounded '.' saturates these long per-user streams).
+    "o_a17d_seqmatch_strictnext" -> seqMatch(
+      "sequence_match('(?1).*(?2)(?t<=14400).(?3)', ts, event_id, " +
+        "event_type = 'signup', event_type = 'click', " +
+        "event_type = 'purchase')"),
 
     // O-A17e: pattern-grammar NEGATION — '(?1)(?!2)(?t<=14400).*(?3)':
     // a purchase at most 4h after a signup with NO click strictly
     // between them (the churn-style "X not followed by Y before Z"
-    // query; the r16 parser rejected (?!N) loudly — now the feasible-set
-    // DP tracks it as a running reset in the same O(events × steps)
-    // pass). The 4h bound keeps the fixture discriminating (the
-    // unbounded form saturates these long per-user streams, the o_a17d
-    // lesson). Oracle: the last-signup-or-click window twin — a
-    // purchase matches iff the LATEST preceding signup/click is a
-    // signup within the bound, because a click kills every earlier
-    // signup and among later signups the latest has the smallest gap.
-    // Stage-1 universe, one user-keyed exchange, ParametricAgg-capped.
-    "o_a17e_seqmatch_negation" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      Tables.events(s, d)
-        .filter(col("event_type").isin("signup", "click", "purchase"))
-        .groupBy("user_id")
-        .agg(
-          expr("sequence_match('(?1)(?!2)(?t<=14400).*(?3)', ts, event_id, " +
-              "event_type = 'signup', event_type = 'click', " +
-              "event_type = 'purchase')")
-            .cast("int").as("matched"),
-          max(when(col("event_type") === "signup", 1).otherwise(0)).as("_h"))
-        .filter(col("_h") === 1)
-        .groupBy("matched").agg(count(lit(1)).as("n_users"))
-        .orderBy("matched")
-    }),
+    // query). The 4h bound keeps the fixture discriminating.
+    "o_a17e_seqmatch_negation" -> seqMatch(
+      "sequence_match('(?1)(?!2)(?t<=14400).*(?3)', ts, event_id, " +
+        "event_type = 'signup', event_type = 'click', " +
+        "event_type = 'purchase')"),
 
-    // O-A16b: the SQL surface — CH retention(cond1, …, condN) called IN
-    // SQL via the `retention` aggregate (functions.RetentionAgg),
-    // completing the parametric event-analytics quartet. Same cohort
-    // report as o_a16, oracle shared VERBATIM: time enters through the
-    // conditions (the CH idiom — `ts <= t0 + INTERVAL 3 DAYS` predicates
-    // against the user's first-signup time), and r[0] is always 1 on
-    // this universe because every user's t0 row satisfies cond1.
-    // Scale shape: one user-keyed min-agg, one user-keyed join + group
-    // riding the same partitioning, O(1) bitmask state per user (no
-    // event buffering — the one parametric aggregate with no whale
-    // trade at all).
-    "o_a16b_retention_sql" -> ((s, d) => {
-      graft.functions.GraftExtensions.register(s)
-      val e = Tables.events(s, d)
-      val t0 = e.filter(col("event_type") === "signup")
-        .groupBy("user_id").agg(min("ts").as("t0"))
-      e.join(t0, "user_id")
-        .groupBy(col("user_id"), col("t0"))
-        .agg(expr(
-          "retention(event_type = 'signup' AND ts = t0, " +
-            "event_type = 'click' AND ts > t0 AND ts <= t0 + INTERVAL 3 DAYS, " +
-            "event_type = 'purchase' AND ts > t0 AND ts <= t0 + INTERVAL 7 DAYS)")
-          .as("r"))
-        .groupBy(to_date(col("t0")).as("cohort_date"))
-        .agg(count(lit(1)).as("n_users"),
-          sum(expr("r[1]")).cast("long").as("n_clicked"),
-          sum(expr("r[2]")).cast("long").as("n_purchased"))
-        .orderBy("cohort_date")
-    }),
+    // O-A18/d: CH sequenceCount, pattern '(?1).*(?2)'; O-A18b/c/e: the
+    // time-constrained '(?1)(?t<=12h)(?2)'. O-A18c named the
+    // time-chunked whale plan, O-A18d/e the SQL surface.
+    "o_a18_seqcount" -> seqCount,
+    "o_a18d_seqcount_sql" -> seqCount,
+    "o_a18b_seqcount_windowed" -> seqCount12h,
+    "o_a18c_seqcount_chunked" -> seqCount12h,
+    "o_a18e_seqcount_sql_windowed" -> seqCount12h,
 
-    // O-A16: retention — per first-signup cohort date, users returning
-    // with a click within 3 days / purchasing within 7 days.
-    "o_a16_retention" -> ((s, d) => {
-      val first = stage(s, d, "signup")
-        .groupBy("user_id").agg(min("ts").as("t0"))
-      val click = stage(s, d, "click")
-      val purchase = stage(s, d, "purchase")
-      val flags = first.as("f")
-        .join(click.as("c"),
-          col("c.user_id") === col("f.user_id") &&
-            col("c.ts") > col("f.t0") &&
-            col("c.ts") <= col("f.t0") + expr("INTERVAL 3 DAYS"), "left")
-        .groupBy(col("f.user_id").as("user_id"), col("f.t0").as("t0"))
-        .agg(max(when(col("c.ts").isNotNull, 1).otherwise(0)).as("clicked"))
-        .as("fc")
-        .join(purchase.as("p"),
-          col("p.user_id") === col("fc.user_id") &&
-            col("p.ts") > col("fc.t0") &&
-            col("p.ts") <= col("fc.t0") + expr("INTERVAL 7 DAYS"), "left")
-        .groupBy(col("fc.user_id"), col("fc.t0"), col("fc.clicked"))
-        .agg(max(when(col("p.ts").isNotNull, 1).otherwise(0)).as("purchased"))
-      flags
-        .groupBy(to_date(col("t0")).as("cohort_date"))
-        .agg(count(lit(1)).as("n_users"),
-          sum("clicked").as("n_clicked"),
-          sum("purchased").as("n_purchased"))
-        .orderBy("cohort_date")
-    })
+    // O-A16/b: cohort retention.
+    "o_a16_retention" -> retention,
+    "o_a16b_retention_sql" -> retention
   )
 
-  /** The 3-stage 12h funnel oracle — shared by o_a15_funnel and the
-    * chunked o_a15e (EQUALITY with the plain funnel IS the chunked
-    * form's contract, so they must share one oracle verbatim). */
+  /** In-memory brute-force references for the chain contracts, over one
+    * user's events sorted by (ts, event_id). They share no code with the
+    * SQL aggregates, so `graft.FuzzParametric` and the specs use them as
+    * the oracle of `window_funnel`, `sequence_match` and
+    * `sequence_count` at any window. The funnel search is quadratic per
+    * user: meant for corpora of a few thousand events. */
+  private[graft] object Reference {
+    final case class Event(us: Long, id: Long, kind: String)
+
+    /** Per-user events of `df` (user_id, ts, event_id, event_type) in
+      * (ts, event_id) order; rows with a NULL ts are skipped, as the
+      * aggregates skip them. */
+    def byUser(df: DataFrame): Map[Long, IndexedSeq[Event]] =
+      df.select(col("user_id"), unix_micros(col("ts")), col("event_id"),
+          col("event_type"))
+        .collect()
+        .filter(r => !r.isNullAt(1))
+        .groupBy(_.getLong(0))
+        .map { case (u, rs) =>
+          u -> rs.map(r => Event(r.getLong(1), r.getLong(2), r.getString(3)))
+            .sortBy(e => (e.us, e.id)).toIndexedSeq
+        }
+
+    /** EXISTS-chain funnel level: the largest k such that events of
+      * `stages(0)` … `stages(k-1)` exist with strictly increasing ts and
+      * the last within `window` micros of the first (None = unbounded);
+      * 0 without a stage-1 event. For each chain start it extends
+      * greedily with the earliest feasible event per stage, which is
+      * optimal: an earlier step only widens the choices of the next. */
+    def chainLevel(evs: Seq[Event], stages: Seq[String],
+                   window: Option[Long]): Int = {
+      val byStage = stages.map(st => evs.filter(_.kind == st).map(_.us))
+      byStage.head.map { t1 =>
+        val limit = window.fold(Long.MaxValue)(t1 + _)
+        var t = t1
+        var level = 1
+        var open = true
+        for (cand <- byStage.tail if open)
+          cand.find(us => us > t && us <= limit) match {
+            case Some(us) => t = us; level += 1
+            case None => open = false
+          }
+        level
+      }.maxOption.getOrElse(0)
+    }
+
+    /** sequence_match's funnel-completion form: the chain reaches the
+      * last stage. */
+    def chainMatched(evs: Seq[Event], stages: Seq[String],
+                     window: Option[Long]): Boolean =
+      chainLevel(evs, stages, window) == stages.size
+
+    /** The greedy sequenceCount automaton over the `first`/`second`
+      * events: `first` arms (a later `first` re-arms at its own time),
+      * `second` fires when armed within `window` micros of the arming
+      * event (None = unbounded) and always disarms. */
+    def pairCount(evs: Seq[Event], first: String, second: String,
+                  window: Option[Long]): Long = {
+      var armedAt = Option.empty[Long]
+      var n = 0L
+      evs.foreach { e =>
+        if (e.kind == first) armedAt = Some(e.us)
+        else if (e.kind == second) {
+          if (armedAt.exists(a => window.forall(e.us <= a + _))) n += 1
+          armedAt = None
+        }
+      }
+      n
+    }
+  }
+
+  /** The 3-stage 12h funnel oracle — shared by o_a15_funnel, o_a15e
+    * and o_a15f, which run one query. */
   private val funnel3OracleSql =
       """WITH s AS (SELECT user_id, ts FROM events WHERE event_type = 'signup'),
             c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
@@ -902,9 +380,15 @@ object EventAnalytics {
          FROM u LEFT JOIN l2 USING (user_id) LEFT JOIN l3 USING (user_id)
          GROUP BY funnel_level ORDER BY funnel_level"""
 
-  /** The unbounded greedy pair-count oracle — shared by o_a18 and the
-    * SQL-surface o_a18d (the aggregate must be observationally
-    * identical to the library form). */
+  /** The unbounded greedy pair-count oracle — shared by o_a18 and
+    * o_a18d. The greedy automaton (arm on signup, fire+disarm on
+    * purchase) collapses to a lag(): over the per-user signup/purchase
+    * stream in (ts, event_id) order, a purchase fires iff its immediate
+    * predecessor is a signup. Proof: if the predecessor is a signup the
+    * machine is armed (that signup armed it); if the predecessor is a
+    * purchase, that purchase either fired (disarming) or was itself
+    * unarmed — either way no signup has occurred since the last fire,
+    * so the machine is unarmed. */
   private val seqcountOracleSql =
       """WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
                     WHERE event_type IN ('signup','purchase')),
@@ -920,10 +404,9 @@ object EventAnalytics {
          GROUP BY seq_count ORDER BY seq_count"""
 
   /** The 12h-windowed signup→purchase pair-count oracle — shared by
-    * o_a18b, the chunked o_a18c AND the SQL-surface o_a18e (EQUALITY
-    * with the plain windowed count IS each form's contract, so they
-    * must share one oracle verbatim — the funnel3OracleSql
-    * discipline). */
+    * o_a18b, o_a18c and o_a18e. The gap bound only FILTERS fired pairs,
+    * it never re-arms, so the lag() collapse carries over with one
+    * extra lag(ts). */
   private val seqcount12hOracleSql =
       """WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
                     WHERE event_type IN ('signup','purchase')),
@@ -941,8 +424,7 @@ object EventAnalytics {
          SELECT seq_count, COUNT(*) AS n_users FROM u
          GROUP BY seq_count ORDER BY seq_count"""
 
-  /** The first-pair next-node oracle — shared by o_a21 and the
-    * SQL-surface aggregate o_a21b. */
+  /** The first-pair next-node oracle — shared by o_a21 and o_a21b. */
   private val seqNextNodeOracleSql =
       """WITH p AS (
            SELECT user_id, event_type, ts, event_id,
@@ -997,8 +479,13 @@ object EventAnalytics {
          SELECT next_node, COUNT(*) AS n_users FROM m
          GROUP BY 1 ORDER BY 1"""
 
-  /** The strict_dedup funnel oracle — shared by o_a15b and the
-    * SQL-surface mode aggregate o_a15h. */
+  /** The strict_dedup funnel oracle — shared by o_a15b and o_a15h.
+    * The dedup reading is window-expressible: the only level-2 chain
+    * ending at a click is (last signup before it, click), and the only
+    * level-3 chain ending at a purchase extends (last click before it).
+    * The invalid-chain sentinel is year 1, not 1970: the pipefuzz
+    * planted corpora start at epoch 0, and a purchase within the window
+    * of an epoch sentinel spuriously passed (r16 fuzz catch, seed 23). */
   private val funnelDedupOracleSql =
       """WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
                     WHERE event_type IN ('signup','click','purchase')),
@@ -1030,8 +517,9 @@ object EventAnalytics {
          SELECT 1 + has2 + has3 AS funnel_level, COUNT(*) AS n_users
          FROM u WHERE has1 = 1 GROUP BY 1 ORDER BY 1"""
 
-  /** The strict_order funnel oracle — shared by o_a15d and the
-    * SQL-surface mode aggregate o_a15g. */
+  /** The strict_order funnel oracle — shared by o_a15d and o_a15g.
+    * Consecutiveness turns the chain search into a prefix match at each
+    * signup, read off lead() over the (ts, event_id) total order. */
   private val funnelStrictOracleSql =
       """WITH p AS (
            SELECT user_id, event_type, ts, event_id,
@@ -1056,9 +544,8 @@ object EventAnalytics {
          WHERE funnel_level IS NOT NULL
          GROUP BY funnel_level ORDER BY funnel_level"""
 
-  /** The cohort-retention oracle — shared by o_a16 and the SQL-surface
-    * o_a16b (the parametric aggregate must be observationally identical
-    * to the join formulation). */
+  /** The cohort-retention oracle — shared by o_a16 and o_a16b: the
+    * join formulation of the retention aggregate's report. */
   private val retentionOracleSql =
       """WITH f AS (
            SELECT user_id, MIN(ts) AS t0 FROM events
@@ -1082,13 +569,7 @@ object EventAnalytics {
 
   val oracles: Map[String, String] = Map(
     "o_a15_funnel" -> funnel3OracleSql,
-
-    // same oracle VERBATIM: the chunked decomposition must be
-    // observationally identical to the plain windowed funnel
     "o_a15e_funnel_chunked" -> funnel3OracleSql,
-
-    // same oracle VERBATIM: the SQL-surface parametric aggregate must
-    // be observationally identical to funnelLevels
     "o_a15f_funnel_sql" -> funnel3OracleSql,
 
     "o_a15c_funnel_4stage" ->
@@ -1114,15 +595,8 @@ object EventAnalytics {
          FROM u GROUP BY 1 ORDER BY 1""",
 
     "o_a15b_funnel_dedup" -> funnelDedupOracleSql,
-
-    // same oracle VERBATIM: the SQL-surface mode aggregate must be
-    // observationally identical to the stacked-window dedup funnel
     "o_a15h_funnel_sql_dedup" -> funnelDedupOracleSql,
-
     "o_a15d_funnel_strict" -> funnelStrictOracleSql,
-
-    // same oracle VERBATIM: the SQL-surface strict_order mode must be
-    // observationally identical to the lead()-prefix funnel
     "o_a15g_funnel_sql_strict" -> funnelStrictOracleSql,
 
     // combined strict_order + dedup-interrupt: the o_a15d lead() shape
@@ -1154,9 +628,6 @@ object EventAnalytics {
          GROUP BY funnel_level ORDER BY funnel_level""",
 
     "o_a21_seq_next_node" -> seqNextNodeOracleSql,
-
-    // same oracle VERBATIM: the SQL-surface aggregate must be
-    // observationally identical to the lead()-window formulation
     "o_a21b_seq_next_node_sql" -> seqNextNodeOracleSql,
     "o_a21c_seq_next_node_backward" -> seqPrevNodeOracleSql,
     "o_a21d_seq_next_node_head" -> seqHeadNodeOracleSql,
@@ -1304,24 +775,11 @@ object EventAnalytics {
          GROUP BY matched ORDER BY matched""",
 
     "o_a18_seqcount" -> seqcountOracleSql,
-
-    // same oracle VERBATIM: the SQL-surface aggregate must be
-    // observationally identical to the library greedy count
     "o_a18d_seqcount_sql" -> seqcountOracleSql,
-
     "o_a18b_seqcount_windowed" -> seqcount12hOracleSql,
-
-    // same oracle VERBATIM: the chunked decomposition must be
-    // observationally identical to the plain windowed pair count
     "o_a18c_seqcount_chunked" -> seqcount12hOracleSql,
-
-    // same oracle VERBATIM: the SQL-surface aggregate at the 12h bound
     "o_a18e_seqcount_sql_windowed" -> seqcount12hOracleSql,
-
     "o_a16_retention" -> retentionOracleSql,
-
-    // same oracle VERBATIM: the SQL-surface retention aggregate must be
-    // observationally identical to the o_a16 join formulation
     "o_a16b_retention_sql" -> retentionOracleSql
   )
 }

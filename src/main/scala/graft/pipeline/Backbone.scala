@@ -300,8 +300,8 @@ private[graft] object Backbone {
     * day N+1's history (BackboneAdvanceSpec's two-day test). */
   private def advanceParts(
       s: SparkSession, d: String,
-      splitOverride: Long = -1L,
-      histOverride: Option[HistoryTables] = None,
+      splitOverride: Long,
+      histOverride: Option[HistoryTables],
       batchEnd: Long = Long.MaxValue,
       nBands: Int = 4, rowsPerBand: Int = 2): AdvanceParts = {
     val split =

@@ -108,6 +108,8 @@ private[graft] object Graph {
         out.iterator
       }
       val out = lbl.toDF("id", "lbl").localCheckpoint(true)
+      // plans over the labels count the edges' input bytes
+      graft.plans.SingleStage.noteCheckpoint(out, edges)
       raw.unpersist(blocking = false)
       System.err.println(
         s"[graph] cc converged: $nEdges edges, 1 partition (union-find)")

@@ -193,11 +193,11 @@ object Projection {
   }
 
   /** Fold a delta of base rows into the stored rollup. `batchId >= 0`
-    * makes the fold IDEMPOTENT per batch (the streaming maintainer's
-    * replay contract): the merged rollup is staged together with a
+    * makes the fold IDEMPOTENT per batch (the replay contract of a
+    * micro-batch caller): the merged rollup is staged together with a
     * `batchId` marker and published by one directory rename, and a
     * replayed batch at or below the committed marker is a no-op — a
-    * crash after publish but before the streaming checkpoint commits can
+    * crash after publish but before a streaming checkpoint commits can
     * therefore no longer double-count the batch partials on restart.
     * `batchId < 0` (ad-hoc callers) stays additive per call. */
   def merge(delta: DataFrame, pd: ProjectionDef,
@@ -316,31 +316,6 @@ object Projection {
     val auth = Option(u.getAuthority).getOrElse("")
     s"$scheme://$auth${u.getPath.stripSuffix("/")}"
   }
-
-  /** Streaming maintainer: tail the APPEND directory (where ingest lands
-    * new base files — not the historical base, which [[materialize]]
-    * already folded) and merge every micro-batch of new rows into the
-    * projection via [[merge]] — the insert-time maintenance loop,
-    * exactly-once per batch (the batch-id marker makes a replayed
-    * micro-batch a no-op). Mutation-path rebuilds ([[refresh]] /
-    * [[refreshPartitions]]) overwrite the rollup WITHOUT a marker,
-    * resetting the replay ledger — run them with the maintainer stopped,
-    * the same quiesce rule every swap in `sources.Retention` carries. */
-  def maintain(spark: SparkSession, deltaDir: String,
-               schema: org.apache.spark.sql.types.StructType,
-               pd: ProjectionDef, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(schema).parquet(deltaDir)
-      .writeStream
-      .queryName(s"graft-projection-${pd.name}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batchId threads through so a replayed micro-batch (crash after
-        // the rollup published, before the checkpoint committed) is
-        // skipped by the marker, not merged twice
-        if (!batch.isEmpty) merge(batch, pd, batchId)
-      }
-      .start()
 }
 
 /** The mutation→projection link: CH rewrites a table's projections INSIDE

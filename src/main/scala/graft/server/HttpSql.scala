@@ -395,11 +395,11 @@ final class HttpSql(spark: SparkSession, port: Int = 0,
               streamProtobuf(x, df, acceptsGzip(x))
             else streamResult(x, df, HttpSql.formats(fmtKey), acceptsGzip(x))
           } catch {
-            case e: Exception if ctl.timedOut =>
+            case _: Exception if ctl.timedOut =>
               respond(x, 500, "text/plain",
                 s"TIMEOUT_EXCEEDED: max_execution_time " +
                   s"${timeoutMs.getOrElse(0L) / 1000.0} s elapsed\n")
-            case e: Exception if ctl.killed =>
+            case _: Exception if ctl.killed =>
               respond(x, 500, "text/plain",
                 s"QUERY_WAS_CANCELLED: killed via query_id '$queryId'\n")
             case e: Exception =>

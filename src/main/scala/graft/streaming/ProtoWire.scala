@@ -89,7 +89,6 @@ object ProtoWire {
     * but strings go out as their UTF8String bytes with no transcoding. */
   def encodeRow(row: org.apache.spark.sql.catalyst.InternalRow,
                 schema: StructType): Array[Byte] = {
-    import org.apache.spark.unsafe.types.UTF8String
     val out = new ByteArrayOutputStream()
     var i = 0
     while (i < schema.length) {

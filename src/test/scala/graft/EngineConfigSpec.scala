@@ -9,7 +9,7 @@ class EngineConfigSpec extends AnyFunSuite {
     assert(c.batcher.maxRows == 100000L)
     assert(c.batcher.maxBytes == 60000000L)
     assert(c.batcher.flushIntervalMs == 1000L)
-    assert(c.broker.addr == "nats://localhost:4222")
+    assert(c.broker.host == "localhost" && c.broker.clientPort == 4222)
     assert(c.broker.subjects == Seq("events.login"))
     assert(c.broker.streamConfig.maxAge == "24h")
     assert(c.broker.streamConfig.maxAgeDuration == java.time.Duration.ofHours(24))
@@ -31,7 +31,7 @@ class EngineConfigSpec extends AnyFunSuite {
         |[batcher]
         |max_bytes = 5000000
         |""".stripMargin)
-    assert(c.broker.addr == "nats://broker.prod:14222")
+    assert(c.broker.host == "broker.prod" && c.broker.clientPort == 14222)
     assert(c.broker.subjects.size == 3 && c.broker.subjects.contains("events.play"))
     assert(c.broker.streamConfig.maxAgeDuration == java.time.Duration.ofHours(48))
     assert(c.broker.streamConfig.storage == "file")
@@ -80,7 +80,7 @@ class EngineConfigSpec extends AnyFunSuite {
         |interval_ms = 400
         |""".stripMargin)
     val c = EngineConfig.loadFromFile(f.toString)
-    assert(c.batcher.flushInterval == java.time.Duration.ofMillis(250))
+    assert(c.batcher.flushIntervalMs == 250L)
     assert(c.warehouse.port == 18123)
     assert(c.broker == EngineConfig.default.broker)
     assert(c.compaction == EngineConfig.default.compaction)

@@ -142,30 +142,26 @@ class SequenceMatchPatternSpec extends AnyFunSuite {
     GraftExtensions.register(spark)
     val rnd = new scala.util.Random(1602)
     val types = Seq("signup", "click", "purchase", "view")
-    val stageCols = Seq(col("event_type") === "signup",
-      col("event_type") === "click", col("event_type") === "purchase")
+    val chain = Seq("signup", "click", "purchase")
     val rows = (0 until 400).map { i =>
       // distinct us per event: the pattern form's order-based chaining
-      // and the library form's strict-ts chaining agree exactly when
-      // there are no ties
+      // and the funnel-completion reference's strict-ts chaining agree
+      // exactly when there are no ties
       (i.toLong, rnd.nextInt(10).toLong, types(rnd.nextInt(types.size)),
         new java.sql.Timestamp(i * 3600000L + rnd.nextInt(1000)))
     }
     val e = rows.toDF("event_id", "user_id", "event_type", "ts")
-    val got = e.filter(col("event_type").isin("signup", "click", "purchase"))
+    val got = e.filter(col("event_type").isin(chain: _*))
       .groupBy("user_id")
       .agg(expr("sequence_match('(?1).*(?2).*(?3)', ts, event_id, " +
           "event_type = 'signup', event_type = 'click', " +
-          "event_type = 'purchase')").cast("int").as("m"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val lib = graft.operators.EventAnalytics.sequenceMatch(e, stageCols, None)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // library universe = stage-1 users; the aggregate sees every user
-    // with any condition event
-    assert(lib.keySet.subsetOf(got.keySet))
-    val diffs = lib.collect { case (u, m) if got(u) != m => (u, m, got(u)) }
-    assert(diffs.isEmpty, s"mismatches: ${diffs.take(5)}")
-    assert(lib.values.sum > 0, "stream should contain full matches")
+          "event_type = 'purchase')").as("m"))
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val R = graft.operators.EventAnalytics.Reference
+    val want = R.byUser(e.filter(col("event_type").isin(chain: _*)))
+      .map { case (u, evs) => u -> R.chainMatched(evs, chain, None) }
+    assert(got == want, s"mismatches: ${(got.toSet -- want.toSet).take(5)}")
+    assert(want.values.count(identity) > 0, "stream should contain full matches")
   }
 
   test("SQL surface: BIGINT ts uses raw units; TIMESTAMP ts uses seconds") {

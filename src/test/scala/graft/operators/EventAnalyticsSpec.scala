@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.TestSession
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,299 +11,128 @@ class EventAnalyticsSpec extends AnyFunSuite {
   val sf = TestSession.sf
 
   private val stages = Seq("signup", "view", "click", "purchase")
-  private val windowMicros = 24L * 3600 * 1000000 // 24h in micros
+  private val stageConds = stages.map(st => s"event_type = '$st'").mkString(", ")
+  private val day = 24L * 3600 * 1000000 // 24h in micros
+  private val R = EventAnalytics.Reference
 
-  /** In-memory reference: for each chain start, extend greedily with the
-    * earliest feasible event per stage (optimal — the same dominance
-    * argument the distributed reduction relies on, executed by a
-    * different mechanism entirely). */
-  private def bruteLevels(): Map[Long, Int] = {
-    val rows = graft.Tables.events(spark, sf)
-      .filter(col("event_type").isin(stages: _*))
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    rows.groupBy(_._1).flatMap { case (user, evs) =>
-      val byStage = stages.map(st => evs.filter(_._2 == st).map(_._3).sorted)
-      if (byStage.head.isEmpty) None
-      else {
-        val best = byStage.head.map { t1 =>
-          var level = 1
-          var t = t1
-          var blocked = false
-          byStage.drop(1).foreach { cand =>
-            if (!blocked) cand.find(ts => ts > t && ts <= t1 + windowMicros) match {
-              case Some(ts) => t = ts; level += 1
-              case None => blocked = true
-            }
-          }
-          level
-        }.max
-        Some(user -> best)
-      }
-    }
+  /** `agg` per user of `df`, read by `v`. */
+  private def perUser[V](df: DataFrame, agg: String)(v: Row => V): Map[Long, V] = {
+    graft.functions.GraftExtensions.register(spark)
+    df.groupBy("user_id").agg(expr(agg)).collect()
+      .map(r => r.getLong(0) -> v(r)).toMap
   }
 
+  private def fixture = graft.Tables.events(spark, sf)
+
   test("funnelLevels == brute-force greedy chain search (4 stages, 24h)") {
-    val got = EventAnalytics.funnelLevels(graft.Tables.events(spark, sf),
-        stages.map(st => col("event_type") === st),
-        Some(expr("INTERVAL 24 HOURS")))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val want = bruteLevels()
-    assert(got.keySet == want.keySet, "user universe = users with a stage-1 event")
+    // the EXISTS-chain funnel level, by the window_funnel aggregate and
+    // by the reference's greedy search per chain start
+    val got = perUser(fixture, s"window_funnel($day, ts, $stageConds)")(_.getInt(1))
+    val want = R.byUser(fixture).map { case (u, evs) =>
+      u -> R.chainLevel(evs, stages, Some(day)) }
+    assert(got.keySet == want.keySet)
     val diffs = got.collect { case (u, l) if want(u) != l => (u, l, want(u)) }
     assert(diffs.isEmpty, s"level mismatches: $diffs")
     assert(got.values.max >= 3, "fixture should exercise deep chains")
   }
 
   test("window None == unbounded; levels monotone under window widening") {
-    val conds = stages.map(st => col("event_type") === st)
-    val e = graft.Tables.events(spark, sf)
-    val unbounded = EventAnalytics.funnelLevels(e, conds, None)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val huge = EventAnalytics.funnelLevels(e, conds, Some(expr("INTERVAL 3650 DAYS")))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(unbounded == huge, "a window beyond the data span must equal None")
-    val narrow = EventAnalytics.funnelLevels(e, conds, Some(expr("INTERVAL 12 HOURS")))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val evs = R.byUser(fixture)
+    val unbounded = evs.map { case (u, e) => u -> R.chainLevel(e, stages, None) }
+    val huge = perUser(fixture,
+      s"window_funnel(${3650 * day}, ts, $stageConds)")(_.getInt(1))
+    assert(huge == unbounded, "a window beyond the data span must equal None")
+    // sequence_match's window 0 is the unbounded chain
+    val matched = perUser(fixture, s"sequence_match(0, ts, $stageConds)")(_.getBoolean(1))
+    assert(matched == unbounded.map { case (u, l) => u -> (l == stages.size) })
+    val narrow = perUser(fixture,
+      s"window_funnel(${day / 2}, ts, $stageConds)")(_.getInt(1))
     assert(narrow.forall { case (u, l) => l <= unbounded(u) },
       "widening the window can only raise levels")
+    assert(narrow.exists { case (u, l) => l < unbounded(u) },
+      "fixture should contain chains the 12h window cuts")
   }
 
   test("sequenceCount == brute-force greedy automaton") {
-    val got = EventAnalytics.sequenceCount(graft.Tables.events(spark, sf),
-        col("event_type") === "signup", col("event_type") === "purchase")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rows = graft.Tables.events(spark, sf)
-      .filter(col("event_type").isin("signup", "purchase"))
-      .select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val want = rows.groupBy(_._1).map { case (u, evs) =>
-      var armed = false
-      var n = 0L
-      evs.sortBy(e => (e._3, e._4)).foreach {
-        case (_, "signup", _, _) => armed = true
-        case (_, "purchase", _, _) => if (armed) { n += 1; armed = false }
-        case _ => ()
-      }
-      u -> n
-    }
+    val e = fixture.filter(col("event_type").isin("signup", "purchase"))
+    val got = perUser(e, "sequence_count(0, ts, event_id, " +
+      "event_type = 'signup', event_type = 'purchase')")(_.getLong(1))
+    val want = R.byUser(e).map { case (u, evs) =>
+      u -> R.pairCount(evs, "signup", "purchase", None) }
     assert(got == want)
     assert(got.values.max >= 2, "fixture should exercise multi-fire users")
   }
 
   test("sequenceMatch == funnel completion") {
-    val conds = stages.map(st => col("event_type") === st)
-    val e = graft.Tables.events(spark, sf)
-    val matched = EventAnalytics.sequenceMatch(e, conds, Some(expr("INTERVAL 24 HOURS")))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val levels = EventAnalytics.funnelLevels(e, conds, Some(expr("INTERVAL 24 HOURS")))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(matched.keySet == levels.keySet)
-    assert(matched.forall { case (u, m) => m == (if (levels(u) == stages.size) 1 else 0) })
-    assert(matched.values.sum > 0, "fixture should contain full matches")
+    // sequence_match's window form is window_funnel reaching the last
+    // stage, by two aggregates and by the reference
+    val matched = perUser(fixture,
+      s"sequence_match($day, ts, $stageConds)")(_.getBoolean(1))
+    val levels = perUser(fixture,
+      s"window_funnel($day, ts, $stageConds)")(_.getInt(1))
+    assert(matched == levels.map { case (u, l) => u -> (l == stages.size) })
+    assert(matched == R.byUser(fixture).map { case (u, evs) =>
+      u -> R.chainMatched(evs, stages, Some(day)) })
+    assert(matched.values.count(identity) > 0, "fixture should contain full matches")
   }
 
   test("o_a17: a signup TIED to the click's ts must not mask an earlier in-window one") {
     import spark.implicits._
     // user 1: signup 10:00, signup 10:30 (same ts as the click, earlier
     // event_id), click 10:30, purchase 11:00. The EXISTS chain holds via
-    // the 10:00 signup; a ROWS-frame max would see 10:30, fail the
-    // strict-before check, and wrongly report no match.
+    // the 10:00 signup; a form that let the tied signup open the chain
+    // or hide the earlier one would report the wrong answer. User 2:
+    // its only signup ties the click, and its purchase ties the click
+    // too — no strict chain, so no match.
     def t(m: Int) = new java.sql.Timestamp(1726300800000L + m * 60000L)
     val rows = Seq(
       (1L, "signup", t(0), 1L, 0.0, "{}"),
       (1L, "signup", t(30), 2L, 0.0, "{}"),
       (1L, "click", t(30), 3L, 0.0, "{}"),
-      (1L, "purchase", t(60), 4L, 0.0, "{}"))
+      (1L, "purchase", t(60), 4L, 0.0, "{}"),
+      (2L, "signup", t(30), 5L, 0.0, "{}"),
+      (2L, "click", t(30), 6L, 0.0, "{}"),
+      (2L, "purchase", t(90), 7L, 0.0, "{}"),
+      (2L, "signup", t(100), 8L, 0.0, "{}"),
+      (2L, "click", t(110), 9L, 0.0, "{}"),
+      (2L, "purchase", t(110), 10L, 0.0, "{}"))
       .toDF("user_id", "event_type", "ts", "event_id", "value", "props")
     val dir = java.nio.file.Files.createTempDirectory("seqtie").toString
     rows.write.parquet(s"$dir/events.parquet")
     val out = graft.SparkEntry.queries("o_a17_seqmatch")(spark, dir)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(out == Map(1 -> 1L), s"tie-masked match: $out")
-  }
-
-  test("funnelLevelsChunked == funnelLevels on the fixture across chunk sizes") {
-    // the chunked decomposition's whole contract: same answer as the
-    // plain windowed funnel, including the chunk == window edge (every
-    // event duplicated into the previous chunk's tail) and chunk >>
-    // window (few chunks, mostly the plain shape)
-    val stageCols = Seq(col("event_type") === "signup",
-      col("event_type") === "view", col("event_type") === "click",
-      col("event_type") === "purchase")
-    val e = graft.Tables.events(spark, sf)
-    val plain = EventAnalytics.funnelLevels(e, stageCols,
-        Some(expr("INTERVAL 24 HOURS")))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    assert(plain.nonEmpty)
-    Seq(windowMicros, 2 * windowMicros, 7 * windowMicros).foreach { chunk =>
-      val chunked = EventAnalytics.funnelLevelsChunked(e, stageCols,
-          windowMicros, chunk)
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-      assert(chunked == plain,
-        s"chunk=$chunk diverged: " +
-          s"${(chunked.toSet -- plain.toSet).take(5)} / " +
-          s"${(plain.toSet -- chunked.toSet).take(5)}")
-    }
-  }
-
-  test("funnelLevelsChunked == funnelLevels on randomized event streams") {
-    // random users × random event types × timestamps clustered AND
-    // spread so chains regularly straddle raw chunk boundaries — the
-    // overlap logic is the thing under test
-    import spark.implicits._
-    val rnd = new scala.util.Random(1501)
-    val types = Seq("signup", "view", "click", "purchase", "scroll")
-    val stageCols = Seq(col("event_type") === "signup",
-      col("event_type") === "click", col("event_type") === "purchase")
-    (0 until 3).foreach { draw =>
-      val rows = (0 until 600).map { i =>
-        val user = rnd.nextInt(12).toLong
-        // mixture: half tight bursts (chains), half uniform spread
-        val base = rnd.nextInt(40).toLong * 6L * 3600 * 1000000
-        val us = if (rnd.nextBoolean()) base + rnd.nextInt(14 * 3600).toLong * 1000000
-                 else rnd.nextLong(240L * 3600 * 1000000)
-        (i.toLong, user, types(rnd.nextInt(types.size)),
-          new java.sql.Timestamp(us / 1000))
-      }
-      val e = rows.toDF("event_id", "user_id", "event_type", "ts")
-      val w = 12L * 3600 * 1000000
-      val plain = EventAnalytics.funnelLevels(e, stageCols,
-          Some(expr("INTERVAL 12 HOURS")))
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-      Seq(w, w + 1, 3 * w).foreach { chunk =>
-        val chunked = EventAnalytics.funnelLevelsChunked(e, stageCols,
-            w, chunk)
-          .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-        assert(chunked == plain,
-          s"draw $draw chunk=$chunk diverged: " +
-            s"${(chunked.toSet -- plain.toSet).take(5)} / " +
-            s"${(plain.toSet -- chunked.toSet).take(5)}")
-      }
-    }
-  }
-
-  test("funnelLevelsChunked refuses a chunk smaller than the window") {
-    val e = graft.Tables.events(spark, sf)
-    intercept[IllegalArgumentException] {
-      EventAnalytics.funnelLevelsChunked(e,
-        Seq(col("event_type") === "signup", col("event_type") === "click"),
-        windowMicros, windowMicros - 1)
-    }
+    assert(out == Map(0 -> 1L, 1 -> 1L), s"tie-masked match: $out")
   }
 
   test("sequenceCountWindowed == brute-force windowed automaton; bound filters") {
     val w = 12L * 3600 * 1000000
-    val got = EventAnalytics.sequenceCountWindowed(graft.Tables.events(spark, sf),
-        col("event_type") === "signup", col("event_type") === "purchase", w)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rows = graft.Tables.events(spark, sf)
-      .filter(col("event_type").isin("signup", "purchase"))
-      .select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    // reference: adjacent-pair scan with the gap bound — fire iff the
-    // immediately preceding condition event is an un-consumed signup
-    // within w (the '(?1)(?t<=w)(?2)' reading)
-    val want = rows.groupBy(_._1).map { case (u, evs) =>
-      var n = 0L
-      evs.sortBy(e => (e._3, e._4)).foldLeft(Option.empty[(String, Long)]) {
-        case (prev, (_, t, us, _)) =>
-          if (t == "purchase" && prev.exists(p => p._1 == "signup" && us <= p._2 + w))
-            n += 1
-          Some((t, us))
-      }
-      u -> n
-    }
-    assert(got == want)
-    val unbounded = EventAnalytics.sequenceCount(graft.Tables.events(spark, sf),
-        col("event_type") === "signup", col("event_type") === "purchase")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val e = fixture.filter(col("event_type").isin("signup", "purchase"))
+    def counts(win: Long) = perUser(e, s"sequence_count($win, ts, event_id, " +
+      "event_type = 'signup', event_type = 'purchase')")(_.getLong(1))
+    val got = counts(w)
+    assert(got == R.byUser(e).map { case (u, evs) =>
+      u -> R.pairCount(evs, "signup", "purchase", Some(w)) })
+    val unbounded = counts(0)
     assert(got.forall { case (u, n) => n <= unbounded(u) },
       "the gap bound can only drop pairs")
     assert(got.values.sum < unbounded.values.sum,
       "fixture should contain pairs the 12h bound expires")
   }
 
-  test("sequenceCountChunked == sequenceCountWindowed on the fixture across chunk sizes") {
-    val w = 12L * 3600 * 1000000
-    val e = graft.Tables.events(spark, sf)
-    val first = col("event_type") === "signup"
-    val second = col("event_type") === "purchase"
-    val plain = EventAnalytics.sequenceCountWindowed(e, first, second, w)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(plain.nonEmpty)
-    Seq(w, 2 * w, 11 * w).foreach { chunk =>
-      val chunked = EventAnalytics.sequenceCountChunked(e, first, second, w, chunk)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(chunked == plain,
-        s"chunk=$chunk diverged: " +
-          s"${(chunked.toSet -- plain.toSet).take(5)} / " +
-          s"${(plain.toSet -- chunked.toSet).take(5)}")
-    }
-    intercept[IllegalArgumentException] {
-      EventAnalytics.sequenceCountChunked(e, first, second, w, w - 1)
-    }
-  }
-
-  test("sequenceCountChunked == sequenceCountWindowed on randomized event streams") {
-    // pairs regularly straddle raw chunk boundaries; the charge-to-the-
-    // a's-primary-chunk rule and the overlap copy are the things under
-    // test (a double-count or a boundary miss shows up as a sum, not a
-    // max, so this family is MORE sensitive to charging bugs than the
-    // funnel's flag-max)
-    import spark.implicits._
-    val rnd = new scala.util.Random(1502)
-    val types = Seq("signup", "purchase", "view")
-    val first = col("event_type") === "signup"
-    val second = col("event_type") === "purchase"
-    (0 until 3).foreach { draw =>
-      val rows = (0 until 600).map { i =>
-        val user = rnd.nextInt(10).toLong
-        val base = rnd.nextInt(40).toLong * 6L * 3600 * 1000000
-        val us = if (rnd.nextBoolean()) base + rnd.nextInt(14 * 3600).toLong * 1000000
-                 else rnd.nextLong(240L * 3600 * 1000000)
-        (i.toLong, user, types(rnd.nextInt(types.size)),
-          new java.sql.Timestamp(us / 1000))
-      }
-      val e = rows.toDF("event_id", "user_id", "event_type", "ts")
-      val w = 12L * 3600 * 1000000
-      val plain = EventAnalytics.sequenceCountWindowed(e, first, second, w)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      Seq(w, w + 1, 3 * w).foreach { chunk =>
-        val chunked = EventAnalytics.sequenceCountChunked(e, first, second, w, chunk)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(chunked == plain,
-          s"draw $draw chunk=$chunk diverged: " +
-            s"${(chunked.toSet -- plain.toSet).take(5)} / " +
-            s"${(plain.toSet -- chunked.toSet).take(5)}")
-      }
-    }
-  }
-
   test("window_funnel SQL aggregate == funnelLevels (4 stages, fixture)") {
-    graft.functions.GraftExtensions.register(spark)
-    val e = graft.Tables.events(spark, sf)
-    val sqlLv = e.groupBy("user_id").agg(expr(
-        "window_funnel(86400000000, ts, event_type = 'signup', " +
-          "event_type = 'view', event_type = 'click', " +
-          "event_type = 'purchase')").as("lv"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val df = EventAnalytics.funnelLevels(e,
-        stages.map(st => col("event_type") === st),
-        Some(expr("INTERVAL 24 HOURS")))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // funnelLevels reports stage-1 users; the aggregate reports every
-    // grouped user, level 0 for the rest — the two mechanisms (buffered
-    // dominance pass vs stacked RANGE-frame chain columns) must agree
-    // exactly on the shared domain
-    assert(df.keySet.subsetOf(sqlLv.keySet))
-    val diffs = df.collect { case (u, l) if sqlLv(u) != l => (u, l, sqlLv(u)) }
-    assert(diffs.isEmpty, s"level mismatches: ${diffs.take(5)}")
-    assert(sqlLv.filterNot(kv => df.contains(kv._1)).values.forall(_ == 0),
-      "non-stage-1 users must read level 0")
+    // the catalog funnels against the reference's level distribution
+    // over stage-1 users: o_a15/o_a15e/o_a15f (3 stages, 12h) and
+    // o_a15c (4 stages, 24h)
+    def dist(k: String) = graft.SparkEntry.queries(k)(spark, sf)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    def want(st: Seq[String], w: Long) = R.byUser(fixture).values
+      .map(R.chainLevel(_, st, Some(w))).filter(_ >= 1)
+      .groupBy(identity).map { case (l, ls) => l -> ls.size.toLong }
+    val three = want(Seq("signup", "click", "purchase"), day / 2)
+    assert(three.keySet == Set(1, 2, 3), three)
+    Seq("o_a15_funnel", "o_a15e_funnel_chunked", "o_a15f_funnel_sql")
+      .foreach(k => assert(dist(k) == three, k))
+    assert(dist("o_a15c_funnel_4stage") == want(stages, day))
   }
 
   test("window_funnel: strict-before ties block; window expiry caps the chain") {
@@ -326,11 +157,9 @@ class EventAnalyticsSpec extends AnyFunSuite {
 
   test("window_funnel == funnelLevels on randomized event streams") {
     import spark.implicits._
-    graft.functions.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(1503)
     val types = Seq("signup", "view", "click", "purchase", "scroll")
-    val stageCols = Seq(col("event_type") === "signup",
-      col("event_type") === "click", col("event_type") === "purchase")
+    val chain = Seq("signup", "click", "purchase")
     (0 until 3).foreach { draw =>
       val rows = (0 until 500).map { i =>
         val user = rnd.nextInt(10).toLong
@@ -341,40 +170,29 @@ class EventAnalyticsSpec extends AnyFunSuite {
           new java.sql.Timestamp(us / 1000))
       }
       val e = rows.toDF("event_id", "user_id", "event_type", "ts")
-      val sqlLv = e.groupBy("user_id").agg(expr(
-          "window_funnel(43200000000, ts, event_type = 'signup', " +
-            "event_type = 'click', event_type = 'purchase')").as("lv"))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val df = EventAnalytics.funnelLevels(e, stageCols,
-          Some(expr("INTERVAL 12 HOURS")))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val diffs = df.collect { case (u, l) if sqlLv(u) != l => (u, l, sqlLv(u)) }
-      assert(diffs.isEmpty, s"draw $draw mismatches: ${diffs.take(5)}")
-      assert(sqlLv.filterNot(kv => df.contains(kv._1)).values.forall(_ == 0),
-        s"draw $draw: non-stage-1 users must read level 0")
+      val sqlLv = perUser(e, "window_funnel(43200000000, ts, event_type = 'signup', " +
+          "event_type = 'click', event_type = 'purchase')")(_.getInt(1))
+      val ref = R.byUser(e).map { case (u, evs) =>
+        u -> R.chainLevel(evs, chain, Some(day / 2)) }
+      val diffs = ref.collect { case (u, l) if sqlLv(u) != l => (u, l, sqlLv(u)) }
+      assert(sqlLv.keySet == ref.keySet && diffs.isEmpty,
+        s"draw $draw mismatches: ${diffs.take(5)}")
     }
   }
 
   test("sequence_count SQL aggregate == library forms, unbounded and windowed") {
     import spark.implicits._
-    graft.functions.GraftExtensions.register(spark)
     val w = 12L * 3600 * 1000000
-    val first = col("event_type") === "signup"
-    val second = col("event_type") === "purchase"
-    def sqlCounts(e: org.apache.spark.sql.DataFrame, win: Long) =
-      e.filter(first || second).groupBy("user_id")
-        .agg(expr(s"sequence_count($win, ts, event_id, " +
-            "event_type = 'signup', event_type = 'purchase')")
-          .as("c"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val pair = col("event_type").isin("signup", "purchase")
+    def sqlCounts(e: DataFrame, win: Long) =
+      perUser(e.filter(pair), s"sequence_count($win, ts, event_id, " +
+          "event_type = 'signup', event_type = 'purchase')")(_.getLong(1))
+    def refCounts(e: DataFrame, win: Option[Long]) =
+      R.byUser(e.filter(pair)).map { case (u, evs) =>
+        u -> R.pairCount(evs, "signup", "purchase", win) }
     // fixture, both windows
-    val e0 = graft.Tables.events(spark, sf)
-    assert(sqlCounts(e0, 0) ==
-      EventAnalytics.sequenceCount(e0, first, second)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    assert(sqlCounts(e0, w) ==
-      EventAnalytics.sequenceCountWindowed(e0, first, second, w)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(sqlCounts(fixture, 0) == refCounts(fixture, None))
+    assert(sqlCounts(fixture, w) == refCounts(fixture, Some(w)))
     // randomized streams with planted ties (the explicit tie argument is
     // what makes the aggregate deterministic where CH leaves it private)
     val rnd = new scala.util.Random(1504)
@@ -387,39 +205,28 @@ class EventAnalyticsSpec extends AnyFunSuite {
           new java.sql.Timestamp(us / 1000))
       }
       val e = rows.toDF("event_id", "user_id", "event_type", "ts")
-      assert(sqlCounts(e, 0) ==
-        EventAnalytics.sequenceCount(e, first, second)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        s"draw $draw unbounded diverged")
-      assert(sqlCounts(e, w) ==
-        EventAnalytics.sequenceCountWindowed(e, first, second, w)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        s"draw $draw windowed diverged")
+      assert(sqlCounts(e, 0) == refCounts(e, None), s"draw $draw unbounded diverged")
+      assert(sqlCounts(e, w) == refCounts(e, Some(w)), s"draw $draw windowed diverged")
     }
   }
 
   test("sequence_match SQL aggregate == library sequenceMatch, unbounded and windowed") {
     import spark.implicits._
-    graft.functions.GraftExtensions.register(spark)
-    val stageCols = Seq(col("event_type") === "signup",
-      col("event_type") === "click", col("event_type") === "purchase")
-    def sqlMatched(e: org.apache.spark.sql.DataFrame, win: Long) =
-      e.filter(col("event_type").isin("signup", "click", "purchase"))
+    val chain = Seq("signup", "click", "purchase")
+    def sqlMatched(e: DataFrame, win: Long) =
+      e.filter(col("event_type").isin(chain: _*))
         .groupBy("user_id")
         .agg(expr(s"sequence_match($win, ts, event_type = 'signup', " +
-            "event_type = 'click', event_type = 'purchase')")
-          .cast("int").as("m"),
+            "event_type = 'click', event_type = 'purchase')").as("m"),
           max(when(col("event_type") === "signup", 1).otherwise(0)).as("h"))
         .filter(col("h") === 1)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    def libMatched(e: org.apache.spark.sql.DataFrame,
-                   w: Option[org.apache.spark.sql.Column]) =
-      EventAnalytics.sequenceMatch(e, stageCols, w)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val e0 = graft.Tables.events(spark, sf)
-    assert(sqlMatched(e0, 0) == libMatched(e0, None))
-    assert(sqlMatched(e0, 43200000000L) ==
-      libMatched(e0, Some(expr("INTERVAL 12 HOURS"))))
+        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    // the stage-1 universe: users with a signup
+    def refMatched(e: DataFrame, w: Option[Long]) = R.byUser(e)
+      .filter(_._2.exists(_.kind == "signup"))
+      .map { case (u, evs) => u -> R.chainMatched(evs, chain, w) }
+    assert(sqlMatched(fixture, 0) == refMatched(fixture, None))
+    assert(sqlMatched(fixture, 43200000000L) == refMatched(fixture, Some(day / 2)))
     val rnd = new scala.util.Random(1505)
     val types = Seq("signup", "click", "purchase", "view")
     (0 until 3).foreach { draw =>
@@ -430,22 +237,49 @@ class EventAnalyticsSpec extends AnyFunSuite {
           new java.sql.Timestamp(us / 1000))
       }
       val e = rows.toDF("event_id", "user_id", "event_type", "ts")
-      assert(sqlMatched(e, 0) == libMatched(e, None),
-        s"draw $draw unbounded diverged")
-      assert(sqlMatched(e, 43200000000L) ==
-        libMatched(e, Some(expr("INTERVAL 12 HOURS"))),
+      assert(sqlMatched(e, 0) == refMatched(e, None), s"draw $draw unbounded diverged")
+      assert(sqlMatched(e, 43200000000L) == refMatched(e, Some(day / 2)),
         s"draw $draw windowed diverged")
     }
   }
 
   test("window_funnel mode aggregates == o_a15d / o_a15b catalog forms on the fixture") {
-    graft.functions.GraftExtensions.register(spark)
-    def dist(k: String) = graft.SparkEntry.queries(k)(spark, sf)
+    // the mode keys against the stacked-window formulations o_a15d
+    // (strict_order: lead() prefix match at each signup) and o_a15b
+    // (strict_dedup: last-of-type running windows) once ran
+    val e = fixture.select("user_id", "event_type", "ts", "event_id")
+    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    val winH = expr("INTERVAL 12 HOURS")
+    def dist(df: DataFrame) = df.filter(col("lv").isNotNull)
+      .groupBy("lv").agg(count(lit(1))).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val l2 = lead(col("event_type"), 1).over(w) === "click" &&
+      lead(col("ts"), 1).over(w) <= col("ts") + winH
+    val l3 = l2 && lead(col("event_type"), 2).over(w) === "purchase" &&
+      lead(col("ts"), 2).over(w) <= col("ts") + winH
+    val strict = dist(e.withColumn("lvl", when(col("event_type") === "signup",
+        lit(1) + when(l2, 1).otherwise(0) + when(l3, 1).otherwise(0)))
+      .groupBy("user_id").agg(max("lvl").cast("int").as("lv")))
+    val pre = w.rowsBetween(Window.unboundedPreceding, -1)
+    val sentinel = lit("0001-01-01 00:00:00").cast("timestamp")
+    val dedup = dist(e.filter(col("event_type").isin("signup", "click", "purchase"))
+      .withColumn("ls", max(when(col("event_type") === "signup", col("ts"))).over(pre))
+      .withColumn("c2", when(col("event_type") === "click" &&
+        col("ls").isNotNull && col("ts") <= col("ls") + winH, col("ls")))
+      .withColumn("lc", last(when(col("event_type") === "click",
+        coalesce(col("c2"), sentinel)), ignoreNulls = true).over(pre))
+      .groupBy("user_id")
+      .agg(max(when(col("event_type") === "signup", 1).otherwise(0)).as("has1"),
+        max(when(col("c2").isNotNull, 1).otherwise(0)).as("has2"),
+        max(when(col("event_type") === "purchase" && col("lc").isNotNull &&
+          col("ts") <= col("lc") + winH, 1).otherwise(0)).as("has3"))
+      .filter(col("has1") === 1)
+      .select((lit(1) + col("has2") + col("has3")).cast("int").as("lv")))
+    def key(k: String) = graft.SparkEntry.queries(k)(spark, sf)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(dist("o_a15g_funnel_sql_strict") == dist("o_a15d_funnel_strict"))
-    assert(dist("o_a15h_funnel_sql_dedup") == dist("o_a15b_funnel_dedup"))
-    assert(dist("o_a15d_funnel_strict").size >= 2,
-      "fixture should discriminate strict_order levels")
+    assert(key("o_a15g_funnel_sql_strict") == strict)
+    assert(key("o_a15h_funnel_sql_dedup") == dedup)
+    assert(strict.size >= 2, "fixture should discriminate strict_order levels")
   }
 
   test("window_funnel modes == brute-force references on randomized tied streams") {
@@ -576,14 +410,33 @@ class EventAnalyticsSpec extends AnyFunSuite {
 
   test("sequence_next_node SQL aggregate == o_a21 lead()-window form") {
     import spark.implicits._
+    // per-user next node by the aggregate and by the lead() window
+    // formulation o_a21 once ran: the first consecutive signup→click
+    // pair in (ts, event_id) order, 'NONE' at stream end
+    def agg(e: DataFrame) = e.groupBy("user_id")
+      .agg(expr("sequence_next_node(ts, event_id, event_type, " +
+          "event_type = 'signup', event_type = 'click')").as("nn"))
+      .filter(col("nn").isNotNull)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def win(e: DataFrame) = {
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      e.withColumn("n1", lead(col("event_type"), 1).over(w))
+        .withColumn("n2", lead(col("event_type"), 2).over(w))
+        .filter(col("event_type") === "signup" && col("n1") === "click")
+        .groupBy("user_id")
+        .agg(min_by(coalesce(col("n2"), lit("NONE")),
+          struct(col("ts"), col("event_id"))).as("nn"))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    }
     graft.functions.GraftExtensions.register(spark)
-    // fixture: the two catalog keys must agree exactly
-    def dist(k: String) = graft.SparkEntry.queries(k)(spark, sf)
+    // fixture: per-user values, and the catalog key's distribution
+    val want = win(fixture)
+    assert(agg(fixture) == want)
+    val d21 = graft.SparkEntry.queries("o_a21_seq_next_node")(spark, sf)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val d21 = dist("o_a21_seq_next_node")
-    assert(dist("o_a21b_seq_next_node_sql") == d21)
+    assert(d21 == want.values.groupBy(identity).map { case (v, vs) => v -> vs.size.toLong })
     assert(d21.size >= 2, "fixture should produce several next-node types")
-    // randomized tied streams: per-user values vs the window formulation
+    // randomized tied streams
     val rnd = new scala.util.Random(1606)
     val types = Seq("signup", "click", "purchase", "view")
     (0 until 3).foreach { draw =>
@@ -593,23 +446,9 @@ class EventAnalyticsSpec extends AnyFunSuite {
           new java.sql.Timestamp(us / 1000))
       }
       val e = rows.toDF("event_id", "user_id", "event_type", "ts")
-      val agg = e.groupBy("user_id")
-        .agg(expr("sequence_next_node(ts, event_id, event_type, " +
-            "event_type = 'signup', event_type = 'click')").as("nn"))
-        .filter(col("nn").isNotNull)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val win = e
-        .withColumn("n1", lead(col("event_type"), 1).over(w))
-        .withColumn("n2", lead(col("event_type"), 2).over(w))
-        .filter(col("event_type") === "signup" && col("n1") === "click")
-        .groupBy("user_id")
-        .agg(min_by(coalesce(col("n2"), lit("NONE")),
-          struct(col("ts"), col("event_id"))).as("nn"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(agg == win, s"draw $draw: agg=${agg.toSeq.sorted.take(5)} " +
-        s"win=${win.toSeq.sorted.take(5)}")
+      val (a, b) = (agg(e), win(e))
+      assert(a == b, s"draw $draw: agg=${a.toSeq.sorted.take(5)} " +
+        s"win=${b.toSeq.sorted.take(5)}")
     }
   }
 
@@ -640,13 +479,27 @@ class EventAnalyticsSpec extends AnyFunSuite {
   }
 
   test("retention SQL aggregate == o_a16 join formulation on the fixture") {
-    graft.functions.GraftExtensions.register(spark)
-    val a = graft.SparkEntry.queries("o_a16_retention")(spark, sf)
-      .collect().map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
-    val b = graft.SparkEntry.queries("o_a16b_retention_sql")(spark, sf)
-      .collect().map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
+    // the cohort report by the retention aggregate (o_a16/o_a16b) and
+    // by the per-stage left joins o_a16 once ran
+    def stage(t: String) = fixture.filter(col("event_type") === t).select("user_id", "ts")
+    val joined = stage("signup").groupBy("user_id").agg(min("ts").as("t0")).as("f")
+      .join(stage("click").as("c"),
+        col("c.user_id") === col("f.user_id") && col("c.ts") > col("f.t0") &&
+          col("c.ts") <= col("f.t0") + expr("INTERVAL 3 DAYS"), "left")
+      .groupBy(col("f.user_id").as("user_id"), col("f.t0").as("t0"))
+      .agg(max(when(col("c.ts").isNotNull, 1).otherwise(0)).as("clicked"))
+      .as("fc")
+      .join(stage("purchase").as("p"),
+        col("p.user_id") === col("fc.user_id") && col("p.ts") > col("fc.t0") &&
+          col("p.ts") <= col("fc.t0") + expr("INTERVAL 7 DAYS"), "left")
+      .groupBy(col("fc.user_id"), col("fc.t0"), col("fc.clicked"))
+      .agg(max(when(col("p.ts").isNotNull, 1).otherwise(0)).as("purchased"))
+      .groupBy(to_date(col("t0")).as("cohort_date"))
+      .agg(count(lit(1)), sum("clicked").cast("long"), sum("purchased").cast("long"))
+    def rows(df: DataFrame) = df.collect().map(r => (r.getDate(0).toString,
+      r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val a = rows(joined)
+    val b = rows(graft.SparkEntry.queries("o_a16b_retention_sql")(spark, sf))
     assert(a == b, s"retention aggregate diverged from the join form:\n" +
       s"only-join: ${(a -- b).take(3)}\nonly-agg: ${(b -- a).take(3)}")
     assert(a.nonEmpty && a.exists(_._3 > 0),
@@ -699,8 +552,8 @@ class EventAnalyticsSpec extends AnyFunSuite {
         val e = intercept[org.apache.spark.SparkException](q.collect())
         val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
         assert(msg != null && msg.contains("maxEventsPerGroup") &&
-          msg.contains("graft.operators.EventAnalytics"),
-          s"$agg: cap error must name the cap and the library scale path: $msg")
+          msg.contains(agg.takeWhile(_ != '(')) && msg.contains("buffered"),
+          s"$agg: cap error must name the function, the count and the cap: $msg")
       }
     // under the cap the same stream still evaluates
     val lv = ParametricAgg.withMaxEvents(64)(rows.groupBy("user_id").agg(
@@ -791,11 +644,13 @@ class EventAnalyticsSpec extends AnyFunSuite {
   }
 
   test("single-stage funnel degenerates to the stage-1 user set at level 1") {
-    val lv = EventAnalytics.funnelLevels(graft.Tables.events(spark, sf),
-      Seq(col("event_type") === "signup"), None).collect()
-    assert(lv.nonEmpty && lv.forall(_.getInt(1) == 1))
-    intercept[IllegalArgumentException] {
-      EventAnalytics.funnelLevels(graft.Tables.events(spark, sf), Seq.empty, None)
+    val lv = perUser(fixture, "window_funnel(3600000000, ts, event_type = 'signup')")(_.getInt(1))
+    val signups = fixture.filter(col("event_type") === "signup")
+      .select("user_id").distinct().collect().map(_.getLong(0)).toSet
+    assert(signups.nonEmpty && lv.filter(_._2 == 1).keySet == signups &&
+      lv.values.forall(l => l == 0 || l == 1), lv.toString)
+    intercept[Exception] {
+      perUser(fixture, "window_funnel(3600000000, ts)")(_.getInt(1))
     }
   }
 }

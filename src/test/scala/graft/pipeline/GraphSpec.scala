@@ -59,4 +59,19 @@ class GraphSpec extends AnyFunSuite {
           s"${(loop.toSet diff fast.toSet).take(5)}")
     }
   }
+
+  test("a plan over the union-find labels of a small graph has no exchange") {
+    // the labels are a localCheckpoint: noted with the edges' input
+    // bytes, a query over them stays under the small-input gate
+    import spark.implicits._
+    val edges = Graph.symmetrize(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"), "a", "b").persist()
+    val (labels, _) = Graph.minLabelComponents(edges)
+    val q = labels.groupBy("lbl").count()
+    val sizes = q.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val plan = q.queryExecution.executedPlan.toString
+    edges.unpersist()
+    assert(sizes == Map(1L -> 3L, 10L -> 2L))
+    assert(!plan.contains("Exchange"), plan)
+  }
 }

@@ -266,33 +266,6 @@ class ProjectionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       == origCount * 2, "the complete staged rollup must have published")
   }
 
-  test("streaming maintainer folds appended delta files into the projection") {
-    val baseDir = s"$tmp/stream_base"
-    val deltaDir = s"$tmp/stream_delta"
-    val p3 = s"$tmp/proj3"
-    val ck = s"$tmp/ck"
-    val seed = Seq(("a", 1.0, 1L), ("b", 2.0, 2L)).toDF("g", "v", "w")
-    seed.write.mode("overwrite").parquet(baseDir)
-    new java.io.File(deltaDir).mkdirs()
-    val pd3 = Projection.materialize(spark.read.parquet(baseDir), "stream_rollup",
-      Seq("g"), Seq(AggSpec("sum", "v"), AggSpec("count", "*")), p3)
-    val q = Projection.maintain(spark, deltaDir, seed.schema, pd3, ck)
-    try {
-      Seq(("a", 10.0, 3L), ("c", 5.0, 4L)).toDF("g", "v", "w")
-        .write.mode("append").parquet(deltaDir)
-      q.processAllAvailable()
-      Seq(("c", 1.0, 5L)).toDF("g", "v", "w")
-        .write.mode("append").parquet(deltaDir)
-      q.processAllAvailable()
-      val byG = spark.read.parquet(p3).collect()
-        .map(r => r.getAs[String]("g") ->
-          ((r.getAs[Double]("sum_v"), r.getAs[Long]("count_all")))).toMap
-      assert(byG("a") == ((11.0, 2L))) // seed + one delta row
-      assert(byG("b") == ((2.0, 1L)))  // untouched
-      assert(byG("c") == ((6.0, 2L)))  // born in batch 1, grown in batch 2
-    } finally q.stop()
-  }
-
   // the mutation→projection link: a rollup must never serve rows its base
   // no longer has (VERDICT r6 "What's wrong" #2)
   private def scansOnly(df: DataFrame, suffix: String): Boolean =

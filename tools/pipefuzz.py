@@ -50,10 +50,9 @@ KEYS = [
     # pinned-scale clip audit recompose per draw at any corpus/dims
     "d_ann_sq8", "d_ann_recall_sq8", "d_ann_sq8_clip",
     # event-analytics family (r15): funnels/sequence counts on planted
-    # per-user streams — chunk boundaries, window expiry and tie order
-    # vary per draw where the fixture pins one geometry; the chunked
-    # plans share their plain forms' oracles VERBATIM, so every draw
-    # re-proves the decomposition
+    # per-user streams — window expiry and tie order vary per draw where
+    # the fixture pins one geometry; keys that name one contract run the
+    # same SQL aggregate and share its oracle
     "o_a15_funnel", "o_a15e_funnel_chunked", "o_a15f_funnel_sql",
     "o_a15b_funnel_dedup",
     "o_a15c_funnel_4stage", "o_a15d_funnel_strict", "o_a16_retention",
@@ -140,11 +139,10 @@ def plant_documents(rnd, outdir):
 def plant_events(rnd, outdir):
     """Random per-user event streams for the event-analytics family —
     the funnels/sequence counts have fixed-point hazards of their own
-    (chunk boundaries, window expiry at exact gaps, tie ordering) that
-    the uniform fixture exercises at only one geometry. Timestamps are a
-    burst/spread mixture over ~40 days so chains regularly straddle the
-    chunked plans' 24 h boundaries, with DUPLICATE timestamps planted to
-    exercise the (ts, event_id) tie-break."""
+    (window expiry at exact gaps, tie ordering) that the uniform fixture
+    exercises at only one geometry. Timestamps are a burst/spread
+    mixture over ~40 days, with DUPLICATE timestamps planted to exercise
+    the (ts, event_id) tie-break."""
     types = ["signup", "view", "click", "purchase", "error"]
     n_users = rnd.randint(8, 20)
     rows = []
@@ -249,9 +247,9 @@ def main():
             continue
         rc_all |= check.main(corpus, out)
         # the parametric-aggregate window/pattern space (VERDICT r15 #6):
-        # random windows, chunk sizes, gap ops and patterns through the
-        # buffered SQL aggregates vs the stacked-window library plans —
-        # two mechanisms, one contract, on the SAME planted tied corpus
+        # random windows, gap ops and patterns through the buffered SQL
+        # aggregates vs in-memory brute-force references and generated
+        # window plans, on the SAME planted tied corpus
         rp = subprocess.run(
             f"java {ADDOPENS} -Xmx8g -Dspark.ui.enabled=false "
             f"-Dspark.sql.session.timeZone=UTC -cp '{cp}' "
