@@ -72,10 +72,10 @@ private[graft] object VecBackbone {
   private[graft] def writeGeomSidecar(s: SparkSession, dir: String,
                                       geom: BandedGeom): Unit = {
     import s.implicits._
-    Seq((geom.bands, geom.planes, geom.seed.getOrElse(-1L),
+    val row = Seq((geom.bands, geom.planes, geom.seed.getOrElse(-1L),
         geom.seed.isDefined, geom.dims))
       .toDF("bands", "planes", "seed", "seeded", "dims")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/banded_geom")
+    Warehouse.writeStored(row.coalesce(1), s"$dir/banded_geom")
   }
 
   /** Read a geometry sidecar back; None when the dir predates the
@@ -164,8 +164,7 @@ private[graft] object VecBackbone {
                 sample.map(_.slice(b * sub, (b + 1) * sub)))
               .toSeq.zipWithIndex.map { case (c, i) => (s"pq$b", i, c.toSeq) }
           }
-      rows.toDF("kind", "idx", "center")
-        .coalesce(1).write.mode("overwrite").parquet(path)
+      Warehouse.writeStored(rows.toDF("kind", "idx", "center").coalesce(1), path)
     }
     val rows = Warehouse.sidecarValue(s, s"rows:$path")(
       Warehouse.readParquet(s, path).collect()) // NCells + M*K tiny rows
@@ -198,9 +197,9 @@ private[graft] object VecBackbone {
         .select(col("vec_id"), col("embedding"))
       val sample = Similarity.sampleCached(s"$ck|h$upTo", e0)
       val coarse = Similarity.fitCached(s"$ck|h$upTo|ivf", NCells, 10, 42)(sample)
-      coarse.toSeq.zipWithIndex.map { case (c, i) => ("ivf", i, c.toSeq) }
-        .toDF("kind", "idx", "center")
-        .coalesce(1).write.mode("overwrite").parquet(path)
+      Warehouse.writeStored(
+        coarse.toSeq.zipWithIndex.map { case (c, i) => ("ivf", i, c.toSeq) }
+          .toDF("kind", "idx", "center").coalesce(1), path)
     }
     val rows = Warehouse.sidecarValue(s, s"rows:$path")(
       Warehouse.readParquet(s, path).collect()) // NCells tiny rows
@@ -265,8 +264,8 @@ private[graft] object VecBackbone {
               planes: Int = Planes): DataFrame = {
     val path = s"${root(s, d)}/buckets_p$planes"
     Warehouse.ensure(s, path) {
-      Similarity.signBuckets(s, Tables.embeddings(s, d), planes)
-        .write.mode("overwrite").parquet(path)
+      Warehouse.writeStored(
+        Similarity.signBuckets(s, Tables.embeddings(s, d), planes), path)
     }
     Warehouse.readParquet(s, path)
   }
@@ -354,10 +353,10 @@ private[graft] object VecBackbone {
         "aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> greatest(acc, abs(x)))")))
       .collect()(0)
     val sc = if (!mx.isNullAt(0) && mx.getDouble(0) > 0) mx.getDouble(0) else 1.0
-    s.range(1).select(lit(sc).as("s")).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/scale")
-    sq8EncodeUnder(e.withColumn("s", lit(sc)), "s")
-      .write.mode("overwrite").parquet(s"$path/codes")
+    Warehouse.writeStored(s.range(1).select(lit(sc).as("s")).coalesce(1),
+      s"$path/scale")
+    Warehouse.writeStored(sq8EncodeUnder(e.withColumn("s", lit(sc)), "s"),
+      s"$path/codes")
   }
 
   /** COMMIT the SQ8 append: stored history codes (vec_id < split, under
@@ -376,11 +375,11 @@ private[graft] object VecBackbone {
       val batch = Tables.embeddings(s, d).filter(col("vec_id") >= split)
         .select(col("vec_id"), expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v"))
         .withColumn("s", lit(sc))
-      sq8CodesAt(s, d, split)
-        .unionByName(sq8EncodeUnder(batch, "s"))
-        .write.mode("overwrite").parquet(s"$path/codes")
-      s.range(1).select(lit(sc).as("s")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/scale")
+      Warehouse.writeStored(
+        sq8CodesAt(s, d, split).unionByName(sq8EncodeUnder(batch, "s")),
+        s"$path/codes")
+      Warehouse.writeStored(s.range(1).select(lit(sc).as("s")).coalesce(1),
+        s"$path/scale")
     }
     Warehouse.readParquet(s, s"$path/codes")
   }
@@ -443,8 +442,7 @@ private[graft] object VecBackbone {
     val path = s"${root(s, d)}/codes"
     val q = quantizer(s, d)
     Warehouse.ensure(s, path) {
-      encode(Tables.embeddings(s, d), q)
-        .write.mode("overwrite").parquet(path)
+      Warehouse.writeStored(encode(Tables.embeddings(s, d), q), path)
     }
     Warehouse.readParquet(s, path)
   }
@@ -472,9 +470,8 @@ private[graft] object VecBackbone {
     val q = quantizer(s, d)
     Warehouse.ensure(s, base) {
       val e = Tables.embeddings(s, d).filter(col("vec_id") < split)
-      Similarity.signBuckets(s, e, planes)
-        .write.mode("overwrite").parquet(s"$base/buckets")
-      encode(e, q).write.mode("overwrite").parquet(s"$base/codes")
+      Warehouse.writeStored(Similarity.signBuckets(s, e, planes), s"$base/buckets")
+      Warehouse.writeStored(encode(e, q), s"$base/codes")
       derivePairsAndLabels(s, base)
     }
     readHistory(s, base)
@@ -515,9 +512,8 @@ private[graft] object VecBackbone {
     Warehouse.ensure(s, base) {
       val e = Tables.embeddings(s, d)
         .filter(col("vec_id") >= split && col("vec_id") < batchEnd)
-      Similarity.signBuckets(s, e, planes)
-        .write.mode("overwrite").parquet(s"$base/buckets")
-      encode(e, q).write.mode("overwrite").parquet(s"$base/codes")
+      Warehouse.writeStored(Similarity.signBuckets(s, e, planes), s"$base/buckets")
+      Warehouse.writeStored(encode(e, q), s"$base/codes")
     }
     VecBatch(
       Warehouse.readParquet(s, s"$base/buckets"),
@@ -766,10 +762,8 @@ private[graft] object VecBackbone {
     val base = s"$advRoot/adv${split}e${batchEnd}_p${planes}_$histId"
     val committed = Warehouse.ensure(s, base) {
       val p = advanceParts(s, d, split, histOverride, batchEnd, planes)
-      p.h.buckets.unionByName(p.bt.buckets)
-        .write.mode("overwrite").parquet(s"$base/buckets")
-      p.h.codes.unionByName(p.bt.codes)
-        .write.mode("overwrite").parquet(s"$base/codes")
+      Warehouse.writeStored(p.h.buckets.unionByName(p.bt.buckets), s"$base/buckets")
+      Warehouse.writeStored(p.h.codes.unionByName(p.bt.codes), s"$base/codes")
       Warehouse.writeSized(p.h.pairs.unionByName(p.newPairs),
         s"$base/pairs")
       Warehouse.writeSized(p.labels, s"$base/labels")

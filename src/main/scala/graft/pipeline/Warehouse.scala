@@ -148,12 +148,12 @@ object Warehouse {
     * scans the parquet. Keyed per session (weakly — a stopped test
     * session must not pin its handles); invalidated with the built memo
     * on [[resetBuiltForTest]] and by [[gc]] for pruned version dirs.
-    * A table [[writeSized]] wrote in this JVM is read with the schema it
+    * A table [[writeStored]] wrote in this JVM is read with the schema it
     * wrote, so opening it runs no schema-inference job; one a marker
     * from an earlier JVM vouches for still infers it. */
   private val dfMemo =
     new java.util.WeakHashMap[SparkSession, mutable.Map[String, DataFrame]]()
-  /** The schema [[writeSized]] wrote under each path in this JVM, as a
+  /** The schema [[writeStored]] wrote under each path in this JVM, as a
     * file read returns it (every field nullable). */
   private val written = mutable.Map[String, StructType]()
   private[pipeline] def readParquet(s: SparkSession, path: String): DataFrame =
@@ -236,8 +236,16 @@ object Warehouse {
     * partitioning so their readers keep scan parallelism at every
     * scale. File size rides spark.sql.adaptive.advisoryPartitionSize-
     * InBytes — the standard deployment knob. */
-  private[pipeline] def writeSized(df: DataFrame, path: String): Unit = {
-    df.hint("rebalance").write.mode("overwrite").parquet(path)
+  private[pipeline] def writeSized(df: DataFrame, path: String): Unit =
+    writeStored(df.hint("rebalance"), path)
+
+  /** Overwrite a stored table with `df`'s own partitioning and record the
+    * schema it wrote, so [[readParquet]] opens it without a
+    * schema-inference job. Tables whose layout is set by the caller
+    * (a `coalesce(1)` sidecar, a scan-parallel code table) write here;
+    * [[writeSized]] adds its file sizing on top. */
+  private[pipeline] def writeStored(df: DataFrame, path: String): Unit = {
+    df.write.mode("overwrite").parquet(path)
     written.synchronized(written(path) = df.schema.toNullable)
   }
 

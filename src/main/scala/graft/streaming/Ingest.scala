@@ -91,10 +91,21 @@ object Ingest {
     * produces. Micro-batch contents are deterministic under checkpoint
     * replay, so re-running a batch after a mid-batch crash rewrites the
     * same partitions instead of appending duplicates. batchId < 0 (ad-hoc
-    * backfill outside a stream) falls back to plain append. */
+    * backfill outside a stream) falls back to plain append.
+    *
+    * The tag is a STRING literal. Spark's codegen inlines primitive
+    * literals into the generated Java source, and its class cache is
+    * keyed by that source, so a `LongType` tag compiled about two fresh
+    * classes per table per batch: one-shot classes that would churn the
+    * engine's cache (eight subjects at one batch a second fill 1,000
+    * entries in about a minute). A string literal is passed through the
+    * generated class's `references` array, so every batch of a table
+    * runs the same compiled code. A partition value is only a directory
+    * name, so `ingest_batch=<id>` and the type readers infer from it
+    * (an integer) are the same either way. */
   private def sink(rows: DataFrame, table: String, outDir: String,
                    batchId: Long, partitionCols: Seq[String]): Unit = {
-    val tagged = rows.withColumn("ingest_batch", lit(batchId))
+    val tagged = rows.withColumn("ingest_batch", lit(batchId.toString))
     val w =
       if (batchId >= 0)
         tagged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")

@@ -1,25 +1,22 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // full extension path (functions + rules + the CH-dialect parser):
-      // the o_s7/o_s8 keys feed LITERAL CH SQL through spark.sql, which
-      // only the build-time-injected parser can accept
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the engine's own session recipe: its extensions (the o_s7/o_s8 keys
+  // feed literal CH SQL through spark.sql, which only the build-time
+  // parser accepts), its SQL settings and its generated-class cache
+  lazy val spark: SparkSession = EngineSession.local(cores = 4, appName = "graft-test")
   val sf = "/root/testdata/sf0.001"
+
+  /** `body`'s value and the Janino compiles this JVM ran meanwhile. */
+  def compiles[T](body: => T): (T, Long) = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val v = body
+    (v, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+  }
 }
 
 /** Smoke + invariants over the full query catalog at sf0.001. The heavy

@@ -234,6 +234,21 @@ class WarehouseSpec extends AnyFunSuite {
     Warehouse.resetBuiltForTest()
     val (again, inferJobs) = withJobCount(Warehouse.readParquet(spark, path))
     assert(inferJobs >= 1 && again.schema == inferred.schema)
+
+    // a VecBackbone table with its own layout: opened in a session with
+    // no memoized handle, it still reads with the written schema
+    withWarehouse { _ =>
+      val sf = graft.TestSession.sf
+      VecBackbone.buckets(spark, sf)
+      val dir = Warehouse.versionDir(spark, sf, "embeddings.parquet", "vec_") +
+        s"/buckets_p${VecBackbone.Planes}"
+      val (vec, vecJobs) = withJobCount(Warehouse.readParquet(spark.newSession(), dir))
+      assert(vecJobs == 0, s"opening the bucket table ran $vecJobs job(s)")
+      val vecInferred = spark.read.parquet(dir)
+      assert(vec.schema == vecInferred.schema)
+      assert(vec.orderBy("vec_id").collect().toSeq ==
+        vecInferred.orderBy("vec_id").collect().toSeq)
+    }
   }
 
   test("gc is a no-op under the default per-JVM tmp root") {

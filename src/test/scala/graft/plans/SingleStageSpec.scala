@@ -385,16 +385,14 @@ class SingleStageSpec extends AnyFunSuite with BeforeAndAfterAll {
       .join(watch.select(col("event_id"), col("item_id").as("again")), "event_id")
       .groupBy("item_type").agg(count("*").as("n"))
     // the join estimates multiply past Spark's single-partition bound,
-    // so the session default re-shuffles both sides of the outer join
-    val dflt = runAt(SingleStage.gateBytes)(q())._1.queryExecution.executedPlan
+    // so at Spark's default bound both sides of the outer join re-shuffle
+    val bound = "spark.sql.maxSinglePartitionBytes"
+    val engine = spark.conf.get(bound)
+    spark.conf.unset(bound)
+    val dflt =
+      try runAt(SingleStage.gateBytes)(q())._1.queryExecution.executedPlan
+      finally spark.conf.set(bound, engine)
     assert(gated(dflt) && exchanges(dflt).nonEmpty, s"no exchange to keep out:\n$dflt")
-    val conf = spark.conf
-    val prev = graft.EngineSession.sqlSettings.map { case (k, _) => k -> conf.getOption(k) }
-    graft.EngineSession.sqlSettings.foreach { case (k, v) => conf.set(k, v) }
-    try assertOneStage("a join over a join")(q())
-    finally prev.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
+    assertOneStage("a join over a join")(q())
   }
 }

@@ -46,6 +46,32 @@ class IngestSpec extends AnyFunSuite {
     assert(deliveries.toSeq == Seq(Some(3), None))
   }
 
+  test("stream batches of one table compile nothing new: the batch id stays out of generated code") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.IntegerType
+    val out = Files.createTempDirectory("graft_tag").toString
+    val schema = EventSchemas.tables("login_events")
+    def batch(ids: Seq[Int]) = spark.createDataFrame(spark.sparkContext.parallelize(
+      ids.map(i => Row.fromSeq(WireFixtures.loginMsg(s"e-$i", s"u-${i % 3}", 1726300800L + i)))),
+      schema)
+    Ingest.writeTyped(batch(1 to 5), "login_events", schema, out, batchId = 1L)
+    val (_, compiled) = TestSession.compiles(
+      Ingest.writeTyped(batch(6 to 9), "login_events", schema, out, batchId = 2L))
+    assert(compiled == 0, s"the second batch compiled $compiled classes")
+    // the layout a LongType tag wrote: one dir per (date, batch), and the
+    // tag reads back as the integer partition column
+    val table = new java.io.File(s"$out/login_events")
+    val dirs = table.listFiles().filter(_.isDirectory).flatMap(d =>
+      d.listFiles().filter(_.isDirectory).map(b => s"${d.getName}/${b.getName}")).toSet
+    assert(dirs == Set("event_date=2024-09-14/ingest_batch=1",
+      "event_date=2024-09-14/ingest_batch=2"))
+    val read = spark.read.parquet(table.getPath)
+    assert(read.schema("ingest_batch").dataType == IntegerType)
+    val rows = read.select("event_id", "ingest_batch").collect()
+      .map(r => r.getString(0) -> r.getInt(1)).sortBy(_._1.drop(2).toInt).toSeq
+    assert(rows == (1 to 9).map(i => s"e-$i" -> (if (i <= 5) 1 else 2)))
+  }
+
   test("wire-native ingest: graft-proto flush dirs -> typed sorted tables") {
     val wire = Files.createTempDirectory("graft_wire").toString
     val out = Files.createTempDirectory("graft_wire_out").toString
